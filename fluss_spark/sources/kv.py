@@ -47,7 +47,10 @@ compares against, not as a production route.
 
 from __future__ import annotations
 
+import decimal
+import glob
 import json
+import math
 import os
 from functools import reduce
 
@@ -55,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from fluss_spark.bucketing import bucket_of, to_internal
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.operators.replay import (
     OP_COL,
@@ -2356,7 +2360,7 @@ class KvStore:
         verbatim; a deferred (WAL-only) version folds the offset-bounded
         changelog slice onto the nearest older manifest. `buckets`
         restricts the read to those buckets' files (manifest + partition
-        dir pruning — the lookup fast path) and bounds the tail scan the
+        dir pruning — the partitioned lookup path) and bounds the tail scan the
         same way. Partitioned tables: `pair_pred` is a typed predicate
         over the partition columns and __bucket that bounds the physical
         read (Spark partition pruning resolves it to directories, and it
@@ -2500,7 +2504,7 @@ class KvStore:
                 # cached per leaf set (same immutability argument as
                 # _read_snapshot_dir): repeat reads of one version —
                 # seed + prior feed inside a commit, every post-commit
-                # snapshot()/lookup of the same table — reuse the
+                # snapshot() of the same table — reuse the
                 # resolved relation and its file listing instead of
                 # re-analyzing per call
                 # applicationId, not id(spark): ids can be reused by a
@@ -2760,10 +2764,10 @@ class KvStore:
         )
 
     def lookup(self, spark: SparkSession, key: dict[str, object]) -> DataFrame:
-        """Point lookup by full primary key (L1, Lookuper.java:43-56).
-        The bucket id is computed driver-side from the manifest → ONE
-        data dir, one partition dir, then Parquet row-group stats prune
-        within the bucket."""
+        """Point lookup by full primary key (L1, Lookuper.java:43-56),
+        answered on the driver without a Spark job: the client computes
+        the owning bucket (see `_keyed_read`) and reads only that
+        bucket's files from its one manifest data dir."""
         pk = self.schema.primary_key
         if sorted(key) != sorted(pk):
             raise ValueError(f"lookup key must be the full primary key {pk}, got {sorted(key)}")
@@ -2801,28 +2805,27 @@ class KvStore:
         return self._keyed_read(spark, key, bk)
 
     def _keyed_read(self, spark: SparkSession, key: dict[str, object], bucket_key: list[str]) -> DataFrame:
+        """Rows matching `key`, routed the way the reference client
+        routes a get (FlussBucketingFunction): the bucket is Spark's
+        Murmur3 `hash()` of the typed bucket-key values, computed in
+        Python (`bucketing.bucket_of`), so no job resolves it.
+
+        Unpartitioned tables read the bucket's Parquet files from the
+        ONE data dir the manifest maps it to with pyarrow, the key
+        equality pushed down as a row-group filter, and hand the rows to
+        Spark as a local relation: `collect()` runs no job and compiles
+        nothing. A deferred WAL tail merges on top through `_merge_tail`.
+        Partitioned tables keep the shadow-aware pair scan, bounded to
+        the bucket and the key's partition values."""
         schema = self.schema
-        # cast literals to the DECLARED column types: Murmur3 hashes int
-        # and bigint (etc.) differently, so an untyped literal would route
-        # to the wrong bucket
         types = {f.name: parse_type(f.type) for f in schema.fields}
-        bucket_expr = F.pmod(
-            F.hash(*[F.lit(key[c]).cast(types[c]) for c in bucket_key]), F.lit(schema.num_buckets)
-        )
         state = self.catalog.current_commit(self.db, self.table)
-        version = state.snapshot_version
-        manifest = self._manifest(version)
+        manifest = self._manifest(state.snapshot_version)
         if not manifest:
             return self.snapshot(spark).filter(self._key_cond(key))
-        tail_start = self._tail_start(state)
-        # resolve the owning bucket DRIVER-SIDE: the hash of literals is a
-        # constant expression, so evaluate it once on a 1-row local
-        # relation (no table scan, no shuffle, single local task). The
-        # manifest then maps bucket -> exactly ONE data dir, so the lookup
-        # plan is a single scan pruned to one __bucket partition dir —
-        # not one scan per manifest dir (a 16-dir manifest previously
-        # built 16 scans to read <=1 row).
-        bkt = int(spark.range(1).select(bucket_expr.cast("int").alias("b")).first()["b"])
+        bkt = bucket_of(
+            [key[c] for c in bucket_key], [types[c] for c in bucket_key], schema.num_buckets
+        )
         if schema.partition_keys:
             # pair-granular manifest: the key's partition values (typed
             # literals — Spark prunes partition dirs from them) plus the
@@ -2835,21 +2838,13 @@ class KvStore:
             return self.snapshot(
                 spark, buckets=[bkt], pair_pred=pred
             ).filter(self._key_cond(key))
-        data_dir = manifest.get(bkt)
-        if data_dir is None:
-            base = spark.createDataFrame([], self.schema.to_struct_type())
-        else:
-            base = (
-                self._read_snapshot_dir(spark, data_dir)
-                .filter(F.col(BUCKET_COL) == F.lit(bkt))
-                .filter(self._key_cond(key))
-                .drop(BUCKET_COL)
-            )
+        base = self._bucket_rows(spark, manifest.get(bkt), bkt, key, types)
+        tail_start = self._tail_start(state)
         if tail_start is None:
             return base
         # deferred materialization left a WAL tail: merge the key's own
         # slice of it (one bucket dir per tail commit + offset/stats
-        # pruning) on top of the single-dir base read
+        # pruning) on top of the base read
         tail = (
             self.log.scan(spark, start_offsets=tail_start or None)
             .filter(F.col(BUCKET_COL) == F.lit(bkt))
@@ -2857,9 +2852,86 @@ class KvStore:
         )
         return self._merge_tail(base, tail)
 
+    def _bucket_rows(self, spark, data_dir, bkt: int, key: dict, types: dict) -> DataFrame:
+        """The rows of `<data_dir>/__bucket=<bkt>/` matching `key`, read
+        by pyarrow and returned as a local relation in the current
+        schema. Schema-evolved (era) dirs are read in their physical
+        layout, then mapped by `era_projection`."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql import types as T
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from fluss_spark.types import era_projection, era_struct_fields
+
+        current = self.schema.to_struct_type()
+        leaf = os.path.join(self.snapshot_dir, data_dir or "", f"{BUCKET_COL}={bkt}")
+        files = sorted(glob.glob(os.path.join(glob.escape(leaf), "*.parquet"))) if data_dir else []
+        if not files:
+            return spark.createDataFrame([], current)
+        era = self._era_for_dir(data_dir)
+        phys = current if era is None else T.StructType(era_struct_fields(self.schema, era))
+        dataset = ds.dataset(files, format="parquet")
+        cond, nested = None, []
+        for f in self.schema.fields:
+            if f.name not in key:
+                continue
+            name = f.name if era is None else era[f.field_id][0]
+            want = to_internal(key[f.name], types[f.name])
+            if isinstance(types[f.name], (T.ArrayType, T.StructType)):
+                nested.append((name, types[f.name], want))  # arrow has no nested ==
+                continue
+            term = _arrow_eq(ds.field(name), want, types[f.name], dataset.schema.field(name).type)
+            cond = term if cond is None else cond & term
+        target = to_arrow_schema(phys)
+        present = [n for n in target.names if n in dataset.schema.names]
+        table = dataset.to_table(columns=present, filter=cond)
+        # columns added after the dir was written read as nulls; the cast
+        # labels Spark's tz-naive INT96 timestamps as the UTC instants
+        # they are (unlabelled, createDataFrame would shift them by the
+        # session time zone)
+        table = pa.Table.from_arrays(
+            [
+                table.column(f.name) if f.name in present else pa.nulls(table.num_rows, f.type)
+                for f in target
+            ],
+            names=target.names,
+        ).cast(target)
+        for name, dt, want in nested:
+            mask = [to_internal(v, dt) == want for v in table.column(name).to_pylist()]
+            table = table.filter(pa.array(mask, pa.bool_()))
+        if not table.num_rows:  # createDataFrame rejects nested columns with no chunks
+            return spark.createDataFrame([], current)
+        df = spark.createDataFrame(table, phys)
+        return df if era is None else df.select(era_projection(self.schema, era, []))
+
     @staticmethod
     def _key_cond(key: dict[str, object]):
         cond = F.lit(True)
         for c, v in key.items():
             cond = cond & (F.col(c) == F.lit(v))
         return cond
+
+
+def _arrow_eq(field, want, dt, ftype):
+    """`field = want` (Spark SQL equality) as a pyarrow filter over the
+    file's column type `ftype`, from the key's `to_internal` value."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    if want is None:
+        return pc.scalar(False)  # `= NULL` matches no row
+    if isinstance(dt, (T.FloatType, T.DoubleType)) and math.isnan(want):
+        return pc.is_nan(field)  # Spark's = treats NaN as equal to NaN
+    if isinstance(dt, T.DecimalType):
+        value = pa.scalar(
+            decimal.Decimal(f"{want}E-{dt.scale}"), pa.decimal128(dt.precision, dt.scale)
+        )
+    elif isinstance(dt, T.DateType):
+        value = pa.scalar(want, pa.date32())
+    elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        value = pa.scalar(want, pa.timestamp("us", tz=ftype.tz))
+    else:
+        value = pa.scalar(want)
+    return field == value.cast(ftype)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluss_spark.bucketing import check_key_type
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.operators.replay import OP_COL
 from fluss_spark.sources.kv import KvStore
@@ -21,6 +22,7 @@ from fluss_spark.types import (
     OFFSET_COL,
     TIMESTAMP_COL,
     TableSchema,
+    parse_type,
 )
 
 
@@ -433,6 +435,10 @@ def create_table(
             raise ValueError(
                 f"table.log.tiered.local-segments must be an integer >= 1, got {seg!r}"
             )
+    # every bucket key must be hashable client-side (lookup routing)
+    types = {f.name: f.type for f in schema.fields}
+    for c in schema.bucket_keys:
+        check_key_type(c, parse_type(types[c]))
     catalog.create_table(db, name, schema)
     return FlussTable(catalog, db, name)
 

@@ -10,7 +10,7 @@ rewritten ~N/K times, so total snapshot bytes written should drop by
 byte-identical to the eager twin.
 
 Not part of the test suite — a scratch tool, same role as
-profile_commit.py / stress_partitioned_pk.py.
+stress_partitioned_pk.py.
 """
 
 import os

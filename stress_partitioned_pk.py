@@ -10,7 +10,7 @@ commits a fixed-size batch into ONE partition and measures wall time
 and bytes rewritten as P grows — both must stay flat.
 
 Not part of the test suite — a scratch tool, same role as
-profile_commit.py / stress_t14_t15.py.
+stress_t14_t15.py.
 """
 
 import glob

@@ -65,7 +65,10 @@ def test_partitioned_engine_scan_prunes_dirs(spark, catalog):
     assert df.count() == 1
 
 
-def test_lookup_prunes_bucket_partition(spark, catalog):
+def test_lookup_prunes_bucket_partition(spark, catalog, keyed_read_probe):
+    """The L1 lookup routes to the owning bucket in the client and reads
+    only that bucket's files from the ONE manifest dir holding it, on
+    the driver: a local relation, no file scan, no Spark job."""
     t = create_table(
         catalog, "db", "plan_pk",
         TableSchema(fields=[Field("k", "INT", nullable=False), Field("v", "STRING")], primary_key=["k"], num_buckets=4),
@@ -75,22 +78,13 @@ def test_lookup_prunes_bucket_partition(spark, catalog):
     t.upsert(spark.createDataFrame([(7, "v7b")], "k int, v string"))
     ver = catalog.current_commit("db", "plan_pk").snapshot_version
     assert len(t.kv.referenced_data_dirs(ver)) >= 2
-    lk = t.lookup(spark, {"k": 7})
-    # the owning bucket resolves driver-side -> ONE scan over ONE data
-    # dir, pruned to one __bucket partition dir (never a union of one
-    # scan per manifest dir)
-    plan = plans.physical_plan(lk)
-    assert plan.count("InMemoryFileIndex") == 1, plan
-    assert "Union" not in plan, plan
-    plans.assert_contains(plans.partition_filters(lk), "__bucket")
-    plans.assert_contains(plans.pushed_filters(lk), "EqualTo(k,7)")
-    assert [r["v"] for r in lk.collect()] == ["v7b"]
+    rows = keyed_read_probe(t, lambda: t.lookup(spark, {"k": 7}), [7], "k int")
+    assert [r["v"] for r in rows] == ["v7b"]
 
 
-def test_prefix_lookup_prunes_bucket_partition(spark, catalog):
-    """The L2 prefix lookup resolves the owning bucket driver-side
-    exactly like L1: ONE scan over ONE manifest data dir, pruned to one
-    __bucket partition dir, bucket-key equality pushed to Parquet."""
+def test_prefix_lookup_prunes_bucket_partition(spark, catalog, keyed_read_probe):
+    """The L2 prefix lookup takes the same client-routed, driver-side
+    read of ONE bucket dir of ONE manifest dir as L1."""
     t = create_table(
         catalog, "db", "plan_pfx",
         TableSchema(
@@ -113,13 +107,8 @@ def test_prefix_lookup_prunes_bucket_partition(spark, catalog):
     t.upsert(spark.createDataFrame([(7, 0, "v7b")], "k int, s int, v string"))
     ver = catalog.current_commit("db", "plan_pfx").snapshot_version
     assert len(t.kv.referenced_data_dirs(ver)) >= 2
-    lk = t.prefix_lookup(spark, {"k": 7})
-    plan = plans.physical_plan(lk)
-    assert plan.count("InMemoryFileIndex") == 1, plan
-    assert "Union" not in plan, plan
-    plans.assert_contains(plans.partition_filters(lk), "__bucket")
-    plans.assert_contains(plans.pushed_filters(lk), "EqualTo(k,7)")
-    assert sorted(r["v"] for r in lk.collect()) == ["v7.1", "v7b"]
+    rows = keyed_read_probe(t, lambda: t.prefix_lookup(spark, {"k": 7}), [7], "k int")
+    assert sorted(r["v"] for r in rows) == ["v7.1", "v7b"]
 
 
 def test_star_join_broadcasts_dims(spark, sf_dir):

@@ -1091,13 +1091,11 @@ def test_dml_bucket_key_prefix_fast_path(spark, fsql):
     assert got == {(8, "click"): 30.0}
 
 
-def test_dml_keyed_predicates_take_lookup_plans(spark, fsql):
+def test_dml_keyed_predicates_take_lookup_plans(spark, fsql, keyed_read_probe):
     """The DML fast-path dispatcher: full-pk equality resolves to the L1
-    single-bucket plan, bucket-key equality to the L2 plan (ONE scan, no
-    Union, __bucket partition filter), and non-keyed predicates return
-    None (the filtered-snapshot path)."""
-    from fluss_spark import plans
-
+    lookup, bucket-key equality to the L2 prefix lookup — each a
+    driver-side read of ONE bucket dir (local relation, no Spark job) —
+    and non-keyed predicates return None (the filtered-snapshot path)."""
     fsql.sql("""
         CREATE TABLE dml_plan (
             k BIGINT, s BIGINT, v DOUBLE,
@@ -1108,12 +1106,10 @@ def test_dml_keyed_predicates_take_lookup_plans(spark, fsql):
     from fluss_spark.table import FlussTable
 
     t = FlussTable(fsql.catalog, "fluss", "dml_plan")
-    for cond in ("k = 1 AND s = 2", "k = 1"):
-        rows = fsql._keyed_rows(t, cond)
-        assert rows is not None, cond
-        plan = plans.physical_plan(rows)
-        assert plan.count("InMemoryFileIndex") == 1 and "Union" not in plan, plan
-        plans.assert_contains(plans.partition_filters(rows), "__bucket")
+    for cond, want in (("k = 1 AND s = 2", [0.7]), ("k = 1", [0.5, 0.7])):
+        assert fsql._keyed_rows(t, cond) is not None, cond
+        rows = keyed_read_probe(t, lambda: fsql._keyed_rows(t, cond), [1], "k bigint")
+        assert sorted(r["v"] for r in rows) == want, cond
     assert fsql._keyed_rows(t, "v = 0.5") is None  # non-key column
     assert fsql._keyed_rows(t, "s = 2") is None  # pk suffix: not a bucket prefix
     assert fsql._keyed_rows(t, "k = 1 AND v > 0") is None  # mixed shape
