@@ -22,6 +22,7 @@ import datetime
 import decimal
 import math
 import struct
+import zoneinfo
 
 from pyspark.sql import types as T
 
@@ -94,10 +95,7 @@ def _unscaled(value, dt: T.DecimalType) -> int:
     with decimal.localcontext() as ctx:
         ctx.prec = 80  # exact at any DECIMAL(38, s)
         q = d.quantize(decimal.Decimal(1).scaleb(-dt.scale), rounding=decimal.ROUND_HALF_UP)
-        unscaled = int(q.scaleb(dt.scale))
-    if len(str(abs(unscaled))) > dt.precision:
-        raise ValueError(f"{value!r} does not fit {dt.simpleString()}")
-    return unscaled
+        return int(q.scaleb(dt.scale))
 
 
 def _java_bytes(n: int) -> bytes:
@@ -105,14 +103,26 @@ def _java_bytes(n: int) -> bytes:
     return n.to_bytes((n if n >= 0 else ~n).bit_length() // 8 + 1, "big", signed=True)
 
 
-def to_internal(value, dt: T.DataType):
+def _zone(tz: str) -> datetime.tzinfo:
+    """A Spark session time zone: a region id or a fixed offset."""
+    try:
+        return zoneinfo.ZoneInfo(tz)
+    except (ValueError, zoneinfo.ZoneInfoNotFoundError):
+        return datetime.datetime.fromisoformat(f"2000-01-01T00:00{tz}").tzinfo
+
+
+def to_internal(value, dt: T.DataType, tz: str = "UTC"):
     """A key value as Spark stores it for `dt`, interpreted the way
     createDataFrame interprets Python values on the write path, plus the
     casts a SQL literal needs (strings for numbers, booleans, ISO dates
     and timestamps). Dates become epoch days, timestamps
-    epoch micros (naive TIMESTAMP_LTZ values in the process's local
-    time zone, as TimestampType.toInternal reads them), decimals their
-    unscaled integer, floats their IEEE value at the column's width."""
+    epoch micros (naive TIMESTAMP_LTZ datetimes in the process's local
+    time zone, as TimestampType.toInternal reads them; naive TIMESTAMP_LTZ
+    strings in the session time zone `tz`, as Spark's cast reads them),
+    decimals their unscaled integer, floats their IEEE value at the
+    column's width (Infinity past float32's range, like Spark's cast).
+    A value the column cannot hold exactly (7.5 for an INT) comes back
+    cast; `exact` tells whether it was."""
     if value is None:
         return None
     if isinstance(dt, T.BooleanType):
@@ -122,7 +132,11 @@ def to_internal(value, dt: T.DataType):
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         return int(value)
     if isinstance(dt, T.FloatType):  # rounded to float32, as the column stores it
-        return struct.unpack("<f", struct.pack("<f", float(value)))[0]
+        f = float(value)
+        try:
+            return struct.unpack("<f", struct.pack("<f", f))[0]
+        except OverflowError:
+            return math.copysign(math.inf, f)
     if isinstance(dt, T.DoubleType):
         return float(value)
     if isinstance(dt, T.StringType):
@@ -136,16 +150,58 @@ def to_internal(value, dt: T.DataType):
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         if isinstance(value, str):
             value = datetime.datetime.fromisoformat(value)
+            if isinstance(dt, T.TimestampType) and value.tzinfo is None:
+                value = value.replace(tzinfo=_zone(tz))
         return dt.toInternal(value)
     if isinstance(dt, T.DecimalType):
         return _unscaled(value, dt)
     if isinstance(dt, T.ArrayType):
-        return [to_internal(v, dt.elementType) for v in value]
+        return [to_internal(v, dt.elementType, tz) for v in value]
     if isinstance(dt, T.StructType):
-        if isinstance(value, dict):
-            value = [value.get(f.name) for f in dt.fields]
-        return [to_internal(v, f.dataType) for v, f in zip(value, dt.fields)]
+        return [to_internal(v, f.dataType, tz) for v, f in zip(_struct_values(value, dt), dt.fields)]
     raise TypeError(f"no bucket hash for type {dt.simpleString()}")
+
+
+def _struct_values(value, dt: T.StructType):
+    return [value.get(f.name) for f in dt.fields] if isinstance(value, dict) else value
+
+
+_INT_RANGE = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def exact(value, internal, dt: T.DataType) -> bool:
+    """Whether `internal` (`to_internal(value, dt)`) is `value` itself,
+    i.e. whether Spark's `column = value` can hold for a `dt` column at
+    all. False when the value has no exact `dt` form, so no stored row
+    equals it: 7.5 or 2**40 for an INT, 12.345 for a DECIMAL(10,2),
+    0.1 for a FLOAT (Spark compares that column as a double). Spark
+    compares a string with a DECIMAL or FLOAT column as a double, with
+    an integral one as a BIGINT, and casts it for the other types."""
+    if value is None or internal is None:
+        return True
+    if type(dt) in _INT_RANGE:
+        bits = _INT_RANGE[type(dt)]
+        in_range = -(1 << (bits - 1)) <= internal < 1 << (bits - 1)
+        return in_range and (isinstance(value, str) or internal == value)
+    if isinstance(dt, T.FloatType):
+        return math.isnan(internal) or internal == float(value)
+    if isinstance(dt, T.DecimalType):
+        if len(str(abs(internal))) > dt.precision:
+            return False
+        stored = decimal.Decimal(internal).scaleb(-dt.scale)
+        if isinstance(value, (str, float)):
+            return float(stored) == float(value)
+        return stored == value
+    if isinstance(dt, T.ArrayType):
+        return len(value) == len(internal) and all(
+            exact(v, i, dt.elementType) for v, i in zip(value, internal)
+        )
+    if isinstance(dt, T.StructType):
+        return all(
+            exact(v, i, f.dataType)
+            for v, i, f in zip(_struct_values(value, dt), internal, dt.fields)
+        )
+    return True
 
 
 def _hash_internal(v, dt: T.DataType, seed: int) -> int:
@@ -199,14 +255,15 @@ def check_key_type(name: str, dt: T.DataType) -> None:
         raise ValueError(f"bucket key {name!r} has unhashable type {dt.simpleString()}")
 
 
-def spark_hash(values, types) -> int:
-    """Spark's `hash(c1, c2, ...)` over typed Python values."""
+def spark_hash(values, types, tz: str = "UTC") -> int:
+    """Spark's `hash(c1, c2, ...)` over typed Python values (`tz`: the
+    session time zone that reads timestamp strings)."""
     h = SEED
     for v, dt in zip(values, types):
-        h = _hash_internal(to_internal(v, dt), dt, h)
+        h = _hash_internal(to_internal(v, dt, tz), dt, h)
     return h
 
 
-def bucket_of(values, types, num_buckets: int) -> int:
+def bucket_of(values, types, num_buckets: int, tz: str = "UTC") -> int:
     """`pmod(hash(keys), num_buckets)`: the bucket a key was written to."""
-    return spark_hash(values, types) % num_buckets
+    return spark_hash(values, types, tz) % num_buckets

@@ -56,9 +56,10 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from fluss_spark.bucketing import bucket_of, to_internal
+from fluss_spark.bucketing import bucket_of, exact, to_internal
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.operators.replay import (
     OP_COL,
@@ -2653,8 +2654,6 @@ class KvStore:
         return paths
 
     def _snapshot_schema(self, era=None):
-        from pyspark.sql import types as T
-
         from fluss_spark.types import era_struct_fields
 
         if era is None:
@@ -2823,9 +2822,18 @@ class KvStore:
         manifest = self._manifest(state.snapshot_version)
         if not manifest:
             return self.snapshot(spark).filter(self._key_cond(key))
-        bkt = bucket_of(
-            [key[c] for c in bucket_key], [types[c] for c in bucket_key], schema.num_buckets
+        # a naive timestamp string means a time in the session zone
+        tz = (
+            spark.conf.get("spark.sql.session.timeZone")
+            if any(isinstance(key[c], str) and isinstance(types[c], T.TimestampType) for c in key)
+            else "UTC"
         )
+        want = {c: to_internal(v, types[c], tz) for c, v in key.items()}
+        if not all(exact(key[c], want[c], types[c]) for c in key):
+            # the key is cast for routing only: a value the column cannot
+            # hold (7.5 for an INT) equals no stored row
+            return spark.createDataFrame([], schema.to_struct_type())
+        bkt = bucket_of([key[c] for c in bucket_key], [types[c] for c in bucket_key], schema.num_buckets, tz)
         if schema.partition_keys:
             # pair-granular manifest: the key's partition values (typed
             # literals — Spark prunes partition dirs from them) plus the
@@ -2838,7 +2846,7 @@ class KvStore:
             return self.snapshot(
                 spark, buckets=[bkt], pair_pred=pred
             ).filter(self._key_cond(key))
-        base = self._bucket_rows(spark, manifest.get(bkt), bkt, key, types)
+        base = self._bucket_rows(spark, manifest.get(bkt), bkt, want, types)
         tail_start = self._tail_start(state)
         if tail_start is None:
             return base
@@ -2852,14 +2860,14 @@ class KvStore:
         )
         return self._merge_tail(base, tail)
 
-    def _bucket_rows(self, spark, data_dir, bkt: int, key: dict, types: dict) -> DataFrame:
-        """The rows of `<data_dir>/__bucket=<bkt>/` matching `key`, read
-        by pyarrow and returned as a local relation in the current
-        schema. Schema-evolved (era) dirs are read in their physical
-        layout, then mapped by `era_projection`."""
+    def _bucket_rows(self, spark, data_dir, bkt: int, want: dict, types: dict) -> DataFrame:
+        """The rows of `<data_dir>/__bucket=<bkt>/` whose columns equal
+        the `to_internal` key values `want`, read by pyarrow and returned
+        as a local relation in the current schema. Schema-evolved (era)
+        dirs are read in their physical layout, then mapped by
+        `era_projection`."""
         import pyarrow as pa
         import pyarrow.dataset as ds
-        from pyspark.sql import types as T
         from pyspark.sql.pandas.types import to_arrow_schema
 
         from fluss_spark.types import era_projection, era_struct_fields
@@ -2871,17 +2879,20 @@ class KvStore:
             return spark.createDataFrame([], current)
         era = self._era_for_dir(data_dir)
         phys = current if era is None else T.StructType(era_struct_fields(self.schema, era))
-        dataset = ds.dataset(files, format="parquet")
+        # Spark writes TIMESTAMP_LTZ as INT96; read at micros, Spark's
+        # own unit (nanos would overflow outside 1677..2262)
+        parquet = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us"))
+        dataset = ds.dataset(files, format=parquet)
         cond, nested = None, []
         for f in self.schema.fields:
-            if f.name not in key:
+            if f.name not in want:
                 continue
             name = f.name if era is None else era[f.field_id][0]
-            want = to_internal(key[f.name], types[f.name])
-            if isinstance(types[f.name], (T.ArrayType, T.StructType)):
-                nested.append((name, types[f.name], want))  # arrow has no nested ==
+            dt = types[f.name]
+            if isinstance(dt, (T.ArrayType, T.StructType)):
+                nested.append((name, dt, want[f.name]))  # arrow has no nested ==
                 continue
-            term = _arrow_eq(ds.field(name), want, types[f.name], dataset.schema.field(name).type)
+            term = _arrow_eq(ds.field(name), want[f.name], dt, dataset.schema.field(name).type)
             cond = term if cond is None else cond & term
         target = to_arrow_schema(phys)
         present = [n for n in target.names if n in dataset.schema.names]
@@ -2897,8 +2908,8 @@ class KvStore:
             ],
             names=target.names,
         ).cast(target)
-        for name, dt, want in nested:
-            mask = [to_internal(v, dt) == want for v in table.column(name).to_pylist()]
+        for name, dt, value in nested:
+            mask = [to_internal(v, dt) == value for v in table.column(name).to_pylist()]
             table = table.filter(pa.array(mask, pa.bool_()))
         if not table.num_rows:  # createDataFrame rejects nested columns with no chunks
             return spark.createDataFrame([], current)
@@ -2915,10 +2926,12 @@ class KvStore:
 
 def _arrow_eq(field, want, dt, ftype):
     """`field = want` (Spark SQL equality) as a pyarrow filter over the
-    file's column type `ftype`, from the key's `to_internal` value."""
+    file's column type `ftype`, from the key's `to_internal` value for
+    the current column type `dt`. A value the file's type cannot hold
+    exactly (a key past the range of a since-widened column) matches no
+    row of that file."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    from pyspark.sql import types as T
 
     if want is None:
         return pc.scalar(False)  # `= NULL` matches no row
@@ -2934,4 +2947,10 @@ def _arrow_eq(field, want, dt, ftype):
         value = pa.scalar(want, pa.timestamp("us", tz=ftype.tz))
     else:
         value = pa.scalar(want)
-    return field == value.cast(ftype)
+    try:
+        physical = value.cast(ftype)
+    except pa.ArrowInvalid:  # out of range, or lossy for decimals
+        return pc.scalar(False)
+    if not physical.cast(value.type).equals(value):  # e.g. rounded to float32
+        return pc.scalar(False)
+    return field == physical

@@ -87,6 +87,33 @@ def test_sql_literal_strings_hash_like_spark_casts(spark):
     assert [spark_hash([v], [dt]) for v, dt in cases] == list(want)
 
 
+def test_timestamp_ltz_strings_hash_in_the_session_time_zone(spark):
+    """A naive TIMESTAMP_LTZ string is read in the session time zone,
+    like Spark's cast, not in the process's (which reads naive
+    datetimes); strings with an offset keep it. TIMESTAMP_NTZ strings
+    have no zone."""
+    texts = ["2024-03-10 02:30:00", "2024-11-03T01:30:00.25", "1900-01-01 00:00:00", "2024-01-01T00:00:00+02:00"]
+    old = spark.conf.get("spark.sql.session.timeZone")
+    for tz in ("Asia/Kathmandu", "America/Los_Angeles", "+03:30"):
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        try:
+            want = spark.range(1).select(
+                *[F.hash(F.lit(v).cast(dt)) for v in texts for dt in ("timestamp", "timestamp_ntz")]
+            ).first()
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", old)
+        got = [spark_hash([v], [dt], tz) for v in texts for dt in (T.TimestampType(), T.TimestampNTZType())]
+        assert got == list(want), tz
+
+
+def test_float_keys_past_float32_range_hash_as_infinity(spark):
+    """Spark's cast of a double past float32's range to FLOAT gives
+    +-Infinity; so does the routing cast."""
+    values = [1e39, -1e39, 3.5e38, "1e39"]
+    want = spark.range(1).select(*[F.hash(F.lit(float(v)).cast("float")) for v in values]).first()
+    assert [spark_hash([v], [T.FloatType()]) for v in values] == list(want)
+
+
 def test_bucket_is_pmod_of_the_hash(spark):
     """Negative hashes land in [0, n) exactly like pmod()."""
     keys = list(range(-50, 50)) + [2**31 - 1, -(2**31)]
