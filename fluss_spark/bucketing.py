@@ -267,3 +267,16 @@ def spark_hash(values, types, tz: str = "UTC") -> int:
 def bucket_of(values, types, num_buckets: int, tz: str = "UTC") -> int:
     """`pmod(hash(keys), num_buckets)`: the bucket a key was written to."""
     return spark_hash(values, types, tz) % num_buckets
+
+
+def exchange_width(spark, num_buckets: int, touched: list[int] | None = None) -> int:
+    """Partition count of a bucket-keyed exchange: no more than the
+    table's buckets, the buckets the write touches (`touched`, when the
+    caller knows them) or the cores. Every task still holds whole
+    buckets, so windows keyed by `__bucket[, pk]` stay correct and a
+    `partitionBy(..., __bucket)` write still emits one file per bucket;
+    a one-bucket write runs one task, not one per table bucket."""
+    n = min(num_buckets, spark.sparkContext.defaultParallelism)
+    if touched is not None:
+        n = min(n, len(set(touched)))
+    return max(1, n)

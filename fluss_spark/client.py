@@ -27,6 +27,7 @@ from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from fluss_spark.bucketing import bucket_of
 from fluss_spark.catalog import Catalog
 from fluss_spark.table import FlussTable
 from fluss_spark.types import BUCKET_COL, OFFSET_COL, TIMESTAMP_COL
@@ -254,7 +255,10 @@ class _BufferedWriter:
             raise ValueError(f"unknown columns: {sorted(unknown)}")
         self._rows.append({**record, **(extra or {})})
 
-    def _drain(self) -> DataFrame | None:
+    def _drain(self) -> tuple[DataFrame, list[tuple]] | None:
+        """The buffered records as a DataFrame plus the same rows as
+        driver-side tuples (table columns first, in schema order), or
+        None when nothing is buffered."""
         if not self._rows:
             return None
         rows, self._rows = self._rows, []
@@ -285,7 +289,7 @@ class _BufferedWriter:
         data = [
             tuple(_coerce(r.get(f.name), f.dataType) for f in fields) for r in rows
         ]
-        return self._spark.createDataFrame(data, schema)
+        return self._spark.createDataFrame(data, schema), data
 
 
 class Append:
@@ -306,9 +310,9 @@ class AppendWriter(_BufferedWriter):
         self._push(record)
 
     def flush(self) -> None:
-        df = self._drain()
-        if df is not None:
-            self._t.append(df)
+        drained = self._drain()
+        if drained is not None:
+            self._t.append(drained[0])
 
 
 @dataclass(frozen=True)
@@ -373,11 +377,26 @@ class UpsertWriter(_BufferedWriter):
                 )
 
     def flush(self) -> None:
-        df = self._drain()
-        if df is None:
+        drained = self._drain()
+        if drained is None:
             return
+        df, data = drained
+        schema = self._t.schema
+        kw = {}
+        if not schema.partition_keys:
+            # the rows are on the driver: route them in Python (bit-exact
+            # with Spark's hash()) and hand the commit its buckets, which
+            # skips the job that would otherwise discover them
+            fields = [f.to_struct_field() for f in schema.fields]
+            pos = {f.name: i for i, f in enumerate(fields)}
+            idx = [pos[c] for c in schema.bucket_keys]
+            types = [fields[i].dataType for i in idx]
+            kw["batch_buckets"] = sorted(
+                {bucket_of([r[i] for i in idx], types, schema.num_buckets) for r in data}
+            )
         self._t.upsert(
             df,
             ordering=["__client_seq"],
             partial_update_cols=self._partial,
+            **kw,
         )

@@ -26,6 +26,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from fluss_spark.bucketing import exchange_width
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.sources.log import COMMIT_DIR_COL, LogStore
 from fluss_spark.table import FlussTable
@@ -227,7 +228,9 @@ def _compact_log_locked(
     else:
         order = sort_columns if sort_columns else [OFFSET_COL]
         (
-            df.repartition(min(log.schema.num_buckets, 32), F.col(BUCKET_COL))
+            df.repartition(
+                exchange_width(spark, log.schema.num_buckets), F.col(BUCKET_COL)
+            )
             .sortWithinPartitions(BUCKET_COL, *order)
             .write.mode("overwrite")
             .partitionBy(*part_cols)
@@ -348,7 +351,7 @@ def _compact_snapshot_locked(table: FlussTable, spark: SparkSession, max_dirs: i
     # compaction preserves partition-directory pruning
     (
         snap.withColumn("__bucket", kv._bucket_expr())
-        .repartition(min(kv.schema.num_buckets, 32), F.col("__bucket"))
+        .repartition(exchange_width(spark, kv.schema.num_buckets), F.col("__bucket"))
         .write.mode("overwrite")
         .partitionBy(*kv.schema.partition_keys, "__bucket")
         .parquet(os.path.join(kv.snapshot_dir, data_dir))
@@ -683,7 +686,7 @@ def _rebucket_locked(table: FlussTable, spark: SparkSession, new_buckets: int) -
         bucket_expr = F.pmod(F.hash(*schema.bucket_keys), F.lit(new_buckets)).cast("int")
         (
             snap.withColumn("__bucket", bucket_expr)
-            .repartition(min(new_buckets, 32), F.col("__bucket"))
+            .repartition(exchange_width(spark, new_buckets), F.col("__bucket"))
             .write.mode("overwrite")
             .partitionBy(*schema.partition_keys, "__bucket")
             .parquet(os.path.join(kv.snapshot_dir, data_dir))

@@ -56,19 +56,18 @@ _LONG_MIN = -(2**63)
 # identical resolved plan.
 
 
-def _run_over(pk: list[str]) -> str:
+def _run_over(pk: list[str], order: str | None = None) -> str:
     """Running-state window frame: everything up to this fold step."""
-    pks = ", ".join(f"`{c}`" for c in pk)
-    return (
-        f"PARTITION BY {pks} ORDER BY `{SEQ_COL}` "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-    )
+    return f"{_lag_over(pk, order)} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 
-def _lag_over(pk: list[str], order_cols: list[str] | None = None) -> str:
+def _lag_over(pk: list[str], order: str | None = None) -> str:
+    """Fold-order window over the key. `order` is the ORDER BY of the
+    window that numbered `__seq` (see `replay`'s `seq_order`): ordering
+    by the same spec lets the fold reuse that window's sort, and rows
+    tied in it keep the one physical order `__seq` was numbered in."""
     pks = ", ".join(f"`{c}`" for c in pk)
-    order = ", ".join(f"`{c}`" for c in (order_cols or [SEQ_COL]))
-    return f"PARTITION BY {pks} ORDER BY {order}"
+    return f"PARTITION BY {pks} ORDER BY {order or f'`{SEQ_COL}`'}"
 
 
 # `cluster_cols` (below) prefixes every fold window's PARTITION BY with
@@ -78,9 +77,9 @@ def _lag_over(pk: list[str], order_cols: list[str] | None = None) -> str:
 # (bucket, pk) is satisfied by a hash(bucket) exchange — so the fold,
 # the changelog emission and the downstream commit windows (offsets,
 # is-last, id carry — all PARTITION BY bucket[, pk]) share ONE
-# num_buckets-wide exchange instead of a pk exchange plus a bucket
-# exchange (guide §2.4: two operations keyed the same way share one
-# exchange).
+# bucket-keyed exchange (sized by bucketing.exchange_width) instead of a
+# pk exchange plus a bucket exchange (guide §2.4: two operations keyed
+# the same way share one exchange).
 
 
 def _struct_sql(cols: list[str]) -> str:
@@ -99,7 +98,8 @@ def emit_select_list(
     """Select list of the changelog-emission layer (see `_emit`). A
     standalone string builder so the layered fold (`_emit`) and the
     one-statement SQL fold (kv.KvStore._fold_replay_sql) emit from the
-    SAME expression strings."""
+    SAME expression strings. Empty slots come out as all-null rows that
+    `EMIT_WHERE` drops."""
 
     def mk(ct_expr: str, row: str | None, sub: int) -> str:
         val = (lambda c: f"({row}).`{c}`") if row is not None else (lambda c: f"`{c}`")
@@ -129,8 +129,15 @@ def emit_select_list(
     return [
         f"`{SEQ_COL}`",
         *[f"`{c}`" for c in (extra_cols or [])],
-        f"inline(array_compact(array({', '.join(slots)})))",
+        f"inline(array({', '.join(slots)}))",
     ]
+
+
+# every real emission slot sets `__sub` (0, 1 or -1); an empty slot
+# inlines to an all-null row. Filtering after the generator, instead of
+# array_compact (a `filter` lambda, evaluated through the interpreter)
+# inside it, keeps the Generate node in whole-stage codegen.
+EMIT_WHERE = f"`{SUB_COL}` IS NOT NULL"
 
 
 def _emit(
@@ -151,11 +158,11 @@ def _emit(
     exactly KvTablet.applyInsert/applyUpdate/applyDelete
     (KvTablet.java:755-792).
 
-    ONE plan node: the events are FLAT structs (sub + change type + data
+    ONE generator: the events are FLAT structs (sub + change type + data
     columns at the top level) unpacked by inline() in the same select
     that builds them, and the seed-row suppression rides the slot
-    conditions (array_compact drops seed rows entirely) — three plan
-    nodes fused into one, a measurable slice of the per-commit driver
+    conditions (a slot that does not fire inlines to a null row, which
+    `EMIT_WHERE` drops) — a measurable slice of the per-commit driver
     constant.
 
     `extra_cols` ride through unchanged (the commit path keeps __bucket
@@ -169,7 +176,7 @@ def _emit(
             cols, cur_state, prev_state, prev_present, emit_cond,
             extra_cols, emit_prior,
         )
-    )
+    ).filter(EMIT_WHERE)
 
 
 def replay(
@@ -180,6 +187,7 @@ def replay(
     may_have_deletes: bool = True,
     cluster_cols: list[str] | None = None,
     emit_prior: bool = False,
+    seq_order: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fold a change stream into (changelog_df, snapshot_df).
 
@@ -195,6 +203,11 @@ def replay(
     note above _run_over and _emit): windows additionally keyed by the
     clustering columns, and seed rows re-emitted as NULL-change-type
     prior rows that carry the clustering columns through.
+
+    `seq_order` is the ORDER BY of the window that numbered `__seq`
+    (its columns still in `df`, see kv.KvStore._fold_input): the fold
+    windows order by it instead of `__seq`, so they reuse that window's
+    sort rather than sorting again.
     """
     engine = "default" if merge_mode == "overwrite" else schema.merge_engine
     pk = schema.primary_key
@@ -220,22 +233,26 @@ def replay(
                     df, schema, partial_update_cols, cluster_cols, emit_prior
                 )
             else:
-                out = _replay_partial(df, schema, partial_update_cols, part, emit_prior)
+                out = _replay_partial(
+                    df, schema, partial_update_cols, part, emit_prior, seq_order
+                )
         else:
-            out = _replay_default(df, schema, part, emit_prior)
+            out = _replay_default(df, schema, part, emit_prior, seq_order)
         return _apply_changelog_image(
             out, schema, full_row=not partial_update_cols, prior_rows=emit_prior
         )
     if engine == "first_row":
-        return _replay_first_row(df, schema, part, emit_prior)
+        return _replay_first_row(df, schema, part, emit_prior, seq_order)
     if engine == "versioned":
         return _apply_changelog_image(
-            _replay_versioned(df, schema, part, emit_prior),
+            _replay_versioned(df, schema, part, emit_prior, seq_order),
             schema, full_row=False, prior_rows=emit_prior,
         )
     if engine == "aggregation":
         return _apply_changelog_image(
-            _replay_aggregation(df, schema, partial_update_cols, part, emit_prior),
+            _replay_aggregation(
+                df, schema, partial_update_cols, part, emit_prior, seq_order
+            ),
             schema, full_row=False, prior_rows=emit_prior,
         )
     raise ValueError(f"unknown merge engine: {engine}")
@@ -297,15 +314,16 @@ def wal_image_ct_case_sql() -> str:
 
 
 def default_fold_select_list(
-    cols: list[str], part: list[str], order_cols: list[str] | None = None
+    cols: list[str], part: list[str], order: str | None = None
 ) -> list[str]:
     """Select list of the default-merge running-state layer (state
     presence after each record). Shared by `_replay_default` and the
-    one-statement SQL fold (kv.KvStore._fold_replay_sql). `order_cols`
-    overrides the fold-order columns (default [__seq]); the group-commit
-    fold passes [__grp, __seq] so per-batch sequence numbers replay in
-    batch-major order — identical per-key frames to N sequential folds."""
-    lag_over = _lag_over(part, order_cols)
+    one-statement SQL fold (kv.KvStore._fold_replay_sql). `order` is
+    the fold's ORDER BY (default `__seq`, see `_lag_over`); the
+    group-commit fold leads it with `__grp` so per-batch sequences
+    replay in batch-major order — identical per-key frames to N
+    sequential folds."""
+    lag_over = _lag_over(part, order)
     state = f"CASE WHEN `{OP_COL}` = 'U' THEN {_struct_sql(cols)} END"
     return [
         "*",
@@ -321,11 +339,12 @@ def _replay_default(
     schema: TableSchema,
     part: list[str] | None = None,
     emit_prior: bool = False,
+    seq_order: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     pk, cols = schema.primary_key, schema.data_columns()
     part = part or pk
     extra = [c for c in part if c not in pk]
-    d = df.selectExpr(*default_fold_select_list(cols, part))
+    d = df.selectExpr(*default_fold_select_list(cols, part, seq_order))
     changelog = _emit(
         d,
         cols,
@@ -363,6 +382,7 @@ def _replay_partial(
     target_cols: list[str],
     part: list[str] | None = None,
     emit_prior: bool = False,
+    seq_order: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Running per-column state: target columns take the incoming value
     (explicit nulls overwrite — hence the struct wrapper that makes
@@ -371,7 +391,7 @@ def _replay_partial(
     pk, cols = schema.primary_key, schema.data_columns()
     part = part or pk
     extra = [c for c in part if c not in pk]
-    run_over, lag_over = _run_over(part), _lag_over(part)
+    run_over, lag_over = _run_over(part, seq_order), _lag_over(part, seq_order)
 
     running = []
     for c in cols:
@@ -421,6 +441,7 @@ def _replay_first_row(
     schema: TableSchema,
     part: list[str] | None = None,
     emit_prior: bool = False,
+    seq_order: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     pk, cols = schema.primary_key, schema.data_columns()
     part = part or pk
@@ -429,7 +450,7 @@ def _replay_first_row(
         df.filter(f"`{OP_COL}` = 'U'")
         .selectExpr(
             "*",
-            f"row_number() OVER ({_lag_over(part)}) AS __rn",
+            f"row_number() OVER ({_lag_over(part, seq_order)}) AS __rn",
         )
         .filter("__rn = 1")
     )
@@ -467,6 +488,7 @@ def _replay_versioned(
     schema: TableSchema,
     part: list[str] | None = None,
     emit_prior: bool = False,
+    seq_order: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     pk, cols = schema.primary_key, schema.data_columns()
     part = part or pk
@@ -474,7 +496,7 @@ def _replay_versioned(
     ver = schema.version_column
     if not ver:
         raise ValueError("versioned merge engine requires table.merge-engine.versioned.ver-column")
-    run_over, lag_over = _run_over(part), _lag_over(part)
+    run_over, lag_over = _run_over(part, seq_order), _lag_over(part, seq_order)
 
     # ranking key: (version with null -> -inf, then arrival order so the
     # newer write wins ties) — exactly createVersionComparator + new-wins
@@ -560,6 +582,7 @@ def _replay_aggregation(
     partial_update_cols: list[str] | None = None,
     part: list[str] | None = None,
     emit_prior: bool = False,
+    seq_order: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """AGGREGATION merge; with `partial_update_cols` only target columns
     take the batch's contributions, untouched columns carry the seed's
@@ -572,7 +595,7 @@ def _replay_aggregation(
     extra = [c for c in part if c not in pk]
     agg_spec = schema.agg_spec
     delim = schema.properties.get("table.merge-engine.aggregation.listagg-delimiter", ",")
-    run_over, lag_over = _run_over(part), _lag_over(part)
+    run_over, lag_over = _run_over(part, seq_order), _lag_over(part, seq_order)
     dtypes = dict(df.dtypes)
     target = set(partial_update_cols) if partial_update_cols else None
 

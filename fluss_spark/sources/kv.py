@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from fluss_spark.bucketing import bucket_of, exact, to_internal
+from fluss_spark.bucketing import bucket_of, exact, exchange_width, to_internal
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.operators.replay import (
     OP_COL,
@@ -68,6 +68,7 @@ from fluss_spark.operators.replay import (
     SUB_COL,
     replay,
 )
+from fluss_spark.registry import session_key
 from fluss_spark.sources.log import LogStore
 from fluss_spark.types import (
     BUCKET_COL,
@@ -168,7 +169,7 @@ class KvStore:
         # the commit's prior-row feed re-read every referenced dir each
         # commit, and the JVM analysis round was a measurable slice of
         # the per-commit driver gap. Keyed by (data dir, spark session).
-        self._dir_cache: dict[tuple[str, int], DataFrame] = {}
+        self._dir_cache: dict[tuple, DataFrame] = {}
         self._partpath_parse_cache: dict[str, tuple | None] = {}
         # version -> per-bucket HWM at that commit (immutable once
         # written; feeds the deferred-snapshot tail bounds)
@@ -412,8 +413,8 @@ class KvStore:
                     spark, df, ordering, batch_buckets
                 )
             else:
-                fold_in, may_have_deletes, batch_buckets, pair_scope, prior = self._fold_input(
-                    spark, df, ordering, batch_buckets, fused=fused
+                fold_in, may_have_deletes, batch_buckets, pair_scope, prior, seq_order = (
+                    self._fold_input(spark, df, ordering, batch_buckets, fused=fused)
                 )
 
                 changelog, _ = replay(
@@ -424,6 +425,7 @@ class KvStore:
                     may_have_deletes=may_have_deletes,
                     cluster_cols=[BUCKET_COL] if fused else None,
                     emit_prior=fused,
+                    seq_order=seq_order,
                 )
             return self._commit_changelog(
                 spark, changelog, commit_ts_ms, batch_buckets, pair_scope, prior,
@@ -594,8 +596,8 @@ class KvStore:
                     spark, df, ordering, batch_buckets
                 )
             else:
-                fold_in, may_have_deletes, buckets0, pair_scope, prior = self._fold_input(
-                    spark, df, ordering, batch_buckets, fused=True
+                fold_in, may_have_deletes, buckets0, pair_scope, prior, seq_order = (
+                    self._fold_input(spark, df, ordering, batch_buckets, fused=True)
                 )
                 changelog, _ = replay(
                     fold_in,
@@ -605,6 +607,7 @@ class KvStore:
                     may_have_deletes=may_have_deletes,
                     cluster_cols=[BUCKET_COL],
                     emit_prior=True,
+                    seq_order=seq_order,
                 )
             ts_ms = (
                 commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
@@ -751,10 +754,14 @@ class KvStore:
         the __seq assignment here, the replay fold, the commit's offset/
         is-last/id-carry windows (all PARTITION BY __bucket[, pk], and
         bucket = pmod(hash(pk), n) is a function of the pk) — is
-        satisfied by that single num_buckets-wide exchange: the whole
-        upsert transaction becomes scan → ONE exchange → windows →
-        write, with no seed semi-join/broadcast and the snapshot read
-        once instead of twice (guide §2.4)."""
+        satisfied by that single exchange (sized by `exchange_width`):
+        the whole upsert transaction becomes scan → ONE exchange →
+        windows → write, with no seed semi-join/broadcast and the
+        snapshot read once instead of twice (guide §2.4).
+
+        Returns (fold_in, may_have_deletes, batch_buckets, pair_scope,
+        bounded snapshot, seq_order); pass seq_order to `replay` so its
+        windows reuse the __seq window's sort."""
         schema = self.schema
         pk, cols = schema.primary_key, schema.data_columns()
         # normalize the batch: every data column present (nulls for
@@ -884,14 +891,19 @@ class KvStore:
             # __bucket arrived with both union branches; establish the
             # transaction's ONE exchange here — every downstream window
             # is keyed by __bucket[, pk] and reuses it
-            fold_in = fold_in.repartition(schema.num_buckets, F.col(BUCKET_COL))
+            width = exchange_width(
+                spark, schema.num_buckets, batch_buckets if has_snapshot else None
+            )
+            fold_in = fold_in.repartition(width, F.col(BUCKET_COL))
             part_sql = f"`{BUCKET_COL}`, " + part_sql
         # __seq inside the fold's own exchange: seed first (SEED desc),
         # then batch rows in `ordering` order. Batch rows number 1.. per
         # key whether or not a seed row exists (sum(SEED) over the key =
         # presence); seed rows pin __seq=0 — identical semantics to the
         # old pre-union row_number window, minus one full-batch exchange.
-        # ONE projection computes __seq and drops the ordering columns.
+        # ONE projection computes __seq; the ordering columns ride on so
+        # replay's windows can order by `ord_sql` (returned as its
+        # seq_order) and reuse this window's sort.
         ord_sql = ", ".join(
             [f"`{SEED_COL}` DESC"] + [f"`{c}` ASC NULLS FIRST" for c in ord_names]
         )
@@ -904,13 +916,14 @@ class KvStore:
             f"AS `{SEQ_COL}`",
             f"`{SEED_COL}`",
             *([f"`{BUCKET_COL}`"] if fused else []),
+            *[f"`{c}`" for c in ord_extra],
         )
         pair_scope = (
             (pair_pred, pair_keys)
             if (pair_pred is not None or pair_keys is not None)
             else None
         )
-        return fold_in, may_have_deletes, batch_buckets, pair_scope, bounded
+        return fold_in, may_have_deletes, batch_buckets, pair_scope, bounded, ord_sql
 
     def _discover_scope(self, b: DataFrame, manifest_now):
         """Batch write scope — (bucket list, typed pair predicate,
@@ -1035,6 +1048,7 @@ class KvStore:
         sequential folds, so the emitted change rows are identical. With
         a single batch the generated SQL is byte-identical to before."""
         from fluss_spark.operators.replay import (
+            EMIT_WHERE,
             default_fold_select_list,
             emit_select_list,
             wal_image_ct_case_sql,
@@ -1142,15 +1156,21 @@ class KvStore:
             f" UNION ALL SELECT {', '.join(_bproj_for(d, cs, g))} FROM {{{_ph(g)}}}"
             for g, (d, cs) in enumerate(zip(dfs, cast_sqls))
         )
-        # the transaction's ONE exchange, sized to the table's bucket
-        # count (same node as DataFrame.repartition(n, __bucket))
+        # the transaction's ONE exchange, sized by exchange_width (same
+        # node as DataFrame.repartition(n, __bucket)); the buckets are
+        # known unless this is the table's first commit
+        width = exchange_width(
+            spark, schema.num_buckets, batch_buckets if has_snapshot else None
+        )
         repart_sql = (
-            f"SELECT /*+ REPARTITION({schema.num_buckets}, `{BUCKET_COL}`) */ *"
+            f"SELECT /*+ REPARTITION({width}, `{BUCKET_COL}`) */ *"
             f" FROM ({union_sql})"
         )
         # per-batch __seq: under group commit the numbering partition
         # additionally keys on __grp, so each batch's rows restart at 1
-        # per key — the sequential commits' numbering exactly
+        # per key — the sequential commits' numbering exactly. The
+        # ordering columns ride on: the fold windows below order by the
+        # same spec (led by __grp), so they reuse this window's sort
         seq_part_cols = [f"`{BUCKET_COL}`"] + [f"`{c}`" for c in pk] + (
             [f"`{GRP_COL}`"] if grouped else []
         )
@@ -1170,6 +1190,7 @@ class KvStore:
                 f"`{BUCKET_COL}`",
             ]
             + ([f"`{GRP_COL}`"] if grouped else [])
+            + [f"`{c}`" for c in ord_extra]
         )
         fold_sql = f"SELECT {', '.join(seq_select)} FROM ({repart_sql})"
 
@@ -1178,7 +1199,7 @@ class KvStore:
         where = ""
         if schema.delete_behavior == "ignore" and may_have_deletes:
             where = f" WHERE `{OP_COL}` != 'D' OR `{SEED_COL}` = 1"
-        fold_order = [GRP_COL, SEQ_COL] if grouped else None
+        fold_order = f"`{GRP_COL}`, {ord_sql}" if grouped else ord_sql
         extra_fold_cols = [BUCKET_COL] + ([GRP_COL] if grouped else [])
         d_sql = (
             f"SELECT {', '.join(default_fold_select_list(cols, [BUCKET_COL] + list(pk), fold_order))}"
@@ -1188,7 +1209,7 @@ class KvStore:
             f"SELECT {', '.join(emit_select_list(cols, '__cur', '__prev', '__prev_present', 'true', extra_fold_cols, True))}"
             f" FROM ({d_sql})"
         )
-        final_sql = emit_sql
+        final_sql = f"SELECT * FROM ({emit_sql}) WHERE {EMIT_WHERE}"
         if schema.changelog_image == "wal":
             # +I -> +U rewrite gates exactly like the layered
             # _apply_changelog_image: default merge engine (the SCHEMA's
@@ -1207,7 +1228,7 @@ class KvStore:
                 + f"`{SUB_COL}`, "
                 f"{ct} AS `{CHANGE_TYPE_COL}`, "
                 + ", ".join(f"`{c}`" for c in cols)
-                + f" FROM ({emit_sql}) WHERE {wal_image_where_sql(True)}"
+                + f" FROM ({emit_sql}) WHERE {EMIT_WHERE} AND {wal_image_where_sql(True)}"
             )
 
         frames = {"snap": bounded}
@@ -1392,7 +1413,9 @@ class KvStore:
             shutil.rmtree(dst)
         (
             final.withColumn(BUCKET_COL, self._bucket_expr())
-            .repartition(min(schema.num_buckets, 32), F.col(BUCKET_COL))
+            .repartition(
+                exchange_width(spark, schema.num_buckets, buckets), F.col(BUCKET_COL)
+            )
             .write.mode("overwrite")
             .partitionBy(*pcols, BUCKET_COL)
             .parquet(dst)
@@ -1712,18 +1735,21 @@ class KvStore:
         is_last = f"({pos} = max({pos}) OVER (PARTITION BY `{BUCKET_COL}`, {pk_sql}))"
         if not prior_included:
             ev = ev.selectExpr("*", f"{bucket_sql} AS `{BUCKET_COL}`")
-            # the bucket window's exchange sized to the table's bucket
-            # count, not spark.sql.shuffle.partitions: PARTITION BY bucket
-            # caps the usable parallelism at num_buckets (the reference
+            # the bucket window's exchange sized by exchange_width, not
+            # spark.sql.shuffle.partitions: PARTITION BY bucket caps the
+            # usable parallelism at the buckets written (the reference
             # runs exactly one leader per bucket), so any extra shuffle
             # partitions are guaranteed-empty tasks that still pay
             # scheduling + file-commit setup in the write stage.
-            # hash(bucket) into num_buckets satisfies the window's
-            # required distribution, so no second exchange is added.
+            # hash(bucket) satisfies the window's required distribution,
+            # so no second exchange is added.
             # (prior_included: the changelog arrives already hash-
             # partitioned by __bucket from the fold's exchange — adding
             # either node here would re-shuffle for nothing.)
-            ev = ev.repartition(schema.num_buckets, F.col(BUCKET_COL))
+            width = exchange_width(
+                spark, schema.num_buckets, batch_buckets if old_manifest else None
+            )
+            ev = ev.repartition(width, F.col(BUCKET_COL))
         carried: dict[str, str] = {}
         if id_expr:
             # insert-stable ids (reference M10 semantics): a fresh id is
@@ -1798,10 +1824,12 @@ class KvStore:
             f"`{BUCKET_COL}`",
             *([f"`{GRP_COL}`"] if grouped else []),
         )
-        # routing + system-column shaping in ONE plan node: the 0-2
+        # routing + system-column shaping in ONE generator: the 0-2
         # destination copies of each row are FLAT structs unpacked by
-        # inline() in the same select that builds them (array_compact
-        # drops rows with no destination). The 's' copy carries NO WAL
+        # inline() in the same select that builds them; a slot with no
+        # destination inlines to a null row that the __dest filter drops
+        # (filtering after the generator keeps it in whole-stage
+        # codegen, see replay.EMIT_WHERE). The 's' copy carries NO WAL
         # system-column values: nulls compress to nothing, and lake
         # exports (schema from parquet footers) must not see real values
         # on the snapshot surface.
@@ -1830,9 +1858,9 @@ class KvStore:
         )
         out = ev.selectExpr(
             *qcols,
-            f"inline(array_compact(array({slot_w}, {slot_s})))",
+            f"inline(array({slot_w}, {slot_s}))",
             f"`{BUCKET_COL}`",
-        )
+        ).filter(f"`{DEST_COL}` IS NOT NULL")
 
         return out, persisted, auto_next
 
@@ -2245,7 +2273,10 @@ class KvStore:
             data_dir = f"data-v{version}"
             (
                 bucket_rows.withColumn(BUCKET_COL, self._bucket_expr())
-                .repartition(min(schema.num_buckets, 32), F.col(BUCKET_COL))
+                .repartition(
+                    exchange_width(spark, schema.num_buckets, touched_buckets),
+                    F.col(BUCKET_COL),
+                )
                 .write.mode("overwrite")
                 .partitionBy(*schema.partition_keys, BUCKET_COL)
                 .parquet(os.path.join(self.snapshot_dir, data_dir))
@@ -2508,9 +2539,7 @@ class KvStore:
                 # snapshot() of the same table — reuse the
                 # resolved relation and its file listing instead of
                 # re-analyzing per call
-                # applicationId, not id(spark): ids can be reused by a
-                # new session after GC (see registry.session_key)
-                key = (tuple(leaves), spark.sparkContext.applicationId)
+                key = (tuple(leaves), session_key(spark))
                 cached = self._dir_cache.get(key)
                 if cached is not None:
                     return cached
@@ -2680,8 +2709,10 @@ class KvStore:
         bare-scan plan. The resolved DataFrame is cached per dir (dirs
         are immutable, see __init__) — file listing happens at execution
         time, so the cache saves only driver-side analysis, never
-        staleness."""
-        key = (data_dir, id(spark))
+        staleness. The key is the session's `registry.session_key`, not
+        id(spark): a new session can reuse a collected one's id, and its
+        cached frame would be bound to a dead context."""
+        key = (data_dir, session_key(spark))
         cached = self._dir_cache.get(key)
         if cached is not None:
             return cached

@@ -516,13 +516,13 @@ def test_sql_fold_changelog_matches_layered_fold(spark, tmp_path):
         cl_sql, bb_s, _ps, _prior = t.kv._fold_replay_sql(
             spark, df_sql, ["n"], None
         )
-        fold_in, mhd, bb_l, _ps2, _prior2 = t.kv._fold_input(
+        fold_in, mhd, bb_l, _ps2, _prior2, seq_order = t.kv._fold_input(
             spark, mk(batch), ["n"], None, fused=True
         )
         cl_lay, _ = replay(
             fold_in, schema, may_have_deletes=mhd,
             cluster_cols=[BUCKET_COL], emit_prior=True,
-            merge_mode=mm,
+            merge_mode=mm, seq_order=seq_order,
         )
         assert bb_s == bb_l, name
         assert sorted(cl_sql.columns) == sorted(cl_lay.columns), name

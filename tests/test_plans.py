@@ -226,6 +226,38 @@ def test_predicate_builder_maps_to_pushdown(spark, sf_dir):
     )
     assert not P.only_touches(P.equal("a", 1), {"dt"}, {"dt", "a"})
 
+
+def _pin_commit_plan(spark, out, buckets, num_buckets, scans):
+    """Pins of a fused commit-output plan as the commit runs it (AQE
+    off): ONE hash exchange on __bucket, as wide as the sizing rule
+    min(table buckets, touched buckets, cores); no broadcast; `scans`
+    file scans; every Generate inside whole-stage codegen, with no
+    array_compact / filter lambda left to pull it out; and 3 sorts —
+    the one the __seq numbering and the fold windows share, plus the
+    commit's arrival-order and per-key sorts (the writer's own sort is
+    not part of this plan)."""
+    import re
+
+    from fluss_spark.sources.kv import BUCKET_COL, _aqe_off_enter, _aqe_off_exit
+
+    _aqe_off_enter(spark)
+    try:
+        full = out._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "simple"
+        )
+    finally:
+        _aqe_off_exit(spark)
+    width = min(num_buckets, len(set(buckets)), spark.sparkContext.defaultParallelism)
+    assert len(re.findall(r"Exchange hashpartitioning", full)) == 1, full
+    assert re.search(rf"hashpartitioning\(`?{BUCKET_COL}`?#\d+, {width}\)", full), full
+    assert "BroadcastHashJoin" not in full, full
+    assert full.count("InMemoryFileIndex") == scans, full
+    gens = re.findall(r"^[\s+\-:|]*(\*\(\d+\) )?Generate ", full, re.M)
+    assert len(gens) == 2 and all(gens), full
+    assert "array_compact" not in full and "filter(" not in full, full
+    assert len(re.findall(r"^[\s+\-:|]*(?:\*\(\d+\) )?Sort \[", full, re.M)) == 3, full
+
+
 def test_replay_fold_is_single_shuffle(spark, sf_dir):
     """The whole upsert/changelog fold must be ONE hash exchange on the
     pk — both window passes (running state + lag) reuse the same
@@ -288,11 +320,13 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     """The FULL second-commit upsert transaction — seed read ∪ batch,
     __seq assignment, changelog fold, AND the fused commit-output plan
     (WAL offsets, is-last routing, snapshot rewrite feed) — must cost
-    exactly ONE hash exchange, keyed by __bucket and sized to the
-    table's bucket count. Every window is keyed __bucket[, pk] (bucket
-    is a function of the pk), so they all reuse the fold's exchange; the
-    prior-snapshot rows ride the same exchange as re-emitted seed rows,
-    so the snapshot is scanned ONCE and there is no semi-join at all."""
+    exactly ONE hash exchange, keyed by __bucket and as wide as
+    min(table buckets, touched buckets, cores). Every window is keyed
+    __bucket[, pk] (bucket is a function of the pk), so they all reuse
+    the fold's exchange; the prior-snapshot rows ride the same exchange
+    as re-emitted seed rows, so the snapshot is scanned ONCE and there
+    is no semi-join at all. The fold windows order by the __seq
+    numbering's own spec, so they share its sort."""
     import re
 
     from fluss_spark.catalog import Catalog
@@ -308,12 +342,12 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     )
     t = create_table(Catalog(str(tmp_path / "wh")), "db", "fold_plan", schema)
     t.upsert(ev.filter(F.col("event_id") % 2 == 0), ordering=["event_id"])
-    fold_in, mhd, bb, ps, _prior = t.kv._fold_input(
+    fold_in, mhd, bb, ps, _prior, seq_order = t.kv._fold_input(
         spark, ev.filter(F.col("event_id") % 2 == 1), ["event_id"], fused=True
     )
     changelog, _ = replay(
         fold_in, schema, may_have_deletes=mhd,
-        cluster_cols=[BUCKET_COL], emit_prior=True,
+        cluster_cols=[BUCKET_COL], emit_prior=True, seq_order=seq_order,
     )
     simple = changelog._sc._jvm.PythonSQLUtils.explainString(
         changelog._jdf.queryExecution(), "simple"
@@ -326,27 +360,22 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     out, _persisted, _auto = t.kv._commit_plan(
         spark, changelog, 123456, bb, ps, state0, prior_included=True
     )
-    full = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    assert len(re.findall(r"Exchange hashpartitioning", full)) == 1, full
-    assert re.search(rf"hashpartitioning\(`?{BUCKET_COL}`?#\d+, 8\)", full), full
     # one scan of the snapshot, one scan of the batch (plus no broadcast)
-    assert full.count("InMemoryFileIndex") == 2, full
+    _pin_commit_plan(spark, out, bb, schema.num_buckets, scans=2)
 
 
 def test_sql_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
     """The one-statement SQL fold (`_fold_replay_sql`, the default serial
     upsert path) must produce the SAME physical shape the layered fold
     pins above: the complete commit-output plan costs exactly ONE hash
-    exchange keyed by __bucket and sized to the table's bucket count,
-    with the snapshot scanned once, the batch scanned once, and no
-    broadcast — the nested-subquery construction changes only how many
-    times the driver analyzes the tree, never the resolved plan."""
+    exchange keyed by __bucket and as wide as min(table buckets,
+    touched buckets, cores), with the snapshot scanned once, the batch
+    scanned once, no broadcast, codegen'd generators and 3 sorts — the
+    nested-subquery construction changes only how many times the driver
+    analyzes the tree, never the resolved plan."""
     import re
 
     from fluss_spark.catalog import Catalog
-    from fluss_spark.sources.kv import BUCKET_COL
     from fluss_spark.table import create_table
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
@@ -370,25 +399,20 @@ def test_sql_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
     out, _persisted, _auto = t.kv._commit_plan(
         spark, changelog, 123456, bb, ps, state0, prior_included=True
     )
-    full = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    assert len(re.findall(r"Exchange hashpartitioning", full)) == 1, full
-    assert re.search(rf"hashpartitioning\(`?{BUCKET_COL}`?#\d+, 8\)", full), full
-    assert full.count("InMemoryFileIndex") == 2, full
+    _pin_commit_plan(spark, out, bb, schema.num_buckets, scans=2)
 
 
 def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
     """The GROUP fold (upsert_many: N batches through one transaction)
     keeps the single-exchange contract: the complete commit-output plan
     for a 3-batch group costs exactly ONE hash exchange keyed by
-    __bucket and sized to the table's bucket count, no broadcast, with
-    the snapshot scanned once — the batch index only adds window order
-    columns and a write-partition level, never an exchange."""
+    __bucket and as wide as min(table buckets, touched buckets, cores),
+    no broadcast, codegen'd generators and 3 sorts, with the snapshot
+    scanned once — the batch index only leads the window order and adds
+    a write-partition level, never an exchange or a sort."""
     import re
 
     from fluss_spark.catalog import Catalog
-    from fluss_spark.sources.kv import BUCKET_COL
     from fluss_spark.table import create_table
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
@@ -418,14 +442,9 @@ def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
         spark, changelog, [111, 222, 333], bb, ps, state0,
         prior_included=True, grp_count=3,
     )
-    full = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    assert len(re.findall(r"Exchange hashpartitioning", full)) == 1, full
-    assert re.search(rf"hashpartitioning\(`?{BUCKET_COL}`?#\d+, 8\)", full), full
     # one snapshot scan + one scan per batch — the group adds batches,
     # never a second snapshot pass
-    assert full.count("InMemoryFileIndex") == 1 + len(batches), full
+    _pin_commit_plan(spark, out, bb, schema.num_buckets, scans=1 + len(batches))
 
 
 def test_q5_broadcasts_all_dims(spark, sf_dir):
