@@ -171,9 +171,6 @@ class KvStore:
         # the per-commit driver gap. Keyed by (data dir, spark session).
         self._dir_cache: dict[tuple, DataFrame] = {}
         self._partpath_parse_cache: dict[str, tuple | None] = {}
-        # version -> per-bucket HWM at that commit (immutable once
-        # written; feeds the deferred-snapshot tail bounds)
-        self._hwm_cache: dict[int, dict[int, int]] = {}
 
     # ------------------------------------------------------------------ #
     # manifests
@@ -2418,8 +2415,8 @@ class KvStore:
         # changelog slice between its HWM and this version's HWM
         m = self._nearest_manifest_version(version)
         base = self._materialized(spark, m, buckets, pair_pred, pair_keys)
-        start = self._hwm_at(m) if m >= 0 else {}
-        end = self._hwm_at(version)
+        start = self.log.hwm_at(m) if m >= 0 else {}
+        end = self.log.hwm_at(version)
         if start == end:
             return base
         # retention fence: TTL/expiry may have trimmed changelog inside
@@ -2450,18 +2447,8 @@ class KvStore:
         cur = {int(b): o for b, o in state.log_hwm.items()}
         if state.snapshot_version < 0:
             return {} if cur else None
-        snap_hwm = self._hwm_at(state.snapshot_version)
+        snap_hwm = self.log.hwm_at(state.snapshot_version)
         return None if snap_hwm == cur else snap_hwm
-
-    def _hwm_at(self, version: int) -> dict[int, int]:
-        """Per-bucket log HWM recorded at a commit version (memoized —
-        commit states are immutable once written)."""
-        cached = self._hwm_cache.get(version)
-        if cached is None:
-            st = self.catalog.commit_at(self.db, self.table, version)
-            cached = {int(b): o for b, o in st.log_hwm.items()}
-            self._hwm_cache[version] = cached
-        return dict(cached)
 
     def _nearest_manifest_version(self, version: int) -> int:
         """Greatest manifest version <= `version`, or -1 if none."""

@@ -16,19 +16,23 @@ Reference semantics reproduced (not the implementation):
   - commit protocol: data files are STAGED under <table>/.tmp/log-v<V>
     (hidden from every Spark reader, including the native file-source
     stream), atomically renamed into log/__commit=<V>/ at commit time,
-    then meta/CURRENT advances; batch readers additionally filter
-    commit <= CURRENT so even the rename -> CURRENT instant is fenced.
+    then meta/CURRENT advances; batch readers list only the dirs with
+    log_floor <= V <= CURRENT, so even the rename -> CURRENT instant is
+    fenced.
     Orphans from a crashed writer (staging dirs, or a renamed dir whose
     CURRENT advance never happened) are self-healed by the next writer
     under the table write lock (SURVEY §7 "what's hard").
 
-Layout: <table>/log/commit=<V>/[<part>=<v>/]__bucket=<b>/*.parquet
+Layout: <table>/log/__commit=<V>/[<part>=<v>/]__bucket=<b>/*.parquet
+Commit dir V holds only offsets below the HWMs recorded at commit V, so
+an offset-bounded scan lists just the dirs past its start offsets.
 Parquet row-group min/max stats on `__offset`/`__timestamp` give free
-offset-range and timestamp time-travel pruning at scan time.
+offset-range and timestamp time-travel pruning inside them.
 """
 
 from __future__ import annotations
 
+import bisect
 import os
 import time
 
@@ -36,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from fluss_spark.bucketing import exchange_width
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.types import (
     BUCKET_COL,
@@ -86,6 +91,8 @@ class LogStore:
         # Here "remote" is a second Parquet root; scans union both tiers.
         self.remote_dir = os.path.join(catalog.table_dir(db, table), "remote")
         self.tmp_dir = os.path.join(catalog.table_dir(db, table), ".tmp")
+        # version -> per-bucket HWM at that commit (hwm_at)
+        self._hwm_cache: dict[int, dict[int, int]] = {}
 
     # ------------------------------------------------------------------ #
     # staged-commit protocol
@@ -197,86 +204,18 @@ class LogStore:
         state = self.catalog.current_commit(self.db, self.table)
         version = state.version + 1
         ts_ms = commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
-
-        cols = schema.data_columns() + (extra_cols or [])
-        for f in schema.fields:  # engine-assigned columns may be absent
-            if f.auto_increment and f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast("long"))
-        keep = cols + [c for c in (ordering or []) if c not in cols]
-        out = df.select(*keep)
-        # coerce data columns to their DECLARED types: an input batch with
-        # a narrower/different type (e.g. a SQL literal inferred as
-        # DECIMAL) would otherwise write its physical type into the file,
-        # and the explicit read schema would misread it
-        from fluss_spark.types import parse_type
-
-        declared = {f.name: parse_type(f.type) for f in schema.fields}
-        out = out.select(
-            *[
-                F.col(c).cast(declared[c]).alias(c) if c in declared else F.col(c)
-                for c in keep
-            ]
+        out, auto_next = self._append_plan(
+            df, state, ts_ms, ordering, extra_cols, auto_increment_override
         )
-
-        # bucket routing (W1/W2)
-        n = schema.num_buckets
-        if BUCKET_COL in (extra_cols or []):
-            pass  # caller pre-routed (e.g. replay keeps pk-bucket alignment)
-        elif schema.bucket_keys:
-            out = out.withColumn(
-                BUCKET_COL, F.pmod(F.hash(*schema.bucket_keys), F.lit(n)).cast("int")
-            )
-        else:
-            out = out.withColumn(
-                BUCKET_COL, (F.spark_partition_id() % F.lit(n)).cast("int")
-            )
-
-        # per-bucket offset assignment (W3): one window = the bucket leader
-        order_cols = [F.col(c) for c in ordering] if ordering else [F.monotonically_increasing_id()]
-        w = Window.partitionBy(BUCKET_COL).orderBy(*order_cols)
-        base = {int(b): off for b, off in state.log_hwm.items()}
-        # one map literal, not an O(buckets) when-chain: constant
-        # expression/codegen depth at any bucket count (same shape as
-        # kv.py's fused-commit HWM base)
-        base_expr = _bucket_map_expr(base, default=0)
-        out = out.withColumn(OFFSET_COL, (F.row_number().over(w) - 1 + base_expr).cast("long"))
-        out = out.withColumn(TIMESTAMP_COL, F.timestamp_millis(F.lit(ts_ms)))
-
-        # M10 auto-increment: allocate a contiguous per-bucket segment of
-        # ids from the table counter (AutoIncrementManager's segment model,
-        # BoundedSegmentSequenceGenerator) — ids are gap-free across the
-        # commit because segments are packed by cumulative bucket counts.
-        # On a LOG table every appended record is an insert, so the
-        # per-record stamp matches the reference's assign-at-insert rule;
-        # pk-table WALs arrive pre-stamped (auto_increment_override).
-        auto_next = dict(state.auto_increment)
-        auto_cols = [f.name for f in schema.fields if f.auto_increment]
-        if auto_increment_override is not None:
-            auto_next = dict(auto_increment_override)
-        elif auto_cols:
-            bucket_counts = sorted(
-                (int(r[BUCKET_COL]), r["cnt"])
-                for r in out.groupBy(BUCKET_COL).agg(F.count("*").alias("cnt")).collect()
-            )
-            for c in auto_cols:
-                base_id = auto_next.get(c, 0)
-                seg_start, acc = {}, base_id
-                for bkt, cnt in bucket_counts:
-                    seg_start[bkt] = acc
-                    acc += cnt
-                seg_expr = _bucket_map_expr(seg_start, default=base_id)
-                out = out.withColumn(c, (seg_expr + F.row_number().over(w) - 1).cast("long"))
-                auto_next[c] = acc
-        final_cols = [c for c in cols if c not in (BUCKET_COL, OFFSET_COL, TIMESTAMP_COL)]
-        out = out.select(*final_cols, BUCKET_COL, OFFSET_COL, TIMESTAMP_COL)  # drop ordering-only
 
         staged = self.staging_path(version)
         part_cols = list(schema.partition_keys) + [BUCKET_COL]
         codec = schema.properties.get("table.log.compression", "snappy")  # W6
-        # no repartition before the write: the offset window above already
-        # hash-clustered rows by BUCKET_COL (each bucket lives wholly in
-        # one task), so partitionBy(bucket) emits one file per bucket as
-        # is — an extra exchange here would shuffle the batch a third time
+        # no repartition before the write: _append_plan's offset window
+        # already hash-clustered rows by BUCKET_COL (each bucket lives
+        # wholly in one task), so partitionBy(bucket) emits one file per
+        # bucket as is — an extra exchange here would shuffle the batch
+        # a third time
         (
             out.write.mode("overwrite")
             .option("compression", codec)
@@ -312,6 +251,100 @@ class LogStore:
             self.publish(version)
             self.catalog.commit(self.db, self.table, new_state)
         return new_state
+
+    def _append_plan(
+        self,
+        df: DataFrame,
+        state: CommitState,
+        ts_ms: int,
+        ordering: list[str] | None,
+        extra_cols: list[str] | None,
+        auto_increment_override: dict[str, int] | None,
+    ) -> tuple[DataFrame, dict[str, int]]:
+        """The rows append() writes — routed to buckets, numbered from
+        `state`'s HWMs, stamped with `ts_ms` — and the advanced
+        auto-increment counters."""
+        schema = self.schema
+        cols = schema.data_columns() + (extra_cols or [])
+        for f in schema.fields:  # engine-assigned columns may be absent
+            if f.auto_increment and f.name not in df.columns:
+                df = df.withColumn(f.name, F.lit(None).cast("long"))
+        keep = cols + [c for c in (ordering or []) if c not in cols]
+        out = df.select(*keep)
+        # coerce data columns to their DECLARED types: an input batch with
+        # a narrower/different type (e.g. a SQL literal inferred as
+        # DECIMAL) would otherwise write its physical type into the file,
+        # and the explicit read schema would misread it
+        from fluss_spark.types import parse_type
+
+        declared = {f.name: parse_type(f.type) for f in schema.fields}
+        out = out.select(
+            *[
+                F.col(c).cast(declared[c]).alias(c) if c in declared else F.col(c)
+                for c in keep
+            ]
+        )
+
+        # bucket routing (W1/W2)
+        n = schema.num_buckets
+        if BUCKET_COL in (extra_cols or []):
+            pass  # caller pre-routed (e.g. replay keeps pk-bucket alignment)
+        elif schema.bucket_keys:
+            out = out.withColumn(
+                BUCKET_COL, F.pmod(F.hash(*schema.bucket_keys), F.lit(n)).cast("int")
+            )
+        else:
+            out = out.withColumn(
+                BUCKET_COL, (F.spark_partition_id() % F.lit(n)).cast("int")
+            )
+
+        # per-bucket offset assignment (W3): one window = the bucket
+        # leader, behind ONE exchange sized by exchange_width (not by
+        # spark.sql.shuffle.partitions); arrival order is numbered before
+        # the exchange moves rows
+        if ordering:
+            order_cols = [F.col(c) for c in ordering]
+        else:
+            out = out.withColumn("__arrival", F.monotonically_increasing_id())
+            order_cols = [F.col("__arrival")]
+        out = out.repartition(exchange_width(out.sparkSession, n), F.col(BUCKET_COL))
+        w = Window.partitionBy(BUCKET_COL).orderBy(*order_cols)
+        base = {int(b): off for b, off in state.log_hwm.items()}
+        # one map literal, not an O(buckets) when-chain: constant
+        # expression/codegen depth at any bucket count (same shape as
+        # kv.py's fused-commit HWM base)
+        base_expr = _bucket_map_expr(base, default=0)
+        out = out.withColumn(OFFSET_COL, (F.row_number().over(w) - 1 + base_expr).cast("long"))
+        out = out.withColumn(TIMESTAMP_COL, F.timestamp_millis(F.lit(ts_ms)))
+
+        # M10 auto-increment: allocate a contiguous per-bucket segment of
+        # ids from the table counter (AutoIncrementManager's segment model,
+        # BoundedSegmentSequenceGenerator) — ids are gap-free across the
+        # commit because segments are packed by cumulative bucket counts.
+        # On a LOG table every appended record is an insert, so the
+        # per-record stamp matches the reference's assign-at-insert rule;
+        # pk-table WALs arrive pre-stamped (auto_increment_override).
+        auto_next = dict(state.auto_increment)
+        auto_cols = [f.name for f in schema.fields if f.auto_increment]
+        if auto_increment_override is not None:
+            auto_next = dict(auto_increment_override)
+        elif auto_cols:
+            bucket_counts = sorted(
+                (int(r[BUCKET_COL]), r["cnt"])
+                for r in out.groupBy(BUCKET_COL).agg(F.count("*").alias("cnt")).collect()
+            )
+            for c in auto_cols:
+                base_id = auto_next.get(c, 0)
+                seg_start, acc = {}, base_id
+                for bkt, cnt in bucket_counts:
+                    seg_start[bkt] = acc
+                    acc += cnt
+                seg_expr = _bucket_map_expr(seg_start, default=base_id)
+                out = out.withColumn(c, (seg_expr + F.row_number().over(w) - 1).cast("long"))
+                auto_next[c] = acc
+        final_cols = [c for c in cols if c not in (BUCKET_COL, OFFSET_COL, TIMESTAMP_COL)]
+        # drop ordering-only columns
+        return out.select(*final_cols, BUCKET_COL, OFFSET_COL, TIMESTAMP_COL), auto_next
 
     def _footer_hwm(self, staged: str) -> dict[int, int] | None:
         """Per-bucket max(__offset) from Parquet footer statistics of the
@@ -414,6 +447,31 @@ class LogStore:
             e.name.startswith(f"{COMMIT_DIR_COL}=") for e in os.scandir(tier_dir)
         )
 
+    def hwm_at(self, version: int) -> dict[int, int]:
+        """Per-bucket log HWM recorded at a commit version (memoized —
+        commit states are immutable once written). Every log writer
+        keeps dir `__commit=v` below hwm_at(v) in each bucket, and HWMs
+        only grow within [log_floor, current]."""
+        cached = self._hwm_cache.get(version)
+        if cached is None:
+            st = self.catalog.commit_at(self.db, self.table, version)
+            cached = {int(b): o for b, o in st.log_hwm.items()}
+            self._hwm_cache[version] = cached
+        return dict(cached)
+
+    def _first_dir_needed(self, versions: list[int], start: dict[int, int]) -> int:
+        """Index into ascending `versions` of the first commit dir that
+        can hold an offset at or past `start` (a bucket missing from
+        `start` counts from 0 — the resume escape). A dir whose HWM is
+        at or below `start` in every bucket holds nothing new, and since
+        HWMs only grow those dirs form a prefix: a binary search over
+        memoized HWMs finds it."""
+        return bisect.bisect_left(
+            versions,
+            True,
+            key=lambda v: any(o > start.get(b, 0) for b, o in self.hwm_at(v).items()),
+        )
+
     def scan(
         self,
         spark: SparkSession,
@@ -425,9 +483,16 @@ class LogStore:
         """Full or offset-bounded log scan with system columns
         (__bucket, __offset, __timestamp[, _change_type]).
 
-        Uncommitted data is fenced by `__commit <= CURRENT` (partition-dir
-        pruning, no file reads). Offset bounds prune via Parquet row-group
-        stats on __offset.
+        The scan reads exactly the commit dirs it needs, listed with an
+        explicit schema: committed_dirs() fences them to
+        log_floor <= V <= CURRENT (or `as_of_commit`), and with
+        `start_offsets` the dirs whose HWM the start already covers are
+        skipped (the LogSegment-slice read of the reference, and
+        Structured Streaming's getBatch(start, end)). Poll cost follows
+        the new commits, not the retained history. The first dir read
+        can start mid-commit, so the per-bucket offset bounds still
+        apply, as ONE SQL predicate; Parquet row-group stats on
+        __offset prune inside the files.
 
         S9: when tier_log() has moved sealed commits to the remote tier,
         the scan is the union of both tiers — same files, same offsets,
@@ -436,108 +501,49 @@ class LogStore:
         path). `tiers` restricts to one tier ("local"/"remote") for
         maintenance jobs that must not rewrite the other.
         """
-        state = self.catalog.current_commit(self.db, self.table)
-        current = as_of_commit if as_of_commit is not None else state.version
-        # commits below the floor were republished under a new bucket
-        # layout (rebucket); they are unreadable garbage even if a crash
-        # left their dirs on disk. Time travel below the floor is
-        # impossible by construction (the rewrite collapsed history).
-        floor = state.log_floor
-
-        def _commits(d: str) -> list[str]:
-            if not os.path.isdir(d):
-                return []
-            return [
-                e.name
-                for e in os.scandir(d)
-                if e.name.startswith(f"{COMMIT_DIR_COL}=")
-                and int(e.name.split("=")[1]) >= floor
-            ]
-
         from functools import reduce
 
         from fluss_spark.types import evolution_eras
 
-        local = _commits(self.log_dir) if tiers in ("all", "local") else []
-        remote = _commits(self.remote_dir) if tiers in ("all", "remote") else []
-        # LOCAL WINS on overlap: a crashed cross-device tier_log can leave
-        # a commit in both tiers (remote copy landed, local delete
-        # didn't); reading both would double-count the commit. The local
-        # dir stays authoritative until it is gone.
-        remote = [d for d in remote if d not in set(local)]
+        local, remote = self.committed_dirs(as_of_commit, tiers)
+        paths = {int(n.split("=")[1]): p for n, p in {**remote, **local}.items()}
+        versions = sorted(paths)
+        if start_offsets:
+            versions = versions[self._first_dir_needed(versions, start_offsets):]
+        if not versions:
+            return self._empty_scan(spark)
+
+        # dirs group by tier root and by the schema era that wrote them;
+        # each group reads its PHYSICAL layout and projects onto the
+        # current schema by field id (rename=alias, retype=cast)
         eras = evolution_eras(self.schema)
-
-        def _era_idx(v: int) -> int:
-            for i, era in enumerate(eras):  # oldest-first; first cover wins
-                if v <= era["until"]:
-                    return i
-            return -1  # current schema
-
+        groups: dict[tuple[str, int], list[str]] = {}
+        for v in versions:
+            era = next((i for i, e in enumerate(eras) if v <= e["until"]), -1)
+            groups.setdefault((os.path.dirname(paths[v]), era), []).append(paths[v])
         extras = (
             [CHANGE_TYPE_COL, "__seq", "__sub"] if self.schema.is_pk_table else []
         ) + [BUCKET_COL, OFFSET_COL, TIMESTAMP_COL, COMMIT_DIR_COL]
         frames = []
-        for root, dirs in ((self.remote_dir, remote), (self.log_dir, local)):
-            if not dirs:
-                continue
-            if not eras:
-                # no rename/retype ever: identity fast path, single scan
-                # per tier (the local tier reads its whole root — one
-                # InMemoryFileIndex, the plan the tests pin)
-                frames.append(
-                    spark.read.schema(ddl_of(self.file_schema(with_commit_col=True)))
-                    .option("basePath", root)
-                    .parquet(
-                        *(
-                            [root]
-                            if root == self.log_dir
-                            else [os.path.join(root, d) for d in sorted(dirs)]
-                        )
-                    )
-                )
-                continue
-            # era-mapped read: commit dirs group by the schema that wrote
-            # them; each group reads its PHYSICAL layout and projects onto
-            # the current schema by field id (rename=alias, retype=cast)
-            groups: dict[int, list[str]] = {}
-            for d in dirs:
-                v = int(d.split("=")[1])
-                if v > current:
-                    continue  # uncommitted/newer-than-asof: never read
-                groups.setdefault(_era_idx(v), []).append(d)
-            for idx, ds in sorted(groups.items()):
-                paths = [os.path.join(root, d) for d in sorted(ds)]
-                if idx == -1:
-                    frames.append(
-                        spark.read.schema(ddl_of(self.file_schema(with_commit_col=True)))
-                        .option("basePath", root)
-                        .parquet(*paths)
-                    )
-                else:
-                    era_map = {
-                        f["id"]: (f["name"], f["type"]) for f in eras[idx]["fields"]
-                    }
-                    frames.append(
-                        spark.read.schema(
-                            ddl_of(self.file_schema(with_commit_col=True, era=era_map))
-                        )
-                        .option("basePath", root)
-                        .parquet(*paths)
-                        .select(self.era_projection(era_map, extras))
-                    )
-        if not frames:
-            return self._empty_scan(spark)
+        for (root, idx), ds in groups.items():
+            era_map = (
+                None if idx == -1
+                else {f["id"]: (f["name"], f["type"]) for f in eras[idx]["fields"]}
+            )
+            df = (
+                spark.read.schema(ddl_of(self.file_schema(with_commit_col=True, era=era_map)))
+                .option("basePath", root)
+                .parquet(*ds)
+            )
+            frames.append(df if era_map is None else df.select(self.era_projection(era_map, extras)))
         df = reduce(lambda a, b: a.unionByName(b), frames)
-        df = df.filter(F.col(COMMIT_DIR_COL) <= current)
-        if floor > 0:
-            # partition-dir pruning, no file reads (the local identity
-            # fast path lists its whole root; this is what fences any
-            # shadowed pre-rebucket dir a crash left behind)
-            df = df.filter(F.col(COMMIT_DIR_COL) >= floor)
+
+        conds = []
         if start_offsets:
-            cond = F.lit(False)
-            for b, off in start_offsets.items():
-                cond = cond | ((F.col(BUCKET_COL) == b) & (F.col(OFFSET_COL) >= off))
+            terms = [
+                f"(`{BUCKET_COL}` = {int(b)} AND `{OFFSET_COL}` >= {int(o)})"
+                for b, o in sorted(start_offsets.items())
+            ]
             # RESUME semantics, not bucket restriction: a bucket absent
             # from the map received its first row after the offsets were
             # recorded (e.g. a new pk hashing to a fresh bucket between
@@ -546,17 +552,21 @@ class LogStore:
             # data for every resume-shaped consumer (streaming reader,
             # index/vector-index sync, incremental MT refresh, snapshot
             # diff). Bucket-subset reads use snapshot(buckets=). The
-            # escape disjunct is added ONLY when buckets are actually
+            # escape disjunct is added ONLY when a bucket holding rows in
+            # the read dirs (the newest dir's HWM names them all) is
             # missing: it carries no offset term, so it would otherwise
-            # cost the pure OR-of-ANDs its __offset parquet pushdown.
-            if len(start_offsets) < self.schema.num_buckets:
-                cond = cond | ~F.col(BUCKET_COL).isin(list(start_offsets.keys()))
-            df = df.filter(cond)
+            # cost the OR-of-ANDs its __offset parquet pushdown.
+            if set(self.hwm_at(versions[-1])) - set(start_offsets):
+                keys = ", ".join(str(int(b)) for b in sorted(start_offsets))
+                terms.append(f"`{BUCKET_COL}` NOT IN ({keys})")
+            conds.append(f"({' OR '.join(terms)})")
         if end_offsets:
-            cond = F.lit(True)
-            for b, off in end_offsets.items():
-                cond = cond & ((F.col(BUCKET_COL) != b) | (F.col(OFFSET_COL) < off))
-            df = df.filter(cond)
+            conds += [
+                f"(`{BUCKET_COL}` <> {int(b)} OR `{OFFSET_COL}` < {int(o)})"
+                for b, o in sorted(end_offsets.items())
+            ]
+        if conds:
+            df = df.filter(" AND ".join(conds))
         return df.drop(COMMIT_DIR_COL)
 
     def _empty_scan(self, spark: SparkSession) -> DataFrame:

@@ -428,7 +428,7 @@ class FlussSqlSession:
         (the reference's OffsetSpec.TIMESTAMP applied to whole commits).
         Implemented by binding a dedicated temp view to the as-of scan
         and substituting it — Catalyst pushdown still applies, and the
-        `__commit <= v` fence is partition-dir pruning. Travel below a
+        scan lists only commit dirs up to v. Travel below a
         rebucket's log_floor returns empty (that history was rewritten)."""
 
         def sub(m: re.Match) -> str:
@@ -450,7 +450,7 @@ class FlussSqlSession:
                 except ValueError:
                     raise SqlParseError(f"VERSION AS OF expects an integer, got {lit}") from None
                 if version > current:
-                    # scan's `__commit <= v` fence is relative to the
+                    # scan's commit-dir fence is relative to the
                     # requested version: letting v exceed the committed
                     # tip would read a crashed writer's published-but-
                     # uncommitted staging dir — a dirty read no other

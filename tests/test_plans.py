@@ -4,6 +4,8 @@ explainSql in its connector ITCases)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,6 +47,35 @@ def test_engine_scan_pushdown(spark, catalog):
     # offset time travel prunes via parquet stats on __offset
     tt = t.scan(spark, start_offsets={0: 10, 1: 10})
     assert "GreaterThanOrEqual(__offset" in plans.pushed_filters(tt)
+
+
+def test_log_append_single_exchange_sized_by_exchange_width(spark, catalog):
+    """The append's per-bucket offset window runs behind ONE hash
+    exchange on __bucket as wide as bucketing.exchange_width (table
+    buckets capped by cores), not spark.sql.shuffle.partitions, and the
+    write still emits one file per bucket."""
+    import glob
+    import re
+
+    from fluss_spark.bucketing import exchange_width
+
+    t = create_table(
+        catalog, "db", "plan_append",
+        TableSchema(
+            fields=[Field("a", "INT"), Field("b", "STRING")], bucket_keys=["a"], num_buckets=3
+        ),
+    )
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(60)], "a int, b string")
+    state = catalog.current_commit("db", "plan_append")
+    out, _auto = t.log._append_plan(df, state, 123456, None, None, None)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "simple")
+    width = exchange_width(spark, 3)
+    assert width != int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    assert re.search(rf"hashpartitioning\(`?__bucket`?#\d+, {width}\)", plan), plan
+    t.append(df)
+    files = glob.glob(f"{t.log.log_dir}/__commit=1/__bucket=*/*.parquet")
+    assert len(files) == 3 and len({os.path.dirname(f) for f in files}) == 3
 
 
 def test_partitioned_engine_scan_prunes_dirs(spark, catalog):
