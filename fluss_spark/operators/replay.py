@@ -96,9 +96,9 @@ def emit_select_list(
     emit_prior: bool = False,
 ) -> list[str]:
     """Select list of the changelog-emission layer (see `_emit`). A
-    standalone string builder so the layered fold (`_emit`) and the
-    one-statement SQL fold (kv.KvStore._fold_replay_sql) emit from the
-    SAME expression strings. Empty slots come out as all-null rows that
+    standalone string builder so `replay` (`_emit`) and the PK commit's
+    SQL fold (kv.KvStore._fold) emit from the SAME expression
+    strings. Empty slots come out as all-null rows that
     `EMIT_WHERE` drops."""
 
     def mk(ct_expr: str, row: str | None, sub: int) -> str:
@@ -205,9 +205,9 @@ def replay(
     prior rows that carry the clustering columns through.
 
     `seq_order` is the ORDER BY of the window that numbered `__seq`
-    (its columns still in `df`, see kv.KvStore._fold_input): the fold
-    windows order by it instead of `__seq`, so they reuse that window's
-    sort rather than sorting again.
+    (its columns still in `df`, see kv.KvStore._fold_input_sql): the
+    fold windows order by it instead of `__seq`, so they reuse that
+    window's sort rather than sorting again.
     """
     engine = "default" if merge_mode == "overwrite" else schema.merge_engine
     pk = schema.primary_key
@@ -318,7 +318,7 @@ def default_fold_select_list(
 ) -> list[str]:
     """Select list of the default-merge running-state layer (state
     presence after each record). Shared by `_replay_default` and the
-    one-statement SQL fold (kv.KvStore._fold_replay_sql). `order` is
+    PK commit's SQL fold (kv.KvStore._fold). `order` is
     the fold's ORDER BY (default `__seq`, see `_lag_over`); the
     group-commit fold leads it with `__grp` so per-batch sequences
     replay in batch-major order — identical per-key frames to N

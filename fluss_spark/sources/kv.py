@@ -5,12 +5,16 @@ The reference's write path (server/kv/KvTablet.java:514-792) reads the
 old value from RocksDB per record, merges, and appends +I/-U/+U/-D rows
 to the WAL; KV snapshots upload per-tablet and only changed tablets
 produce new files (server/kv/snapshot/). Here one deterministic
-transaction does all of it set-at-a-time:
+transaction does all of it set-at-a-time, and every commit — eager,
+deferred, group (upsert_many) and optimistic — takes the same route:
 
-  1. seed   = snapshot rows of the BATCH's buckets, semi-joined to the
-              batch's keys (the distributed read-old; O(batch), not
-              O(table))
-  2. fold   = operators/replay.py window fold over seed ∪ batch
+  1. seed   = the snapshot rows of the batch's buckets ((partition,
+              bucket) pairs on partitioned tables): the distributed
+              read-old, O(touched buckets), not O(table)
+  2. fold   = ONE fold input (seed ∪ batches, hash-partitioned by
+              bucket, per-key __seq; _fold_input_sql), folded by the
+              default engine's SQL statement or by operators/replay.py
+              for every other shape (_fold)
   3. ONE write action produces BOTH commit artifacts as sibling
      partition dirs (__dest=w -> WAL, __dest=s -> snapshot): a single
      bucket-window pass assigns per-bucket __offset to the change
@@ -21,9 +25,10 @@ transaction does all of it set-at-a-time:
      bucket (plain pk tables) or the (partition, bucket) pair
      (partitioned ones); untouched units stay as prior-version files,
      referenced through a per-version manifest, so per-commit write
-     cost is O(touched units), not O(table)
+     cost is O(touched units), not O(table) (_commit_plan)
   4. the driver renames __dest=w/__dest=s into the log commit dir and
      snapshot/data-vN, then one atomic commit advances the table to V'
+     (_commit_finish; a group publishes one version per batch)
 
 Because the WAL row and the snapshot row of a key's last event are two
 explode copies of the SAME evaluated row, they cannot diverge even
@@ -40,9 +45,10 @@ metadata/TableBucket.java) emit partition dirs on BOTH siblings —
 `__dest=s/<part>/__bucket=` gives pk snapshots partition-directory
 pruning; auto-increment tables pre-assign their id segments
 driver-side from a persisted fold (one tiny count job) and stamp ids
-inside the same commit window. The retained two-pass path
-(`_commit_twopass`) exists as the equivalence baseline the test suite
-compares against, not as a production route.
+inside the same commit window. A deferred commit
+(`table.snapshot.defer-commits` > 1) is the same action writing only
+the WAL sibling. tests/test_commit_equivalence.py compares the
+artifacts against an independent two-pass derivation kept in tests/.
 """
 
 from __future__ import annotations
@@ -52,6 +58,7 @@ import glob
 import json
 import math
 import os
+import time
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -140,6 +147,11 @@ def _aqe_off_exit(spark: SparkSession) -> None:
         if st[0] <= 0:
             st[2].conf.set(_AQE_KEY, st[1])
             del _AQE_STATE[sid]
+
+
+def _commit_ts(commit_ts_ms: int | None) -> int:
+    """A commit's timestamp: the caller's, else now (epoch millis)."""
+    return int(time.time() * 1000) if commit_ts_ms is None else int(commit_ts_ms)
 
 
 class CommitConflictError(RuntimeError):
@@ -328,6 +340,9 @@ class KvStore:
     # ------------------------------------------------------------------ #
     # upsert / delete transaction (M1-M9)
     # ------------------------------------------------------------------ #
+    def _defer_commits(self) -> int:
+        return int(self.schema.properties.get("table.snapshot.defer-commits", "1") or "1")
+
     def upsert(
         self,
         df: DataFrame,
@@ -344,93 +359,12 @@ class KvStore:
         client/table/writer/Upsert.java:39-59). `batch_buckets` (a
         SUPERSET of the batch keys' buckets, e.g. known from an earlier
         aggregation of the same frame) skips the per-commit bucket
-        discovery job that otherwise bounds the seed read and the
-        commit's prior-snapshot feed."""
-        spark = df.sparkSession
-        schema = self.schema
-        pk, cols = schema.primary_key, schema.data_columns()
-
-        if partial_update_cols is not None:
-            missing_pk = [c for c in pk if c not in partial_update_cols]
-            if missing_pk:
-                raise ValueError(f"partial update must include the primary key, missing {missing_pk}")
-
-        # M10: auto-increment columns are engine-assigned surrogate ids —
-        # a caller may neither supply values for them (the batch frame's
-        # columns ARE the write's target columns; the reference client
-        # rejects auto-inc among targets, UpsertWriterImpl.sanityCheck
-        # :107-152) nor name them as partial-update targets (server-side
-        # PerSchemaAutoIncrementUpdater.validateTargetColumns:101-127).
-        auto_cols = [f.name for f in schema.fields if f.auto_increment]
-        if auto_cols:
-            supplied = [c for c in auto_cols if c in df.columns]
-            if supplied:
-                raise ValueError(
-                    f"explicitly specifying values for auto-increment "
-                    f"column(s) {supplied} is not allowed — drop them from "
-                    "the batch; the engine assigns ids at key insert"
-                )
-            bad_targets = [
-                c for c in auto_cols if partial_update_cols and c in partial_update_cols
-            ]
-            if bad_targets:
-                raise ValueError(
-                    f"auto-increment column(s) {bad_targets} must not be "
-                    "included in partial-update target columns"
-                )
-
-        if (
-            int(schema.properties.get("table.snapshot.defer-commits", "1") or "1") <= 1
-            and self._tail_start(self.catalog.current_commit(self.db, self.table))
-            is not None
-        ):
-            # defer-commits was lowered/unset while a WAL tail was
-            # pending: fold it in BEFORE bucket/pair discovery — the
-            # fused commit rewrites only this batch's units and advances
-            # snapshot_version, which would otherwise strand the tail's
-            # other units behind a "covered" HWM, and pair_keys computed
-            # against the stale manifest would miss tail-created pairs
-            self.materialize(spark)
-
-        # AQE off for the whole serial transaction (fold-input discovery
-        # job included), not just the commit action: every job in here
-        # has a fixed shape (tiny discovery aggregate, hash-by-bucket
-        # window write) where AQE's stage-by-stage replanning is pure
-        # driver latency. Deferred tables keep the session setting — a
-        # cadence materialize() runs a real join that AQE should plan.
-        defer = int(schema.properties.get("table.snapshot.defer-commits", "1") or "1")
-        fused = defer <= 1  # single-action commit: fold + rewrite share ONE exchange
-        if defer <= 1:
-            _aqe_off_enter(spark)
-        try:
-            if fused and self._fold_replay_sql_ok(df, partial_update_cols, merge_mode):
-                # one-statement fold+replay: one JVM analysis instead of
-                # seven per-layer analyses (guide §7.3 driver latency)
-                changelog, batch_buckets, pair_scope, prior = self._fold_replay_sql(
-                    spark, df, ordering, batch_buckets
-                )
-            else:
-                fold_in, may_have_deletes, batch_buckets, pair_scope, prior, seq_order = (
-                    self._fold_input(spark, df, ordering, batch_buckets, fused=fused)
-                )
-
-                changelog, _ = replay(
-                    fold_in,
-                    schema,
-                    partial_update_cols=partial_update_cols,
-                    merge_mode=merge_mode,
-                    may_have_deletes=may_have_deletes,
-                    cluster_cols=[BUCKET_COL] if fused else None,
-                    emit_prior=fused,
-                    seq_order=seq_order,
-                )
-            return self._commit_changelog(
-                spark, changelog, commit_ts_ms, batch_buckets, pair_scope, prior,
-                prior_included=fused,
-            )
-        finally:
-            if defer <= 1:
-                _aqe_off_exit(spark)
+        discovery job that otherwise bounds the seed read. The caller
+        holds the table write lock (see _transaction)."""
+        return self._transaction(
+            [df], ordering, [_commit_ts(commit_ts_ms)], batch_buckets,
+            partial_update_cols, merge_mode,
+        )[-1]
 
     def upsert_many(
         self,
@@ -444,7 +378,7 @@ class KvStore:
         commit versions (the reference amortizes its per-commit server
         round trip the same way — accumulated write batches flushed
         together). Equivalence contract with N sequential `upsert()`
-        calls, pinned by tests/test_commit_equivalence.py:
+        calls, pinned by tests/test_group_commit.py:
           - WAL contents byte-identical: per-batch `__seq` restarts at 1
             (numbered within the batch), offsets are one running count
             in (__grp, __seq) order — exactly the sequential bases —
@@ -458,9 +392,12 @@ class KvStore:
             to them folds the offset-bounded changelog slice and returns
             the exact same rows, trading a tail fold at read time for
             N-1 saved write actions + snapshot rewrites.
-        Shapes the single-statement fold does not cover (non-default
-        merge engines, partial updates, auto-increment id packing, a
-        pending deferred tail) fall back to sequential upserts."""
+        The group rides the same transaction as a single upsert. Shapes
+        whose fold is not the default-engine SQL fold (non-default merge
+        engines, partial updates, DELETE-disabled batches with deletes),
+        auto-increment tables (ids are packed per commit) and deferred
+        tables (a materialization may fall between any two commits)
+        commit the batches one `upsert()` at a time."""
         batches = [b for b in batches]
         if not batches:
             raise ValueError("upsert_many requires at least one batch")
@@ -469,21 +406,12 @@ class KvStore:
                 raise ValueError("commit_ts_ms list must match batches")
             ts_list = [int(t) for t in commit_ts_ms]
         else:
-            import time
-
-            one = int(time.time() * 1000) if commit_ts_ms is None else int(commit_ts_ms)
-            ts_list = [one] * len(batches)
-        schema = self.schema
-        defer = int(schema.properties.get("table.snapshot.defer-commits", "1") or "1")
+            ts_list = [_commit_ts(commit_ts_ms)] * len(batches)
         groupable = (
             len(batches) > 1
-            and defer <= 1
-            and not any(f.auto_increment for f in schema.fields)
-            and all(self._fold_replay_sql_ok(b, None, None) for b in batches)
-            # a pending WAL tail means the serial path must materialize
-            # first — keep that logic in one place (upsert)
-            and self._tail_start(self.catalog.current_commit(self.db, self.table))
-            is None
+            and self._defer_commits() <= 1
+            and not any(f.auto_increment for f in self.schema.fields)
+            and all(self._sql_fold_ok(b, None, None) for b in batches)
         )
         if not groupable:
             return [
@@ -493,18 +421,7 @@ class KvStore:
                 )
                 for b, ts in zip(batches, ts_list)
             ]
-        spark = batches[0].sparkSession
-        _aqe_off_enter(spark)
-        try:
-            changelog, batch_buckets, pair_scope, prior = self._fold_replay_sql(
-                spark, batches, ordering, batch_buckets
-            )
-            return self._commit_group(
-                spark, changelog, ts_list, batch_buckets, pair_scope, prior,
-                len(batches),
-            )
-        finally:
-            _aqe_off_exit(spark)
+        return self._transaction(batches, ordering, ts_list, batch_buckets)
 
     def upsert_optimistic(
         self,
@@ -523,7 +440,7 @@ class KvStore:
         per-TableBucket leader parallelism (server/replica/
         ReplicaManager.java runs one leader per (partition, bucket);
         appends to different TableBuckets never serialize on each
-        other):
+        other). It is the serial transaction with a different publish:
 
           1. read the base state; build the fold and the fused commit
              frame against it; WRITE the combined siblings to a
@@ -557,88 +474,131 @@ class KvStore:
         `_pre_lock_hook` is a test seam: called after the staged write,
         before the lock — where a concurrent commit would interleave.
         """
-        import shutil
-        import time
-        import uuid
-
-        spark = df.sparkSession
-        schema = self.schema
-        if any(f.auto_increment for f in schema.fields):
+        if any(f.auto_increment for f in self.schema.fields):
             raise ValueError(
                 "optimistic commits are not supported on auto-increment "
                 "tables (the id counter is table-global)"
             )
-        if int(schema.properties.get("table.snapshot.defer-commits", "1") or "1") > 1:
+        if self._defer_commits() > 1:
             raise ValueError(
                 "optimistic commits require eager materialization "
                 "(table.snapshot.defer-commits <= 1)"
             )
-        if partial_update_cols is not None:
-            missing_pk = [c for c in schema.primary_key if c not in partial_update_cols]
-            if missing_pk:
-                raise ValueError(
-                    f"partial update must include the primary key, missing {missing_pk}"
-                )
-
+        ts = _commit_ts(commit_ts_ms)
         reason = "conflict"
         for _attempt in range(max(0, int(max_retries)) + 1):
-            state0 = self.catalog.current_commit(self.db, self.table)
-            if self._tail_start(state0) is not None:
-                raise ValueError(
-                    "optimistic commit refused: a deferred WAL tail is "
-                    "pending — materialize() first"
-                )
-            if self._fold_replay_sql_ok(df, partial_update_cols, merge_mode):
-                changelog, buckets0, pair_scope, prior = self._fold_replay_sql(
-                    spark, df, ordering, batch_buckets
-                )
-            else:
-                fold_in, may_have_deletes, buckets0, pair_scope, prior, seq_order = (
-                    self._fold_input(spark, df, ordering, batch_buckets, fused=True)
-                )
-                changelog, _ = replay(
-                    fold_in,
-                    schema,
-                    partial_update_cols=partial_update_cols,
-                    merge_mode=merge_mode,
-                    may_have_deletes=may_have_deletes,
-                    cluster_cols=[BUCKET_COL],
-                    emit_prior=True,
-                    seq_order=seq_order,
-                )
-            ts_ms = (
-                commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
-            )
-            out, persisted, _auto = self._commit_plan(
-                spark, changelog, ts_ms, buckets0, pair_scope, state0, prior,
-                prior_included=True,
-            )
-            combined = os.path.join(
-                self.log.tmp_dir, f"inflight-{uuid.uuid4().hex[:12]}"
-            )
             try:
-                self._write_combined(out, combined, persisted)
-                if _pre_lock_hook is not None:
-                    _pre_lock_hook()
-                with self.catalog.write_lock(self.db, self.table):
-                    s1 = self.catalog.current_commit(self.db, self.table)
-                    reason = self._occ_conflict(state0, s1, combined)
-                    if reason is None:
-                        self._occ_shift_offsets(spark, combined, state0, s1)
-                        return self._commit_finish(
-                            spark,
-                            combined,
-                            s1,
-                            s1.version + 1,
-                            ts_ms,
-                            dict(s1.auto_increment),
-                        )
-            finally:
-                shutil.rmtree(combined, ignore_errors=True)
+                return self._transaction(
+                    [df], ordering, [ts], batch_buckets, partial_update_cols,
+                    merge_mode, pre_lock=_pre_lock_hook or (lambda: None),
+                )[-1]
+            except CommitConflictError as e:
+                reason = str(e)
         raise CommitConflictError(
             f"optimistic commit on {self.db}.{self.table} gave up after "
             f"{max_retries} retries: {reason}"
         )
+
+    def _transaction(
+        self,
+        dfs: list[DataFrame],
+        ordering: list[str] | None,
+        ts_list: list[int],
+        batch_buckets: list[int] | None,
+        partial_update_cols: list[str] | None = None,
+        merge_mode: str | None = None,
+        pre_lock=None,
+    ) -> list[CommitState]:
+        """The one PK commit transaction behind upsert, upsert_many and
+        upsert_optimistic: validate the batches, fold them (_fold), then
+        write and publish one commit version per batch (_commit).
+
+        Serial (`pre_lock` None): the caller holds the table write lock
+        end to end. Optimistic (`pre_lock` a callable): the fold and the
+        write run unlocked against a base state and _commit validates
+        under a short lock, raising CommitConflictError when a
+        concurrent commit touched this batch's units.
+
+        With `table.snapshot.defer-commits` = K > 1 the commit is
+        WAL-ONLY (the RocksDB model: the write path absorbs puts, a
+        periodic checkpoint materializes — server/kv/snapshot/) and
+        every K-th commit folds the accumulated tail into the snapshot
+        via materialize(); reads stay exact throughout because
+        snapshot() merges the uncovered tail on top."""
+        spark = dfs[0].sparkSession
+        schema = self.schema
+        if partial_update_cols is not None:
+            missing_pk = [c for c in schema.primary_key if c not in partial_update_cols]
+            if missing_pk:
+                raise ValueError(f"partial update must include the primary key, missing {missing_pk}")
+
+        # M10: auto-increment columns are engine-assigned surrogate ids —
+        # a caller may neither supply values for them (the batch frame's
+        # columns ARE the write's target columns; the reference client
+        # rejects auto-inc among targets, UpsertWriterImpl.sanityCheck
+        # :107-152) nor name them as partial-update targets (server-side
+        # PerSchemaAutoIncrementUpdater.validateTargetColumns:101-127).
+        auto_cols = [f.name for f in schema.fields if f.auto_increment]
+        supplied = [c for c in auto_cols if any(c in d.columns for d in dfs)]
+        if supplied:
+            raise ValueError(
+                f"explicitly specifying values for auto-increment "
+                f"column(s) {supplied} is not allowed — drop them from "
+                "the batch; the engine assigns ids at key insert"
+            )
+        bad_targets = [c for c in auto_cols if partial_update_cols and c in partial_update_cols]
+        if bad_targets:
+            raise ValueError(
+                f"auto-increment column(s) {bad_targets} must not be "
+                "included in partial-update target columns"
+            )
+
+        defer = self._defer_commits()
+        if defer <= 1 and self._tail_start(
+            self.catalog.current_commit(self.db, self.table)
+        ) is not None:
+            if pre_lock is not None:
+                raise ValueError(
+                    "optimistic commit refused: a deferred WAL tail is "
+                    "pending — materialize() first"
+                )
+            # defer-commits was lowered/unset while a WAL tail was
+            # pending: fold it in BEFORE bucket/pair discovery — the
+            # fused commit rewrites only this batch's units and advances
+            # snapshot_version, which would otherwise strand the tail's
+            # other units behind a "covered" HWM, and pair_keys computed
+            # against the stale manifest would miss tail-created pairs
+            self.materialize(spark)
+
+        # AQE off around the fold and the write (fold-input discovery
+        # job included): every job in here has a fixed shape (tiny
+        # discovery aggregate, hash-by-bucket window write) where AQE's
+        # stage-by-stage replanning is pure driver latency — A/B at
+        # sf0.1: warm commit 1.4s -> 1.0s from the commit action alone.
+        # A cadence materialize() below runs a real join and plans under
+        # the session setting. The optimistic path leaves AQE alone
+        # (toggling a session conf is not thread-safe) and, holding no
+        # lock, must not clean orphans: they may be another writer's
+        # staging in progress.
+        if pre_lock is None:
+            self.log.clean_orphans()
+            _aqe_off_enter(spark)
+        try:
+            state0 = self.catalog.current_commit(self.db, self.table)
+            changelog = self._fold(
+                spark, dfs, ordering, batch_buckets, partial_update_cols, merge_mode
+            )
+            states = self._commit(spark, changelog, ts_list, state0, pre_lock)
+        finally:
+            if pre_lock is None:
+                _aqe_off_exit(spark)
+        last = states[-1]
+        if defer > 1 and (
+            last.version - max(last.snapshot_version, 0) >= defer
+            or self._tail_bytes_exceeded(last)
+        ):
+            states[-1] = self.materialize(spark)
+        return states
 
     def _occ_conflict(
         self, state0: CommitState, s1: CommitState, combined: str
@@ -726,208 +686,11 @@ class KvStore:
             shutil.rmtree(bdir)
             os.rename(tmp, bdir)
 
-    def _fold_input(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        ordering: list[str] | None,
-        known_buckets: list[int] | None = None,
-        fused: bool = False,
-    ):
-        """Build the fold input (seed ∪ batch, with per-key __seq) so the
-        whole upsert fold costs ONE hash exchange
-        (tests/test_plans.py pins this on the full path).
-
-        `fused=False` (the WAL-only/deferred shape): the seed is the
-        bounded snapshot SEMI-JOINED to the batch's keys, __seq windows
-        partition by pk, and the fold's exchange is a pk hash — the
-        commit feeds the prior snapshot separately.
-
-        `fused=True` (the single-action commit shape): the seed is the
-        WHOLE bounded snapshot (every row of the batch's buckets/pairs —
-        exactly the rows the snapshot rewrite must feed anyway), a
-        `__bucket` column is materialized, and the frame is hash-
-        partitioned by bucket BEFORE the fold. Every window downstream —
-        the __seq assignment here, the replay fold, the commit's offset/
-        is-last/id-carry windows (all PARTITION BY __bucket[, pk], and
-        bucket = pmod(hash(pk), n) is a function of the pk) — is
-        satisfied by that single exchange (sized by `exchange_width`):
-        the whole upsert transaction becomes scan → ONE exchange →
-        windows → write, with no seed semi-join/broadcast and the
-        snapshot read once instead of twice (guide §2.4).
-
-        Returns (fold_in, may_have_deletes, batch_buckets, pair_scope,
-        bounded snapshot, seq_order); pass seq_order to `replay` so its
-        windows reuse the __seq window's sort."""
-        schema = self.schema
-        pk, cols = schema.primary_key, schema.data_columns()
-        # normalize the batch: every data column present (nulls for
-        # non-target), __op. The per-key fold sequence (__seq) is NOT
-        # assigned here: a window on the bare batch would cost its own pk
-        # exchange, and the union with the seed below discards the
-        # partitioning, forcing the fold to exchange AGAIN. Instead the
-        # ordering columns ride along and __seq is computed after the
-        # union, inside the fold's single pk exchange.
-        b = df
-        may_have_deletes = OP_COL in b.columns  # no __op => all upserts
-        if ordering:
-            ord_names = [c for c in ordering]
-        else:
-            b = b.withColumn("__arrival", F.monotonically_increasing_id())
-            ord_names = ["__arrival"]
-        ord_extra = [c for c in ord_names if c not in cols]
-        # ONE projection (a per-field withColumn loop costs a full plan
-        # copy + re-analysis per column — pure driver latency per commit),
-        # built directly in output order so no reorder select follows
-        have = set(b.columns)
-        # parse_type().simpleString() = Spark-SQL DDL (the schema's own
-        # type strings are engine DDL — e.g. BYTES — which CAST rejects)
-        ftype = {f.name: f.type for f in schema.fields}
-        proj = [
-            (
-                f"CAST(`{c}` AS {parse_type(ftype[c]).simpleString()}) AS `{c}`"
-                if c in have
-                else f"CAST(NULL AS {parse_type(ftype[c]).simpleString()}) AS `{c}`"
-            )
-            for c in cols
-        ]
-        proj.append(f"`{OP_COL}`" if may_have_deletes else f"'U' AS `{OP_COL}`")
-        proj.append(f"0 AS `{SEED_COL}`")
-        proj += [f"`{c}`" for c in ord_extra]
-        if fused:
-            # __bucket rides this projection (over the CAST key values,
-            # identical to hashing the post-union columns) instead of a
-            # separate post-union selectExpr: every transformation layer
-            # costs an eager re-analysis of the whole accumulated plan,
-            # so the fused chain materializes the column in BOTH union
-            # branches and drops the extra layer
-            cast_of = {
-                c: f"CAST(`{c}` AS {parse_type(ftype[c]).simpleString()})"
-                if c in have
-                else f"CAST(NULL AS {parse_type(ftype[c]).simpleString()})"
-                for c in schema.bucket_keys
-            }
-            keys_sql = ", ".join(cast_of[c] for c in schema.bucket_keys)
-            proj.append(
-                f"CAST(pmod(hash({keys_sql}), {schema.num_buckets}) AS INT)"
-                f" AS `{BUCKET_COL}`"
-            )
-        b = b.selectExpr(*proj)
-
-        # read-old restricted to the batch's buckets and keys; on a table
-        # with no state yet (first commit) there is nothing to read, so
-        # the batch-bucket discovery job is skipped entirely. Under
-        # deferred materialization the state may live partly (or, before
-        # the first materialization, entirely) in the WAL tail — the
-        # hybrid snapshot() serves it, so "has state" must consider the
-        # tail, not just the manifest.
-        state_now = self.catalog.current_commit(self.db, self.table)
-        manifest_now = self._manifest(state_now.snapshot_version)
-        has_snapshot = bool(manifest_now) or self._tail_start(state_now) is not None
-        # batch-bucket discovery ALWAYS runs when a snapshot exists: the
-        # single-action commit feeds the prior snapshot of these buckets
-        # straight into its bucket window with no key semi-join, so an
-        # unbounded feed would shuffle O(table) per commit. The discovery
-        # collect is one tiny job (<= num_buckets rows) and also prunes
-        # the seed read's dir/footer walk. A caller that already knows a
-        # superset of the batch's buckets passes it in and skips the job.
-        # Partitioned tables discover (partition values, bucket) PAIRS:
-        # the typed pair predicate bounds the seed and the prior feed to
-        # the batch's partitions too (directory pruning), capped at 512
-        # pairs so a corpus-wide backfill doesn't explode the plan.
-        pair_pred = None
-        pair_keys = None
-        if not has_snapshot:
-            batch_buckets = []
-        elif known_buckets is not None:
-            batch_buckets = [int(x) for x in known_buckets]
-        else:
-            batch_buckets, pair_pred, pair_keys = self._discover_scope(
-                b, manifest_now
-            )
-        # no .distinct() on the probe side: a semi join dedups by
-        # definition, and the distinct would cost its own exchange + agg
-        ord_types = dict(b.dtypes)
-        # ONE bounded-snapshot frame serves both the seed probe here and
-        # the commit's prior-row feed (_commit_plan reuses it instead of
-        # re-deriving an identical plan — one snapshot analysis per
-        # commit, and seed + prior feed are guaranteed the same basis)
-        bounded = self.snapshot(
-            spark, buckets=batch_buckets, pair_pred=pair_pred, pair_keys=pair_keys
-        )
-        if fused:
-            # the whole bounded snapshot rides the fold (no semi-join):
-            # untouched keys' rows become the prior-row feed the commit
-            # needs anyway (replay re-emits them with a NULL change type);
-            # __bucket is materialized here too (see the batch projection
-            # above) so the union needs no trailing bucket layer
-            seed = bounded.selectExpr(
-                "*",
-                f"'U' AS `{OP_COL}`",
-                f"1 AS `{SEED_COL}`",
-                *[f"CAST(NULL AS {ord_types[c]}) AS `{c}`" for c in ord_extra],
-                f"{self._bucket_sql()} AS `{BUCKET_COL}`",
-            )
-        else:
-            seed = (
-                bounded
-                .join(b.select(*pk), on=pk, how="left_semi")
-                .selectExpr(
-                    "*",
-                    f"'U' AS `{OP_COL}`",
-                    f"1 AS `{SEED_COL}`",
-                    # seed rows sort first by SEED, ord is moot
-                    *[f"CAST(NULL AS {ord_types[c]}) AS `{c}`" for c in ord_extra],
-                )
-            )
-        # a union aligns BY NAME and seed's column set equals b's, so no
-        # reorder select on either side
-        fold_in = seed.unionByName(b)
-        part_sql = ", ".join(f"`{c}`" for c in pk)
-        if fused:
-            # __bucket arrived with both union branches; establish the
-            # transaction's ONE exchange here — every downstream window
-            # is keyed by __bucket[, pk] and reuses it
-            width = exchange_width(
-                spark, schema.num_buckets, batch_buckets if has_snapshot else None
-            )
-            fold_in = fold_in.repartition(width, F.col(BUCKET_COL))
-            part_sql = f"`{BUCKET_COL}`, " + part_sql
-        # __seq inside the fold's own exchange: seed first (SEED desc),
-        # then batch rows in `ordering` order. Batch rows number 1.. per
-        # key whether or not a seed row exists (sum(SEED) over the key =
-        # presence); seed rows pin __seq=0 — identical semantics to the
-        # old pre-union row_number window, minus one full-batch exchange.
-        # ONE projection computes __seq; the ordering columns ride on so
-        # replay's windows can order by `ord_sql` (returned as its
-        # seq_order) and reuse this window's sort.
-        ord_sql = ", ".join(
-            [f"`{SEED_COL}` DESC"] + [f"`{c}` ASC NULLS FIRST" for c in ord_names]
-        )
-        fold_in = fold_in.selectExpr(
-            *[f"`{c}`" for c in cols],
-            f"`{OP_COL}`",
-            f"CAST(CASE WHEN `{SEED_COL}` = 1 THEN 0 ELSE "
-            f"row_number() OVER (PARTITION BY {part_sql} ORDER BY {ord_sql}) "
-            f"- sum(`{SEED_COL}`) OVER (PARTITION BY {part_sql}) END AS BIGINT) "
-            f"AS `{SEQ_COL}`",
-            f"`{SEED_COL}`",
-            *([f"`{BUCKET_COL}`"] if fused else []),
-            *[f"`{c}`" for c in ord_extra],
-        )
-        pair_scope = (
-            (pair_pred, pair_keys)
-            if (pair_pred is not None or pair_keys is not None)
-            else None
-        )
-        return fold_in, may_have_deletes, batch_buckets, pair_scope, bounded, ord_sql
-
     def _discover_scope(self, b: DataFrame, manifest_now):
         """Batch write scope — (bucket list, typed pair predicate,
         manifest pair keys) — from a normalized batch frame `b` (CAST
         key/partition columns present under their schema names). ONE
-        map-side collect_set job. Shared by the layered fold
-        (_fold_input) and the one-statement SQL fold (_fold_replay_sql)."""
+        map-side collect_set job (see _fold_input_sql)."""
         pair_pred = None
         pair_keys = None
         pcols = self.schema.partition_keys
@@ -986,19 +749,19 @@ class KvStore:
             )
         return batch_buckets, pair_pred, pair_keys
 
-    def _fold_replay_sql_ok(
+    def _sql_fold_ok(
         self,
         df: DataFrame,
         partial_update_cols: list[str] | None,
         merge_mode: str | None,
     ) -> bool:
-        """Gate for the one-statement SQL fold: the composer covers the
-        default merge engine's fused fold only (the dominant commit
-        shape — every bulk load and plain upsert). Everything else —
-        partial updates (their delete probe + replay_exact dispatch),
-        non-default merge engines, DELETE-disabled tables whose batch
-        could carry deletes (the layered path runs the presence probe
-        and raises) — keeps the layered _fold_input + replay path."""
+        """Gate for the SQL fold emit (see _fold): it covers the default
+        merge engine (the dominant commit shape — every bulk load and
+        plain upsert). Everything else — partial updates (their delete
+        probe + replay_exact dispatch), non-default merge engines,
+        DELETE-disabled tables whose batch could carry deletes (replay
+        runs the presence probe and raises) — folds the same input
+        through replay()."""
         schema = self.schema
         if partial_update_cols is not None:
             return False
@@ -1011,57 +774,53 @@ class KvStore:
             return False
         return schema.changelog_image in ("full", "wal")
 
-    def _fold_replay_sql(
+    def _fold_input_sql(
         self,
         spark: SparkSession,
-        df: DataFrame | list[DataFrame],
+        dfs: list[DataFrame],
         ordering: list[str] | None,
         known_buckets: list[int] | None,
-    ):
-        """The fused fold + default-merge replay as ONE spark.sql
-        statement (guide §7.3 — driver latency): the layered path's
-        seven eagerly-analyzed plan layers (batch projection, seed
-        projection, union, repartition, __seq window, fold windows,
-        changelog emission — each a full JVM re-analysis of the
-        accumulated tree per commit) become nested subqueries analyzed
-        ONCE. The expression strings are the SAME ones the layered path
-        passes to selectExpr (shared builders in operators/replay.py),
-        so the resolved plan — and the transaction's single
-        hash(__bucket) exchange — is identical by construction
-        (tests/test_plans.py pins the plan shape; the commit-equivalence
-        suite compares the output row-for-row against the independent
-        two-pass baseline).
+    ) -> tuple[str, dict[str, DataFrame], str]:
+        """The ONE fold input of every PK commit, as a SQL statement over
+        named frames: seed ∪ batches → REPARTITION(exchange_width,
+        __bucket) → per-key `__seq`. Returns (sql, frames for
+        spark.sql, seq_order — the ORDER BY of the `__seq` window, which
+        the fold windows reuse so they share its sort).
 
-        Returns (changelog, batch_buckets, pair_scope, bounded) — the
-        same contract `_fold_input` + `replay(cluster_cols=[__bucket],
-        emit_prior=True)` produces for `_commit_changelog(
-        prior_included=True)`.
+        The seed is the WHOLE bounded snapshot (every row of the
+        batches' buckets, or (partition, bucket) pairs): untouched
+        keys' rows are exactly the prior rows the snapshot rewrite must
+        feed anyway, so they ride the fold (re-emitted with a NULL
+        change type) instead of a second scan. `__bucket` is computed in
+        both union branches and the transaction's ONE exchange is
+        established here: every downstream window — the __seq
+        numbering, the fold, the commit's offset / is-last / id-carry
+        windows — partitions by __bucket[, pk] (bucket =
+        pmod(hash(pk), n) is a function of the pk), so the whole
+        transaction is scan → ONE exchange → windows → write.
 
-        `df` may be a LIST of batches (group commit, see upsert_many):
-        each batch is projected with its index as `__grp` (seed rows
-        -1), per-batch `__seq` restarts at 1 (PARTITION BY ..., __grp),
-        and every fold/emission window orders by (__grp, __seq) — the
-        per-key frames are then exactly the concatenation of N
-        sequential folds, so the emitted change rows are identical. With
-        a single batch the generated SQL is byte-identical to before."""
-        from fluss_spark.operators.replay import (
-            EMIT_WHERE,
-            default_fold_select_list,
-            emit_select_list,
-            wal_image_ct_case_sql,
-            wal_image_where_sql,
-        )
+        Under deferred materialization the state may live partly (or,
+        before the first materialization, entirely) in the WAL tail —
+        the hybrid snapshot() serves it, so "has state" considers the
+        tail, not just the manifest.
 
+        With several batches (group commit, see upsert_many) each batch
+        is projected with its index as `__grp` (seed rows -1) and
+        per-batch `__seq` restarts at 1 (PARTITION BY ..., __grp); the
+        fold orders by (__grp, __seq), so the per-key frames are exactly
+        the concatenation of N sequential folds. With a single batch
+        there is no `__grp` anywhere in the SQL."""
         schema = self.schema
         pk, cols = schema.primary_key, schema.data_columns()
-        dfs = df if isinstance(df, list) else [df]
         grouped = len(dfs) > 1
-        may_have_deletes = any(OP_COL in d.columns for d in dfs)
         ord_names = list(ordering) if ordering else ["__arrival"]
         ord_extra = [c for c in ord_names if c not in cols]
         ftype = {f.name: f.type for f in schema.fields}
 
         def _cast_sql_for(d: DataFrame) -> dict[str, str]:
+            # parse_type().simpleString() = Spark-SQL DDL (the schema's
+            # own type strings are engine DDL — e.g. BYTES — which CAST
+            # rejects); a column missing from the batch folds as NULL
             have = set(d.columns)
             return {
                 c: (
@@ -1074,9 +833,8 @@ class KvStore:
 
         cast_sqls = [_cast_sql_for(d) for d in dfs]
 
-        # batch projection (layer shared with _fold_input's `proj`);
-        # __arrival is computed inline — same per-row value as the
-        # layered path's pre-projection withColumn
+        # batch projection: every data column, __op, the seed flag, the
+        # ordering columns (__arrival numbered inline) and __bucket
         def _bproj_for(d: DataFrame, cast_sql: dict[str, str], g: int) -> list[str]:
             bproj = [f"{cast_sql[c]} AS `{c}`" for c in cols]
             bproj.append(
@@ -1098,10 +856,11 @@ class KvStore:
                 bproj.append(f"CAST({g} AS INT) AS `{GRP_COL}`")
             return bproj
 
-        # write scope (same rules as _fold_input): skip on first commit,
+        # write scope: skip on a table with no state yet (first commit),
         # trust a caller-known superset, else one map-side discovery job
         # over a minimal CAST key/partition frame (the union of all
-        # batches' keys under group commit)
+        # batches' keys under group commit). The scope bounds the seed:
+        # without it every commit would shuffle O(table).
         state_now = self.catalog.current_commit(self.db, self.table)
         manifest_now = self._manifest(state_now.snapshot_version)
         has_snapshot = (
@@ -1163,11 +922,15 @@ class KvStore:
             f"SELECT /*+ REPARTITION({width}, `{BUCKET_COL}`) */ *"
             f" FROM ({union_sql})"
         )
-        # per-batch __seq: under group commit the numbering partition
-        # additionally keys on __grp, so each batch's rows restart at 1
-        # per key — the sequential commits' numbering exactly. The
-        # ordering columns ride on: the fold windows below order by the
-        # same spec (led by __grp), so they reuse this window's sort
+        # __seq inside the fold's own exchange: seed first (SEED desc),
+        # then batch rows in `ordering` order. Batch rows number 1.. per
+        # key whether or not a seed row exists (sum(SEED) over the key =
+        # presence); seed rows pin __seq=0. Under group commit the
+        # numbering partition additionally keys on __grp, so each
+        # batch's rows restart at 1 per key — the sequential commits'
+        # numbering exactly. The ordering columns ride on: the fold
+        # windows order by the same spec, so they reuse this window's
+        # sort.
         seq_part_cols = [f"`{BUCKET_COL}`"] + [f"`{c}`" for c in pk] + (
             [f"`{GRP_COL}`"] if grouped else []
         )
@@ -1190,6 +953,60 @@ class KvStore:
             + [f"`{c}`" for c in ord_extra]
         )
         fold_sql = f"SELECT {', '.join(seq_select)} FROM ({repart_sql})"
+        frames = {"snap": bounded}
+        frames.update({_ph(g): d for g, d in enumerate(dfs)})
+        return fold_sql, frames, ord_sql
+
+    def _fold(
+        self,
+        spark: SparkSession,
+        dfs: list[DataFrame],
+        ordering: list[str] | None,
+        known_buckets: list[int] | None,
+        partial_update_cols: list[str] | None = None,
+        merge_mode: str | None = None,
+    ) -> DataFrame:
+        """Fold the batches over their seed into the commit changelog:
+        change events plus NULL-change-type prior rows, carrying
+        `__bucket` (and `__grp` for a group) and hash-partitioned by
+        __bucket — the input contract of _commit_plan.
+
+        Both fold shapes read the one input of _fold_input_sql. The
+        default merge engine folds and emits in the SAME statement (for
+        driver latency: one JVM analysis of nested subqueries instead
+        of one per plan layer), from the expression
+        strings replay()'s default engine uses (shared builders in
+        operators/replay.py; tests/test_commit_equivalence.py pins
+        row-for-row equality with replay()). Every other shape runs
+        replay() over `spark.sql(<fold input>)`."""
+        from fluss_spark.operators.replay import (
+            EMIT_WHERE,
+            default_fold_select_list,
+            emit_select_list,
+            wal_image_ct_case_sql,
+            wal_image_where_sql,
+        )
+
+        schema = self.schema
+        cols = schema.data_columns()
+        grouped = len(dfs) > 1
+        may_have_deletes = any(OP_COL in d.columns for d in dfs)
+        fold_sql, frames, ord_sql = self._fold_input_sql(
+            spark, dfs, ordering, known_buckets
+        )
+        if not all(self._sql_fold_ok(d, partial_update_cols, merge_mode) for d in dfs):
+            assert not grouped, "group commit requires the SQL fold"
+            changelog, _ = replay(
+                spark.sql(fold_sql, **frames),
+                schema,
+                partial_update_cols=partial_update_cols,
+                merge_mode=merge_mode,
+                may_have_deletes=may_have_deletes,
+                cluster_cols=[BUCKET_COL],
+                emit_prior=True,
+                seq_order=ord_sql,
+            )
+            return changelog
 
         # DeleteBehavior.IGNORE rides as a WHERE on the fold output —
         # same placement as replay()'s filter (after __seq assignment)
@@ -1199,7 +1016,7 @@ class KvStore:
         fold_order = f"`{GRP_COL}`, {ord_sql}" if grouped else ord_sql
         extra_fold_cols = [BUCKET_COL] + ([GRP_COL] if grouped else [])
         d_sql = (
-            f"SELECT {', '.join(default_fold_select_list(cols, [BUCKET_COL] + list(pk), fold_order))}"
+            f"SELECT {', '.join(default_fold_select_list(cols, [BUCKET_COL] + list(schema.primary_key), fold_order))}"
             f" FROM ({fold_sql}){where}"
         )
         emit_sql = (
@@ -1208,7 +1025,7 @@ class KvStore:
         )
         final_sql = f"SELECT * FROM ({emit_sql}) WHERE {EMIT_WHERE}"
         if schema.changelog_image == "wal":
-            # +I -> +U rewrite gates exactly like the layered
+            # +I -> +U rewrite gates exactly like replay()'s
             # _apply_changelog_image: default merge engine (the SCHEMA's
             # engine — an overwrite batch to a non-default-engine table
             # folds as last-write-wins but keeps +I, KvTablet semantics)
@@ -1227,100 +1044,7 @@ class KvStore:
                 + ", ".join(f"`{c}`" for c in cols)
                 + f" FROM ({emit_sql}) WHERE {EMIT_WHERE} AND {wal_image_where_sql(True)}"
             )
-
-        frames = {"snap": bounded}
-        frames.update({_ph(g): d for g, d in enumerate(dfs)})
-        changelog = spark.sql(final_sql, **frames)
-        pair_scope = (
-            (pair_pred, pair_keys)
-            if (pair_pred is not None or pair_keys is not None)
-            else None
-        )
-        return changelog, batch_buckets, pair_scope, bounded
-
-    def _commit_changelog(
-        self,
-        spark: SparkSession,
-        changelog: DataFrame,
-        commit_ts_ms: int | None,
-        batch_buckets: list[int] | None = None,
-        pair_scope=None,
-        prior_frame: DataFrame | None = None,
-        prior_included: bool = False,
-    ) -> CommitState:
-        """Commit the replayed changelog: WAL append + touched-bucket
-        snapshot rewrite + atomic commit, as ONE Spark action for every
-        pk-table layout (see _commit_single_action; partitioned tables
-        emit partition dirs on both siblings, auto-increment tables
-        pre-assign id segments from a persisted fold).
-
-        With `table.snapshot.defer-commits` = K > 1 the commit is
-        WAL-ONLY (the RocksDB model: the write path absorbs puts, a
-        periodic checkpoint materializes — server/kv/snapshot/) and
-        every K-th commit folds the accumulated tail into the snapshot
-        via materialize(); reads stay exact throughout because
-        snapshot() merges the uncovered tail on top."""
-        defer = int(
-            self.schema.properties.get("table.snapshot.defer-commits", "1") or "1"
-        )
-        if defer > 1:
-            state = self._commit_wal_only(spark, changelog, commit_ts_ms)
-            if (
-                state.version - max(state.snapshot_version, 0) >= defer
-                or self._tail_bytes_exceeded(state)
-            ):
-                state = self.materialize(spark)
-            return state
-        # AQE is already off here for the fixed-shape commit plan (hash
-        # by bucket -> window -> explode -> partitioned write): the
-        # caller (upsert) scopes it off around the whole serial
-        # transaction — A/B at sf0.1: warm commit 1.4s -> 1.0s from the
-        # commit action alone, plus the discovery job's replan on top.
-        return self._commit_single_action(
-            spark, changelog, commit_ts_ms, batch_buckets, pair_scope, prior_frame,
-            prior_included,
-        )
-
-    def _commit_wal_only(
-        self, spark: SparkSession, changelog: DataFrame, commit_ts_ms: int | None
-    ) -> CommitState:
-        """Deferred commit (table.snapshot.defer-commits > 1): the WAL
-        append IS the whole commit — one bucket-clustered write, no
-        snapshot sibling, snapshot_version untouched. The reference
-        analog is exact: KvTablet.putAsLeader appends the WAL and puts
-        into RocksDB (which absorbs writes in-memory/L0); the periodic
-        snapshot (server/kv/snapshot/) is a separate checkpoint. Here
-        the 'memtable' is virtual — snapshot() folds the uncovered WAL
-        tail on top of the last materialized snapshot at read time — so
-        a crash after this commit loses nothing: the WAL is durable and
-        every read path re-derives the same state."""
-        schema = self.schema
-        wal_order = [SEQ_COL, SUB_COL] + schema.primary_key
-        auto_override = None
-        stamp_persist = None
-        if any(f.auto_increment for f in schema.fields):
-            # insert-stable ids against the CURRENT state (the hybrid
-            # snapshot feeds the stored-id join, so ids minted in the
-            # uncovered tail carry through later deferred commits)
-            stamp_persist = changelog.persist()
-            changelog, auto_override = self._stamp_autoinc_baseline(
-                spark, stamp_persist
-            )
-        try:
-            state = self.log.append(
-                changelog,
-                ordering=wal_order,
-                extra_cols=[CHANGE_TYPE_COL, SEQ_COL, SUB_COL],
-                commit_ts_ms=commit_ts_ms,
-                defer_commit=True,
-                auto_increment_override=auto_override,
-            )
-        finally:
-            if stamp_persist is not None:
-                stamp_persist.unpersist()
-        self.log.publish(state.version)
-        self.catalog.commit(self.db, self.table, state)
-        return state
+        return spark.sql(final_sql, **frames)
 
     def _tail_bytes_exceeded(self, state: CommitState) -> bool:
         """table.snapshot.defer-max-tail-bytes: a size threshold that
@@ -1362,7 +1086,6 @@ class KvStore:
         the next materialization overwrites (same version number — the
         tail is still uncovered, so version/state are unchanged)."""
         import shutil
-        import time
 
         schema = self.schema
         state = self.catalog.current_commit(self.db, self.table)
@@ -1453,30 +1176,78 @@ class KvStore:
         self.catalog.commit(self.db, self.table, new_state)
         return new_state
 
-    def _commit_single_action(
+    def _commit(
         self,
         spark: SparkSession,
         changelog: DataFrame,
-        commit_ts_ms: int | None,
-        batch_buckets: list[int] | None,
-        pair_scope=None,
-        prior_frame: DataFrame | None = None,
-        prior_included: bool = False,
-    ) -> CommitState:
-        """One write action produces the WAL and the snapshot as sibling
-        partition dirs (__dest=w / __dest=s), fused into a single
-        bucket-window pass:
+        ts_list: list[int],
+        state0: CommitState,
+        pre_lock=None,
+    ) -> list[CommitState]:
+        """Write and publish a _fold changelog as len(ts_list) commit
+        versions on top of state0: ONE write action of the fused commit
+        frame (_commit_plan), then _commit_finish. A deferred table
+        writes and publishes the WAL only.
 
-          - events (change rows) union prior-snapshot rows (seq=-1, so
-            they sort before any event of their key) hash into buckets;
-            the prior feed is always bounded to the batch's buckets
-            (discovered in _fold_input) — O(touched buckets), never
-            O(table);
+        Optimistic (`pre_lock` a callable, see upsert_optimistic): the
+        write goes to a uniquely-named inflight dir outside the lock;
+        `pre_lock` runs, then under the lock the staged units are
+        validated against the current state (CommitConflictError on a
+        conflict), contended bucket offsets rebased, and the commit
+        published on top of the CURRENT state."""
+        import shutil
+        import uuid
+
+        wal_only = self._defer_commits() > 1
+        out, persisted, auto_next = self._commit_plan(
+            changelog, ts_list, state0, wal_only
+        )
+        name = (
+            f"commit-v{state0.version + 1}"
+            if pre_lock is None
+            else f"inflight-{uuid.uuid4().hex[:12]}"
+        )
+        combined = os.path.join(self.log.tmp_dir, name)
+        try:
+            self._write_combined(out, combined, persisted, grouped=len(ts_list) > 1)
+            if pre_lock is None:
+                return self._commit_finish(
+                    spark, combined, state0, ts_list, auto_next, wal_only
+                )
+            pre_lock()
+            with self.catalog.write_lock(self.db, self.table):
+                s1 = self.catalog.current_commit(self.db, self.table)
+                reason = self._occ_conflict(state0, s1, combined)
+                if reason is not None:
+                    raise CommitConflictError(reason)
+                self._occ_shift_offsets(spark, combined, state0, s1)
+                return self._commit_finish(
+                    spark, combined, s1, ts_list, dict(s1.auto_increment)
+                )
+        finally:
+            shutil.rmtree(combined, ignore_errors=True)
+
+    def _commit_plan(
+        self,
+        changelog: DataFrame,
+        ts_list: list[int],
+        state0: CommitState,
+        wal_only: bool = False,
+    ):
+        """The fused commit-output frame: one write action produces the
+        WAL and the snapshot as sibling partition dirs (__dest=w /
+        __dest=s), fused into a single bucket-window pass:
+
+          - events (change rows) and prior-snapshot rows (NULL change
+            type, sub -1, so they sort before any event of their key)
+            arrive hash-partitioned by bucket from the fold's one
+            exchange; the prior rows are the fold's seed, bounded to the
+            batch's buckets — O(touched buckets), never O(table);
           - one window over (bucket) ordered (seq, sub, pk) assigns
             per-bucket WAL offsets (running event count + old HWM), so
             offset order within a bucket IS batch-arrival order across
             keys, matching the reference WAL (LogTablet.java appends in
-            arrival order) and the two-pass path; a second frame over
+            arrival order) and the two-pass baseline; a second frame over
             (bucket, pk) flags each key's LAST row (max fold position)
             — same exchange, one extra in-memory sort;
           - routing: event -> WAL; last event that is not -D -> WAL +
@@ -1508,92 +1279,31 @@ class KvStore:
         changes across updates, and only a delete + re-insert mints a
         new one.
 
-        The driver then renames __dest=w to the log staging dir and
-        __dest=s to snapshot/data-vN — metadata-only moves. Snapshot
-        copies null out the WAL system columns (_change_type, __seq,
-        __sub, __offset, __timestamp): no reader consumes them on the
-        snapshot surface and real values would bloat every snapshot file
-        and leak into lake-export schemas built from footers.
+        A WAL-only commit (deferred materialization) emits only the
+        __dest=w copies. The driver then renames __dest=w to the log
+        staging dir and __dest=s to snapshot/data-vN — metadata-only
+        moves (_commit_finish). Snapshot copies null out the WAL system
+        columns (_change_type, __seq, __sub, __offset, __timestamp): no
+        reader consumes them on the snapshot surface and real values
+        would bloat every snapshot file and leak into lake-export
+        schemas built from footers.
 
         The reference analog: the WAL *is* the changelog — one append
         (KvTablet.java:562-591), with the snapshot (RocksDB state) fed
-        from the same merge pass, not re-derived."""
-        import time
+        from the same merge pass, not re-derived.
 
-        self.log.clean_orphans()
-        state0 = self.catalog.current_commit(self.db, self.table)
-        version = state0.version + 1
-        ts_ms = commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
-        out, persisted, auto_next = self._commit_plan(
-            spark, changelog, ts_ms, batch_buckets, pair_scope, state0, prior_frame,
-            prior_included,
-        )
-        combined = os.path.join(self.log.tmp_dir, f"commit-v{version}")
-        self._write_combined(out, combined, persisted)
-        return self._commit_finish(spark, combined, state0, version, ts_ms, auto_next)
-
-    def _commit_group(
-        self,
-        spark: SparkSession,
-        changelog: DataFrame,
-        ts_list: list[int],
-        batch_buckets: list[int] | None,
-        pair_scope,
-        prior_frame: DataFrame | None,
-        grp_count: int,
-    ) -> list[CommitState]:
-        """Publish a grouped fold (see upsert_many) as `grp_count`
-        commit versions from ONE write action: the WAL side is
-        partitioned by `__g`, each sub-dir renames into its own commit
-        dir; only the LAST version materializes the snapshot —
-        intermediate versions are WAL-only states (the deferred-commit /
-        compaction sparse-version shape the read paths already serve)."""
-        self.log.clean_orphans()
-        state0 = self.catalog.current_commit(self.db, self.table)
-        out, persisted, _auto = self._commit_plan(
-            spark, changelog, ts_list, batch_buckets, pair_scope, state0,
-            prior_frame, prior_included=True, grp_count=grp_count,
-        )
-        combined = os.path.join(self.log.tmp_dir, f"commit-v{state0.version + 1}")
-        self._write_combined(out, combined, persisted, grouped=True)
-        return self._commit_finish_group(
-            spark, combined, state0, ts_list, grp_count
-        )
-
-    def _commit_plan(
-        self,
-        spark: SparkSession,
-        changelog: DataFrame,
-        ts_ms: int | list[int],
-        batch_buckets: list[int] | None,
-        pair_scope,
-        state0: CommitState,
-        prior_frame: DataFrame | None = None,
-        prior_included: bool = False,
-        grp_count: int | None = None,
-    ):
-        """Build the fused commit-output frame (see _commit_single_action)
-        against a given base state. Returns (out frame, persisted handle
-        to unpersist after the write, advanced auto-increment map). Pure
-        plan construction — no writes, no metadata mutation — so the
-        optimistic path can run it (and the write) outside the table
-        lock.
-
-        `prior_included=True` is the single-exchange contract
-        (_fold_input fused=True + replay emit_prior=True): the changelog
-        already carries `__bucket`, is hash-partitioned by it, and
-        includes the prior-snapshot rows as NULL-change-type records —
-        so this plan adds NO exchange, no second snapshot scan and no
-        bucket recomputation; its windows reuse the fold's partitioning."""
+        Built against a given base state from a _fold changelog (which
+        carries `__bucket`, is hash-partitioned by it, and includes the
+        prior-snapshot rows), so this plan adds NO exchange, no second
+        snapshot scan and no bucket recomputation. One timestamp per
+        batch in `ts_list`; several mean a group (the changelog carries
+        `__grp`). Returns (out frame, persisted handle to unpersist after
+        the write, advanced auto-increment map). Pure plan construction
+        — no writes, no metadata mutation — so the optimistic path can
+        run it (and the write) outside the table lock."""
         schema = self.schema
         pk, cols = schema.primary_key, schema.data_columns()
-        old_manifest = self._manifest(state0.snapshot_version) or {}
-        grouped = grp_count is not None
-        if grouped:
-            # group gate (upsert_many) excludes these shapes
-            assert prior_included and not any(
-                f.auto_increment for f in schema.fields
-            ), "group commit requires the fused fold and no auto-increment"
+        grouped = len(ts_list) > 1
 
         # Everything below builds the plan from WHOLE-SELECT SQL strings
         # (selectExpr / one JVM parse each) instead of per-column Column
@@ -1602,10 +1312,6 @@ class KvStore:
         qcols = [f"`{c}`" for c in cols]
         # Spark-SQL DDL type strings (the schema's own are engine DDL)
         declared = {f.name: parse_type(f.type).simpleString() for f in schema.fields}
-        bucket_sql = (
-            f"CAST(pmod(hash({', '.join(f'`{c}`' for c in schema.bucket_keys)}), "
-            f"{schema.num_buckets}) AS INT)"
-        )
 
         # M10: pre-assign per-bucket id segments driver-side, sized by
         # the bucket's INSERT (+I) count only — an id is minted once per
@@ -1629,9 +1335,7 @@ class KvStore:
                 for r in changelog.filter(
                     F.col(CHANGE_TYPE_COL) == INSERT
                 )
-                .selectExpr(
-                    f"`{BUCKET_COL}` AS b" if prior_included else f"{bucket_sql} AS b"
-                )
+                .selectExpr(f"`{BUCKET_COL}` AS b")
                 .groupBy("b")
                 .agg(F.count("*").alias("cnt"))
                 .collect()
@@ -1662,43 +1366,13 @@ class KvStore:
         ev = changelog.selectExpr(
             *[f"CAST(`{c}` AS {declared[c]}) AS `{c}`" for c in cols],
             *sys_cast,
-            *([f"`{BUCKET_COL}`"] if prior_included else []),
+            f"`{BUCKET_COL}`",
             *([f"`{GRP_COL}`"] if grouped else []),
         )
-        if old_manifest and not prior_included:
-            # prior rows of the candidate buckets ride the same window;
-            # a prior row that is still the last row of its key (no
-            # events) is the survivor the two-pass path found by
-            # anti-join. seq=-1 sorts prior rows before every event of
-            # their key and loses the per-key max to any event. On
-            # partitioned tables the typed pair predicate additionally
-            # bounds the feed to the batch's (partition, bucket) pairs.
-            pair_pred, pair_keys = pair_scope if pair_scope else (None, None)
-            # reuse the fold's bounded-snapshot frame when the caller
-            # provides it: same plan, one analysis, and the seed + prior
-            # feed are guaranteed the same basis
-            prior = (
-                prior_frame
-                if prior_frame is not None
-                else self.snapshot(
-                    spark,
-                    buckets=batch_buckets,
-                    pair_pred=pair_pred,
-                    pair_keys=pair_keys,
-                )
-            )
-            old = prior.selectExpr(
-                *qcols,
-                f"CAST(NULL AS STRING) AS `{CHANGE_TYPE_COL}`",
-                f"CAST(-1 AS BIGINT) AS `{SEQ_COL}`",
-                f"CAST(-1 AS INT) AS `{SUB_COL}`",
-            )
-            ev = ev.unionByName(old)
-
         pk_sql = ", ".join(f"`{c}`" for c in pk)
         # arrival-order window: offsets follow (seq, sub, pk) — the fold
         # sequence = batch arrival — so cross-key WAL order matches the
-        # reference contract and the two-pass path exactly. Group commit
+        # reference contract and the two-pass baseline exactly. Group commit
         # prefixes the batch index: offsets run batch-major, exactly the
         # cumulative bases N sequential commits would assign.
         grp_ord = f"`{GRP_COL}`, " if grouped else ""
@@ -1730,23 +1404,6 @@ class KvStore:
             else f"struct(`{SEQ_COL}`, `{SUB_COL}`)"
         )
         is_last = f"({pos} = max({pos}) OVER (PARTITION BY `{BUCKET_COL}`, {pk_sql}))"
-        if not prior_included:
-            ev = ev.selectExpr("*", f"{bucket_sql} AS `{BUCKET_COL}`")
-            # the bucket window's exchange sized by exchange_width, not
-            # spark.sql.shuffle.partitions: PARTITION BY bucket caps the
-            # usable parallelism at the buckets written (the reference
-            # runs exactly one leader per bucket), so any extra shuffle
-            # partitions are guaranteed-empty tasks that still pay
-            # scheduling + file-commit setup in the write stage.
-            # hash(bucket) satisfies the window's required distribution,
-            # so no second exchange is added.
-            # (prior_included: the changelog arrives already hash-
-            # partitioned by __bucket from the fold's exchange — adding
-            # either node here would re-shuffle for nothing.)
-            width = exchange_width(
-                spark, schema.num_buckets, batch_buckets if old_manifest else None
-            )
-            ev = ev.repartition(width, F.col(BUCKET_COL))
         carried: dict[str, str] = {}
         if id_expr:
             # insert-stable ids (reference M10 semantics): a fresh id is
@@ -1754,7 +1411,7 @@ class KvStore:
             # running INSERT count (same arrival order as the offsets).
             # Every other row of the key CARRIES its current id: the
             # anchor column is the stamp on +I rows and the stored value
-            # on prior-snapshot rows (seq=-1, sorts first), so a
+            # on prior-snapshot rows (sub -1, sorts first), so a
             # last-non-null over (bucket, pk) in fold order gives -U
             # before-images the id the row really had, +U after-images
             # the same id, and a key re-inserted after an in-batch -D a
@@ -1791,11 +1448,11 @@ class KvStore:
             # per-batch commit timestamps (sequential commits stamp each
             # batch at its own commit time)
             ts_pairs = ", ".join(
-                f"{g}, timestamp_millis({t})" for g, t in enumerate(ts_ms)
+                f"{g}, timestamp_millis({t})" for g, t in enumerate(ts_list)
             )
             ts_sql = f"element_at(map({ts_pairs}), `{GRP_COL}`)"
         else:
-            ts_sql = f"timestamp_millis({ts_ms})"
+            ts_sql = f"timestamp_millis({ts_list[0]})"
         ev = ev.selectExpr(
             *data_proj,
             f"`{CHANGE_TYPE_COL}`",
@@ -1834,7 +1491,7 @@ class KvStore:
         # a real column) routes each WAL copy to its batch's commit dir;
         # the snapshot copy belongs to the group's LAST version
         w_grp = f", '__g', `{GRP_COL}`" if grouped else ""
-        s_grp = f", '__g', CAST({(grp_count or 1) - 1} AS INT)" if grouped else ""
+        s_grp = f", '__g', CAST({len(ts_list) - 1} AS INT)" if grouped else ""
         w_struct = (
             f"named_struct('{CHANGE_TYPE_COL}', `{CHANGE_TYPE_COL}`, "
             f"'{SEQ_COL}', `{SEQ_COL}`, '{SUB_COL}', `{SUB_COL}`, "
@@ -1853,9 +1510,12 @@ class KvStore:
             f"`{CHANGE_TYPE_COL}` != '{DELETE}') OR (NOT {is_event} AND __touched)) "
             f"THEN {s_struct} END"
         )
+        # a WAL-only commit has no snapshot copy: the is-last and
+        # touched windows then go unused and the optimizer prunes them
+        slots = [slot_w] if wal_only else [slot_w, slot_s]
         out = ev.selectExpr(
             *qcols,
-            f"inline(array({slot_w}, {slot_s}))",
+            f"inline(array({', '.join(slots)}))",
             f"`{BUCKET_COL}`",
         ).filter(f"`{DEST_COL}` IS NOT NULL")
 
@@ -1896,192 +1556,113 @@ class KvStore:
         spark: SparkSession,
         combined: str,
         base_state: CommitState,
-        version: int,
-        ts_ms: int,
+        ts_list: list[int],
         auto_next: dict[str, int],
-        touched_override=None,
-    ) -> CommitState:
-        """Publish a written combined dir as commit `version` on top of
-        `base_state`: rename the siblings into place, advance the HWMs
-        and manifest RELATIVE TO base_state, then commit atomically. The
-        serial path passes base_state = the state the plan was built
-        against; the optimistic path passes the CURRENT state after
-        validating the plan's base is still compatible with it
-        (disjoint units, see upsert_optimistic)."""
+        wal_only: bool = False,
+    ) -> list[CommitState]:
+        """Publish a written combined dir as len(ts_list) commit versions
+        on top of `base_state`: rename the siblings into place, advance
+        the HWMs and manifest RELATIVE TO base_state, then commit each
+        version atomically. The serial path passes base_state = the
+        state the plan was built against; the optimistic path passes the
+        CURRENT state after validating the plan's base is still
+        compatible with it (disjoint units, see upsert_optimistic).
+
+        Every version but the last is a WAL-only state: its WAL renames
+        into its commit dir (a group's `__g=<i>` sub-dir) and
+        snapshot_version stays at the base — the sparse-version shape
+        every read path serves through the offset-bounded tail fold.
+        The last version materializes the snapshot of every unit any
+        batch touched, unless `wal_only` (deferred materialization)
+        keeps it a WAL-only state too."""
         import shutil
 
         schema = self.schema
         state0 = base_state
-        old_manifest = self._manifest(state0.snapshot_version) or {}
-
-        # driver-side publish prep: sibling dirs -> their destinations
-        staged = self.log.staging_path(version)
-        wal_part = os.path.join(combined, f"{DEST_COL}=w")
-        if os.path.isdir(wal_part):
-            if os.path.exists(staged):
-                shutil.rmtree(staged)
-            os.rename(wal_part, staged)
-        else:  # no change events at all (e.g. deletes of absent keys)
-            os.makedirs(staged, exist_ok=True)
-
+        grouped = len(ts_list) > 1
+        w_root = os.path.join(combined, f"{DEST_COL}=w")
+        snap_part = os.path.join(combined, f"{DEST_COL}=s")
+        if grouped:  # the snapshot copy belongs to the group's last batch
+            snap_part = os.path.join(snap_part, f"__g={len(ts_list) - 1}")
         hwm = dict(state0.log_hwm)
-        per_bucket = self._footer_hwm_or_read(spark, staged)
-        for bkt, mx in per_bucket.items():
-            hwm[str(bkt)] = mx + 1
         # the snapshot-rewrite unit: buckets (unpartitioned) or
         # (partition path, bucket) pairs (partitioned) — both read off
-        # the staged WAL's directory names, zero extra jobs. Group
-        # commit passes the UNION over every batch's staged dirs (the
-        # final data dir holds rows for units any batch touched).
-        if touched_override is not None:
-            touched = sorted(touched_override)
-        elif schema.partition_keys:
-            touched = self._walk_pairs(staged)
-        else:
-            touched = sorted(per_bucket)
-
-        new_manifest = dict(old_manifest)
-        dir_pairs = None
-        if touched:
-            data_dir = f"data-v{version}"
-            os.makedirs(self.snapshot_dir, exist_ok=True)
-            dst = os.path.join(self.snapshot_dir, data_dir)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            snap_part = os.path.join(combined, f"{DEST_COL}=s")
-            if os.path.isdir(snap_part):
-                os.rename(snap_part, dst)
-            else:  # every key of the touched buckets was deleted
-                os.makedirs(dst)
-            if schema.partition_keys:
-                # a touched pair with no surviving rows (all its keys
-                # deleted) leaves the manifest entirely
-                snap_pairs = set(self._walk_pairs(dst))
-                for pair in touched:
-                    if pair in snap_pairs:
-                        new_manifest[pair] = data_dir
-                    else:
-                        new_manifest.pop(pair, None)
-                dir_pairs = dict(
-                    self._manifest_dir_pairs(state0.snapshot_version)
-                )
-                dir_pairs[data_dir] = sorted(snap_pairs)
-            else:
-                # same prune as the partitioned arm: a touched bucket
-                # with no surviving rows leaves the manifest
-                snap_buckets = {b for _pp, b in self._walk_pairs(dst)}
-                for bkt in touched:
-                    if bkt in snap_buckets:
-                        new_manifest[bkt] = data_dir
-                    else:
-                        new_manifest.pop(bkt, None)
-        elif schema.partition_keys:
-            dir_pairs = self._manifest_dir_pairs(state0.snapshot_version)
-        shutil.rmtree(combined, ignore_errors=True)
-
-        self._write_manifest(version, new_manifest, dir_pairs)
-        new_state = CommitState(
-            version=version,
-            log_hwm=hwm,
-            snapshot_version=version,
-            auto_increment=auto_next,
-            ts_ms=ts_ms,
-            log_start=state0.log_start,
-            log_floor=state0.log_floor,
-        )
-        self.log.publish(version)
-        self.catalog.commit(self.db, self.table, new_state)
-        return new_state
-
-    def _commit_finish_group(
-        self,
-        spark: SparkSession,
-        combined: str,
-        state0: CommitState,
-        ts_list: list[int],
-        grp_count: int,
-    ) -> list[CommitState]:
-        """Publish a grouped combined dir as `grp_count` commit versions
-        on top of state0. Versions v+1..v+N-1 are WAL-only states (their
-        __g sub-dir renames into the commit dir; snapshot_version stays
-        at the base — exactly the shape _commit_wal_only publishes, which
-        every read path serves via the offset-bounded tail fold); the
-        final version routes through _commit_finish with the touched-unit
-        UNION of all batches, so the manifest/data-dir handling (pair
-        pruning, partitioned dir_pairs) is the single-commit code."""
-        import shutil
-
-        schema = self.schema
-        hwm = dict(state0.log_hwm)
+        # the staged WAL's directory names, zero extra jobs; the union
+        # over every batch's staged dirs
+        touched: set = set()
         states: list[CommitState] = []
-        touched_union: set = set()
-        w_root = os.path.join(combined, f"{DEST_COL}=w")
-        for g in range(grp_count - 1):
+        for g, ts_ms in enumerate(ts_list):
             version = state0.version + 1 + g
+            last = g == len(ts_list) - 1
             staged = self.log.staging_path(version)
-            wal_part = os.path.join(w_root, f"__g={g}")
+            wal_part = os.path.join(w_root, f"__g={g}") if grouped else w_root
             if os.path.isdir(wal_part):
                 if os.path.exists(staged):
                     shutil.rmtree(staged)
                 os.rename(wal_part, staged)
-            else:  # batch produced no change events
+            else:  # no change events at all (e.g. deletes of absent keys)
                 os.makedirs(staged, exist_ok=True)
             per_bucket = self._footer_hwm_or_read(spark, staged)
             for bkt, mx in per_bucket.items():
                 hwm[str(bkt)] = mx + 1
             if schema.partition_keys:
-                touched_union.update(self._walk_pairs(staged))
+                touched.update(self._walk_pairs(staged))
             else:
-                touched_union.update(per_bucket)
-            st = CommitState(
+                touched.update(per_bucket)
+
+            snapshot_version = state0.snapshot_version
+            if last and not wal_only:
+                snapshot_version = version
+                old_manifest = self._manifest(state0.snapshot_version) or {}
+                new_manifest = dict(old_manifest)
+                dir_pairs = None
+                if touched:
+                    data_dir = f"data-v{version}"
+                    os.makedirs(self.snapshot_dir, exist_ok=True)
+                    dst = os.path.join(self.snapshot_dir, data_dir)
+                    if os.path.exists(dst):
+                        shutil.rmtree(dst)
+                    if os.path.isdir(snap_part):
+                        os.rename(snap_part, dst)
+                    else:  # every key of the touched buckets was deleted
+                        os.makedirs(dst)
+                    if schema.partition_keys:
+                        # a touched pair with no surviving rows (all its
+                        # keys deleted) leaves the manifest entirely
+                        snap_pairs = set(self._walk_pairs(dst))
+                        for pair in sorted(touched):
+                            if pair in snap_pairs:
+                                new_manifest[pair] = data_dir
+                            else:
+                                new_manifest.pop(pair, None)
+                        dir_pairs = dict(
+                            self._manifest_dir_pairs(state0.snapshot_version)
+                        )
+                        dir_pairs[data_dir] = sorted(snap_pairs)
+                    else:
+                        # same prune as the partitioned arm: a touched
+                        # bucket with no surviving rows leaves the manifest
+                        snap_buckets = {b for _pp, b in self._walk_pairs(dst)}
+                        for bkt in sorted(touched):
+                            if bkt in snap_buckets:
+                                new_manifest[bkt] = data_dir
+                            else:
+                                new_manifest.pop(bkt, None)
+                elif schema.partition_keys:
+                    dir_pairs = self._manifest_dir_pairs(state0.snapshot_version)
+                self._write_manifest(version, new_manifest, dir_pairs)
+            state = CommitState(
                 version=version,
                 log_hwm=dict(hwm),
-                snapshot_version=state0.snapshot_version,
-                auto_increment=dict(state0.auto_increment),
-                ts_ms=ts_list[g],
+                snapshot_version=snapshot_version,
+                auto_increment=dict(auto_next if last else state0.auto_increment),
+                ts_ms=ts_ms,
                 log_start=state0.log_start,
                 log_floor=state0.log_floor,
             )
             self.log.publish(version)
-            self.catalog.commit(self.db, self.table, st)
-            states.append(st)
-
-        # restructure to the single-commit layout (__dest=w/__dest=s hold
-        # the LAST batch's WAL and the group's final snapshot) and reuse
-        # _commit_finish for the materializing version
-        last = grp_count - 1
-        wal_last = os.path.join(w_root, f"__g={last}")
-        if os.path.isdir(wal_last):
-            tmp_w = os.path.join(combined, "__w_final")
-            os.rename(wal_last, tmp_w)
-            shutil.rmtree(w_root, ignore_errors=True)
-            os.rename(tmp_w, w_root)
-            if schema.partition_keys:
-                touched_union.update(self._walk_pairs(w_root))
-            else:
-                touched_union.update(
-                    self._footer_hwm_or_read(spark, w_root)
-                )
-        else:
-            shutil.rmtree(w_root, ignore_errors=True)
-        s_root = os.path.join(combined, f"{DEST_COL}=s")
-        s_last = os.path.join(s_root, f"__g={last}")
-        if os.path.isdir(s_last):
-            tmp_s = os.path.join(combined, "__s_final")
-            os.rename(s_last, tmp_s)
-            shutil.rmtree(s_root, ignore_errors=True)
-            os.rename(tmp_s, s_root)
-        base = states[-1] if states else state0
-        final = self._commit_finish(
-            spark,
-            combined,
-            base,
-            state0.version + grp_count,
-            ts_list[-1],
-            dict(state0.auto_increment),
-            touched_override=touched_union,
-        )
-        states.append(final)
+            self.catalog.commit(self.db, self.table, state)
+            states.append(state)
         return states
 
     def _footer_hwm_or_read(self, spark: SparkSession, staged: str) -> dict[int, int]:
@@ -2100,217 +1681,6 @@ class KvStore:
                 .collect()
             }
         return per_bucket
-
-    def _stamp_autoinc_baseline(
-        self, spark: SparkSession, changelog: DataFrame
-    ) -> tuple[DataFrame, dict[str, int]]:
-        """Insert-stable auto-increment stamping for the two-pass
-        equivalence BASELINE, built a DIFFERENT way than the fused path
-        (filter +I -> row_number -> join-back, plus a stored-id join
-        against the snapshot, vs. the fused path's running-count window
-        anchored on prior-feed rows) so
-        tests/test_commit_equivalence.py compares two independent
-        implementations of the same reference contract: ids minted only
-        at insert (KvTablet.applyInsert, KvTablet.java:763-775), carried
-        verbatim through -U/+U/-D images, re-minted only after an
-        in-batch delete + re-insert. Returns (stamped changelog,
-        advanced counter map). `changelog` must already be persisted by
-        the caller (the count job and the WAL write must agree)."""
-        from fluss_spark.sources.log import _bucket_map_expr
-
-        schema, pk = self.schema, self.schema.primary_key
-        auto_cols = [f.name for f in schema.fields if f.auto_increment]
-        auto_next = dict(self.catalog.current_commit(self.db, self.table).auto_increment)
-        orig_cols = list(changelog.columns)
-        ev = changelog.withColumn(BUCKET_COL, self._bucket_expr())
-
-        # ONE tiny collect gives both the batch's bucket set (bounds the
-        # stored-id read below to O(batch buckets), never O(table)) and
-        # the per-bucket +I counts that size the id segments
-        per_bucket = {
-            int(r[BUCKET_COL]): (int(r["cnt"]), int(r["ins"]))
-            for r in ev.groupBy(BUCKET_COL)
-            .agg(
-                F.count("*").alias("cnt"),
-                F.count(F.when(F.col(CHANGE_TYPE_COL) == INSERT, 1)).alias("ins"),
-            )
-            .collect()
-        }
-        batch_buckets = sorted(per_bucket)
-        counts = {b: ins for b, (_cnt, ins) in per_bucket.items() if ins}
-
-        # mint ids for +I events: per-bucket segments packed in bucket
-        # order, numbered within the bucket in WAL arrival order
-        ins = ev.filter(F.col(CHANGE_TYPE_COL) == INSERT)
-        order = [F.col(SEQ_COL), F.col(SUB_COL)] + [F.col(c) for c in pk]
-        wb = Window.partitionBy(BUCKET_COL).orderBy(*order)
-        minted = ins.select(
-            *pk, SEQ_COL, SUB_COL, BUCKET_COL, F.row_number().over(wb).alias("__ins_n")
-        )
-        for c in auto_cols:
-            base_id = auto_next.get(c, 0)
-            seg, acc = {}, base_id
-            for bkt in sorted(counts):
-                seg[bkt] = acc
-                acc += counts[bkt]
-            auto_next[c] = acc
-            minted = minted.withColumn(
-                f"__mint_{c}",
-                (_bucket_map_expr(seg, base_id) + F.col("__ins_n") - 1).cast("long"),
-            )
-        minted = minted.drop("__ins_n", BUCKET_COL)
-
-        # stored ids of pre-existing keys (the update/delete images of a
-        # key's pre-batch incarnation carry these) — bucket-bounded read,
-        # key-bounded rows (a semi join dedups by definition)
-        stored = (
-            self.snapshot(spark, buckets=batch_buckets)
-            .join(changelog.select(*pk), on=pk, how="left_semi")
-            .select(*pk, *[F.col(c).alias(f"__stored_{c}") for c in auto_cols])
-        )
-        ev = ev.join(minted, on=list(pk) + [SEQ_COL, SUB_COL], how="left").join(
-            stored, on=pk, how="left"
-        )
-        # incarnation carry: rows at/after the key's latest in-batch +I
-        # take that mint; rows before any in-batch +I take the stored id
-        wk = (
-            Window.partitionBy(*pk)
-            .orderBy(F.col(SEQ_COL), F.col(SUB_COL))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        for c in auto_cols:
-            ev = ev.withColumn(
-                c,
-                F.coalesce(
-                    F.last(f"__mint_{c}", ignorenulls=True).over(wk),
-                    F.col(f"__stored_{c}"),
-                ).cast("long"),
-            )
-        return ev.select(*orig_cols), auto_next
-
-    def _commit_twopass(
-        self, spark: SparkSession, changelog: DataFrame, commit_ts_ms: int | None
-    ) -> CommitState:
-        """WAL append + touched-bucket snapshot rewrite + atomic commit.
-        Retained as the equivalence BASELINE the test suite compares the
-        single-action path against (tests/test_commit_equivalence.py);
-        no production route dispatches here anymore.
-
-        WAL-FIRST: the fold plan is computed exactly ONCE — inside the
-        WAL write job — and the STAGED WAL FILES are the lineage cut.
-        The snapshot derivation re-reads those files (metadata-listed,
-        bucket-pruned), so it can never diverge from what was appended
-        even if the input DataFrame is non-deterministic: the file is
-        the record. This replaces the old eager localCheckpoint barrier
-        (one extra full materialization + its scheduling round-trips per
-        commit — ~25% of the steady-state commit constant) with the
-        durable artifact the commit must produce anyway."""
-        schema = self.schema
-        pk = schema.primary_key
-
-        # WAL append: per-bucket offsets ordered by the fold sequence.
-        # All events of one key land in one bucket (bucket key ⊆ pk), so
-        # per-key changelog order is preserved in offset order.
-        old_hwm = {int(b): off for b, off in self.catalog.current_commit(self.db, self.table).log_hwm.items()}
-        wal_order = [SEQ_COL, SUB_COL] + pk
-        auto_override = None
-        stamp_persist = None
-        if any(f.auto_increment for f in schema.fields):
-            # persist = barrier: the insert-count job and the WAL write
-            # must see the same evaluated fold rows
-            stamp_persist = changelog.persist()
-            changelog, auto_override = self._stamp_autoinc_baseline(
-                spark, stamp_persist
-            )
-        try:
-            state = self.log.append(
-                changelog,
-                ordering=wal_order,
-                extra_cols=[CHANGE_TYPE_COL, SEQ_COL, SUB_COL],
-                commit_ts_ms=commit_ts_ms,
-                defer_commit=True,
-                auto_increment_override=auto_override,
-            )
-        finally:
-            if stamp_persist is not None:
-                stamp_persist.unpersist()
-        version = state.version
-        # the staged files ARE this commit's changelog (see docstring)
-        staging = self.log.staging_path(version)
-        changelog = (
-            spark.read.schema(ddl_of(self.log.file_schema()))
-            .option("basePath", staging)
-            .parquet(staging)
-        )
-
-        # touched buckets = high-watermark diff — no extra Spark job
-        touched_buckets = [
-            int(b) for b, off in state.log_hwm.items() if off != old_hwm.get(int(b))
-        ]
-
-        old_manifest = self._manifest(
-            self.catalog.current_commit(self.db, self.table).snapshot_version
-        ) or {}
-        new_manifest = dict(old_manifest)
-
-        if touched_buckets:
-            from fluss_spark.operators.replay import _snapshot_from_changelog
-
-            # last change event per key in (seq, sub) order — per key
-            # identical to WAL-offset order (wal_order above sorts by it)
-            touched_final = _snapshot_from_changelog(changelog, schema)
-            touched_keys = changelog.select(*pk)  # anti join dedups
-            # only the touched buckets are rewritten; a key whose last
-            # event is -D must not survive via the old rows (anti-join on
-            # ALL keys with change events)
-            old_rows = self.snapshot(spark, buckets=touched_buckets)
-            untouched_keys = old_rows.join(touched_keys, on=pk, how="left_anti")
-            bucket_rows = untouched_keys.unionByName(touched_final)
-
-            data_dir = f"data-v{version}"
-            (
-                bucket_rows.withColumn(BUCKET_COL, self._bucket_expr())
-                .repartition(
-                    exchange_width(spark, schema.num_buckets, touched_buckets),
-                    F.col(BUCKET_COL),
-                )
-                .write.mode("overwrite")
-                .partitionBy(*schema.partition_keys, BUCKET_COL)
-                .parquet(os.path.join(self.snapshot_dir, data_dir))
-            )
-            if schema.partition_keys:
-                # the baseline rewrites touched buckets WHOLE (across
-                # partitions): every pair of a touched bucket remaps to
-                # the new dir; pairs with no surviving rows drop out
-                snap_pairs = set(
-                    self._walk_pairs(os.path.join(self.snapshot_dir, data_dir))
-                )
-                for pair in [
-                    p for p in new_manifest if p[1] in set(touched_buckets)
-                ]:
-                    if pair not in snap_pairs:
-                        new_manifest.pop(pair, None)
-                for pair in snap_pairs:
-                    new_manifest[pair] = data_dir
-            else:
-                for bkt in touched_buckets:
-                    new_manifest[bkt] = data_dir
-
-        if schema.partition_keys:
-            dir_pairs = dict(
-                self._manifest_dir_pairs(
-                    self.catalog.current_commit(self.db, self.table).snapshot_version
-                )
-            )
-            if touched_buckets:
-                dir_pairs[data_dir] = sorted(snap_pairs)
-            self._write_manifest(version, new_manifest, dir_pairs)
-        else:
-            self._write_manifest(version, new_manifest)
-        state.snapshot_version = version
-        self.log.publish(version)
-        self.catalog.commit(self.db, self.table, state)
-        return state
 
     def insert_if_not_exists(self, df: DataFrame, ordering: list[str] | None = None) -> DataFrame:
         """L3 (Lookup.enableInsertIfNotExists, Lookup.java:97-105): a
@@ -2850,7 +2220,7 @@ class KvStore:
         if not all(exact(key[c], want[c], types[c]) for c in key):
             # the key is cast for routing only: a value the column cannot
             # hold (7.5 for an INT) equals no stored row
-            return spark.createDataFrame([], schema.to_struct_type())
+            return _empty_local(spark, schema.to_struct_type())
         bkt = bucket_of([key[c] for c in bucket_key], [types[c] for c in bucket_key], schema.num_buckets, tz)
         if schema.partition_keys:
             # pair-granular manifest: the key's partition values (typed
@@ -2894,7 +2264,7 @@ class KvStore:
         leaf = os.path.join(self.snapshot_dir, data_dir or "", f"{BUCKET_COL}={bkt}")
         files = sorted(glob.glob(os.path.join(glob.escape(leaf), "*.parquet"))) if data_dir else []
         if not files:
-            return spark.createDataFrame([], current)
+            return _empty_local(spark, current)
         era = self._era_for_dir(data_dir)
         phys = current if era is None else T.StructType(era_struct_fields(self.schema, era))
         # Spark writes TIMESTAMP_LTZ as INT96; read at micros, Spark's
@@ -2929,8 +2299,8 @@ class KvStore:
         for name, dt, value in nested:
             mask = [to_internal(v, dt) == value for v in table.column(name).to_pylist()]
             table = table.filter(pa.array(mask, pa.bool_()))
-        if not table.num_rows:  # createDataFrame rejects nested columns with no chunks
-            return spark.createDataFrame([], current)
+        if not table.num_rows:
+            return _empty_local(spark, current)
         df = spark.createDataFrame(table, phys)
         return df if era is None else df.select(era_projection(self.schema, era, []))
 
@@ -2940,6 +2310,16 @@ class KvStore:
         for c, v in key.items():
             cond = cond & (F.col(c) == F.lit(v))
         return cond
+
+
+def _empty_local(spark: SparkSession, struct: T.StructType) -> DataFrame:
+    """A zero-row result as a local relation: collecting it starts no
+    Spark job, where `createDataFrame([], struct)` is backed by an RDD
+    and starts one. `empty_table()` gives every column one (empty)
+    chunk — createDataFrame rejects nested columns with none."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(struct).empty_table(), struct)
 
 
 def _arrow_eq(field, want, dt, ftype):

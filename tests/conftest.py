@@ -38,14 +38,16 @@ def keyed_read_probe(spark, monkeypatch):
     Union, building and collecting it starts no Spark job (counted
     through a job group), and every file pyarrow opened lies under the
     `__bucket=<b>` dir of the one manifest dir owning the key's bucket,
-    where b is computed by Spark's own pmod(hash(key), n). Returns the
+    where b is computed by Spark's own pmod(hash(key), n). A key whose
+    bucket no manifest dir holds — or `key_values=None`, a key no
+    stored value can equal — opens no file at all. Returns the
     collected rows."""
     import uuid
 
     import pyarrow.dataset as pads
     from pyspark.sql import functions as F
 
-    from fluss_spark import plans
+    import plan_inspect as plans
 
     opened: list[str] = []
     real = pads.dataset
@@ -72,11 +74,17 @@ def keyed_read_probe(spark, monkeypatch):
         for node in ("FileScan", "InMemoryFileIndex", "Union"):
             assert node not in plan, plan
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+        if key_values is None:
+            assert not opened, opened
+            return rows
         key = spark.createDataFrame([tuple(key_values)], key_ddl)
         n = table.schema.num_buckets
         bucket = key.select(F.pmod(F.hash(*key.columns), F.lit(n))).first()[0]
         state = table.catalog.current_commit(table.db, table.name)
-        data_dir = table.kv._manifest(state.snapshot_version)[bucket]
+        data_dir = table.kv._manifest(state.snapshot_version).get(bucket)
+        if data_dir is None:
+            assert not opened, opened
+            return rows
         leaf = os.path.join(table.kv.snapshot_dir, data_dir, f"__bucket={bucket}")
         assert opened and all(os.path.dirname(f) == leaf for f in opened), (leaf, opened)
         return rows

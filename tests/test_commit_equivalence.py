@@ -1,10 +1,11 @@
 """Single-action commit ≡ two-pass commit.
 
-The fused commit (`KvStore._commit_single_action`: one write action
-producing WAL + snapshot as sibling partition dirs) must produce the
-SAME commit artifacts as the retained two-pass WAL-first baseline
-(`_commit_twopass`) for any batch sequence and every pk-table layout
-(plain, partitioned, auto-increment):
+The fused commit (`KvStore._commit`: one write action producing WAL +
+snapshot as sibling partition dirs) must produce the SAME commit
+artifacts as the two-pass WAL-first baseline
+(`twopass_baseline.commit_twopass`, an independent implementation kept
+in tests/) for any batch sequence and every pk-table layout (plain,
+partitioned, auto-increment):
 
   - identical snapshot rows,
   - identical per-bucket high-water marks,
@@ -26,7 +27,6 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fluss_spark.catalog import Catalog
-from fluss_spark.sources.kv import KvStore
 from fluss_spark.table import create_table
 from fluss_spark.types import (
     BUCKET_COL,
@@ -36,6 +36,7 @@ from fluss_spark.types import (
     Field,
     TableSchema,
 )
+from twopass_baseline import commit_twopass
 
 
 def _schema():
@@ -52,18 +53,19 @@ def _schema():
 
 
 def _force_twopass(t):
-    """Route every commit of this table through the two-pass path. The
-    fused single-action changelog additionally carries __bucket and the
-    NULL-change-type prior rows; the two-pass baseline must stay an
-    INDEPENDENT implementation, so it receives the plain changelog
-    (events only) and re-derives survivors by its own anti-join."""
+    """Route every commit of this table through the two-pass baseline in
+    place of the fused write-and-publish (`KvStore._commit`). The fold's
+    changelog additionally carries __bucket and the NULL-change-type
+    prior rows; the two-pass baseline must stay an INDEPENDENT
+    implementation, so it receives the plain changelog (events only)
+    and re-derives survivors by its own anti-join."""
 
-    def _twopass(self, spark, cl, ts, bb=None, pp=None, prior=None, prior_included=False):
-        if prior_included:
-            cl = cl.filter(f"`{CHANGE_TYPE_COL}` IS NOT NULL").drop(BUCKET_COL)
-        return KvStore._commit_twopass(self, spark, cl, ts)
+    def _twopass(self, spark, cl, ts_list, state0, pre_lock=None):
+        assert len(ts_list) == 1 and pre_lock is None
+        cl = cl.filter(f"`{CHANGE_TYPE_COL}` IS NOT NULL").drop(BUCKET_COL)
+        return [commit_twopass(self, spark, cl, ts_list[0])]
 
-    t.kv._commit_changelog = pytypes.MethodType(_twopass, t.kv)
+    t.kv._commit = pytypes.MethodType(_twopass, t.kv)
 
 
 def _mk_tables(spark, tmp_path, name):
@@ -450,14 +452,15 @@ def test_commit_paths_equivalent_property_partitioned(
         )
 
 
-def test_sql_fold_changelog_matches_layered_fold(spark, tmp_path):
-    """The one-statement SQL fold (`_fold_replay_sql`) must emit the
-    EXACT changelog frame — events, NULL-change-type prior rows, __seq /
-    __sub / __bucket — that the layered `_fold_input(fused=True)` +
-    `replay(cluster_cols=[__bucket], emit_prior=True)` chain emits, on
-    every shape the gate admits: plain, WAL changelog image (+I -> +U
-    shortcut + -U drop, NULL-safe for prior rows), DeleteBehavior.IGNORE
-    (the post-__seq filter), and a partitioned table (pair discovery)."""
+def test_sql_fold_changelog_matches_replay_fold(spark, tmp_path):
+    """The default engine's SQL fold (`_fold`) must emit the EXACT
+    changelog frame — events, NULL-change-type prior rows, __seq /
+    __sub / __bucket — that `replay(cluster_cols=[__bucket],
+    emit_prior=True)` emits over the same fold input
+    (`_fold_input_sql`), on every shape the gate admits: plain, WAL
+    changelog image (+I -> +U shortcut + -U drop, NULL-safe for prior
+    rows), DeleteBehavior.IGNORE (the post-__seq filter), and a
+    partitioned table (pair discovery)."""
     from pyspark.sql import functions as F
 
     from fluss_spark.operators.replay import replay
@@ -512,22 +515,19 @@ def test_sql_fold_changelog_matches_layered_fold(spark, tmp_path):
         t.kv.upsert(mk(base), ordering=["n"], commit_ts_ms=ts)
 
         df_sql = mk(batch)
-        assert t.kv._fold_replay_sql_ok(df_sql, None, mm), name
-        cl_sql, bb_s, _ps, _prior = t.kv._fold_replay_sql(
-            spark, df_sql, ["n"], None
-        )
-        fold_in, mhd, bb_l, _ps2, _prior2, seq_order = t.kv._fold_input(
-            spark, mk(batch), ["n"], None, fused=True
+        assert t.kv._sql_fold_ok(df_sql, None, mm), name
+        cl_sql = t.kv._fold(spark, [df_sql], ["n"], None, None, mm)
+        fold_sql, frames, seq_order = t.kv._fold_input_sql(
+            spark, [mk(batch)], ["n"], None
         )
         cl_lay, _ = replay(
-            fold_in, schema, may_have_deletes=mhd,
+            spark.sql(fold_sql, **frames), schema, may_have_deletes=True,
             cluster_cols=[BUCKET_COL], emit_prior=True,
             merge_mode=mm, seq_order=seq_order,
         )
-        assert bb_s == bb_l, name
         assert sorted(cl_sql.columns) == sorted(cl_lay.columns), name
         cols = cl_lay.columns
         key = lambda r: tuple((x is None, x) for x in r)  # noqa: E731
         rows_sql = sorted((tuple(r[c] for c in cols) for r in cl_sql.collect()), key=key)
         rows_lay = sorted((tuple(r[c] for c in cols) for r in cl_lay.collect()), key=key)
-        assert rows_sql == rows_lay, f"{name}: SQL fold != layered fold"
+        assert rows_sql == rows_lay, f"{name}: SQL fold != replay fold"

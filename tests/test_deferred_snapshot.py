@@ -603,3 +603,75 @@ def test_call_materialize_snapshot(spark, catalog):
     st = catalog.current_commit("db", "defer_call")
     assert st.snapshot_version == st.version
     assert out and f"snapshot_version={st.snapshot_version}" in out[0][0]
+
+
+@pytest.mark.parametrize("deletes", [False, True])
+def test_deferred_partial_updates_match_eager(spark, catalog, deletes):
+    """Partial updates through WAL-only commits: the deferred table
+    equals its always-materialize twin after EVERY commit, in snapshot
+    rows and in the (bucket, offset, change-type, row) WAL multiset. A
+    batch that mixes partial updates with deletes folds through
+    replay_exact (the sequential fold); without deletes it takes the
+    window fold."""
+    fields = [Field("k", "INT", nullable=False), Field("a", "STRING"), Field("b", "STRING")]
+    td, te = (
+        create_table(
+            catalog, "db", f"pu_{name}_{int(deletes)}",
+            TableSchema(fields=fields, primary_key=["k"], num_buckets=4, properties=props),
+        )
+        for name, props in (("defer", {"table.snapshot.defer-commits": "3"}), ("eager", {}))
+    )
+    full = "k int, a string, b string"
+    part = "k int, a string, __op string" if deletes else "k int, a string"
+    op = (lambda o: (o,)) if deletes else (lambda o: ())
+    steps = [
+        (full, [(k, f"a{k}", f"b{k}") for k in range(8)], None),
+        (part, [(1, "a1x", *op("U")), (9, "a9", *op("U"))], ["k", "a"]),
+        (part, [(2, None, *op("D" if deletes else "U")), (3, "a3x", *op("U"))], ["k", "a"]),
+        (full, [(4, "a4y", "b4y"), (10, "a10", "b10")], None),
+        # key 9 holds only `a`: retracting it deletes the row
+        (part, [(1, None, *op("D" if deletes else "U")), (4, "a4z", *op("U")),
+                (9, None, *op("D" if deletes else "U"))], ["k", "a"]),
+    ]
+    cols = ("k", "a", "b")
+    for i, (ddl, rows, targets) in enumerate(steps):
+        for t in (td, te):
+            t.upsert(
+                spark.createDataFrame(rows, ddl),
+                partial_update_cols=targets,
+                commit_ts_ms=1_700_004_000_000 + i,
+            )
+        assert _snap(td, spark, cols) == _snap(te, spark, cols), i
+        assert _events(td, spark, cols) == _events(te, spark, cols), i
+    st = catalog.current_commit("db", td.name)
+    assert st.snapshot_version < st.version  # the last commits stayed WAL-only
+
+
+def test_deferred_commit_is_one_write_job(spark, catalog):
+    """A deferred commit that does not materialize is the fused commit
+    writing only its WAL sibling: with the batch's buckets known and no
+    auto-increment ids to pack, it runs exactly ONE Spark job (the write
+    action) and adds no snapshot dir."""
+    import uuid
+
+    t = _mk(catalog, "defer_jobs", defer=3)
+    for i in range(3):  # the third commit materializes
+        t.kv.upsert(spark.createDataFrame([(k, f"v{i}") for k in range(12)], "k int, v string"))
+    st = catalog.current_commit("db", "defer_jobs")
+    assert st.snapshot_version == st.version
+    dirs_before = _snapshot_dirs(t)
+    sc = spark.sparkContext
+    group = f"defer-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "deferred commit probe")
+    try:
+        st = t.kv.upsert(
+            spark.createDataFrame([(1, "x"), (13, "y")], "k int, v string"),
+            batch_buckets=list(range(4)),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert st.snapshot_version < st.version  # WAL-only
+    assert _snapshot_dirs(t) == dirs_before
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert dict(_snap(t, spark))[1] == "x" and dict(_snap(t, spark))[13] == "y"

@@ -417,7 +417,7 @@ def test_sq8_blas_kernel_matches_jvm_path(spark, sf_dir):
     assert sorted(map(tuple, jvm)) == sorted(map(tuple, blas))
     assert len(jvm) == 50
     # and the kernel path engages automatically past the threshold
-    from fluss_spark import plans
+    import plan_inspect as plans
 
     wide = _sq8_search(spark, sf_dir, 40)
     assert "MapInPandas" in plans.physical_plan(wide)

@@ -196,7 +196,7 @@ def test_hot_value_lookup_shuffles_instead_of_broadcasting(
     past the broadcast threshold the lookup plans a shuffle semi-join
     (no BroadcastExchange), and the result is still correct."""
     import fluss_spark.indexes as ix
-    from fluss_spark import plans
+    import plan_inspect as plans
 
     t = _base(catalog, spark)
     create_index(catalog, "db", "orders", "customer", spark)

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from fluss_spark import plans
+import plan_inspect as plans
 from fluss_spark.catalog import Catalog
 from fluss_spark.registry import QUERIES, load, load_all_queries
 from fluss_spark.table import create_table
@@ -142,6 +142,31 @@ def test_prefix_lookup_prunes_bucket_partition(spark, catalog, keyed_read_probe)
     assert sorted(r["v"] for r in rows) == ["v7.1", "v7b"]
 
 
+def test_lookup_misses_start_no_job(spark, catalog, keyed_read_probe):
+    """A lookup that finds no row answers with an empty local relation
+    and starts no Spark job, whether the key's bucket holds rows, no
+    manifest dir holds the bucket, or the key is a value the column
+    cannot hold (7.5 for an INT)."""
+    from pyspark.sql import types as T
+
+    from fluss_spark.bucketing import bucket_of
+
+    t = create_table(
+        catalog, "db", "plan_miss",
+        TableSchema(fields=[Field("k", "INT", nullable=False), Field("v", "STRING")], primary_key=["k"], num_buckets=8),
+    )
+    bucket = {k: bucket_of([k], [T.IntegerType()], 8) for k in range(200)}
+    written = [k for k in range(200) if bucket[k] != bucket[0]][:40]
+    t.upsert(spark.createDataFrame([(k, f"v{k}") for k in written], "k int, v string"))
+    ver = catalog.current_commit("db", "plan_miss").snapshot_version
+    held = set(t.kv._manifest(ver))
+    assert bucket[0] not in held
+    miss = next(k for k in range(200) if k not in written and bucket[k] in held)
+    assert keyed_read_probe(t, lambda: t.lookup(spark, {"k": miss}), [miss], "k int") == []
+    assert keyed_read_probe(t, lambda: t.lookup(spark, {"k": 0}), [0], "k int") == []
+    assert keyed_read_probe(t, lambda: t.lookup(spark, {"k": 7.5}), None, None) == []
+
+
 def test_star_join_broadcasts_dims(spark, sf_dir):
     df = QUERIES["join_star_broadcast"](spark, sf_dir)
     assert plans.has_broadcast_join(df)
@@ -258,6 +283,12 @@ def test_predicate_builder_maps_to_pushdown(spark, sf_dir):
     assert not P.only_touches(P.equal("a", 1), {"dt"}, {"dt", "a"})
 
 
+def _batch_buckets(t, batch):
+    """The table buckets a batch's keys hash to (Spark's own bucket
+    expression), which size the commit's one exchange."""
+    return {r[0] for r in batch.select(t.kv._bucket_expr()).distinct().collect()}
+
+
 def _pin_commit_plan(spark, out, buckets, num_buckets, scans):
     """Pins of a fused commit-output plan as the commit runs it (AQE
     off): ONE hash exchange on __bucket, as wide as the sizing rule
@@ -357,7 +388,9 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     the fold's exchange; the prior-snapshot rows ride the same exchange
     as re-emitted seed rows, so the snapshot is scanned ONCE and there
     is no semi-join at all. The fold windows order by the __seq
-    numbering's own spec, so they share its sort."""
+    numbering's own spec, so they share its sort. This is the shape
+    every non-default fold takes: replay() over the one fold input
+    (`_fold_input_sql`)."""
     import re
 
     from fluss_spark.catalog import Catalog
@@ -373,11 +406,12 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     )
     t = create_table(Catalog(str(tmp_path / "wh")), "db", "fold_plan", schema)
     t.upsert(ev.filter(F.col("event_id") % 2 == 0), ordering=["event_id"])
-    fold_in, mhd, bb, ps, _prior, seq_order = t.kv._fold_input(
-        spark, ev.filter(F.col("event_id") % 2 == 1), ["event_id"], fused=True
+    batch = ev.filter(F.col("event_id") % 2 == 1)
+    fold_sql, frames, seq_order = t.kv._fold_input_sql(
+        spark, [batch], ["event_id"], None
     )
     changelog, _ = replay(
-        fold_in, schema, may_have_deletes=mhd,
+        spark.sql(fold_sql, **frames), schema, may_have_deletes=False,
         cluster_cols=[BUCKET_COL], emit_prior=True, seq_order=seq_order,
     )
     simple = changelog._sc._jvm.PythonSQLUtils.explainString(
@@ -388,17 +422,15 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
 
     # the COMPLETE commit-output plan adds zero exchanges on top
     state0 = t.kv.catalog.current_commit("db", "fold_plan")
-    out, _persisted, _auto = t.kv._commit_plan(
-        spark, changelog, 123456, bb, ps, state0, prior_included=True
-    )
+    out, _persisted, _auto = t.kv._commit_plan(changelog, [123456], state0)
     # one scan of the snapshot, one scan of the batch (plus no broadcast)
-    _pin_commit_plan(spark, out, bb, schema.num_buckets, scans=2)
+    _pin_commit_plan(spark, out, _batch_buckets(t, batch), schema.num_buckets, scans=2)
 
 
 def test_sql_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
-    """The one-statement SQL fold (`_fold_replay_sql`, the default serial
-    upsert path) must produce the SAME physical shape the layered fold
-    pins above: the complete commit-output plan costs exactly ONE hash
+    """The default engine's one-statement SQL fold (`_fold`) must
+    produce the SAME physical shape as replay() over the same fold
+    input (pinned above): the complete commit-output plan costs exactly ONE hash
     exchange keyed by __bucket and as wide as min(table buckets,
     touched buckets, cores), with the snapshot scanned once, the batch
     scanned once, no broadcast, codegen'd generators and 3 sorts — the
@@ -418,8 +450,8 @@ def test_sql_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
     t = create_table(Catalog(str(tmp_path / "wh")), "db", "sql_fold_plan", schema)
     t.upsert(ev.filter(F.col("event_id") % 2 == 0), ordering=["event_id"])
     batch = ev.filter(F.col("event_id") % 2 == 1)
-    assert t.kv._fold_replay_sql_ok(batch, None, None)
-    changelog, bb, ps, _prior = t.kv._fold_replay_sql(spark, batch, ["event_id"], None)
+    assert t.kv._sql_fold_ok(batch, None, None)
+    changelog = t.kv._fold(spark, [batch], ["event_id"], None)
     simple = changelog._sc._jvm.PythonSQLUtils.explainString(
         changelog._jdf.queryExecution(), "simple"
     )
@@ -427,10 +459,8 @@ def test_sql_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
     assert "BroadcastHashJoin" not in simple, simple
 
     state0 = t.kv.catalog.current_commit("db", "sql_fold_plan")
-    out, _persisted, _auto = t.kv._commit_plan(
-        spark, changelog, 123456, bb, ps, state0, prior_included=True
-    )
-    _pin_commit_plan(spark, out, bb, schema.num_buckets, scans=2)
+    out, _persisted, _auto = t.kv._commit_plan(changelog, [123456], state0)
+    _pin_commit_plan(spark, out, _batch_buckets(t, batch), schema.num_buckets, scans=2)
 
 
 def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
@@ -459,9 +489,7 @@ def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
         ev.filter(F.col("event_id") % 3 == 2),
         ev.filter(F.col("event_id") % 5 == 0),
     ]
-    changelog, bb, ps, _prior = t.kv._fold_replay_sql(
-        spark, batches, ["event_id"], None
-    )
+    changelog = t.kv._fold(spark, batches, ["event_id"], None)
     simple = changelog._sc._jvm.PythonSQLUtils.explainString(
         changelog._jdf.queryExecution(), "simple"
     )
@@ -469,13 +497,11 @@ def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
     assert "BroadcastHashJoin" not in simple, simple
 
     state0 = t.kv.catalog.current_commit("db", "grp_fold_plan")
-    out, _persisted, _auto = t.kv._commit_plan(
-        spark, changelog, [111, 222, 333], bb, ps, state0,
-        prior_included=True, grp_count=3,
-    )
+    out, _persisted, _auto = t.kv._commit_plan(changelog, [111, 222, 333], state0)
     # one snapshot scan + one scan per batch — the group adds batches,
     # never a second snapshot pass
-    _pin_commit_plan(spark, out, bb, schema.num_buckets, scans=1 + len(batches))
+    buckets = set().union(*(_batch_buckets(t, b) for b in batches))
+    _pin_commit_plan(spark, out, buckets, schema.num_buckets, scans=1 + len(batches))
 
 
 def test_q5_broadcasts_all_dims(spark, sf_dir):
