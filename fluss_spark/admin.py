@@ -10,6 +10,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from fluss_spark import fsops
 from fluss_spark.catalog import Catalog, DatabaseNotFoundError, TableNotFoundError
 from fluss_spark.table import FlussTable, create_table
 from fluss_spark.types import Field, TableSchema
@@ -232,9 +233,7 @@ class Admin:
     def _write_dbinfo(self, db: str, comment: str | None, properties: dict[str, str]) -> None:
         import json
 
-        from fluss_spark.catalog import Catalog as _C
-
-        _C._write_atomic(
+        fsops.write_atomic(
             self._dbinfo_path(db), json.dumps({"comment": comment, "properties": properties})
         )
 
@@ -558,9 +557,7 @@ class Admin:
             import os as _os
 
             old_id = int(schema.properties.get("schema.id", "0"))
-            from fluss_spark.catalog import Catalog as _C
-
-            _C._write_atomic(
+            fsops.write_atomic(
                 _os.path.join(
                     self.catalog.table_dir(db, name), "meta", f"schema-v{old_id}.json"
                 ),
@@ -615,7 +612,6 @@ class Admin:
         import json
 
         from fluss_spark import maintenance
-        from fluss_spark.catalog import Catalog as _C
 
         t = self._partitioned_table(db, name)
         key = t.schema.partition_keys[0]
@@ -627,7 +623,7 @@ class Admin:
                 if ignore_if_exists:
                     return
                 raise ValueError(f"partition exists: {spec}")
-            _C._write_atomic(
+            fsops.write_atomic(
                 maintenance.partitions_meta_path(t),
                 json.dumps({"active": sorted(active + [spec[key]])}),
             )
@@ -656,7 +652,6 @@ class Admin:
         from pyspark.sql import functions as F
 
         from fluss_spark import maintenance
-        from fluss_spark.catalog import Catalog as _C
 
         t = self._partitioned_table(db, name)
         key = t.schema.partition_keys[0]
@@ -681,8 +676,7 @@ class Admin:
                 # the manifest's pairs would resurrect the rows.
                 st = t.catalog.current_commit(db, name)
                 if t.kv._tail_start(st) is not None:
-                    with self.catalog.write_lock(db, name):
-                        t.kv.materialize(spark)
+                    t.kv.materialize(spark)
         with self.catalog.write_lock(db, name):
             active = maintenance.registered_partitions(t)
             known = set(active) | maintenance.materialized_partitions(t)
@@ -690,7 +684,7 @@ class Admin:
                 if ignore_if_not_exists:
                     return
                 raise ValueError(f"no such partition: {spec}")
-            _C._write_atomic(
+            fsops.write_atomic(
                 maintenance.partitions_meta_path(t),
                 json.dumps({"active": [v for v in active if v != val]}),
             )
@@ -713,44 +707,25 @@ class Admin:
         t = FlussTable(self.catalog, db, name)
         state = self.catalog.current_commit(db, name)
         size, files, log_footer_rows = 0, 0, 0
-        roots = [t.log.log_dir, t.log.remote_dir]
+        # committed log dirs only: the catalog's fences (floors, CURRENT,
+        # LOCAL WINS on a crashed tier_log overlap) as scan() reads them
+        local, remote = t.log.committed_dirs()
+        log_roots = set(local.values()) | set(remote.values())
+        roots = sorted(log_roots)
         if t.kv is not None and state.snapshot_version >= 0:
             roots += [
                 os.path.join(t.kv.snapshot_dir, d)
                 for d in sorted(t.kv.referenced_data_dirs(state.snapshot_version))
             ]
         count_footers = t.kv is None and bool(t.schema.partition_keys)
-        # LOCAL WINS on tier overlap (crashed tier_log): a commit present
-        # in both tiers must count once, like scan() reads it once
-        local_commits = set()
-        if os.path.isdir(t.log.log_dir):
-            local_commits = {
-                e.name
-                for e in os.scandir(t.log.log_dir)
-                if e.name.startswith("__commit=")
-            }
         for root in roots:
-            if not os.path.isdir(root):
-                continue
-            in_log_tier = root in (t.log.log_dir, t.log.remote_dir)
             for dirpath, _dirs, names in os.walk(root):
-                counted = True
-                if in_log_tier:
-                    rel = os.path.relpath(dirpath, root)
-                    head = rel.split(os.sep, 1)[0]
-                    if head.startswith("__commit="):
-                        hv = int(head.split("=")[1])
-                        counted = (
-                            state.log_floor <= hv <= state.version
-                            and not (root == t.log.remote_dir and head in local_commits)
-                        )
                 for fn in names:
                     if fn.endswith(".parquet"):
                         full = os.path.join(dirpath, fn)
-                        if not (in_log_tier and not counted):
-                            files += 1
-                            size += os.path.getsize(full)
-                        if in_log_tier and count_footers and counted:
+                        files += 1
+                        size += os.path.getsize(full)
+                        if count_footers and root in log_roots:
                             log_footer_rows += pq.read_metadata(full).num_rows
         if t.kv is None:
             if t.schema.partition_keys:
@@ -850,7 +825,7 @@ class Admin:
             FlussTable(self.catalog, db, name).schema, snap.files, f"{db}.{name}"
         )
         log_dir = os.path.join(target_dir, "_delta_log")
-        os.makedirs(log_dir, exist_ok=True)
+        fsops.makedirs(log_dir)
 
         def _uri(p: str) -> str:
             return "file://" + urllib.parse.quote(os.path.abspath(p))
@@ -990,11 +965,7 @@ class Admin:
         })
 
         path = os.path.join(log_dir, f"{version:020d}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a) + "\n")
-        os.rename(tmp, path)
+        fsops.write_atomic(path, "".join(json.dumps(a) + "\n" for a in actions))
         return DeltaExport(version, path, len(adds), len(removes))
 
     # -- lake-format interop: Iceberg v2 metadata export -------------------
@@ -1087,7 +1058,6 @@ class Admin:
         import time
 
         from fluss_spark import maintenance
-        from fluss_spark.catalog import Catalog as _C
 
         t = FlussTable(self.catalog, db, name)
         if t.kv is None:
@@ -1100,7 +1070,7 @@ class Admin:
             leases = maintenance.active_snapshot_leases(t)
             expires = int(time.time() * 1000) + int(lease_duration_ms)
             leases[lease_id] = {"snapshot": snapshot_id, "expires_ms": expires}
-            _C._write_atomic(maintenance.snapshot_leases_path(t), json.dumps(leases))
+            fsops.write_atomic(maintenance.snapshot_leases_path(t), json.dumps(leases))
         return KvSnapshotLeaseInfo(
             lease_id=lease_id, snapshot_id=snapshot_id, expires_ms=expires
         )
@@ -1109,13 +1079,12 @@ class Admin:
         import json
 
         from fluss_spark import maintenance
-        from fluss_spark.catalog import Catalog as _C
 
         t = FlussTable(self.catalog, db, name)
         with self.catalog.write_lock(db, name):
             leases = maintenance.active_snapshot_leases(t)
             leases.pop(lease_id, None)
-            _C._write_atomic(maintenance.snapshot_leases_path(t), json.dumps(leases))
+            fsops.write_atomic(maintenance.snapshot_leases_path(t), json.dumps(leases))
 
     def list_kv_snapshot_leases(self, db: str, name: str) -> list[KvSnapshotLeaseInfo]:
         from fluss_spark import maintenance

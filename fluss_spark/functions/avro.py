@@ -25,6 +25,8 @@ import json
 import os
 import struct
 
+from fluss_spark import fsops
+
 MAGIC = b"Obj\x01"
 
 _PRIMITIVES = {
@@ -201,10 +203,7 @@ def write_container(
         buf.write(body.getvalue())
         buf.write(sync)
     data = buf.getvalue()
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(data)
-    os.replace(tmp, path)
+    fsops.write_atomic(path, data)
     return len(data)
 
 

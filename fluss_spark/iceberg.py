@@ -33,6 +33,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
+from fluss_spark import fsops
 from fluss_spark.functions.avro import read_container, write_container
 
 _FORMAT_VERSION = 2
@@ -332,7 +333,7 @@ def export_iceberg_metadata(admin, db: str, name: str, target_dir: str) -> Icebe
     t0 = FlussTable(admin.catalog, db, name)
     _check_no_era_files(t0.schema, snap.files, f"{db}.{name}")
     meta_dir = os.path.join(target_dir, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
+    fsops.makedirs(meta_dir)
 
     prior_version = _read_version_hint(meta_dir)
     prior = _load_metadata(meta_dir, prior_version) if prior_version else None
@@ -650,14 +651,8 @@ def export_iceberg_metadata(admin, db: str, name: str, target_dir: str) -> Icebe
         ),
     }
     meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, meta_path)
-    hint_tmp = os.path.join(meta_dir, "version-hint.text.tmp")
-    with open(hint_tmp, "w") as f:
-        f.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    fsops.write_atomic(meta_path, json.dumps(meta, indent=1))
+    fsops.write_atomic(os.path.join(meta_dir, "version-hint.text"), str(version))
     return IcebergExport(version, meta_path, snapshot_id, len(adds), len(removes))
 
 

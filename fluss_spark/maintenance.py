@@ -19,15 +19,15 @@ either the old or the new file set, never both.
 from __future__ import annotations
 
 import os
-import shutil
 import time
+from dataclasses import replace
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from fluss_spark import fsops
 from fluss_spark.bucketing import exchange_width
-from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.sources.log import COMMIT_DIR_COL, LogStore
 from fluss_spark.table import FlussTable
 from fluss_spark.types import BUCKET_COL, OFFSET_COL, TIMESTAMP_COL
@@ -57,40 +57,19 @@ def _tier_log_locked(table: FlussTable, local_segments: int | None = None) -> in
     )
     if n_keep < 1:
         raise ValueError("table.log.tiered.local-segments must be greater than 0")
-    state = table.catalog.current_commit(table.db, table.name)
-    committed = sorted(
-        (
-            int(e.name.split("=")[1])
-            for e in os.scandir(log.log_dir)
-            if e.name.startswith(f"{COMMIT_DIR_COL}=")
-        ),
-    )
-    committed = [v for v in committed if v <= state.version]
+    committed = sorted(int(n.split("=")[1]) for n in log.committed_dirs(tiers="local")[0])
     to_move = committed[: -n_keep] if len(committed) > n_keep else []
-    if to_move:
-        os.makedirs(log.remote_dir, exist_ok=True)
     for v in to_move:
-        src = os.path.join(log.log_dir, f"{COMMIT_DIR_COL}={v}")
-        dst = os.path.join(log.remote_dir, f"{COMMIT_DIR_COL}={v}")
-        if os.path.exists(dst):
-            # orphan of a crashed earlier attempt at this same commit
-            # (copy completed, local delete didn't): local is
-            # authoritative until the local dir is gone, so replace
-            shutil.rmtree(dst, ignore_errors=True)
-        try:
-            os.rename(src, dst)  # same filesystem: atomic
-        except OSError:
-            # cross-device remote mount: stage under a dot-prefixed name
-            # (invisible to Spark listings), atomic-rename WITHIN the
-            # remote fs, then drop local. A crash leaves either an
-            # invisible staging dir or a benign local+remote pair —
-            # scan() prefers local for overlapping commits, and the next
-            # tier_log retry heals both.
-            staging = os.path.join(log.remote_dir, f".tiering-{COMMIT_DIR_COL}={v}")
-            shutil.rmtree(staging, ignore_errors=True)
-            shutil.copytree(src, staging)
-            os.rename(staging, dst)
-            shutil.rmtree(src)
+        # a remote copy already there is the orphan of a crashed earlier
+        # attempt (copied, local not yet dropped): local is authoritative
+        # until it is gone, so replace_dir drops the copy first. Across
+        # devices the move stages under a hidden `.tiering-*` name; a
+        # crash leaves an invisible staging dir or a benign local+remote
+        # pair — scan() prefers local, and the next tier_log heals both.
+        fsops.replace_dir(
+            os.path.join(log.log_dir, f"{COMMIT_DIR_COL}={v}"),
+            os.path.join(log.remote_dir, f"{COMMIT_DIR_COL}={v}"),
+        )
     return len(to_move)
 
 
@@ -185,12 +164,8 @@ def _compact_log_locked(
     zorder_columns: list[str] | None = None,
 ) -> int:
     log = table.log
-    dirs = sorted(
-        (e.name for e in os.scandir(log.log_dir) if e.name.startswith(f"{COMMIT_DIR_COL}=")),
-        key=lambda n: int(n.split("=")[1]),
-    )
     state = table.catalog.current_commit(table.db, table.name)
-    committed = [d for d in dirs if int(d.split("=")[1]) <= state.version]
+    committed, _remote = log.committed_dirs(tiers="local")
     if len(committed) < target_commits:
         return 0
 
@@ -236,20 +211,14 @@ def _compact_log_locked(
             .partitionBy(*part_cols)
             .parquet(log.staging_path(version))
         )
-    new_state = CommitState(
-        version=version,
-        log_hwm=state.log_hwm,
-        snapshot_version=state.snapshot_version,
-        auto_increment=state.auto_increment,
-        ts_ms=int(time.time() * 1000),
-        log_start=state.log_start,
-        log_floor=state.log_floor,
-    )
+    new_state = replace(state, version=version, ts_ms=int(time.time() * 1000), local_floor=version)
     log.publish(version)
     table.catalog.commit(table.db, table.name, new_state)
-    # old commit dirs are now shadowed; physically remove them
-    for d in committed:
-        shutil.rmtree(os.path.join(log.log_dir, d), ignore_errors=True)
+    # local_floor now shadows every older local dir (a crash before
+    # or during this cleanup leaves fenced garbage, never duplicates)
+    for e in os.scandir(log.log_dir):
+        if e.name.startswith(f"{COMMIT_DIR_COL}=") and int(e.name.split("=")[1]) < version:
+            fsops.remove(e.path)
     return len(committed)
 
 
@@ -268,58 +237,62 @@ def expire_log_ttl(table: FlussTable, spark: SparkSession, now_ms: int | None = 
 
 
 def _expire_log_ttl_locked(table: FlussTable, cutoff: int) -> int:
+    # TTL applies to BOTH tiers (LogTieringTask.java also "deletes expired
+    # remote log segments"). Never the newest commit or anything at/after
+    # the cutoff; and a pk table's WAL commits above snapshot_version are
+    # the ONLY copy of their rows (deferred materialization has not
+    # absorbed them) — expiring one would lose data, not history.
+    return _trim_log_locked(
+        table,
+        lambda v, cs, state: v < state.version
+        and cs.ts_ms < cutoff
+        and (table.kv is None or v <= state.snapshot_version),
+    )
+
+
+def _trim_log_locked(table: FlussTable, drop) -> int:
+    """Delete the commit dirs of both tiers that `drop(version, commit
+    state, current state)` selects, then rebase log_start to the newest
+    dropped commit's high watermarks in one commit (commits are trimmed
+    oldest-first, contiguously), so earliest offsets stay exact. Dirs
+    below log_floor (local_floor on the local tier) are garbage a crash
+    left behind a rebucket or a log compaction: deleted, but their
+    watermarks never rebase log_start. A crash between deletion and the
+    rebase commit leaves only already-unreadable history. Returns the
+    dirs dropped."""
     history = {s.version: s for s in table.catalog.commit_history(table.db, table.name)}
     state = table.catalog.current_commit(table.db, table.name)
     deleted = 0
     newest_deleted = None
-    # TTL applies to BOTH tiers (LogTieringTask.java also "deletes expired
-    # remote log segments"); remote holds the oldest commits.
-    entries = []
-    for tier_dir in (table.log.remote_dir, table.log.log_dir):
+    entries = []  # (tier floor, dir entry)
+    for tier_dir, floor in (
+        (table.log.remote_dir, state.log_floor),
+        (table.log.log_dir, max(state.log_floor, state.local_floor)),
+    ):
         if os.path.isdir(tier_dir):
-            entries.extend(os.scandir(tier_dir))
-    for e in sorted(entries, key=lambda e: e.name):
+            entries.extend((floor, e) for e in os.scandir(tier_dir))
+    for floor, e in sorted(entries, key=lambda fe: fe[1].name):
         if not e.name.startswith(f"{COMMIT_DIR_COL}="):
             continue
         v = int(e.name.split("=")[1])
-        if v < state.log_floor:
-            # shadowed pre-rebucket dir a crash left behind: plain
-            # garbage — delete, but NEVER rebase log_start from its
-            # old-layout watermarks
-            shutil.rmtree(e.path, ignore_errors=True)
+        if v < floor:
+            fsops.remove(e.path)
             continue
         cs = history.get(v)
-        # never delete the newest commit or anything at/after the cutoff
-        if cs is None or v >= state.version or cs.ts_ms >= cutoff:
+        if cs is None or not drop(v, cs, state):
             continue
-        # deferred-materialization fence: a pk table's WAL commits above
-        # snapshot_version are the ONLY copy of their rows (the snapshot
-        # has not absorbed them yet) — expiring one would lose data, not
-        # history
-        if table.kv is not None and v > state.snapshot_version:
-            continue
-        shutil.rmtree(e.path, ignore_errors=True)
+        fsops.remove(e.path)
         deleted += 1
         if newest_deleted is None or v > newest_deleted.version:
             newest_deleted = cs
     if newest_deleted is not None:
-        # first readable offset per bucket = hwm as of the newest trimmed
-        # commit (commits are trimmed oldest-first, contiguously)
         starts = dict(state.log_start)
         for b, off in newest_deleted.log_hwm.items():
             starts[b] = max(starts.get(b, 0), off)
         table.catalog.commit(
             table.db,
             table.name,
-            CommitState(
-                version=state.version + 1,
-                log_hwm=state.log_hwm,
-                snapshot_version=state.snapshot_version,
-                auto_increment=state.auto_increment,
-                ts_ms=int(time.time() * 1000),
-                log_start=starts,
-                log_floor=state.log_floor,
-            ),
+            replace(state, version=state.version + 1, ts_ms=int(time.time() * 1000), log_start=starts),
         )
     return deleted
 
@@ -370,16 +343,11 @@ def _compact_snapshot_locked(table: FlussTable, spark: SparkSession, max_dirs: i
         # folds deletes that may empty a previously-referenced bucket
         snap_buckets = {b for _pp, b in kv._walk_pairs(os.path.join(kv.snapshot_dir, data_dir))}
         kv._write_manifest(version, {b: data_dir for b in snap_buckets})
-    new_state = CommitState(
-        version=version,
-        log_hwm=state.log_hwm,
-        snapshot_version=version,
-        auto_increment=state.auto_increment,
-        ts_ms=int(time.time() * 1000),
-        log_start=state.log_start,
-        log_floor=state.log_floor,
+    table.catalog.commit(
+        table.db,
+        table.name,
+        replace(state, version=version, snapshot_version=version, ts_ms=int(time.time() * 1000)),
     )
-    table.catalog.commit(table.db, table.name, new_state)
     return True
 
 
@@ -440,11 +408,11 @@ def _expire_snapshots_locked(table: FlussTable, keep: int) -> int:
     removed = 0
     for v in versions:
         if v not in keep_versions:
-            os.unlink(os.path.join(kv.manifest_dir, f"v{v}.json"))
+            fsops.remove(os.path.join(kv.manifest_dir, f"v{v}.json"))
     if os.path.isdir(kv.snapshot_dir):
         for e in os.scandir(kv.snapshot_dir):
             if e.name.startswith("data-v") and e.name not in referenced:
-                shutil.rmtree(e.path, ignore_errors=True)
+                fsops.remove(e.path)
                 removed += 1
     return removed
 
@@ -510,7 +478,7 @@ def drop_partition_dirs(table: FlussTable, values: list[str]) -> None:
             for p in values:
                 pdir = os.path.join(d.path, f"{key}={p}")
                 if os.path.isdir(pdir):
-                    shutil.rmtree(pdir, ignore_errors=True)
+                    fsops.remove(pdir)
 
 
 def auto_partition(
@@ -577,9 +545,8 @@ def auto_partition(
             # manifest's pairs would resurrect the expired rows
             st = table.catalog.current_commit(table.db, table.name)
             if table.kv._tail_start(st) is not None:
-                with table.catalog.write_lock(table.db, table.name):
-                    table.kv.materialize(spark)
-    Catalog._write_atomic(meta_path, json.dumps({"active": keepers}))
+                table.kv.materialize(spark)
+    fsops.write_atomic(meta_path, json.dumps({"active": keepers}))
     drop_partition_dirs(table, dropped)
     return {"created": [c for c in created if c not in existing], "dropped": dropped}
 
@@ -665,13 +632,7 @@ def _rebucket_locked(table: FlussTable, spark: SparkSession, new_buckets: int) -
         .partitionBy(*part_cols)
         .parquet(staged)
     )
-    per_bucket = log._footer_hwm(staged)
-    if per_bucket is None:
-        written = spark.read.schema(log.file_schema()).parquet(staged)
-        per_bucket = {
-            int(r[BUCKET_COL]): int(r["mx"])
-            for r in written.groupBy(BUCKET_COL).agg(F.max(OFFSET_COL).alias("mx")).collect()
-        }
+    per_bucket = log._staged_hwm(spark, staged)
     hwm = {str(b): mx + 1 for b, mx in per_bucket.items()}
 
     # PK tables: rewrite the snapshot under the new bucket routing.
@@ -716,11 +677,11 @@ def _rebucket_locked(table: FlussTable, spark: SparkSession, new_buckets: int) -
     table.catalog.commit(
         table.db,
         table.name,
-        CommitState(
+        replace(
+            state,
             version=version,
             log_hwm=hwm,
             snapshot_version=snapshot_version,
-            auto_increment=state.auto_increment,
             ts_ms=int(time.time() * 1000),
             log_start={},
             log_floor=version,
@@ -744,4 +705,4 @@ def _retire_shadowed_commits(log: LogStore, floor: int) -> None:
             continue
         for e in os.scandir(tier_dir):
             if e.name.startswith(f"{COMMIT_DIR_COL}=") and int(e.name.split("=")[1]) < floor:
-                shutil.rmtree(e.path, ignore_errors=True)
+                fsops.remove(e.path)

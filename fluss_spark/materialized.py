@@ -31,13 +31,11 @@ so only the description is stored.
 
 from __future__ import annotations
 
-import os
-import shutil
 import time
 
 from pyspark.sql import functions as F
 
-from fluss_spark.catalog import Catalog, CommitState
+from fluss_spark.catalog import Catalog
 from fluss_spark.table import FlussTable, create_table
 from fluss_spark.types import Field, TableSchema, parse_type, type_name
 
@@ -179,48 +177,12 @@ def refresh_materialized_table(fsql, db: str, name: str, force: bool = False) ->
 
 def _truncate_commits_before(t: FlussTable, keep_version: int) -> int:
     """Remove every commit dir older than `keep_version` in both tiers
-    and rebase log_start to the newest trimmed commit's high watermarks
-    — identical semantics to TTL expiry (maintenance._expire_log_ttl),
-    keyed by version instead of age. A crash between deletion and the
-    rebase commit leaves only already-shadowed garbage."""
-    from fluss_spark.sources.log import COMMIT_DIR_COL
+    and rebase log_start — TTL expiry (maintenance._expire_log_ttl)
+    keyed by version instead of age."""
+    from fluss_spark import maintenance
 
     with t.catalog.write_lock(t.db, t.name):
-        history = {s.version: s for s in t.catalog.commit_history(t.db, t.name)}
-        state = t.catalog.current_commit(t.db, t.name)
-        deleted, newest_deleted = 0, None
-        for tier_dir in (t.log.remote_dir, t.log.log_dir):
-            if not os.path.isdir(tier_dir):
-                continue
-            for e in sorted(os.scandir(tier_dir), key=lambda e: e.name):
-                if not e.name.startswith(f"{COMMIT_DIR_COL}="):
-                    continue
-                v = int(e.name.split("=")[1])
-                cs = history.get(v)
-                if cs is None or v >= keep_version:
-                    continue
-                shutil.rmtree(e.path, ignore_errors=True)
-                deleted += 1
-                if newest_deleted is None or v > newest_deleted.version:
-                    newest_deleted = cs
-        if newest_deleted is not None:
-            starts = dict(state.log_start)
-            for b, off in newest_deleted.log_hwm.items():
-                starts[b] = max(starts.get(b, 0), off)
-            t.catalog.commit(
-                t.db,
-                t.name,
-                CommitState(
-                    version=state.version + 1,
-                    log_hwm=state.log_hwm,
-                    snapshot_version=state.snapshot_version,
-                    auto_increment=state.auto_increment,
-                    ts_ms=int(time.time() * 1000),
-                    log_start=starts,
-                    log_floor=state.log_floor,
-                ),
-            )
-        return deleted
+        return maintenance._trim_log_locked(t, lambda v, cs, state: v < keep_version)
 
 
 def set_refresh_status(catalog: Catalog, db: str, name: str, status: str) -> None:

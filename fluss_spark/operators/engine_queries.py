@@ -12,12 +12,12 @@ from __future__ import annotations
 
 import atexit
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluss_spark import fsops
 from fluss_spark.catalog import Catalog
 from fluss_spark.registry import load, register
 from fluss_spark.table import FlussTable, create_table
@@ -31,7 +31,7 @@ _TMPDIRS: list[str] = []
 @atexit.register
 def _cleanup() -> None:
     for d in _TMPDIRS:
-        shutil.rmtree(d, ignore_errors=True)
+        fsops.remove(d)
 
 
 def _events_batch(spark: SparkSession, sf: str) -> DataFrame:
@@ -345,8 +345,7 @@ def _build(spark: SparkSession, sf: str, variant: str) -> FlussTable:
         # remember the between-commits offsets for time travel (S8)
         import json as _json
 
-        with open(f"{wh}/mid_offsets.json", "w") as fh:
-            _json.dump(t.latest_offsets(), fh)
+        fsops.write_atomic(f"{wh}/mid_offsets.json", _json.dumps(t.latest_offsets()))
         t.append(ev.filter(F.col("event_id") > half), ordering=["event_id"])
     elif variant == "dedup_state":
         # dedup-as-storage: FIRST_ROW merge on pk=fingerprint keeps the

@@ -50,19 +50,21 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     key = session_key(spark)
     if key in _WORKER_PKG_SESSIONS:
         return
+    import io
     import os
     import tempfile
     import zipfile
 
     import fluss_spark
+    from fluss_spark import fsops
 
     pkg_dir = os.path.dirname(os.path.abspath(fluss_spark.__file__))
     zpath = os.path.join(
         tempfile.gettempdir(), f"fluss_spark_pkg_{os.getpid()}.zip"
     )
     if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as z:
             for root, _, files in os.walk(pkg_dir):
                 for fn in files:
                     if fn.endswith(".py"):
@@ -71,7 +73,7 @@ def ensure_worker_imports(spark: SparkSession) -> None:
                             "fluss_spark", os.path.relpath(full, pkg_dir)
                         )
                         z.write(full, rel)
-        os.replace(tmp, zpath)
+        fsops.write_atomic(zpath, buf.getvalue())
     spark.sparkContext.addPyFile(zpath)
     _WORKER_PKG_SESSIONS.add(key)
 

@@ -32,6 +32,7 @@ import json
 import os
 from dataclasses import dataclass
 
+from fluss_spark import fsops
 from fluss_spark.catalog import Catalog
 
 # ResourceType.java codes (ANY is filter-only)
@@ -189,12 +190,9 @@ def _load(catalog: Catalog) -> list[AclBinding]:
 
 
 def _save(catalog: Catalog, bindings: list[AclBinding]) -> None:
-    path = _acl_path(catalog)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump([b.to_json() for b in bindings], f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+    fsops.write_atomic(
+        _acl_path(catalog), json.dumps([b.to_json() for b in bindings], indent=1, sort_keys=True)
+    )
 
 
 def list_acls(catalog: Catalog, flt: AclBindingFilter = MATCH_ANY) -> list[AclBinding]:

@@ -26,9 +26,11 @@ deferred, group (upsert_many) and optimistic — takes the same route:
      (partitioned ones); untouched units stay as prior-version files,
      referenced through a per-version manifest, so per-commit write
      cost is O(touched units), not O(table) (_commit_plan)
-  4. the driver renames __dest=w/__dest=s into the log commit dir and
-     snapshot/data-vN, then one atomic commit advances the table to V'
-     (_commit_finish; a group publishes one version per batch)
+  4. the driver moves __dest=w/__dest=s into the log commit dir and
+     snapshot/data-vN and writes the manifest and commit records, all
+     numbered above CURRENT (invisible; a crash leaves garbage the next
+     write lock sweeps), then one CURRENT write advances the table to
+     V' (_commit_finish; a group publishes one version per batch)
 
 Because the WAL row and the snapshot row of a key's last event are two
 explode copies of the SAME evaluated row, they cannot diverge even
@@ -59,6 +61,7 @@ import json
 import math
 import os
 import time
+from dataclasses import replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from fluss_spark import fsops
 from fluss_spark.bucketing import bucket_of, exact, exchange_width, to_internal
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.operators.replay import (
@@ -84,7 +88,6 @@ from fluss_spark.types import (
     INSERT,
     OFFSET_COL,
     TIMESTAMP_COL,
-    ddl_of,
     parse_type,
 )
 
@@ -257,9 +260,7 @@ class KvStore:
             }
         else:
             doc = {"buckets": {str(k): v for k, v in entries.items()}}
-        Catalog._write_atomic(
-            os.path.join(self.manifest_dir, f"v{version}.json"), json.dumps(doc)
-        )
+        fsops.write_atomic(os.path.join(self.manifest_dir, f"v{version}.json"), json.dumps(doc))
 
     @staticmethod
     def _walk_pairs(root: str) -> list[tuple[str, int]]:
@@ -568,7 +569,7 @@ class KvStore:
             # snapshot_version, which would otherwise strand the tail's
             # other units behind a "covered" HWM, and pair_keys computed
             # against the stale manifest would miss tail-created pairs
-            self.materialize(spark)
+            self._materialize_locked(spark)
 
         # AQE off around the fold and the write (fold-input discovery
         # job included): every job in here has a fixed shape (tiny
@@ -577,11 +578,8 @@ class KvStore:
         # sf0.1: warm commit 1.4s -> 1.0s from the commit action alone.
         # A cadence materialize() below runs a real join and plans under
         # the session setting. The optimistic path leaves AQE alone
-        # (toggling a session conf is not thread-safe) and, holding no
-        # lock, must not clean orphans: they may be another writer's
-        # staging in progress.
+        # (toggling a session conf is not thread-safe).
         if pre_lock is None:
-            self.log.clean_orphans()
             _aqe_off_enter(spark)
         try:
             state0 = self.catalog.current_commit(self.db, self.table)
@@ -597,7 +595,7 @@ class KvStore:
             last.version - max(last.snapshot_version, 0) >= defer
             or self._tail_bytes_exceeded(last)
         ):
-            states[-1] = self.materialize(spark)
+            states[-1] = self._materialize_locked(spark)
         return states
 
     def _occ_conflict(
@@ -655,8 +653,6 @@ class KvStore:
         would have produced. One small rewrite job per contended bucket
         dir, O(this batch's contended buckets); nothing moves when
         bucket sets are disjoint."""
-        import shutil
-
         deltas = {
             int(b): int(off) - int(state0.log_hwm.get(b, 0))
             for b, off in s1.log_hwm.items()
@@ -683,8 +679,7 @@ class KvStore:
                 .option("compression", codec)
                 .parquet(tmp)
             )
-            shutil.rmtree(bdir)
-            os.rename(tmp, bdir)
+            fsops.replace_dir(tmp, bdir)
 
     def _discover_scope(self, b: DataFrame, manifest_now):
         """Batch write scope — (bucket list, typed pair predicate,
@@ -1070,6 +1065,12 @@ class KvStore:
         return False
 
     def materialize(self, spark: SparkSession) -> CommitState:
+        """Fold the WAL tail into the snapshot now, under the table write
+        lock (see _materialize_locked)."""
+        with self.catalog.write_lock(self.db, self.table):
+            return self._materialize_locked(spark)
+
+    def _materialize_locked(self, spark: SparkSession) -> CommitState:
         """Fold the WAL tail into the materialized snapshot — the
         periodic-checkpoint half of the deferred-commit mode (reference
         analog: server/kv/snapshot/'s RocksDB checkpoint upload). Only
@@ -1081,12 +1082,10 @@ class KvStore:
         Amortization is the point: K deferred commits spraying keys over
         P units cost ONE rewrite of each touched unit instead of K.
 
-        Crash-safe: the data-dir write and manifest write are invisible
-        until meta/CURRENT advances; a crash in between leaves orphans
-        the next materialization overwrites (same version number — the
-        tail is still uncovered, so version/state are unchanged)."""
-        import shutil
-
+        Crash-safe: the data dir and manifest are numbered above CURRENT,
+        so they stay invisible until meta/CURRENT advances; a crash in
+        between leaves orphans the next lock acquisition sweeps. The
+        caller holds the table write lock."""
         schema = self.schema
         state = self.catalog.current_commit(self.db, self.table)
         start = self._tail_start(state)
@@ -1127,10 +1126,7 @@ class KvStore:
         final = self._merge_tail(base, tail)
 
         data_dir = f"data-v{version}"
-        os.makedirs(self.snapshot_dir, exist_ok=True)
         dst = os.path.join(self.snapshot_dir, data_dir)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
         (
             final.withColumn(BUCKET_COL, self._bucket_expr())
             .repartition(
@@ -1164,14 +1160,8 @@ class KvStore:
                     new_manifest.pop(bkt, None)
 
         self._write_manifest(version, new_manifest, dir_pairs)
-        new_state = CommitState(
-            version=version,
-            log_hwm=state.log_hwm,
-            snapshot_version=version,
-            auto_increment=state.auto_increment,
-            ts_ms=int(time.time() * 1000),
-            log_start=state.log_start,
-            log_floor=state.log_floor,
+        new_state = replace(
+            state, version=version, snapshot_version=version, ts_ms=int(time.time() * 1000)
         )
         self.catalog.commit(self.db, self.table, new_state)
         return new_state
@@ -1195,7 +1185,6 @@ class KvStore:
         validated against the current state (CommitConflictError on a
         conflict), contended bucket offsets rebased, and the commit
         published on top of the CURRENT state."""
-        import shutil
         import uuid
 
         wal_only = self._defer_commits() > 1
@@ -1225,7 +1214,7 @@ class KvStore:
                     spark, combined, s1, ts_list, dict(s1.auto_increment)
                 )
         finally:
-            shutil.rmtree(combined, ignore_errors=True)
+            fsops.remove(combined)
 
     def _commit_plan(
         self,
@@ -1561,22 +1550,23 @@ class KvStore:
         wal_only: bool = False,
     ) -> list[CommitState]:
         """Publish a written combined dir as len(ts_list) commit versions
-        on top of `base_state`: rename the siblings into place, advance
-        the HWMs and manifest RELATIVE TO base_state, then commit each
-        version atomically. The serial path passes base_state = the
-        state the plan was built against; the optimistic path passes the
-        CURRENT state after validating the plan's base is still
-        compatible with it (disjoint units, see upsert_optimistic).
+        on top of `base_state`: move the siblings into place, advance
+        the HWMs and manifest RELATIVE TO base_state, then commit every
+        version with one CURRENT write (Catalog.commit). The serial path
+        passes base_state = the state the plan was built against; the
+        optimistic path passes the CURRENT state after validating the
+        plan's base is still compatible with it (disjoint units, see
+        upsert_optimistic).
 
-        Every version but the last is a WAL-only state: its WAL renames
+        Every version but the last is a WAL-only state: its WAL moves
         into its commit dir (a group's `__g=<i>` sub-dir) and
         snapshot_version stays at the base — the sparse-version shape
         every read path serves through the offset-bounded tail fold.
         The last version materializes the snapshot of every unit any
         batch touched, unless `wal_only` (deferred materialization)
-        keeps it a WAL-only state too."""
-        import shutil
-
+        keeps it a WAL-only state too. A crash before the commit call
+        leaves the table at base_state: a group lands whole or not at
+        all."""
         schema = self.schema
         state0 = base_state
         grouped = len(ts_list) > 1
@@ -1597,18 +1587,17 @@ class KvStore:
             staged = self.log.staging_path(version)
             wal_part = os.path.join(w_root, f"__g={g}") if grouped else w_root
             if os.path.isdir(wal_part):
-                if os.path.exists(staged):
-                    shutil.rmtree(staged)
-                os.rename(wal_part, staged)
+                fsops.replace_dir(wal_part, staged)
             else:  # no change events at all (e.g. deletes of absent keys)
-                os.makedirs(staged, exist_ok=True)
-            per_bucket = self._footer_hwm_or_read(spark, staged)
+                fsops.makedirs(staged)
+            per_bucket = self.log._staged_hwm(spark, staged)
             for bkt, mx in per_bucket.items():
                 hwm[str(bkt)] = mx + 1
             if schema.partition_keys:
                 touched.update(self._walk_pairs(staged))
             else:
                 touched.update(per_bucket)
+            self.log.publish(version)
 
             snapshot_version = state0.snapshot_version
             if last and not wal_only:
@@ -1618,14 +1607,11 @@ class KvStore:
                 dir_pairs = None
                 if touched:
                     data_dir = f"data-v{version}"
-                    os.makedirs(self.snapshot_dir, exist_ok=True)
                     dst = os.path.join(self.snapshot_dir, data_dir)
-                    if os.path.exists(dst):
-                        shutil.rmtree(dst)
                     if os.path.isdir(snap_part):
-                        os.rename(snap_part, dst)
+                        fsops.replace_dir(snap_part, dst)
                     else:  # every key of the touched buckets was deleted
-                        os.makedirs(dst)
+                        fsops.makedirs(dst)
                     if schema.partition_keys:
                         # a touched pair with no surviving rows (all its
                         # keys deleted) leaves the manifest entirely
@@ -1651,36 +1637,18 @@ class KvStore:
                 elif schema.partition_keys:
                     dir_pairs = self._manifest_dir_pairs(state0.snapshot_version)
                 self._write_manifest(version, new_manifest, dir_pairs)
-            state = CommitState(
-                version=version,
-                log_hwm=dict(hwm),
-                snapshot_version=snapshot_version,
-                auto_increment=dict(auto_next if last else state0.auto_increment),
-                ts_ms=ts_ms,
-                log_start=state0.log_start,
-                log_floor=state0.log_floor,
+            states.append(
+                replace(
+                    state0,
+                    version=version,
+                    log_hwm=dict(hwm),
+                    snapshot_version=snapshot_version,
+                    auto_increment=dict(auto_next if last else state0.auto_increment),
+                    ts_ms=ts_ms,
+                )
             )
-            self.log.publish(version)
-            self.catalog.commit(self.db, self.table, state)
-            states.append(state)
+        self.catalog.commit(self.db, self.table, *states)
         return states
-
-    def _footer_hwm_or_read(self, spark: SparkSession, staged: str) -> dict[int, int]:
-        """Per-bucket max(__offset) of the staged WAL — Parquet footers
-        (driver-side, O(files)) with a Spark fallback for stat-less
-        files."""
-        per_bucket = self.log._footer_hwm(staged)
-        if per_bucket is None:
-            per_bucket = {
-                int(r[BUCKET_COL]): int(r["mx"])
-                for r in spark.read.schema(ddl_of(self.log.file_schema()))
-                .option("basePath", staged)
-                .parquet(staged)
-                .groupBy(BUCKET_COL)
-                .agg(F.max(OFFSET_COL).alias("mx"))
-                .collect()
-            }
-        return per_bucket
 
     def insert_if_not_exists(self, df: DataFrame, ordering: list[str] | None = None) -> DataFrame:
         """L3 (Lookup.enableInsertIfNotExists, Lookup.java:97-105): a
@@ -1777,10 +1745,10 @@ class KvStore:
                 return base
             tail = self._tail_scan(spark, start, None, buckets, pair_pred)
             return self._merge_tail(base, tail)
-        if version < 0 or self._manifest(version) is not None:
-            return self._materialized(spark, version, buckets, pair_pred, pair_keys)
         if version > state.version:
             raise ValueError(f"no such commit version: {version}")
+        if version < 0 or self._manifest(version) is not None:
+            return self._materialized(spark, version, buckets, pair_pred, pair_keys)
         # WAL-only (deferred) version: nearest older manifest + the
         # changelog slice between its HWM and this version's HWM
         m = self._nearest_manifest_version(version)
@@ -1804,6 +1772,9 @@ class KvStore:
                 f"changelog slice from manifest v{m} was partly expired "
                 f"(bucket: (needed-from, earliest) = {expired})"
             )
+        # a bucket empty at `version` is absent from its HWM map, which
+        # the scan would leave unbounded: bound it at offset 0
+        end = {b: 0 for b in range(self.schema.num_buckets)} | end
         tail = self._tail_scan(spark, start, end, buckets, pair_pred)
         return self._merge_tail(base, tail)
 
@@ -2207,9 +2178,9 @@ class KvStore:
         schema = self.schema
         types = {f.name: parse_type(f.type) for f in schema.fields}
         state = self.catalog.current_commit(self.db, self.table)
-        manifest = self._manifest(state.snapshot_version)
-        if not manifest:
-            return self.snapshot(spark).filter(self._key_cond(key))
+        # no manifest yet (a deferred table before its first
+        # materialization) reads as an empty base under the tail
+        manifest = self._manifest(state.snapshot_version) or {}
         # a naive timestamp string means a time in the session zone
         tz = (
             spark.conf.get("spark.sql.session.timeZone")

@@ -20,8 +20,9 @@ Reference semantics reproduced (not the implementation):
     log_floor <= V <= CURRENT, so even the rename -> CURRENT instant is
     fenced.
     Orphans from a crashed writer (staging dirs, or a renamed dir whose
-    CURRENT advance never happened) are self-healed by the next writer
-    under the table write lock (SURVEY §7 "what's hard").
+    CURRENT advance never happened) are swept by the next writer when
+    it takes the table write lock (Catalog.write_lock; SURVEY §7
+    "what's hard").
 
 Layout: <table>/log/__commit=<V>/[<part>=<v>/]__bucket=<b>/*.parquet
 Commit dir V holds only offsets below the HWMs recorded at commit V, so
@@ -35,11 +36,13 @@ from __future__ import annotations
 import bisect
 import os
 import time
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from fluss_spark import fsops
 from fluss_spark.bucketing import exchange_width
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.types import (
@@ -105,39 +108,12 @@ class LogStore:
         return os.path.join(self.tmp_dir, f"log-v{version}")
 
     def publish(self, version: int) -> None:
-        """Atomically move staged commit files into the log dir. Called
-        immediately before the catalog CURRENT advance; a pre-existing
-        destination can only be an orphan of a crashed attempt at this
-        same version (we hold the write lock), so it is replaced."""
-        import shutil
-
-        dst = self.commit_path(version)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        os.rename(self.staging_path(version), dst)
-
-    def clean_orphans(self) -> None:
-        """Self-heal under the write lock: drop leftover staging dirs and
-        any log commit dir newer than CURRENT (a writer that crashed
-        between rename and CURRENT advance). `inflight-*` dirs are LIVE
-        optimistic-writer staging (kv.upsert_optimistic writes them
-        outside the lock by design) — only a stale one (dead writer,
-        age > 1h) is an orphan."""
-        import shutil
-
-        current = self.catalog.current_commit(self.db, self.table).version
-        if os.path.isdir(self.tmp_dir):
-            for e in os.scandir(self.tmp_dir):
-                if e.name.startswith("inflight-"):
-                    try:
-                        if time.time() - e.stat().st_mtime < 3600:
-                            continue
-                    except FileNotFoundError:
-                        continue
-                shutil.rmtree(e.path, ignore_errors=True)
-        for e in os.scandir(self.log_dir):
-            if e.name.startswith(f"{COMMIT_DIR_COL}=") and int(e.name.split("=")[1]) > current:
-                shutil.rmtree(e.path, ignore_errors=True)
+        """Move the staged commit files into the log dir — the step right
+        before the catalog CURRENT advance. The destination is numbered
+        above CURRENT, so it stays invisible until that advance; a
+        crashed attempt's leftover there is swept when the write lock is
+        taken (Catalog.write_lock)."""
+        fsops.replace_dir(self.staging_path(version), self.commit_path(version))
 
     def file_schema(self, with_commit_col: bool = False, era=None):
         """Explicit read schema for log files (no inference — empty
@@ -197,10 +173,10 @@ class LogStore:
         auto-increment columns (pk-table WALs carry insert-stable ids the
         log layer cannot derive) and supplies the advanced counter map;
         the per-record stamping below — correct for plain log tables,
-        where every appended record IS an insert — is skipped.
+        where every appended record IS an insert — is skipped. The caller
+        holds the table write lock.
         """
         schema = self.schema
-        self.clean_orphans()
         state = self.catalog.current_commit(self.db, self.table)
         version = state.version + 1
         ts_ms = commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
@@ -227,26 +203,10 @@ class LogStore:
         # written: row-group max(__offset) per bucket dir, read driver-side
         # (metadata-only) — replaces a full Spark read-back job per commit
         hwm = dict(state.log_hwm)
-        per_bucket = self._footer_hwm(staged)
-        if per_bucket is None:  # stats unavailable -> Spark fallback
-            spark = df.sparkSession
-            written = spark.read.schema(ddl_of(self.file_schema())).parquet(staged)
-            per_bucket = {
-                int(r[BUCKET_COL]): int(r["mx"])
-                for r in written.groupBy(BUCKET_COL).agg(F.max(OFFSET_COL).alias("mx")).collect()
-            }
-        for bkt, mx in per_bucket.items():
+        for bkt, mx in self._staged_hwm(df.sparkSession, staged).items():
             hwm[str(bkt)] = mx + 1
 
-        new_state = CommitState(
-            version=version,
-            log_hwm=hwm,
-            snapshot_version=state.snapshot_version,
-            auto_increment=auto_next,
-            ts_ms=ts_ms,
-            log_start=state.log_start,
-            log_floor=state.log_floor,
-        )
+        new_state = replace(state, version=version, log_hwm=hwm, auto_increment=auto_next, ts_ms=ts_ms)
         if not defer_commit:
             self.publish(version)
             self.catalog.commit(self.db, self.table, new_state)
@@ -346,12 +306,23 @@ class LogStore:
         # drop ordering-only columns
         return out.select(*final_cols, BUCKET_COL, OFFSET_COL, TIMESTAMP_COL), auto_next
 
-    def _footer_hwm(self, staged: str) -> dict[int, int] | None:
-        """Per-bucket max(__offset) from Parquet footer statistics of the
-        staged files (driver-side, metadata-only). Returns None if any
-        file lacks offset stats (caller falls back to a Spark job). Cost
-        is one footer read per file — O(buckets), independent of rows."""
+    def _staged_hwm(self, spark: SparkSession, staged: str) -> dict[int, int]:
+        """Per-bucket max(__offset) of a staged commit dir, from Parquet
+        footer statistics (driver-side, metadata-only: one footer read
+        per file — O(buckets), independent of rows). Only when a file
+        lacks offset stats does a Spark job read the offsets back."""
         import pyarrow.parquet as pq
+
+        def read_back() -> dict[int, int]:
+            rows = (
+                spark.read.schema(ddl_of(self.file_schema()))
+                .option("basePath", staged)
+                .parquet(staged)
+                .groupBy(BUCKET_COL)
+                .agg(F.max(OFFSET_COL).alias("mx"))
+                .collect()
+            )
+            return {int(r[BUCKET_COL]): int(r["mx"]) for r in rows}
 
         per_bucket: dict[int, int] = {}
         for root, _dirs, files in os.walk(staged):
@@ -367,11 +338,11 @@ class LogStore:
                 try:
                     col_idx = md.schema.names.index(OFFSET_COL)
                 except ValueError:
-                    return None
+                    return read_back()
                 for rg in range(md.num_row_groups):
                     st = md.row_group(rg).column(col_idx).statistics
                     if st is None or st.max is None:
-                        return None
+                        return read_back()
                     per_bucket[bucket] = max(per_bucket.get(bucket, -1), int(st.max))
         return per_bucket
 
@@ -381,15 +352,16 @@ class LogStore:
         """(local, remote) maps of commit-dir name -> path readable
         under the fencing invariant, in ONE place: log_floor <= v <=
         current (uncommitted staging and rebucket-shadowed dirs never
-        listed), and remote dirs shadowed by a same-name local dir
-        removed (LOCAL WINS on the crashed-tier_log overlap — reading
-        both would double-count the commit). Every metadata walk
-        (scan, lake snapshot, footer stats) derives from this."""
+        listed; local dirs also from local_floor, below which a log
+        compaction rewrote them), and remote dirs shadowed by a
+        same-name local dir removed (LOCAL WINS on the crashed-tier_log
+        overlap — reading both would double-count the commit). Every
+        metadata walk (scan, lake snapshot, footer stats) derives from
+        this."""
         state = self.catalog.current_commit(self.db, self.table)
         cur = state.version if current is None else current
-        floor = state.log_floor
 
-        def _dirs(root: str) -> dict[str, str]:
+        def _dirs(root: str, floor: int) -> dict[str, str]:
             if not os.path.isdir(root):
                 return {}
             return {
@@ -399,8 +371,9 @@ class LogStore:
                 and floor <= int(e.name.split("=")[1]) <= cur
             }
 
-        local = _dirs(self.log_dir) if tiers in ("all", "local") else {}
-        remote = _dirs(self.remote_dir) if tiers in ("all", "remote") else {}
+        local_floor = max(state.log_floor, state.local_floor)
+        local = _dirs(self.log_dir, local_floor) if tiers in ("all", "local") else {}
+        remote = _dirs(self.remote_dir, state.log_floor) if tiers in ("all", "remote") else {}
         remote = {n: p for n, p in remote.items() if n not in local}
         return local, remote
 

@@ -28,6 +28,7 @@ from fluss_spark.admin import (
     ResetOption,
     SetOption,
 )
+from fluss_spark import fsops
 from fluss_spark.catalog import Catalog
 from fluss_spark.table import FlussTable, create_table, register_sql_views
 from fluss_spark.types import Field, TableSchema
@@ -639,11 +640,7 @@ class FlussSqlSession:
                     cfg[str(k)] = ",".join(vals)
                 else:
                     cfg.pop(str(k), None)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                _json.dump(cfg, f, indent=1, sort_keys=True)
-            os.replace(tmp, path)
+            fsops.write_atomic(path, _json.dumps(cfg, indent=1, sort_keys=True))
             touched = sorted({str(k) for k in pairs[::2]})
             return _rows([f'{k}="{cfg.get(k, "")}"' for k in touched])
 
@@ -666,11 +663,7 @@ class FlussSqlSession:
                 for k in keys:
                     cfg.pop(str(k), None)
             if proc != "get_cluster_configs":
-                os.makedirs(os.path.dirname(path), exist_ok=True)
-                tmp = path + ".tmp"
-                with open(tmp, "w") as f:
-                    _json.dump(cfg, f, indent=1, sort_keys=True)
-                os.replace(tmp, path)
+                fsops.write_atomic(path, _json.dumps(cfg, indent=1, sort_keys=True))
             keys = pos or list(args.values()) if proc == "get_cluster_configs" else sorted(cfg)
             shown = [k for k in (keys or sorted(cfg)) if k in cfg]
             return _rows([f'{k}="{cfg[k]}"' for k in shown])
@@ -804,8 +797,7 @@ class FlussSqlSession:
                 raise SqlParseError(
                     "CALL sys.materialize_snapshot: requires a primary-key table"
                 )
-            with self.catalog.write_lock(db, name):
-                st = t.kv.materialize(self.spark)
+            st = t.kv.materialize(self.spark)
             return _rows([f"snapshot_version={st.snapshot_version}"])
         raise SqlParseError(f"unknown procedure: sys.{proc}")
 

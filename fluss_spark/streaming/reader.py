@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluss_spark import fsops
 from fluss_spark.table import FlussTable
 from fluss_spark.types import BUCKET_COL, CHANGE_TYPE_COL, INSERT, OFFSET_COL
 
@@ -53,7 +54,7 @@ class LogStreamReader:
         self._pending_snapshot = False
         self._epoch = self._bucket_epoch()  # offsets belong to this epoch
         if checkpoint_dir:
-            os.makedirs(checkpoint_dir, exist_ok=True)
+            fsops.makedirs(checkpoint_dir)
             self._load_checkpoint()
 
     # -- offsets ----------------------------------------------------------
@@ -106,9 +107,7 @@ class LogStreamReader:
     def _save_checkpoint(self) -> None:
         if not self.checkpoint_dir:
             return
-        from fluss_spark.catalog import Catalog
-
-        Catalog._write_atomic(
+        fsops.write_atomic(
             self._ckpt_path(),
             json.dumps(
                 {

@@ -23,6 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from fluss_spark import fsops
 from fluss_spark.table import FlussTable
 
 
@@ -61,17 +62,13 @@ def _resolve_marker(table: FlussTable, sink_id: str) -> int:
             m = {"batch_id": pending["batch_id"], "pending": None}
         else:
             m = {"batch_id": m["batch_id"], "pending": None}
-        from fluss_spark.catalog import Catalog
-
-        Catalog._write_atomic(p, json.dumps(m))
+        fsops.write_atomic(p, json.dumps(m))
     return m["batch_id"]
 
 
 def _stage_pending(table: FlussTable, sink_id: str, last: int, batch_id: int) -> None:
-    from fluss_spark.catalog import Catalog
-
     expected = table.catalog.current_commit(table.db, table.name).version + 1
-    Catalog._write_atomic(
+    fsops.write_atomic(
         _marker_path(table, sink_id),
         json.dumps(
             {"batch_id": last, "pending": {"batch_id": batch_id, "expected_version": expected}}
@@ -80,9 +77,7 @@ def _stage_pending(table: FlussTable, sink_id: str, last: int, batch_id: int) ->
 
 
 def _finalize(table: FlussTable, sink_id: str, batch_id: int) -> None:
-    from fluss_spark.catalog import Catalog
-
-    Catalog._write_atomic(
+    fsops.write_atomic(
         _marker_path(table, sink_id), json.dumps({"batch_id": batch_id, "pending": None})
     )
 

@@ -16,6 +16,7 @@ genuinely threaded run, and a serial-twin equivalence check.
 from __future__ import annotations
 
 import threading
+from functools import reduce
 
 import pytest
 from pyspark.sql import functions as F
@@ -321,3 +322,42 @@ def test_parallel_different_table_upserts_keep_aqe_scope(catalog, spark):
     # second-round commits replayed on top of round 0: versions advanced
     assert catalog.current_commit("db", "aqe_a").version == 2
     assert catalog.current_commit("db", "aqe_b").version == 2
+
+
+@pytest.mark.slow
+def test_four_threaded_writers_match_serial_twin(spark, catalog):
+    """After a shared seed, four threads upsert four disjoint partitions
+    of an optimistic table at once; the final snapshot equals a serial
+    table fed the same batches one after another."""
+    parts = ["p0", "p1", "p2", "p3"]
+    seed = reduce(lambda a, b: a.unionByName(b), [_rows(spark, p, range(20), "s") for p in parts])
+    upd = {p: _rows(spark, p, range(10, 30), f"u{p}") for p in parts}
+
+    t = _mk(catalog, "occ4")
+    twin = _mk(catalog, "occ4_serial")
+    twin.schema.properties["table.commit.concurrency"] = "serial"
+    t.upsert(seed)
+    twin.upsert(seed)
+
+    barrier = threading.Barrier(len(parts))
+    errs = []
+
+    def writer(p):
+        try:
+            handle = FlussTable(catalog, "db", "occ4")
+            barrier.wait(timeout=60)
+            handle.upsert(upd[p])
+        except Exception as e:  # surfaces in the main thread
+            errs.append(e)
+
+    threads = [threading.Thread(target=writer, args=(p,)) for p in parts]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(300)
+    assert not errs, errs
+    for p in parts:
+        twin.upsert(upd[p])
+
+    assert _snap(t, spark) == _snap(twin, spark)
+    _offsets_dense(t, spark)

@@ -675,3 +675,194 @@ def test_deferred_commit_is_one_write_job(spark, catalog):
     assert _snapshot_dirs(t) == dirs_before
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert dict(_snap(t, spark))[1] == "x" and dict(_snap(t, spark))[13] == "y"
+
+
+def _crash_at_catalog_commit(monkeypatch):
+    """Make the next CURRENT advance fail, as a writer that dies right
+    before it: everything the op wrote stays on disk above CURRENT."""
+
+    def boom(self, db, table, *states):
+        raise RuntimeError("simulated crash at catalog commit")
+
+    monkeypatch.setattr(Catalog, "commit", boom)
+
+
+def test_crashed_materialize_leaves_no_stale_time_travel(spark, catalog, monkeypatch):
+    """A materialize that dies at its CURRENT advance leaves its manifest
+    and data dir numbered CURRENT+1. The next commit takes that number;
+    time travel to it must read the new commit, not the dead manifest,
+    and snapshot expiry must not count the dead manifest among the
+    newest ones it keeps."""
+    from fluss_spark import maintenance as mnt
+
+    t = _mk(catalog, "defer_stale", defer=10)
+    up = lambda rows: t.upsert(spark.createDataFrame(rows, "k int, v string"))  # noqa: E731
+    up([(1, "a"), (2, "b")])  # v1
+    t.kv.materialize(spark)  # v2: manifest v2
+    up([(1, "a2")])  # v3
+    t.kv.materialize(spark)  # v4: manifest v4
+    up([(3, "c"), (2, "b2")])  # v5
+    _crash_at_catalog_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.kv.materialize(spark)
+    monkeypatch.undo()
+    assert catalog.current_commit("db", "defer_stale").version == 5
+    assert os.path.exists(os.path.join(t.kv.manifest_dir, "v6.json"))
+    assert "data-v6" in _snapshot_dirs(t)
+
+    up([(4, "d")])  # WAL-only, commits v6
+    want = [(1, "a2"), (2, "b2"), (3, "c"), (4, "d")]
+    assert _snap(t, spark) == want
+    at = lambda v: sorted((r["k"], r["v"]) for r in t.kv.snapshot(spark, version=v).collect())  # noqa: E731
+    assert at(6) == want
+    assert at(5) == [(1, "a2"), (2, "b2"), (3, "c")]
+    up([(5, "e")])  # v7
+    assert at(7) == want + [(5, "e")]
+    assert at(6) == want
+
+    # keep the newest two manifests: v4 and v2, nothing else on disk
+    mnt.expire_snapshots(t, keep=2)
+    assert sorted(os.listdir(t.kv.manifest_dir)) == ["v2.json", "v4.json"]
+    assert at(2) == [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize("route", ["api", "sql"])
+def test_uncommitted_upsert_never_reaches_the_changelog(spark, catalog, monkeypatch, route):
+    """An upsert that dies at its CURRENT advance has already moved its
+    WAL into log/__commit=2. A standalone materialize (API or `CALL
+    sys.materialize_snapshot`) then commits v2 itself: the dead WAL must
+    be gone by then, or its rows turn into committed changes."""
+    from fluss_spark.sql_ddl import FlussSqlSession
+
+    t = _mk(catalog, f"ghost_{route}", defer=10)
+    t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    _crash_at_catalog_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.upsert(spark.createDataFrame([(9, "ghost")], "k int, v string"))
+    monkeypatch.undo()
+    assert os.path.isdir(t.log.commit_path(2))
+
+    if route == "api":
+        st = t.kv.materialize(spark)
+    else:
+        FlussSqlSession(catalog, spark, default_db="db").sql(
+            f"CALL sys.materialize_snapshot(`db`.`ghost_{route}`)"
+        ).collect()
+        st = catalog.current_commit("db", f"ghost_{route}")
+    assert st.version == 2 and st.snapshot_version == 2
+    assert _snap(t, spark) == [(1, "a"), (2, "b")]
+    changes = sorted((r["k"], r["v"], r[CHANGE_TYPE_COL]) for r in t.changelog(spark).collect())
+    assert changes == [(1, "a", "+I"), (2, "b", "+I")]
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_lookup_before_first_materialization_reads_the_bucket(spark, catalog, partitioned):
+    """A deferred table with no manifest yet answers a lookup like any
+    other: an empty base plus the key's bucket slice of the WAL tail,
+    not a filter over the whole merged snapshot. Pins the Spark jobs
+    and tasks one lookup runs (8 buckets, two WAL-only commits)."""
+    import uuid
+
+    fields = [Field("k", "INT", nullable=False), Field("v", "STRING")]
+    if partitioned:
+        fields.insert(0, Field("dt", "STRING", nullable=False))
+    t = create_table(
+        catalog, "db", f"defer_lk_{partitioned}",
+        TableSchema(
+            fields=fields,
+            primary_key=["dt", "k"] if partitioned else ["k"],
+            partition_keys=["dt"] if partitioned else [],
+            num_buckets=8,
+            properties={"table.snapshot.defer-commits": "8"},
+        ),
+    )
+    row = (lambda k, v: ("d1", k, v)) if partitioned else (lambda k, v: (k, v))
+    ddl = "dt string, k int, v string" if partitioned else "k int, v string"
+    t.upsert(spark.createDataFrame([row(k, f"a{k}") for k in range(20)], ddl))
+    t.upsert(spark.createDataFrame([row(k, f"b{k}") for k in range(0, 20, 3)], ddl))
+    st = catalog.current_commit("db", t.name)
+    assert st.snapshot_version == -1 and st.version == 2
+    key = {"dt": "d1", "k": 6} if partitioned else {"k": 6}
+
+    sc = spark.sparkContext
+    group = f"defer-lookup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "deferred lookup probe")
+    try:
+        got = [tuple(r) for r in t.lookup(spark, key).collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks for j in jobs for s in tracker.getJobInfo(j).stageIds
+    )
+    assert got == [row(6, "b6")]
+    assert t.lookup(spark, dict(key, k=99)).collect() == []
+    assert (len(jobs), tasks) == ((3, 15) if partitioned else (2, 5))
+
+
+def test_time_travel_to_deferred_version_skips_later_buckets(spark, catalog):
+    """A WAL-only version's HWM map names only the buckets that held
+    rows then. Rows a later commit writes to a bucket that was still
+    empty must not leak into time travel to that version."""
+    t = _mk(catalog, "defer_tt_buckets", defer=10)
+    t.upsert(spark.createDataFrame([(1, "a")], "k int, v string"))  # v1: one bucket
+    first = catalog.current_commit("db", "defer_tt_buckets").log_hwm
+    later = [k for k in range(2, 40) if str(_bucket(spark, k)) not in first][:3]
+    assert later
+    t.upsert(spark.createDataFrame([(k, "b") for k in later], "k int, v string"))  # v2
+    got = sorted((r["k"], r["v"]) for r in t.kv.snapshot(spark, version=1).collect())
+    assert got == [(1, "a")]
+
+
+def _bucket(spark, k, n=4):
+    return spark.sql(f"SELECT pmod(hash(CAST({k} AS INT)), {n})").first()[0]
+
+
+@pytest.mark.slow
+def test_deferred_spray_writes_fewer_snapshot_bytes(spark, catalog):
+    """Small commits that spray keys over every bucket: with per-commit
+    materialization each one rewrites the whole table, with K=4 deferral
+    about every fourth does. Over 12 commits (plus a final flush) the
+    deferred table writes at least 2x fewer snapshot bytes, and both
+    twins end with identical scans."""
+    n_commits, seed_rows, batch_rows = 12, 4000, 400
+
+    def tree_bytes(root):
+        return sum(
+            os.path.getsize(os.path.join(r, f)) for r, _d, fs in os.walk(root) for f in fs
+        )
+
+    def spray(i):  # stride the key space so every commit touches every bucket
+        return spark.range(batch_rows).select(
+            ((F.col("id") * n_commits + i) % seed_rows).cast("int").alias("k"),
+            F.concat(F.lit(f"c{i}-"), F.col("id").cast("string")).alias("v"),
+        )
+
+    written, snaps = {}, {}
+    for name, props in (("spray_eager", {}), ("spray_defer", {"table.snapshot.defer-commits": "4"})):
+        t = create_table(
+            catalog, "db", name,
+            TableSchema(
+                fields=[Field("k", "INT", nullable=False), Field("v", "STRING")],
+                primary_key=["k"], num_buckets=16, properties=props,
+            ),
+        )
+        t.upsert(
+            spark.range(seed_rows).select(
+                F.col("id").cast("int").alias("k"), F.concat(F.lit("seed-"), F.col("id")).alias("v")
+            ),
+            ordering=["k"],
+        )
+        total = 0
+        for i in range(n_commits):
+            before = tree_bytes(t.kv.snapshot_dir)
+            t.upsert(spray(i), ordering=["k"])
+            total += max(0, tree_bytes(t.kv.snapshot_dir) - before)
+        before = tree_bytes(t.kv.snapshot_dir)
+        t.kv.materialize(spark)  # flush a pending tail: both twins fully materialized
+        written[name] = total + max(0, tree_bytes(t.kv.snapshot_dir) - before)
+        snaps[name] = sorted(tuple(r) for r in t.snapshot(spark).collect())
+    assert snaps["spray_eager"] == snaps["spray_defer"]
+    assert written["spray_eager"] >= 2 * written["spray_defer"], written

@@ -468,25 +468,25 @@ def test_single_action_crash_at_publish_prep_is_invisible(
     the WAL-dir rename (combined write finished, nothing published) and
     at the manifest write (both renames done, catalog not advanced).
     Either way the failed commit must be invisible and a retry must land
-    the batch exactly once — clean_orphans wipes tmp leftovers, the
-    rename/overwrite steps are idempotent, and reads resolve strictly
-    through the catalog CURRENT pointer."""
-    import fluss_spark.sources.kv as kv_mod
+    the batch exactly once — the retry's write-lock sweep drops the
+    leftovers, and reads resolve strictly through the catalog CURRENT
+    pointer."""
+    from fluss_spark import fsops
     from fluss_spark.sources.kv import KvStore
 
     t = _crash_table(catalog, spark, f"cr_sa_{crash_point}")
     batch = spark.createDataFrame([(2, 20.0), (3, 3.0)], "id bigint, v double")
 
     if crash_point == "wal_rename":
-        orig_rename = os.rename
+        orig_replace_dir = fsops.replace_dir
 
-        def boom(src, dst, *a, **k):
+        def boom(src, dst):
             if "commit-v" in str(src):
                 raise RuntimeError("simulated crash at WAL rename")
-            return orig_rename(src, dst, *a, **k)
+            return orig_replace_dir(src, dst)
 
-        # kv.py imports `os` at module level; patch the module's view
-        monkeypatch.setattr(kv_mod.os, "rename", boom)
+        # every directory move goes through the fsops seam
+        monkeypatch.setattr(fsops, "replace_dir", boom)
     else:
         def boom(self, version, entries, dir_pairs=None):
             raise RuntimeError("simulated crash at manifest write")

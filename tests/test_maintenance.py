@@ -774,3 +774,45 @@ def test_partitioned_pk_compact_and_rebucket(spark, catalog):
     assert t2.schema.num_buckets == 4
     assert sorted(map(tuple, t2.snapshot(spark).collect())) == before
     assert t2.lookup(spark, {"dt": "d2", "k": 4}).count() == 1
+
+
+def test_compact_log_crash_before_cleanup_reads_no_duplicates(spark, catalog, monkeypatch):
+    """compact_log commits its rewrite of every local commit dir, then
+    deletes the dirs it rewrote. A crash in between must not let a scan
+    read both copies: the commit itself fences the older local dirs,
+    and the next compaction drops them."""
+    import os
+
+    from fluss_spark import fsops
+
+    t = create_table(
+        catalog, "db", "compact_crash",
+        TableSchema(fields=[Field("a", "INT"), Field("b", "STRING")], num_buckets=2),
+    )
+    for i in range(3):
+        t.append(
+            spark.createDataFrame([(10 * i + j, f"r{i}") for j in range(4)], "a int, b string"),
+            ordering=["a"],
+        )
+    rows = lambda: sorted(tuple(r) for r in t.scan(spark).select("__bucket", "__offset", "a", "b").collect())  # noqa: E731
+    want = rows()
+
+    real_remove = fsops.remove
+
+    def boom(path):
+        if os.path.basename(path) in ("__commit=1", "__commit=2", "__commit=3"):
+            raise RuntimeError("simulated crash before the old dirs are gone")
+        return real_remove(path)
+
+    monkeypatch.setattr(fsops, "remove", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        compact_log(t, spark, target_commits=2)
+    monkeypatch.undo()
+    assert catalog.current_commit("db", "compact_crash").version == 4
+    assert sorted(os.listdir(t.log.log_dir)) == [f"__commit={v}" for v in (1, 2, 3, 4)]  # all left
+    assert rows() == want
+
+    t.append(spark.createDataFrame([(99, "late")], "a int, b string"), ordering=["a"])
+    assert compact_log(t, spark, target_commits=1) == 2
+    assert os.listdir(t.log.log_dir) == ["__commit=6"]
+    assert [r for r in rows() if r[2] != 99] == want and len(rows()) == len(want) + 1
