@@ -4,7 +4,7 @@
     table = connect(warehouse).get_table("db", "t")
     df  = table.new_scan().project(["a", "b"]).create_batch_scanner(spark)
     rdr = table.new_scan().create_log_scanner(spark)
-    row = table.new_lookup().create_lookuper(spark).lookup(7)
+    rows = table.new_lookup().create_lookuper(spark).lookup(7).collect()
     w   = table.new_upsert().partial_update("k", "v").create_writer(spark)
     w.upsert({"k": 1, "v": "x"}); w.delete({"k": 2}); w.flush()
 
@@ -14,6 +14,9 @@ Adaptation notes (documented divergences, not omissions):
   - Scanners return DataFrames (the engine's record batches); the
     reference returns record iterators because its consumers are
     row-at-a-time runtimes.
+  - A lookuper returns a DataFrame over the Arrow table the driver
+    read: `collect()` runs no Spark job, and the JVM side is built only
+    if Spark needs a plan (a join, `explain`, a write).
   - Writers buffer rows client-side and `flush()` commits ONE engine
     transaction — the same batching the reference's WriterClient does
     over the wire (write/WriterClient.java accumulates WriteBatch per

@@ -62,11 +62,12 @@ import math
 import os
 import time
 from dataclasses import replace
-from functools import reduce
+from functools import cached_property, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.window import Window
 
 from fluss_spark import fsops
@@ -185,7 +186,7 @@ class KvStore:
         # commit, and the JVM analysis round was a measurable slice of
         # the per-commit driver gap. Keyed by (data dir, spark session).
         self._dir_cache: dict[tuple, DataFrame] = {}
-        self._partpath_parse_cache: dict[str, tuple | None] = {}
+        self._partpath_parse_cache: dict[tuple[str, str], tuple | None] = {}
 
     # ------------------------------------------------------------------ #
     # manifests
@@ -276,39 +277,26 @@ class KvStore:
                     out.append(("" if rel == "." else rel, int(d[len(marker):])))
         return sorted(out)
 
-    def _parsed_partpath(self, partpath: str):
-        """Typed partition-value tuple parsed from a manifest partpath
-        string (the inverse of Spark's hive path escaping — always
-        PARSE dir strings, never construct them), or None when a value
-        type has no exact driver-side parse (those tables keep
-        bucket-level dir pruning only). Cached per partpath — manifest
-        strings repeat across versions."""
-        import datetime
+    def _parsed_partpath(self, partpath: str, tz: str):
+        """The `_partition_key` of a manifest partpath (always PARSE dir
+        strings, never construct them): each value unescaped and cast to
+        its column's `bucketing.to_internal` form as Spark's partition
+        discovery casts it, TIMESTAMP_LTZ in the session time zone `tz`;
+        None if a segment does not parse. Cached per (partpath, tz)."""
         import urllib.parse
 
-        cached = self._partpath_parse_cache.get(partpath)
-        if cached is not None or partpath in self._partpath_parse_cache:
+        cached = self._partpath_parse_cache.get((partpath, tz), False)
+        if cached is not False:
             return cached
-        types = {f.name: f.type.upper() for f in self.schema.fields}
-        vals: list = []
-        out = None
+        types = {f.name: parse_type(f.type) for f in self.schema.fields}
         try:
-            for seg in partpath.split("/"):
-                k, v = seg.split("=", 1)
-                v = urllib.parse.unquote(v)
-                t = types[k]
-                if t in ("STRING", "VARCHAR", "CHAR"):
-                    vals.append(v)
-                elif t in ("INT", "INTEGER", "BIGINT", "SMALLINT", "TINYINT"):
-                    vals.append(int(v))
-                elif t == "DATE":
-                    vals.append(datetime.date.fromisoformat(v))
-                else:  # float/timestamp/bool: no exact text parse
-                    raise ValueError(t)
-            out = tuple(vals)
-        except (ValueError, KeyError):
+            out = _partition_key(
+                to_internal(urllib.parse.unquote(v), types[k], tz)
+                for k, v in (seg.split("=", 1) for seg in partpath.split("/"))
+            )
+        except (ValueError, KeyError, TypeError, ArithmeticError):
             out = None
-        self._partpath_parse_cache[partpath] = out
+        self._partpath_parse_cache[(partpath, tz)] = out
         return out
 
     def _partpath_filter(self, partpath: str):
@@ -716,18 +704,22 @@ class KvStore:
                 # entry's partpath back to typed values (never construct
                 # paths) and keep only entries matching a batch pair —
                 # the prior feed's PLAN then holds O(batch pairs) dirs,
-                # not every dir holding those buckets. Entries whose
-                # partpath has no exact driver-side parse are kept
-                # conservatively.
+                # not every dir holding those buckets. Both sides compare
+                # as Spark's `=` in pair_pred does; entries whose
+                # partpath does not parse are kept conservatively.
+                tz = b.sparkSession.conf.get("spark.sql.session.timeZone")
+                types = {f.name: parse_type(f.type) for f in self.schema.fields}
                 want = {
-                    tuple(r[p] for p in pcols) + (int(r["__b"]),) for r in rows
+                    _partition_key(to_internal(r[p], types[p], tz) for p in pcols)
+                    + (int(r["__b"]),)
+                    for r in rows
                 }
                 bset = set(batch_buckets)
                 pair_keys = []
                 for pp, bkt in manifest_now or {}:
                     if bkt not in bset:
                         continue
-                    parsed = self._parsed_partpath(pp)
+                    parsed = self._parsed_partpath(pp, tz)
                     if parsed is None or parsed + (bkt,) in want:
                         pair_keys.append((pp, bkt))
         else:
@@ -1270,7 +1262,7 @@ class KvStore:
 
         A WAL-only commit (deferred materialization) emits only the
         __dest=w copies. The driver then renames __dest=w to the log
-        staging dir and __dest=s to snapshot/data-vN — metadata-only
+        commit dir and __dest=s to snapshot/data-vN — metadata-only
         moves (_commit_finish). Snapshot copies null out the WAL system
         columns (_change_type, __seq, __sub, __offset, __timestamp): no
         reader consumes them on the snapshot surface and real values
@@ -1584,20 +1576,21 @@ class KvStore:
         for g, ts_ms in enumerate(ts_list):
             version = state0.version + 1 + g
             last = g == len(ts_list) - 1
-            staged = self.log.staging_path(version)
+            # straight into its log commit dir: numbered above CURRENT,
+            # it stays invisible until the commit below advances CURRENT
+            wal = self.log.commit_path(version)
             wal_part = os.path.join(w_root, f"__g={g}") if grouped else w_root
             if os.path.isdir(wal_part):
-                fsops.replace_dir(wal_part, staged)
+                fsops.replace_dir(wal_part, wal)
             else:  # no change events at all (e.g. deletes of absent keys)
-                fsops.makedirs(staged)
-            per_bucket = self.log._staged_hwm(spark, staged)
+                fsops.makedirs(wal)
+            per_bucket = self.log._staged_hwm(spark, wal)
             for bkt, mx in per_bucket.items():
                 hwm[str(bkt)] = mx + 1
             if schema.partition_keys:
-                touched.update(self._walk_pairs(staged))
+                touched.update(self._walk_pairs(wal))
             else:
                 touched.update(per_bucket)
-            self.log.publish(version)
 
             snapshot_version = state0.snapshot_version
             if last and not wal_only:
@@ -1727,8 +1720,8 @@ class KvStore:
         verbatim; a deferred (WAL-only) version folds the offset-bounded
         changelog slice onto the nearest older manifest. `buckets`
         restricts the read to those buckets' files (manifest + partition
-        dir pruning — the partitioned lookup path) and bounds the tail scan the
-        same way. Partitioned tables: `pair_pred` is a typed predicate
+        dir pruning — the commit's bounded seed) and bounds the tail
+        scan the same way. Partitioned tables: `pair_pred` is a typed predicate
         over the partition columns and __bucket that bounds the physical
         read (Spark partition pruning resolves it to directories, and it
         prunes the tail's WAL dirs identically); `pair_keys` is a set of
@@ -2124,8 +2117,9 @@ class KvStore:
     def lookup(self, spark: SparkSession, key: dict[str, object]) -> DataFrame:
         """Point lookup by full primary key (L1, Lookuper.java:43-56),
         answered on the driver without a Spark job: the client computes
-        the owning bucket (see `_keyed_read`) and reads only that
-        bucket's files from its one manifest data dir."""
+        the owning bucket and pyarrow reads only that bucket's files
+        from its one manifest data dir; the rows come back as an Arrow
+        table behind a DataFrame (see `_keyed_read`)."""
         pk = self.schema.primary_key
         if sorted(key) != sorted(pk):
             raise ValueError(f"lookup key must be the full primary key {pk}, got {sorted(key)}")
@@ -2168,44 +2162,53 @@ class KvStore:
         Murmur3 `hash()` of the typed bucket-key values, computed in
         Python (`bucketing.bucket_of`), so no job resolves it.
 
-        Unpartitioned tables read the bucket's Parquet files from the
-        ONE data dir the manifest maps it to with pyarrow, the key
-        equality pushed down as a row-group filter, and hand the rows to
-        Spark as a local relation: `collect()` runs no job and compiles
-        nothing. A deferred WAL tail merges on top through `_merge_tail`.
-        Partitioned tables keep the shadow-aware pair scan, bounded to
-        the bucket and the key's partition values."""
-        schema = self.schema
+        The manifest names the one data dir holding that bucket; on a
+        partitioned table, the (partition, bucket) entries whose parsed
+        partition values equal the key's. pyarrow reads those leaf dirs
+        with the key equality pushed down as a row-group filter
+        (`_bucket_rows`), and the rows come back as an `_ArrowFrame`:
+        collect(), count(), toPandas() and the like answer from the
+        Arrow table with no Spark job, and the JVM side is built only
+        if Spark needs it. A deferred WAL tail merges on top through
+        `_merge_tail`."""
+        import pyarrow as pa
+
+        schema, pcols = self.schema, self.schema.partition_keys
+        struct = schema.to_struct_type()
         types = {f.name: parse_type(f.type) for f in schema.fields}
         state = self.catalog.current_commit(self.db, self.table)
         # no manifest yet (a deferred table before its first
         # materialization) reads as an empty base under the tail
         manifest = self._manifest(state.snapshot_version) or {}
-        # a naive timestamp string means a time in the session zone
+        # a naive timestamp string means a time in the session zone, in
+        # a key and in a partition dir name alike
         tz = (
             spark.conf.get("spark.sql.session.timeZone")
-            if any(isinstance(key[c], str) and isinstance(types[c], T.TimestampType) for c in key)
+            if pcols or any(isinstance(key[c], str) and isinstance(types[c], T.TimestampType) for c in key)
             else "UTC"
         )
         want = {c: to_internal(v, types[c], tz) for c, v in key.items()}
         if not all(exact(key[c], want[c], types[c]) for c in key):
             # the key is cast for routing only: a value the column cannot
             # hold (7.5 for an INT) equals no stored row
-            return _empty_local(spark, schema.to_struct_type())
+            return _ArrowFrame(spark, struct)
         bkt = bucket_of([key[c] for c in bucket_key], [types[c] for c in bucket_key], schema.num_buckets, tz)
-        if schema.partition_keys:
-            # pair-granular manifest: the key's partition values (typed
-            # literals — Spark prunes partition dirs from them) plus the
-            # bucket bound the read through the shadow-aware pair scan;
-            # dirs not holding bucket `bkt` entries never enter the plan
-            pred = F.col(BUCKET_COL) == F.lit(bkt)
-            for c in schema.partition_keys:
-                if c in key:
-                    pred = pred & (F.col(c) == F.lit(key[c]).cast(types[c]))
-            return self.snapshot(
-                spark, buckets=[bkt], pair_pred=pred
-            ).filter(self._key_cond(key))
-        base = self._bucket_rows(spark, manifest.get(bkt), bkt, want, types)
+        if pcols:
+            # partition values live in the dir names, parsed the way
+            # Spark's partition discovery casts them; a partition column
+            # the key leaves out matches every partition
+            sel = [i for i, c in enumerate(pcols) if c in key]
+            part = _partition_key(want[pcols[i]] for i in sel)
+            units = []
+            for (pp, b), data_dir in sorted(manifest.items()):
+                parsed = self._parsed_partpath(pp, tz) if b == bkt else None
+                if parsed is not None and tuple(parsed[i] for i in sel) == part:
+                    leaf = os.path.join(pp, f"{BUCKET_COL}={bkt}")
+                    units.append((data_dir, leaf, dict(zip(pcols, parsed))))
+        else:
+            units = [(manifest[bkt], f"{BUCKET_COL}={bkt}", {})] if bkt in manifest else []
+        tables = [self._bucket_rows(d, leaf, want, types, consts) for d, leaf, consts in units]
+        base = _ArrowFrame(spark, struct, pa.concat_tables(tables) if tables else None)
         tail_start = self._tail_start(state)
         if tail_start is None:
             return base
@@ -2219,61 +2222,54 @@ class KvStore:
         )
         return self._merge_tail(base, tail)
 
-    def _bucket_rows(self, spark, data_dir, bkt: int, want: dict, types: dict) -> DataFrame:
-        """The rows of `<data_dir>/__bucket=<bkt>/` whose columns equal
-        the `to_internal` key values `want`, read by pyarrow and returned
-        as a local relation in the current schema. Schema-evolved (era)
-        dirs are read in their physical layout, then mapped by
-        `era_projection`."""
+    def _bucket_rows(self, data_dir: str, leaf: str, want: dict, types: dict, consts: dict):
+        """The rows of `<data_dir>/<leaf>/*.parquet` whose columns equal
+        the `to_internal` key values `want`, read by pyarrow into an
+        Arrow table of the current schema (`to_arrow_schema`). A
+        schema-evolved (era) dir is mapped in Arrow: each column is
+        found by field id and cast to its current type (an ALTER admits
+        only widenings, `types.is_widening`, which Arrow casts exactly),
+        and columns added since read as nulls. `consts` holds the leaf's
+        partition values (`to_internal`), which Spark keeps in the dir
+        names, not in the files."""
         import pyarrow as pa
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from fluss_spark.types import era_projection, era_struct_fields
-
-        current = self.schema.to_struct_type()
-        leaf = os.path.join(self.snapshot_dir, data_dir or "", f"{BUCKET_COL}={bkt}")
-        files = sorted(glob.glob(os.path.join(glob.escape(leaf), "*.parquet"))) if data_dir else []
+        target = to_arrow_schema(self.schema.to_struct_type())
+        path = os.path.join(self.snapshot_dir, data_dir, leaf)
+        files = sorted(glob.glob(os.path.join(glob.escape(path), "*.parquet")))
         if not files:
-            return _empty_local(spark, current)
+            return target.empty_table()
         era = self._era_for_dir(data_dir)
-        phys = current if era is None else T.StructType(era_struct_fields(self.schema, era))
+        # each current column's name in the files (None: added since)
+        phys = {f.name: f.name if era is None else era.get(f.field_id, (None,))[0] for f in self.schema.fields}
         # Spark writes TIMESTAMP_LTZ as INT96; read at micros, Spark's
         # own unit (nanos would overflow outside 1677..2262)
         parquet = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us"))
         dataset = ds.dataset(files, format=parquet)
         cond, nested = None, []
-        for f in self.schema.fields:
-            if f.name not in want:
+        for c, value in want.items():
+            if c in consts:
                 continue
-            name = f.name if era is None else era[f.field_id][0]
-            dt = types[f.name]
-            if isinstance(dt, (T.ArrayType, T.StructType)):
-                nested.append((name, dt, want[f.name]))  # arrow has no nested ==
+            if isinstance(types[c], (T.ArrayType, T.StructType)):
+                nested.append((c, value))  # arrow has no nested ==
                 continue
-            term = _arrow_eq(ds.field(name), want[f.name], dt, dataset.schema.field(name).type)
+            term = _arrow_eq(ds.field(phys[c]), value, types[c], dataset.schema.field(phys[c]).type)
             cond = term if cond is None else cond & term
-        target = to_arrow_schema(phys)
-        present = [n for n in target.names if n in dataset.schema.names]
-        table = dataset.to_table(columns=present, filter=cond)
-        # columns added after the dir was written read as nulls; the cast
-        # labels Spark's tz-naive INT96 timestamps as the UTC instants
-        # they are (unlabelled, createDataFrame would shift them by the
-        # session time zone)
+        table = dataset.to_table(columns=[n for n in phys.values() if n in dataset.schema.names], filter=cond)
+        n = table.num_rows
+        cols = {c: pa.repeat(_arrow_value(v, types[c]), n) for c, v in consts.items()}
+        cols.update((c, table.column(p)) for c, p in phys.items() if p in table.column_names)
+        # the cast also labels Spark's tz-naive INT96 timestamps as the
+        # UTC instants they are
         table = pa.Table.from_arrays(
-            [
-                table.column(f.name) if f.name in present else pa.nulls(table.num_rows, f.type)
-                for f in target
-            ],
-            names=target.names,
-        ).cast(target)
-        for name, dt, value in nested:
-            mask = [to_internal(v, dt) == value for v in table.column(name).to_pylist()]
+            [cols[f.name].cast(f.type) if f.name in cols else pa.nulls(n, f.type) for f in target], schema=target
+        )
+        for c, value in nested:
+            mask = [to_internal(v, types[c]) == value for v in table.column(c).to_pylist()]
             table = table.filter(pa.array(mask, pa.bool_()))
-        if not table.num_rows:
-            return _empty_local(spark, current)
-        df = spark.createDataFrame(table, phys)
-        return df if era is None else df.select(era_projection(self.schema, era, []))
+        return table
 
     @staticmethod
     def _key_cond(key: dict[str, object]):
@@ -2283,14 +2279,87 @@ class KvStore:
         return cond
 
 
-def _empty_local(spark: SparkSession, struct: T.StructType) -> DataFrame:
-    """A zero-row result as a local relation: collecting it starts no
-    Spark job, where `createDataFrame([], struct)` is backed by an RDD
-    and starts one. `empty_table()` gives every column one (empty)
-    chunk — createDataFrame rejects nested columns with none."""
-    from pyspark.sql.pandas.types import to_arrow_schema
+class _ArrowFrame(ClassicDataFrame):
+    """A keyed read's result: the rows pyarrow read on the driver, held
+    as an Arrow table, the way the reference's Lookuper completes the
+    client's future with the encoded rows (Lookuper.java:43-56).
+    collect(), count(), isEmpty(), schema, columns and toArrow() answer
+    from that table, with no Spark job; so does toPandas() with Arrow
+    off, through collect(). Whatever needs the plan (a join, select,
+    explain, inputFiles(), a write, a tail merge, toPandas() with Arrow
+    on) goes through `_jdf`, built on first use as a local relation over
+    the same table and kept. toPandas() with Arrow on stays on that
+    route: pandas reads a struct's children under null structs, and
+    those slots differ between pyarrow's reads and the JVM's batches."""
 
-    return spark.createDataFrame(to_arrow_schema(struct).empty_table(), struct)
+    def __new__(cls, *args):
+        return object.__new__(cls)  # DataFrame.__new__ would run __init__ twice
+
+    def __init__(self, spark: SparkSession, struct: T.StructType, table=None):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self._session, self._sc = spark, spark.sparkContext
+        self.is_cached, self._support_repr_html = False, False
+        self._struct = struct
+        # empty_table() gives every column one (empty) chunk:
+        # createDataFrame rejects nested columns with none
+        self._table = table if table is not None and table.num_rows else to_arrow_schema(struct).empty_table()
+
+    @cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self._table, self._struct)._jdf
+
+    @property
+    def schema(self) -> T.StructType:
+        return self._struct
+
+    def collect(self) -> list:
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        # the conf that picks bytes or bytearray is read only when a
+        # binary type (or a column so named) can need it: a py4j call
+        as_bytes = "binary" not in self._struct.simpleString() or (
+            self._session.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true").lower() == "true"
+        )
+        return ArrowTableToRowsConversion.convert(self._table, self._struct, binary_as_bytes=as_bytes)
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def isEmpty(self) -> bool:
+        return self._table.num_rows == 0
+
+    def toArrow(self):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        large = self._session._jconf.arrowUseLargeVarTypes()
+        return self._table.cast(
+            to_arrow_schema(self._struct, error_on_duplicated_field_names_in_struct=True, prefers_large_types=large)
+        )
+
+
+_NAN = float("nan")
+
+
+def _partition_key(values) -> tuple:
+    """Partition values as a tuple that compares like Spark's `=`:
+    every NaN becomes the one `_NAN` object, and tuples compare their
+    items by identity first, so NaN equals NaN."""
+    return tuple(_NAN if v != v else v for v in values)
+
+
+def _arrow_value(want, dt, tz=None):
+    """The pyarrow scalar of a `to_internal` value of column type `dt`,
+    timestamps labelled with the time zone `tz`."""
+    import pyarrow as pa
+
+    if isinstance(dt, T.DecimalType):
+        return pa.scalar(decimal.Decimal(f"{want}E-{dt.scale}"), pa.decimal128(dt.precision, dt.scale))
+    if isinstance(dt, T.DateType):
+        return pa.scalar(want, pa.date32())
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        return pa.scalar(want, pa.timestamp("us", tz=tz))
+    return pa.scalar(want)
 
 
 def _arrow_eq(field, want, dt, ftype):
@@ -2306,16 +2375,7 @@ def _arrow_eq(field, want, dt, ftype):
         return pc.scalar(False)  # `= NULL` matches no row
     if isinstance(dt, (T.FloatType, T.DoubleType)) and math.isnan(want):
         return pc.is_nan(field)  # Spark's = treats NaN as equal to NaN
-    if isinstance(dt, T.DecimalType):
-        value = pa.scalar(
-            decimal.Decimal(f"{want}E-{dt.scale}"), pa.decimal128(dt.precision, dt.scale)
-        )
-    elif isinstance(dt, T.DateType):
-        value = pa.scalar(want, pa.date32())
-    elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        value = pa.scalar(want, pa.timestamp("us", tz=ftype.tz))
-    else:
-        value = pa.scalar(want)
+    value = _arrow_value(want, dt, getattr(ftype, "tz", None))
     try:
         physical = value.cast(ftype)
     except pa.ArrowInvalid:  # out of range, or lossy for decimals

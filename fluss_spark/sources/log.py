@@ -15,7 +15,8 @@ Reference semantics reproduced (not the implementation):
   - `__timestamp` = commit time (TableDescriptor.java:60)
   - commit protocol: data files are STAGED under <table>/.tmp/log-v<V>
     (hidden from every Spark reader, including the native file-source
-    stream), atomically renamed into log/__commit=<V>/ at commit time,
+    stream), atomically renamed into log/__commit=<V>/ at commit time
+    (a PK commit renames its fused write's WAL dir there directly),
     then meta/CURRENT advances; batch readers list only the dirs with
     log_floor <= V <= CURRENT, so even the rename -> CURRENT instant is
     fenced.
@@ -157,18 +158,13 @@ class LogStore:
         ordering: list[str] | None = None,
         extra_cols: list[str] | None = None,
         commit_ts_ms: int | None = None,
-        defer_commit: bool = False,
         auto_increment_override: dict[str, int] | None = None,
     ) -> CommitState:
         """Append a batch; assigns __bucket/__offset/__timestamp and
         commits atomically. `ordering` fixes intra-batch offset order
         (deterministic replay); default is arrival order per partition.
         `extra_cols` admits system columns (e.g. _change_type for PK-table
-        WALs) beyond the user schema. With `defer_commit`, files stay in
-        the staging dir and the new CommitState is returned, but neither
-        publish() nor the meta/CURRENT advance happens — the caller
-        publishes + commits after adding more to the same version (PK
-        upsert bundles WAL + snapshot into one commit).
+        WALs) beyond the user schema.
         `auto_increment_override` means the caller already stamped the
         auto-increment columns (pk-table WALs carry insert-stable ids the
         log layer cannot derive) and supplies the advanced counter map;
@@ -207,9 +203,8 @@ class LogStore:
             hwm[str(bkt)] = mx + 1
 
         new_state = replace(state, version=version, log_hwm=hwm, auto_increment=auto_next, ts_ms=ts_ms)
-        if not defer_commit:
-            self.publish(version)
-            self.catalog.commit(self.db, self.table, new_state)
+        self.publish(version)
+        self.catalog.commit(self.db, self.table, new_state)
         return new_state
 
     def _append_plan(
@@ -307,7 +302,7 @@ class LogStore:
         return out.select(*final_cols, BUCKET_COL, OFFSET_COL, TIMESTAMP_COL), auto_next
 
     def _staged_hwm(self, spark: SparkSession, staged: str) -> dict[int, int]:
-        """Per-bucket max(__offset) of a staged commit dir, from Parquet
+        """Per-bucket max(__offset) of a written commit dir, from Parquet
         footer statistics (driver-side, metadata-only: one footer read
         per file — O(buckets), independent of rows). Only when a file
         lacks offset stats does a Spark job read the offsets back."""

@@ -427,12 +427,16 @@ def test_upsert_crash_before_current_advance_is_invisible(
     batch = spark.createDataFrame([(2, 20.0), (3, 3.0)], "id bigint, v double")
 
     if crash_point == "publish":
-        orig = type(t.log).publish
+        from fluss_spark import fsops
 
-        def boom(self, version):
-            raise RuntimeError("simulated crash before publish")
+        orig = fsops.replace_dir
 
-        monkeypatch.setattr(type(t.log), "publish", boom)
+        def boom(src, dst):  # the WAL dir's move into the log publishes it
+            if str(dst).startswith(t.log.log_dir):
+                raise RuntimeError("simulated crash before publish")
+            return orig(src, dst)
+
+        monkeypatch.setattr(fsops, "replace_dir", boom)
     else:
         orig = type(catalog).commit
 

@@ -3,18 +3,28 @@ must return exactly `snapshot().filter(key)`: hits, misses, buckets
 holding no rows, typed and nested value columns with nulls, under a
 UTC and a non-UTC session time zone (the bucket files are read by
 pyarrow, and Spark's INT96 timestamps come back tz-naive), plus
-schema-evolved (era) dirs and a deferred WAL tail."""
+schema-evolved (era) dirs, partitioned tables and a deferred WAL tail.
+
+With no WAL tail pending, the result is an Arrow-backed frame: every
+probe also checks that its collect(), count(), isEmpty(), schema,
+columns, toArrow() and toPandas() equal those of the local relation
+Spark builds from the same Arrow table, value for value and type for
+type, and that they run no Spark job and never build the JVM side."""
 
 from __future__ import annotations
 
 import datetime
 import decimal
+import os
+import uuid
 from functools import reduce
 
 import pytest
 from pyspark.sql import functions as F
 
+import plan_inspect as plans
 from fluss_spark.catalog import Catalog
+from fluss_spark.sources.kv import _ArrowFrame
 from fluss_spark.table import FlussTable, create_table
 from fluss_spark.types import Field, TableSchema
 
@@ -69,17 +79,66 @@ def _norm(rows):
     return sorted(repr(r.asDict(recursive=True)) for r in rows)
 
 
+def _answers(df) -> dict:
+    """What a lookup's caller reads off `df` without a plan, each in a
+    form whose repr shows Python types as well as values (bytes vs
+    bytearray, int vs float, tz-aware vs naive datetimes). toPandas()
+    runs with Arrow off (with Arrow on it takes the JVM route); one that
+    raises answers with its exception type."""
+    spark = df.sparkSession
+    old = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled")
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    try:
+        pdf = df.toPandas()
+        pandas = repr(pdf.dtypes.to_dict()) + repr(pdf.to_dict("list"))
+    except Exception as e:  # a timestamp past pandas' nanosecond range
+        pandas = type(e).__name__
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", old)
+    return {
+        "collect": repr(df.collect()), "count": df.count(), "isEmpty": df.isEmpty(),
+        "schema": df.schema, "columns": df.columns, "toArrow": df.toArrow(), "toPandas": pandas,
+    }
+
+
+def _assert_answers_from_arrow(spark, df):
+    """`df` answers exactly as `spark.createDataFrame(arrow, struct)`
+    over its Arrow table does, without a Spark job and without building
+    its JVM side."""
+    assert isinstance(df, _ArrowFrame)
+    sc = spark.sparkContext
+    group = f"arrow-frame-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "arrow-backed lookup result")
+    try:
+        got = _answers(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert "_jdf" not in vars(df)
+    want = _answers(spark.createDataFrame(df._table, df.schema))
+    assert got.keys() == want.keys()
+    for k in got:
+        assert got[k] == want[k], (k, got[k], want[k])
+
+
 class _Equivalence:
     """Checks keyed reads against `snapshot().filter(key)`: the first
     probe runs that filter in Spark; the rest filter the snapshot's
-    rows, collected once, by the same key equality."""
+    rows, collected once, by the same key equality. With no WAL tail
+    pending, each result must also answer from Arrow
+    (`_assert_answers_from_arrow`)."""
 
     def __init__(self, spark, t):
         self.spark, self.t = spark, t
         self.rows = None
+        self.arrow = t.kv._tail_start(t.catalog.current_commit(t.db, t.name)) is None
 
     def __call__(self, key, prefix=False):
-        got = (self.t.prefix_lookup if prefix else self.t.lookup)(self.spark, key).collect()
+        df = (self.t.prefix_lookup if prefix else self.t.lookup)(self.spark, key)
+        if self.arrow:
+            _assert_answers_from_arrow(self.spark, df)
+        got = df.collect()
         if self.rows is None:
             cond = reduce(lambda a, b: a & b, [F.col(c) == F.lit(v) for c, v in key.items()])
             want = self.t.snapshot(self.spark).filter(cond).collect()
@@ -307,3 +366,87 @@ def test_array_key_lookup_equals_filtered_snapshot(spark, catalog):
             check({"k": k, "s": s})
         check({"k": k}, prefix=True)
     assert [r["v"] for r in t.lookup(spark, {"k": [4, None, -4], "s": "s1"}).collect()] == [41]
+
+
+def test_arrow_backed_result_builds_its_plan_when_spark_needs_one(spark, catalog):
+    """Uses that need a plan build the JVM side once, on first use, as
+    the local relation over the same Arrow table: a join, select,
+    explain, inputFiles() (a local relation reads no file), toPandas()
+    with Arrow on, and a write all still work, for a hit and a miss."""
+    t = create_table(
+        catalog, "db", "plan_side",
+        TableSchema(
+            fields=[Field("k", "INT"), Field("s", "INT"), Field("st", "ROW<a INT, b STRING>")],
+            primary_key=["k", "s"],
+            bucket_keys=["k"],
+            num_buckets=4,
+        ),
+    )
+    t.upsert(spark.createDataFrame(
+        [(k, s, None if s else (k, None)) for k in range(6) for s in range(2)], "k int, s int, st struct<a:int,b:string>"
+    ))
+    for key, n in (({"k": 3}, 2), ({"k": 99}, 0)):
+        df = t.prefix_lookup(spark, key)
+        ref = spark.createDataFrame(df._table, df.schema)
+        assert "_jdf" not in vars(df)
+        assert df.join(ref.select("k", "s"), ["k", "s"]).count() == n
+        jdf = vars(df)["_jdf"]
+        assert df.select("s").orderBy("s").collect() == ref.select("s").orderBy("s").collect()
+        assert "LocalTableScan" in plans.physical_plan(df)
+        assert df.inputFiles() == []
+        assert vars(df)["_jdf"] is jdf  # built once
+        assert repr(df.toPandas().to_dict("list")) == repr(ref.toPandas().to_dict("list"))
+        out = str(catalog.warehouse) + f"/out-{n}"
+        df.write.parquet(out)
+        assert spark.read.parquet(out).count() == n
+
+
+def test_partitioned_keyed_reads_answer_from_arrow(spark, catalog, monkeypatch):
+    """A partitioned table reads the one leaf dir of the manifest's
+    (partition, bucket) entry whose partition values equal the key's,
+    adding the partition columns as typed constants: no Spark job, the
+    same rows as `snapshot().filter(key)` for hits, misses, absent
+    partitions and partitions a later commit rewrote."""
+    t = create_table(
+        catalog, "db", "part_kr",
+        TableSchema(
+            fields=[
+                Field("day", "DATE", nullable=False), Field("region", "INT", nullable=False),
+                Field("k", "BIGINT", nullable=False), Field("s", "INT", nullable=False), Field("v", "STRING"),
+            ],
+            primary_key=["day", "region", "k", "s"],
+            partition_keys=["day", "region"],
+            bucket_keys=["k"],
+            num_buckets=4,
+        ),
+    )
+    days = [datetime.date(2024, 1, d) for d in (1, 2)]
+    ddl = "day date, region int, k long, s int, v string"
+    t.upsert(spark.createDataFrame(
+        [(d, r, k, s, f"{d.day}.{r}.{k}.{s}") for d in days for r in (1, 20) for k in range(6) for s in range(2)], ddl
+    ))
+    # a second commit rewrites one partition: its entries move to a new dir
+    t.upsert(spark.createDataFrame([(days[1], 20, 3, 0, "new"), (days[1], 20, 3, 5, "added")], ddl))
+    t.delete(spark.createDataFrame([(days[0], 1, 4, 1)], "day date, region int, k long, s int"))
+    ver = catalog.current_commit("db", "part_kr").snapshot_version
+    assert len(t.kv.referenced_data_dirs(ver)) >= 2
+    check = _Equivalence(spark, t)
+    for d in days + [datetime.date(2024, 1, 3)]:
+        for r in (1, 20, 7):
+            for k in (3, 4, 50):
+                check({"day": d, "region": r, "k": k, "s": 0})
+                check({"day": d, "region": r, "k": k, "s": 1})
+                check({"day": d, "region": r, "k": k}, prefix=True)
+    # a key value cast to the column type (a SQL literal), filtered by Spark
+    assert _Equivalence(spark, t)({"day": "2024-01-02", "region": 20.0, "k": "3", "s": 1}) == 1
+    import pyarrow.dataset as pads
+
+    opened, real = [], pads.dataset
+    monkeypatch.setattr(pads, "dataset", lambda src, *a, **kw: opened.extend(src) or real(src, *a, **kw))
+    rows = t.prefix_lookup(spark, {"day": days[1], "region": 20, "k": 3}).collect()
+    leaves = {os.path.relpath(os.path.dirname(f), t.kv.snapshot_dir) for f in opened}
+    leaf = f"/day=2024-01-02/region=20/__bucket={_buckets_of(spark, [3])[3]}"
+    assert len(leaves) == 1 and leaves.pop().endswith(leaf), leaves
+    assert sorted((r["day"], r["region"], r["s"], r["v"]) for r in rows) == [
+        (days[1], 20, 0, "new"), (days[1], 20, 1, "2.20.3.1"), (days[1], 20, 5, "added")
+    ]

@@ -1,7 +1,7 @@
 """The two-pass WAL-first PK commit: the independent baseline that
 tests/test_commit_equivalence.py compares the engine's fused
 single-action commit against. It derives the same commit artifacts a
-different way — a WAL append through `LogStore.append`, then a snapshot
+different way — a WAL append through `LogStore`'s append plan, then a snapshot
 rewrite that re-reads the staged WAL files and re-derives survivors by
 anti-join — so the two implementations can only agree if both follow
 the reference contract.
@@ -10,6 +10,8 @@ the reference contract.
 from __future__ import annotations
 
 import os
+import time
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,6 +111,37 @@ def stamp_autoinc_baseline(
     return ev.select(*orig_cols), auto_next
 
 
+def _stage_wal(
+    kv: KvStore,
+    spark: SparkSession,
+    changelog: DataFrame,
+    wal_order: list[str],
+    commit_ts_ms: int | None,
+    auto_override: dict[str, int] | None,
+) -> CommitState:
+    """The baseline's WAL pass: LogStore's append plan written to the
+    next version's staging dir, left unpublished so the snapshot pass
+    can join the same version. Returns that version's state (HWMs from
+    the staged footers); nothing is committed yet."""
+    state = kv.catalog.current_commit(kv.db, kv.table)
+    version = state.version + 1
+    ts_ms = commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
+    out, auto_next = kv.log._append_plan(
+        changelog, state, ts_ms, wal_order, [CHANGE_TYPE_COL, SEQ_COL, SUB_COL], auto_override
+    )
+    staged = kv.log.staging_path(version)
+    (
+        out.write.mode("overwrite")
+        .option("compression", kv.schema.properties.get("table.log.compression", "snappy"))
+        .partitionBy(*kv.schema.partition_keys, BUCKET_COL)
+        .parquet(staged)
+    )
+    hwm = dict(state.log_hwm)
+    for bkt, mx in kv.log._staged_hwm(spark, staged).items():
+        hwm[str(bkt)] = mx + 1
+    return replace(state, version=version, log_hwm=hwm, auto_increment=auto_next, ts_ms=ts_ms)
+
+
 def commit_twopass(
     kv: KvStore, spark: SparkSession, changelog: DataFrame, commit_ts_ms: int | None
 ) -> CommitState:
@@ -144,14 +177,7 @@ def commit_twopass(
             kv, spark, stamp_persist
         )
     try:
-        state = kv.log.append(
-            changelog,
-            ordering=wal_order,
-            extra_cols=[CHANGE_TYPE_COL, SEQ_COL, SUB_COL],
-            commit_ts_ms=commit_ts_ms,
-            defer_commit=True,
-            auto_increment_override=auto_override,
-        )
+        state = _stage_wal(kv, spark, changelog, wal_order, commit_ts_ms, auto_override)
     finally:
         if stamp_persist is not None:
             stamp_persist.unpersist()
