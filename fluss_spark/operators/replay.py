@@ -17,7 +17,8 @@ Input contract (prepared by sources/kv.py):
     __is_seed 1 for snapshot seed rows, else 0
 
 Output: changelog rows (data cols + _change_type + __seq + __sub) and
-snapshot rows (data cols), as two DataFrames derived from one plan.
+snapshot rows (data cols), as two DataFrames derived from one plan (the
+PK commit's `images` contract instead routes both in one frame).
 
 A sequential pandas fold (`replay_exact`) covers the one combination the
 window path does not: partial updates interleaved with deletes, where a
@@ -44,6 +45,7 @@ OP_COL = "__op"
 SEQ_COL = "__seq"
 SEED_COL = "__is_seed"
 SUB_COL = "__sub"
+DEST_COL = "__dest"  # fused commit routing: 'w' event, 's' image, NULL anchor
 
 _LONG_MIN = -(2**63)
 
@@ -76,7 +78,7 @@ def _lag_over(pk: list[str], order: str | None = None) -> str:
 # per-key frames are identical, but a frame partitioned by
 # (bucket, pk) is satisfied by a hash(bucket) exchange — so the fold,
 # the changelog emission and the downstream commit windows (offsets,
-# is-last, id carry — all PARTITION BY bucket[, pk]) share ONE
+# touched units, id carry — all PARTITION BY bucket[, pk]) share ONE
 # bucket-keyed exchange (sized by bucketing.exchange_width) instead of a
 # pk exchange plus a bucket exchange (guide §2.4: two operations keyed
 # the same way share one exchange).
@@ -93,19 +95,30 @@ def emit_select_list(
     prev_present: str,
     emit_cond: str,
     extra_cols: list[str] | None = None,
-    emit_prior: bool = False,
+    images: bool | None = None,
+    anchors: bool = False,
+    last: str = "__last",
 ) -> list[str]:
     """Select list of the changelog-emission layer (see `_emit`). A
     standalone string builder so `replay` (`_emit`) and the PK commit's
     SQL fold (kv.KvStore._fold) emit from the SAME expression
     strings. Empty slots come out as all-null rows that
-    `EMIT_WHERE` drops."""
+    `EMIT_WHERE` drops.
 
-    def mk(ct_expr: str, row: str | None, sub: int) -> str:
+    Unless `images` is None (the fused commit, see `replay`) rows carry
+    `__dest`: 'w' on events; with `images` True the key's last row
+    (`last`) adds its snapshot image ('s', change type NULL) — a batch
+    row's after-image (`__sub` 2, after its events) or the seed row
+    itself (`__sub` -1). `anchors` (auto-increment) keeps every seed
+    row as the id carry's anchor (`__dest` NULL unless the image)."""
+    dest = images is not None
+
+    def mk(ct_expr: str, row: str | None, sub: int, dest_sql: str = "'w'") -> str:
         val = (lambda c: f"({row}).`{c}`") if row is not None else (lambda c: f"`{c}`")
         return (
             f"named_struct('{SUB_COL}', {sub}, '{CHANGE_TYPE_COL}', {ct_expr}, "
             + ", ".join(f"'{c}', {val(c)}" for c in cols)
+            + (f", '{DEST_COL}', {dest_sql}" if dest else "")
             + ")"
         )
 
@@ -119,12 +132,21 @@ def emit_select_list(
     )
     slot2 = f"CASE WHEN {is_u} AND ({prev_present}) THEN {mk(repr(UPDATE_AFTER), cur_state, 1)} END"
     slots = [slot1, slot2]
-    if emit_prior:
-        # the seed row IS the prior-snapshot row: raw columns, no state
+    no_ct = "CAST(NULL AS STRING)"
+    if images:
+        slots.append(
+            f"CASE WHEN `{SEED_COL}` = 0 AND {last} AND ({cur_state}) IS NOT NULL"
+            f" THEN {mk(no_ct, cur_state, 2, repr('s'))} END"
+        )
+    if images or anchors:
+        # the seed row is the key's prior state: raw columns, no state
         # struct (identical values — the seed sorts first, so no event
         # has folded into the running state yet)
+        seed_dest = f"CASE WHEN {last} THEN 's' END" if images else no_ct
+        only_last = "" if anchors else f" AND {last}"
         slots.append(
-            f"CASE WHEN `{SEED_COL}` = 1 THEN {mk('CAST(NULL AS STRING)', None, -1)} END"
+            f"CASE WHEN `{SEED_COL}` = 1{only_last}"
+            f" THEN {mk(no_ct, None, -1, seed_dest)} END"
         )
     return [
         f"`{SEQ_COL}`",
@@ -148,7 +170,7 @@ def _emit(
     prev_present: str,
     emit_cond: str,
     extra_cols: list[str] | None = None,
-    emit_prior: bool = False,
+    **dest,
 ) -> DataFrame:
     """Assemble changelog rows: per input record an array of 0-2 change
     events, exploded JVM-side. All state arguments are SQL expression
@@ -166,15 +188,12 @@ def _emit(
     constant.
 
     `extra_cols` ride through unchanged (the commit path keeps __bucket
-    so its windows reuse the fold's exchange). `emit_prior` additionally
-    emits each SEED row as a prior-state row (`_change_type` NULL,
-    `__sub` -1, data columns verbatim) — the exact convention the fused
-    commit's snapshot-rewrite feed uses, so the prior rows ride the
-    fold's exchange instead of a second scan of the snapshot."""
+    so its windows reuse the fold's exchange). `dest` holds the fused
+    commit's `images` / `anchors` / `last` (see `emit_select_list`)."""
     return df.selectExpr(
         *emit_select_list(
             cols, cur_state, prev_state, prev_present, emit_cond,
-            extra_cols, emit_prior,
+            extra_cols, **dest,
         )
     ).filter(EMIT_WHERE)
 
@@ -186,7 +205,7 @@ def replay(
     merge_mode: str | None = None,
     may_have_deletes: bool = True,
     cluster_cols: list[str] | None = None,
-    emit_prior: bool = False,
+    images: bool | None = None,
     seq_order: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fold a change stream into (changelog_df, snapshot_df).
@@ -199,10 +218,14 @@ def replay(
     `may_have_deletes=False` is a caller hint (the batch carried no __op
     column, so every op is 'U') that skips the delete-probe jobs.
 
-    `cluster_cols` / `emit_prior` are the fused-commit contract (see the
-    note above _run_over and _emit): windows additionally keyed by the
-    clustering columns, and seed rows re-emitted as NULL-change-type
-    prior rows that carry the clustering columns through.
+    `cluster_cols` / `images` are the fused-commit contract (see the
+    note above _run_over and `emit_select_list`): windows additionally
+    keyed by the clustering columns, which ride through, and a
+    changelog whose rows carry `__dest` — change events ('w') plus,
+    with `images` True, each key's snapshot image ('s'); auto-increment
+    tables also keep every seed row as an id anchor. The commit reads
+    its snapshot from those images; the second frame is the standalone
+    derivation.
 
     `seq_order` is the ORDER BY of the window that numbered `__seq`
     (its columns still in `df`, see kv.KvStore._fold_input_sql): the
@@ -215,6 +238,10 @@ def replay(
     part = list(cluster_cols or []) + list(pk)
     if not pk:
         raise ValueError("replay requires a primary-key table")
+    dest = {
+        "images": images,
+        "anchors": images is not None and any(f.auto_increment for f in schema.fields),
+    }
 
     if schema.delete_behavior == "disable" and may_have_deletes:
         # DeleteBehavior.DISABLE (metadata/DeleteBehavior.java:28-47)
@@ -229,31 +256,27 @@ def replay(
                 (F.col(OP_COL) == "D") & (F.col(SEED_COL) == 0)
             ).limit(1).count() > 0
             if has_deletes:
-                out = replay_exact(
-                    df, schema, partial_update_cols, cluster_cols, emit_prior
-                )
+                out = replay_exact(df, schema, partial_update_cols, cluster_cols, **dest)
             else:
-                out = _replay_partial(
-                    df, schema, partial_update_cols, part, emit_prior, seq_order
-                )
+                out = _replay_partial(df, schema, partial_update_cols, part, seq_order, dest)
         else:
-            out = _replay_default(df, schema, part, emit_prior, seq_order)
+            out = _replay_default(df, schema, part, seq_order, dest)
         return _apply_changelog_image(
-            out, schema, full_row=not partial_update_cols, prior_rows=emit_prior
+            out, schema, full_row=not partial_update_cols, prior_rows=images is not None
         )
     if engine == "first_row":
-        return _replay_first_row(df, schema, part, emit_prior, seq_order)
+        return _replay_first_row(df, schema, part, seq_order, dest)
     if engine == "versioned":
         return _apply_changelog_image(
-            _replay_versioned(df, schema, part, emit_prior, seq_order),
-            schema, full_row=False, prior_rows=emit_prior,
+            _replay_versioned(df, schema, part, seq_order, dest),
+            schema, full_row=False, prior_rows=images is not None,
         )
     if engine == "aggregation":
         return _apply_changelog_image(
             _replay_aggregation(
-                df, schema, partial_update_cols, part, emit_prior, seq_order
+                df, schema, partial_update_cols, part, seq_order, dest
             ),
-            schema, full_row=False, prior_rows=emit_prior,
+            schema, full_row=False, prior_rows=images is not None,
         )
     raise ValueError(f"unknown merge engine: {engine}")
 
@@ -286,9 +309,10 @@ def _apply_changelog_image(
 
 def wal_image_where_sql(prior_rows: bool) -> str:
     """WAL changelog image: drop UPDATE_BEFORE rows. NULL-safe when
-    prior rows ride the changelog (fused commit: _change_type NULL marks
-    a prior-snapshot row, which the plain != filter would silently drop
-    — data loss on the rewrite feed). Shared with the SQL fold."""
+    snapshot images ride the changelog (fused commit: _change_type NULL
+    marks an image or an id anchor, which the plain != filter would
+    silently drop — data loss on the snapshot rewrite). Shared with the
+    SQL fold."""
     if prior_rows:
         return (
             f"(`{CHANGE_TYPE_COL}` IS NULL OR "
@@ -313,38 +337,38 @@ def wal_image_ct_case_sql() -> str:
 # ---------------------------------------------------------------------- #
 
 
-def default_fold_select_list(
-    cols: list[str], part: list[str], order: str | None = None
-) -> list[str]:
-    """Select list of the default-merge running-state layer (state
-    presence after each record). Shared by `_replay_default` and the
-    PK commit's SQL fold (kv.KvStore._fold). `order` is
-    the fold's ORDER BY (default `__seq`, see `_lag_over`); the
-    group-commit fold leads it with `__grp` so per-batch sequences
-    replay in batch-major order — identical per-key frames to N
-    sequential folds."""
-    lag_over = _lag_over(part, order)
+def default_fold_select_list(cols: list[str], over: str) -> list[str]:
+    """Columns of the default-merge running-state layer, all over the
+    fold window `over` (a `_lag_over` spec): the state after this
+    record (NULL once deleted), the state before it, and whether this
+    is the key's last record. Shared by `_replay_default` and the PK
+    commit's SQL fold (kv.KvStore._fold), which computes them in the
+    same window as the `__seq` numbering."""
     state = f"CASE WHEN `{OP_COL}` = 'U' THEN {_struct_sql(cols)} END"
     return [
-        "*",
         f"{state} AS __cur",
-        f"(`{OP_COL}` = 'U') AS __cur_present",
-        f"lag({state}) OVER ({lag_over}) AS __prev",
-        f"coalesce(lag(`{OP_COL}` = 'U') OVER ({lag_over}), false) AS __prev_present",
+        f"lag({state}) OVER ({over}) AS __prev",
+        f"coalesce(lag(`{OP_COL}` = 'U') OVER ({over}), false) AS __prev_present",
+        _last_sql(over),
     ]
+
+
+def _last_sql(over: str) -> str:
+    """`__last`: the key's last record in fold order — no row follows it
+    in the fold window, so its state is the key's snapshot image."""
+    return f"lead(1) OVER ({over}) IS NULL AS __last"
 
 
 def _replay_default(
     df: DataFrame,
     schema: TableSchema,
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-    seq_order: str | None = None,
+    part: list[str],
+    seq_order: str | None,
+    dest: dict,
 ) -> tuple[DataFrame, DataFrame]:
     pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
     extra = [c for c in part if c not in pk]
-    d = df.selectExpr(*default_fold_select_list(cols, part, seq_order))
+    d = df.selectExpr("*", *default_fold_select_list(cols, _lag_over(part, seq_order)))
     changelog = _emit(
         d,
         cols,
@@ -353,21 +377,15 @@ def _replay_default(
         prev_present="__prev_present",
         emit_cond="true",
         extra_cols=extra,
-        emit_prior=emit_prior,
+        **dest,
     )
-    snapshot = _final_state(d, part, cols)
-    return changelog, snapshot
+    return changelog, _final_state(d, cols)
 
 
-def _final_state(d: DataFrame, part: list[str], cols: list[str]) -> DataFrame:
-    pks = ", ".join(f"`{c}`" for c in part)
-    return (
-        d.selectExpr(
-            "*",
-            f"row_number() OVER (PARTITION BY {pks} ORDER BY `{SEQ_COL}` DESC) AS __rn",
-        )
-        .filter("__rn = 1 AND __cur_present")
-        .selectExpr(*[f"__cur.`{c}` AS `{c}`" for c in cols])
+def _final_state(d: DataFrame, cols: list[str]) -> DataFrame:
+    """Each key's state after its last record, unless that deleted it."""
+    return d.filter("__last AND __cur IS NOT NULL").selectExpr(
+        *[f"__cur.`{c}` AS `{c}`" for c in cols]
     )
 
 
@@ -380,16 +398,15 @@ def _replay_partial(
     df: DataFrame,
     schema: TableSchema,
     target_cols: list[str],
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-    seq_order: str | None = None,
+    part: list[str],
+    seq_order: str | None,
+    dest: dict,
 ) -> tuple[DataFrame, DataFrame]:
     """Running per-column state: target columns take the incoming value
     (explicit nulls overwrite — hence the struct wrapper that makes
     'set to null' distinguishable from 'not set'); untouched columns keep
     their last state (null before first write)."""
     pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
     extra = [c for c in part if c not in pk]
     run_over, lag_over = _run_over(part, seq_order), _lag_over(part, seq_order)
 
@@ -411,11 +428,12 @@ def _replay_partial(
     # two steps: __cur holds running-window state, so lag(__cur) must
     # sit in its own projection (window functions cannot nest)
     state = "struct(" + ", ".join(running) + ")"
-    d = df.selectExpr("*", f"{state} AS __cur", "true AS __cur_present")
+    d = df.selectExpr("*", f"{state} AS __cur")
     d = d.selectExpr(
         "*",
         f"lag(__cur) OVER ({lag_over}) AS __prev",
         f"(lag(true) OVER ({lag_over})) IS NOT NULL AS __prev_present",
+        _last_sql(lag_over),
     )
     changelog = _emit(
         d,
@@ -425,10 +443,9 @@ def _replay_partial(
         prev_present="__prev_present",
         emit_cond="true",
         extra_cols=extra,
-        emit_prior=emit_prior,
+        **dest,
     )
-    snapshot = _final_state(d, part, cols)
-    return changelog, snapshot
+    return changelog, _final_state(d, cols)
 
 
 # ---------------------------------------------------------------------- #
@@ -439,12 +456,15 @@ def _replay_partial(
 def _replay_first_row(
     df: DataFrame,
     schema: TableSchema,
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-    seq_order: str | None = None,
+    part: list[str],
+    seq_order: str | None,
+    dest: dict,
 ) -> tuple[DataFrame, DataFrame]:
+    """The key's first upsert wins and never changes: a batch winner is
+    the key's +I (and its snapshot image), a seed winner emits no event
+    (and is its own image). One row per key survives the winner
+    filter, so every row is its key's last."""
     pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
     extra = [c for c in part if c not in pk]
     winners = (
         df.filter(f"`{OP_COL}` = 'U'")
@@ -454,28 +474,19 @@ def _replay_first_row(
         )
         .filter("__rn = 1")
     )
-    if emit_prior:
-        # one row per winner, no union (keeps the fold's partitioning):
-        # a seed winner is the key's prior-snapshot row (the first write
-        # won before this batch — no changelog event), a batch winner is
-        # the +I insert
-        changelog = winners.selectExpr(
-            f"`{SEQ_COL}`",
-            *[f"`{c}`" for c in extra],
-            f"CASE WHEN `{SEED_COL}` = 1 THEN -1 ELSE 0 END AS `{SUB_COL}`",
-            f"CASE WHEN `{SEED_COL}` = 0 THEN '{INSERT}' END AS `{CHANGE_TYPE_COL}`",
-            *[f"`{c}`" for c in cols],
-        )
-    else:
-        changelog = winners.filter(f"`{SEED_COL}` = 0").selectExpr(
-            f"`{SEQ_COL}`",
-            *[f"`{c}`" for c in extra],
-            f"0 AS `{SUB_COL}`",
-            f"'{INSERT}' AS `{CHANGE_TYPE_COL}`",
-            *[f"`{c}`" for c in cols],
-        )
-    snapshot = winners.select(*cols)
-    return changelog, snapshot
+    row = _struct_sql(cols)
+    changelog = _emit(
+        winners,
+        cols,
+        cur_state=row,
+        prev_state=row,
+        prev_present="false",
+        emit_cond="true",
+        extra_cols=extra,
+        last="true",
+        **dest,
+    )
+    return changelog, winners.select(*cols)
 
 
 # ---------------------------------------------------------------------- #
@@ -486,12 +497,11 @@ def _replay_first_row(
 def _replay_versioned(
     df: DataFrame,
     schema: TableSchema,
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-    seq_order: str | None = None,
+    part: list[str],
+    seq_order: str | None,
+    dest: dict,
 ) -> tuple[DataFrame, DataFrame]:
     pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
     extra = [c for c in part if c not in pk]
     ver = schema.version_column
     if not ver:
@@ -512,8 +522,8 @@ def _replay_versioned(
     d = d.selectExpr(
         "*",
         "__w.row AS __cur",
-        "true AS __cur_present",
         f"lag(__w) OVER ({lag_over}) AS __prev_w",
+        _last_sql(lag_over),
     ).selectExpr("*", "__prev_w.row AS __prev", "__prev_w IS NOT NULL AS __prev_present")
     changelog = _emit(
         d,
@@ -525,10 +535,9 @@ def _replay_versioned(
         # winner seq)
         emit_cond=f"__w.k.s = `{SEQ_COL}`",
         extra_cols=extra,
-        emit_prior=emit_prior,
+        **dest,
     )
-    snapshot = _final_state(d, part, cols)
-    return changelog, snapshot
+    return changelog, _final_state(d, cols)
 
 
 # ---------------------------------------------------------------------- #
@@ -579,10 +588,10 @@ def _agg_running(c: str, agg: str, run_over: str, delim: str = ",", dtype: str =
 def _replay_aggregation(
     df: DataFrame,
     schema: TableSchema,
-    partial_update_cols: list[str] | None = None,
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-    seq_order: str | None = None,
+    partial_update_cols: list[str] | None,
+    part: list[str],
+    seq_order: str | None,
+    dest: dict,
 ) -> tuple[DataFrame, DataFrame]:
     """AGGREGATION merge; with `partial_update_cols` only target columns
     take the batch's contributions, untouched columns carry the seed's
@@ -591,7 +600,6 @@ def _replay_aggregation(
     identically either way; last_value/first_value need the explicit
     carry so a partial batch's nulls don't overwrite."""
     pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
     extra = [c for c in part if c not in pk]
     agg_spec = schema.agg_spec
     delim = schema.properties.get("table.merge-engine.aggregation.listagg-delimiter", ",")
@@ -622,15 +630,12 @@ def _replay_aggregation(
             )
 
     state = "struct(" + ", ".join(running) + ")"
-    d = df.filter(f"`{OP_COL}` = 'U'").selectExpr(
-        "*",
-        f"{state} AS __cur",
-        "true AS __cur_present",
-    )
+    d = df.filter(f"`{OP_COL}` = 'U'").selectExpr("*", f"{state} AS __cur")
     d = d.selectExpr(
         "*",
         f"lag(__cur) OVER ({lag_over}) AS __prev",
         f"(lag(true) OVER ({lag_over})) IS NOT NULL AS __prev_present",
+        _last_sql(lag_over),
     )
     changelog = _emit(
         d,
@@ -640,10 +645,9 @@ def _replay_aggregation(
         prev_present="__prev_present",
         emit_cond="true",
         extra_cols=extra,
-        emit_prior=emit_prior,
+        **dest,
     )
-    snapshot = _final_state(d, part, cols)
-    return changelog, snapshot
+    return changelog, _final_state(d, cols)
 
 
 # ---------------------------------------------------------------------- #
@@ -656,44 +660,51 @@ def replay_exact(
     schema: TableSchema,
     partial_update_cols: list[str] | None = None,
     cluster_cols: list[str] | None = None,
-    emit_prior: bool = False,
+    images: bool | None = None,
+    anchors: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Per-key sequential fold via applyInPandas (Arrow-batched, grouped
     by pk — distributed, but row-at-a-time inside each key). Used only
     for partial-update+delete mixtures; semantics from
     PartialUpdater.updateRow/deleteRow (PartialUpdater.java:35-138):
     delete retracts target columns, the row dies when every non-pk
-    column is null. `cluster_cols`/`emit_prior` follow the fused-commit
-    contract (see replay): clustering columns ride through the output
-    and seed rows re-emit as NULL-change-type prior rows."""
+    column is null. `cluster_cols` / `images` / `anchors` follow the
+    fused-commit contract (see replay and `emit_select_list`):
+    clustering columns ride through the output, and every row carries
+    `__dest`, with the key's snapshot image after its last record."""
     import pandas as pd
 
     pk, cols = schema.primary_key, schema.data_columns()
     non_pk = [c for c in cols if c not in pk]
     target = [c for c in (partial_update_cols or cols) if c not in pk]
     extra = [c for c in (cluster_cols or []) if c not in pk]
+    routed = images is not None
+    out_cols = [SEQ_COL, *extra, SUB_COL, CHANGE_TYPE_COL, *cols] + ([DEST_COL] if routed else [])
 
     out_schema = ", ".join(
         [f"`{SEQ_COL}` long"]
         + [f"`{c}` int" for c in extra]
         + [f"`{SUB_COL}` int", f"`{CHANGE_TYPE_COL}` string"]
         + [f"`{f.name}` {f.to_struct_field().dataType.simpleString()}" for f in schema.fields]
+        + ([f"`{DEST_COL}` string"] if routed else [])
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(SEQ_COL)
+        recs = pdf.sort_values(SEQ_COL).to_dict("records")
         state: dict | None = None
         rows = []
         ex: dict = {}
-        for rec in pdf.to_dict("records"):
+
+        def emit(seq, sub, ct, vals, dest="w"):
+            rows.append({SEQ_COL: seq, **ex, SUB_COL: sub, CHANGE_TYPE_COL: ct, **vals, DEST_COL: dest})
+
+        for rec in recs:
             ex = {c: rec[c] for c in extra}
-            is_seed = rec[SEED_COL] == 1
-            if is_seed:
+            if rec[SEED_COL] == 1:
                 state = {c: rec[c] for c in cols}
-                if emit_prior:
-                    rows.append(
-                        {SEQ_COL: 0, **ex, SUB_COL: -1, CHANGE_TYPE_COL: None, **state}
-                    )
+                seed_last = len(recs) == 1
+                if (images and seed_last) or anchors:
+                    emit(0, -1, None, state, "s" if images and seed_last else None)
                 continue
             seq = rec[SEQ_COL]
             if rec[OP_COL] == "U":
@@ -703,13 +714,13 @@ def replay_exact(
                         state[c] = rec[c]
                     for c in target:
                         state[c] = rec[c]
-                    rows.append({SEQ_COL: seq, **ex, SUB_COL: 0, CHANGE_TYPE_COL: INSERT, **state})
+                    emit(seq, 0, INSERT, state)
                 else:
                     prev = dict(state)
                     for c in target:
                         state[c] = rec[c]
-                    rows.append({SEQ_COL: seq, **ex, SUB_COL: 0, CHANGE_TYPE_COL: UPDATE_BEFORE, **prev})
-                    rows.append({SEQ_COL: seq, **ex, SUB_COL: 1, CHANGE_TYPE_COL: UPDATE_AFTER, **state})
+                    emit(seq, 0, UPDATE_BEFORE, prev)
+                    emit(seq, 1, UPDATE_AFTER, state)
             else:  # delete
                 if state is None:
                     continue
@@ -717,16 +728,19 @@ def replay_exact(
                 for c in target:
                     state[c] = None
                 if all(state[c] is None or pd.isna(state[c]) for c in non_pk):
-                    rows.append({SEQ_COL: seq, **ex, SUB_COL: 0, CHANGE_TYPE_COL: DELETE, **prev})
+                    emit(seq, 0, DELETE, prev)
                     state = None
                 else:
-                    rows.append({SEQ_COL: seq, **ex, SUB_COL: 0, CHANGE_TYPE_COL: UPDATE_BEFORE, **prev})
-                    rows.append({SEQ_COL: seq, **ex, SUB_COL: 1, CHANGE_TYPE_COL: UPDATE_AFTER, **state})
-        return pd.DataFrame(rows, columns=[SEQ_COL, *extra, SUB_COL, CHANGE_TYPE_COL, *cols])
+                    emit(seq, 0, UPDATE_BEFORE, prev)
+                    emit(seq, 1, UPDATE_AFTER, state)
+        if images and state is not None and recs[-1][SEED_COL] == 0:
+            emit(recs[-1][SEQ_COL], 2, None, state, "s")
+        return pd.DataFrame(rows, columns=out_cols)
 
     changelog = df.groupBy(*pk).applyInPandas(fold, schema=out_schema)
-    snapshot = _snapshot_from_changelog(changelog, schema)
-    return changelog, snapshot
+    if images:
+        return changelog, changelog.filter(f"`{DEST_COL}` = 's'").select(*cols)
+    return changelog, _snapshot_from_changelog(changelog, schema)
 
 
 def _snapshot_from_changelog(changelog: DataFrame, schema: TableSchema) -> DataFrame:

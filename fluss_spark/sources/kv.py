@@ -12,29 +12,34 @@ deferred, group (upsert_many) and optimistic — takes the same route:
               bucket) pairs on partitioned tables): the distributed
               read-old, O(touched buckets), not O(table)
   2. fold   = ONE fold input (seed ∪ batches, hash-partitioned by
-              bucket, per-key __seq; _fold_input_sql), folded by the
-              default engine's SQL statement or by operators/replay.py
-              for every other shape (_fold)
+              bucket, sorted by (bucket, pk, seed first, ordering);
+              _fold_input_sql) and ONE pass per key, as the reference
+              handles each record once (read old, merge, append,
+              update): the window that numbers `__seq` also yields the
+              lagged state and the key's last row, and one generator
+              emits each key's WAL events AND its snapshot image — the
+              after-image of its last row, or the seed row itself when
+              no batch row touched the key (_fold). The default engine
+              does this in one SQL statement; every other shape runs
+              operators/replay.py to the same contract
   3. ONE write action produces BOTH commit artifacts as sibling
-     partition dirs (__dest=w -> WAL, __dest=s -> snapshot): a single
-     bucket-window pass assigns per-bucket __offset to the change
-     events AND detects each key's last event; that last event (when
-     not -D) is exploded into a second copy routed to the snapshot
-     side, together with prior-snapshot rows whose key saw no event.
-     ONLY touched snapshot units are rewritten — the unit is the
-     bucket (plain pk tables) or the (partition, bucket) pair
-     (partitioned ones); untouched units stay as prior-version files,
-     referenced through a per-version manifest, so per-commit write
-     cost is O(touched units), not O(table) (_commit_plan)
+     partition dirs (__dest=w -> WAL, __dest=s -> snapshot): one
+     bucket-window pass assigns per-bucket __offset to the events and
+     keeps the images only in units that saw an event. ONLY touched
+     snapshot units are rewritten — the unit is the bucket (plain pk
+     tables) or the (partition, bucket) pair (partitioned ones);
+     untouched units stay as prior-version files, referenced through a
+     per-version manifest, so per-commit write cost is O(touched
+     units), not O(table) (_commit_plan)
   4. the driver moves __dest=w/__dest=s into the log commit dir and
      snapshot/data-vN and writes the manifest and commit records, all
      numbered above CURRENT (invisible; a crash leaves garbage the next
      write lock sweeps), then one CURRENT write advances the table to
      V' (_commit_finish; a group publishes one version per batch)
 
-Because the WAL row and the snapshot row of a key's last event are two
-explode copies of the SAME evaluated row, they cannot diverge even
-under non-deterministic input or task retries — the single-action
+Because a key's WAL events and its snapshot image come from the SAME
+evaluated fold rows in one generator, they cannot diverge even under
+non-deterministic input or task retries — the single-action
 successor to the WAL-first barrier (the reference's WAL *is* the
 changelog, KvTablet.java:562-591: one append, not two passes), and
 "changelog replay reproduces the snapshot" (SortMergeReader.java:30-55)
@@ -74,6 +79,7 @@ from fluss_spark import fsops
 from fluss_spark.bucketing import bucket_of, exact, exchange_width, to_internal
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.operators.replay import (
+    DEST_COL,
     OP_COL,
     SEED_COL,
     SEQ_COL,
@@ -92,14 +98,10 @@ from fluss_spark.types import (
     parse_type,
 )
 
-# partition column splitting the single-action commit write into its two
-# sibling artifacts: __dest=w (WAL commit files) / __dest=s (snapshot)
-DEST_COL = "__dest"
-
 # group-commit batch index: rides the fused fold as the most-significant
 # fold-order component (ORDER BY __grp, __seq everywhere __seq orders),
 # and the write action partitions the WAL side by it (__g=<idx> dirs →
-# one commit version per batch). Seed/prior rows carry -1 (sort first).
+# one commit version per batch). Seed rows carry -1 (sort first).
 GRP_COL = "__grp"
 
 # largest batch (partition, bucket)-pair set that still builds a typed
@@ -156,6 +158,16 @@ def _aqe_off_exit(spark: SparkSession) -> None:
 def _commit_ts(commit_ts_ms: int | None) -> int:
     """A commit's timestamp: the caller's, else now (epoch millis)."""
     return int(time.time() * 1000) if commit_ts_ms is None else int(commit_ts_ms)
+
+
+def _keyed_literal(values: dict, key: str, default: str) -> str:
+    """`values[key column]`, else `default`, as ONE map literal: constant
+    expression depth at any key count, and generated code holds the map
+    as a reference object, so a commit's own values compile no class."""
+    if not values:
+        return default
+    pairs = ", ".join(f"{k}, {v}" for k, v in values.items())
+    return f"coalesce(element_at(map({pairs}), `{key}`), {default})"
 
 
 class CommitConflictError(RuntimeError):
@@ -572,7 +584,8 @@ class KvStore:
         try:
             state0 = self.catalog.current_commit(self.db, self.table)
             changelog = self._fold(
-                spark, dfs, ordering, batch_buckets, partial_update_cols, merge_mode
+                spark, dfs, ordering, batch_buckets, partial_update_cols,
+                merge_mode, wal_only=defer > 1,
             )
             states = self._commit(spark, changelog, ts_list, state0, pre_lock)
         finally:
@@ -669,71 +682,44 @@ class KvStore:
             )
             fsops.replace_dir(tmp, bdir)
 
-    def _discover_scope(self, b: DataFrame, manifest_now):
+    def _discover_scope(self, pairs: set, manifest_now, tz: str):
         """Batch write scope — (bucket list, typed pair predicate,
-        manifest pair keys) — from a normalized batch frame `b` (CAST
-        key/partition columns present under their schema names). ONE
-        map-side collect_set job (see _fold_input_sql)."""
-        pair_pred = None
-        pair_keys = None
+        manifest pair keys) — from the batch's distinct (partition
+        values, bucket) pairs (see _fold_input_sql)."""
+        batch_buckets = sorted({b for _pv, b in pairs})
         pcols = self.schema.partition_keys
-        if pcols:
-            # same map-side collect_set shape as the unpartitioned arm:
-            # one <=pairs set per scan partition, single-stage job
-            rows = list(
-                b.select(
-                    F.collect_set(
-                        F.struct(*pcols, self._bucket_expr().alias("__b"))
-                    ).alias("ps")
-                ).first()["ps"]
-            )
-            batch_buckets = sorted({int(r["__b"]) for r in rows})
-            if 0 < len(rows) <= PAIR_SCOPE_MAX:
-                pair_pred = reduce(
-                    lambda a, c: a | c,
-                    [
-                        reduce(
-                            lambda a, c: a & c,
-                            [F.col(p) == F.lit(r[p]) for p in pcols],
-                        )
-                        & (F.col(BUCKET_COL) == int(r["__b"]))
-                        for r in rows
-                    ],
+        if not pcols or not 0 < len(pairs) <= PAIR_SCOPE_MAX:
+            return batch_buckets, None, None
+        pair_pred = reduce(
+            lambda a, c: a | c,
+            [
+                reduce(
+                    lambda a, c: a & c,
+                    [F.col(p) == F.lit(v) for p, v in zip(pcols, pv)],
                 )
-                # exact manifest-key pruning: parse each candidate
-                # entry's partpath back to typed values (never construct
-                # paths) and keep only entries matching a batch pair —
-                # the prior feed's PLAN then holds O(batch pairs) dirs,
-                # not every dir holding those buckets. Both sides compare
-                # as Spark's `=` in pair_pred does; entries whose
-                # partpath does not parse are kept conservatively.
-                tz = b.sparkSession.conf.get("spark.sql.session.timeZone")
-                types = {f.name: parse_type(f.type) for f in self.schema.fields}
-                want = {
-                    _partition_key(to_internal(r[p], types[p], tz) for p in pcols)
-                    + (int(r["__b"]),)
-                    for r in rows
-                }
-                bset = set(batch_buckets)
-                pair_keys = []
-                for pp, bkt in manifest_now or {}:
-                    if bkt not in bset:
-                        continue
-                    parsed = self._parsed_partpath(pp, tz)
-                    if parsed is None or parsed + (bkt,) in want:
-                        pair_keys.append((pp, bkt))
-        else:
-            # collect_set, not distinct().collect(): the map-side partial
-            # aggregation reduces each scan partition to one <=num_buckets
-            # set, so the job is a single 1-reducer stage instead of a
-            # full distinct exchange (same tiny result, one less stage
-            # and no AQE replan on the discovery path)
-            batch_buckets = sorted(
-                int(x)
-                for x in b.select(
-                    F.collect_set(self._bucket_expr()).alias("bs")
-                ).first()["bs"]
-            )
+                & (F.col(BUCKET_COL) == b)
+                for pv, b in sorted(pairs, key=repr)
+            ],
+        )
+        # exact manifest-key pruning: parse each candidate entry's
+        # partpath back to typed values (never construct paths) and keep
+        # only entries matching a batch pair — the prior feed's PLAN then
+        # holds O(batch pairs) dirs, not every dir holding those buckets.
+        # Both sides compare as Spark's `=` in pair_pred does; entries
+        # whose partpath does not parse are kept conservatively.
+        types = {f.name: parse_type(f.type) for f in self.schema.fields}
+        want = {
+            _partition_key(to_internal(v, types[p], tz) for p, v in zip(pcols, pv)) + (b,)
+            for pv, b in pairs
+        }
+        bset = set(batch_buckets)
+        pair_keys = []
+        for pp, bkt in manifest_now or {}:
+            if bkt not in bset:
+                continue
+            parsed = self._parsed_partpath(pp, tz)
+            if parsed is None or parsed + (bkt,) in want:
+                pair_keys.append((pp, bkt))
         return batch_buckets, pair_pred, pair_keys
 
     def _sql_fold_ok(
@@ -767,24 +753,38 @@ class KvStore:
         dfs: list[DataFrame],
         ordering: list[str] | None,
         known_buckets: list[int] | None,
+        fold_cols=None,
     ) -> tuple[str, dict[str, DataFrame], str]:
         """The ONE fold input of every PK commit, as a SQL statement over
         named frames: seed ∪ batches → REPARTITION(exchange_width,
         __bucket) → per-key `__seq`. Returns (sql, frames for
-        spark.sql, seq_order — the ORDER BY of the `__seq` window, which
-        the fold windows reuse so they share its sort).
+        spark.sql, fold order — the ORDER BY of the key window, which the
+        fold reuses so it shares the one sort).
+
+        `fold_cols(order)` names more columns of the same select, over
+        the key window `PARTITION BY __bucket, pk ORDER BY <order>`: the
+        SQL fold computes its state there, so one Window operator both
+        numbers and folds each key.
 
         The seed is the WHOLE bounded snapshot (every row of the
         batches' buckets, or (partition, bucket) pairs): untouched
-        keys' rows are exactly the prior rows the snapshot rewrite must
-        feed anyway, so they ride the fold (re-emitted with a NULL
-        change type) instead of a second scan. `__bucket` is computed in
-        both union branches and the transaction's ONE exchange is
+        keys' rows are exactly the rows the snapshot rewrite must feed
+        anyway, so they ride the fold (each re-emitted as its own
+        snapshot image) instead of a second scan. `__bucket` is computed
+        in both union branches and the transaction's ONE exchange is
         established here: every downstream window — the __seq
-        numbering, the fold, the commit's offset / is-last / id-carry
-        windows — partitions by __bucket[, pk] (bucket =
+        numbering, the fold, the commit's offset / touched-unit /
+        id-carry windows — partitions by __bucket[, pk] (bucket =
         pmod(hash(pk), n) is a function of the pk), so the whole
         transaction is scan → ONE exchange → windows → write.
+
+        The write scope (which buckets the seed reads) is skipped on a
+        table with no state yet, taken from a caller-known superset, or
+        discovered from the batches' CAST key and partition columns:
+        when every batch is a local relation (pandas- and Arrow-built
+        frames) those are collected with no Spark job and routed with
+        bucketing.bucket_of; other frames run one map-side collect_set
+        job.
 
         Under deferred materialization the state may live partly (or,
         before the first materialization, entirely) in the WAL tail —
@@ -794,9 +794,9 @@ class KvStore:
         With several batches (group commit, see upsert_many) each batch
         is projected with its index as `__grp` (seed rows -1) and
         per-batch `__seq` restarts at 1 (PARTITION BY ..., __grp); the
-        fold orders by (__grp, __seq), so the per-key frames are exactly
-        the concatenation of N sequential folds. With a single batch
-        there is no `__grp` anywhere in the SQL."""
+        fold orders by (__grp, <seq order>), so the per-key frames are
+        exactly the concatenation of N sequential folds. With a single
+        batch there is no `__grp` anywhere in the SQL."""
         schema = self.schema
         pk, cols = schema.primary_key, schema.data_columns()
         grouped = len(dfs) > 1
@@ -843,11 +843,9 @@ class KvStore:
                 bproj.append(f"CAST({g} AS INT) AS `{GRP_COL}`")
             return bproj
 
-        # write scope: skip on a table with no state yet (first commit),
-        # trust a caller-known superset, else one map-side discovery job
-        # over a minimal CAST key/partition frame (the union of all
-        # batches' keys under group commit). The scope bounds the seed:
-        # without it every commit would shuffle O(table).
+        # write scope: the union of all batches' (partition, bucket)
+        # pairs bounds the seed; without it every commit would shuffle
+        # O(table)
         state_now = self.catalog.current_commit(self.db, self.table)
         manifest_now = self._manifest(state_now.snapshot_version)
         has_snapshot = (
@@ -860,18 +858,43 @@ class KvStore:
         elif known_buckets is not None:
             batch_buckets = [int(x) for x in known_buckets]
         else:
-            disc_cols = list(
-                dict.fromkeys(list(schema.bucket_keys) + list(schema.partition_keys))
-            )
-            bdisc = reduce(
-                DataFrame.unionByName,
-                [
-                    d.selectExpr(*[f"{cs[c]} AS `{c}`" for c in disc_cols])
-                    for d, cs in zip(dfs, cast_sqls)
-                ],
-            )
+            pcols = list(schema.partition_keys)
+            disc_cols = list(dict.fromkeys(list(schema.bucket_keys) + pcols))
+            keys = [
+                d.selectExpr(*[f"{cs[c]} AS `{c}`" for c in disc_cols])
+                for d, cs in zip(dfs, cast_sqls)
+            ]
+            tz = spark.conf.get("spark.sql.session.timeZone")
+            if all(d.isLocal() for d in dfs):
+                # a projection of a local relation collects with no job
+                btypes = [parse_type(ftype[c]) for c in schema.bucket_keys]
+                pairs = {
+                    (
+                        tuple(r[p] for p in pcols),
+                        bucket_of(
+                            [r[c] for c in schema.bucket_keys], btypes,
+                            schema.num_buckets, tz,
+                        ),
+                    )
+                    for k in keys
+                    for r in k.collect()
+                }
+            else:
+                # collect_set, not distinct().collect(): the map-side
+                # partial aggregation reduces each scan partition to one
+                # <=pairs set, so the job is a single 1-reducer stage
+                rows = (
+                    reduce(DataFrame.unionByName, keys)
+                    .select(
+                        F.collect_set(
+                            F.struct(*pcols, self._bucket_expr().alias("__b"))
+                        ).alias("ps")
+                    )
+                    .first()["ps"]
+                )
+                pairs = {(tuple(r[p] for p in pcols), int(r["__b"])) for r in rows}
             batch_buckets, pair_pred, pair_keys = self._discover_scope(
-                bdisc, manifest_now
+                pairs, manifest_now, tz
             )
 
         bounded = self.snapshot(
@@ -910,39 +933,34 @@ class KvStore:
             f" FROM ({union_sql})"
         )
         # __seq inside the fold's own exchange: seed first (SEED desc),
-        # then batch rows in `ordering` order. Batch rows number 1.. per
-        # key whether or not a seed row exists (sum(SEED) over the key =
-        # presence); seed rows pin __seq=0. Under group commit the
-        # numbering partition additionally keys on __grp, so each
-        # batch's rows restart at 1 per key — the sequential commits'
-        # numbering exactly. The ordering columns ride on: the fold
-        # windows order by the same spec, so they reuse this window's
-        # sort.
-        seq_part_cols = [f"`{BUCKET_COL}`"] + [f"`{c}`" for c in pk] + (
-            [f"`{GRP_COL}`"] if grouped else []
-        )
-        part_sql = ", ".join(seq_part_cols)
+        # then batch rows in `ordering` order, numbered 1.. per key
+        # whether or not a seed row exists (row_number minus the first
+        # row's seed flag); the seed row itself gets 0. Under group
+        # commit the numbering partition additionally keys on __grp, so
+        # each batch's rows restart at 1 per key — the sequential
+        # commits' numbering exactly. The ordering columns ride on: the
+        # fold orders by the same spec, so it reuses this window's sort
+        # (and, for a single batch, is this very window).
+        key_sql = ", ".join([f"`{BUCKET_COL}`"] + [f"`{c}`" for c in pk])
         ord_sql = ", ".join(
             [f"`{SEED_COL}` DESC"] + [f"`{c}` ASC NULLS FIRST" for c in ord_names]
         )
-        seq_select = (
-            [f"`{c}`" for c in cols]
-            + [
-                f"`{OP_COL}`",
-                f"CAST(CASE WHEN `{SEED_COL}` = 1 THEN 0 ELSE "
-                f"row_number() OVER (PARTITION BY {part_sql} ORDER BY {ord_sql}) "
-                f"- sum(`{SEED_COL}`) OVER (PARTITION BY {part_sql}) END AS BIGINT) "
-                f"AS `{SEQ_COL}`",
-                f"`{SEED_COL}`",
-                f"`{BUCKET_COL}`",
-            ]
-            + ([f"`{GRP_COL}`"] if grouped else [])
-            + [f"`{c}`" for c in ord_extra]
+        seq_over = (
+            f"PARTITION BY {key_sql}, `{GRP_COL}` ORDER BY {ord_sql}"
+            if grouped
+            else f"PARTITION BY {key_sql} ORDER BY {ord_sql}"
         )
-        fold_sql = f"SELECT {', '.join(seq_select)} FROM ({repart_sql})"
+        fold_order = f"`{GRP_COL}`, {ord_sql}" if grouped else ord_sql
+        select = [
+            "*",
+            f"CAST(row_number() OVER ({seq_over}) - first_value(`{SEED_COL}`) "
+            f"OVER ({seq_over}) AS BIGINT) AS `{SEQ_COL}`",
+            *(fold_cols(fold_order) if fold_cols else []),
+        ]
+        fold_sql = f"SELECT {', '.join(select)} FROM ({repart_sql})"
         frames = {"snap": bounded}
         frames.update({_ph(g): d for g, d in enumerate(dfs)})
-        return fold_sql, frames, ord_sql
+        return fold_sql, frames, fold_order
 
     def _fold(
         self,
@@ -952,20 +970,28 @@ class KvStore:
         known_buckets: list[int] | None,
         partial_update_cols: list[str] | None = None,
         merge_mode: str | None = None,
+        wal_only: bool = False,
     ) -> DataFrame:
-        """Fold the batches over their seed into the commit changelog:
-        change events plus NULL-change-type prior rows, carrying
-        `__bucket` (and `__grp` for a group) and hash-partitioned by
-        __bucket — the input contract of _commit_plan.
+        """Fold the batches over their seed into the commit's one row
+        stream, the input contract of _commit_plan: change events
+        (`__dest` 'w') and, unless `wal_only`, each key's snapshot image
+        (`__dest` 's': the state after its last row — the seed row
+        itself when no batch row touched the key — with a NULL change
+        type); auto-increment tables also keep every seed row as an id
+        anchor (`__dest` NULL). Rows carry `__bucket` (and `__grp` for a
+        group) and are hash-partitioned by __bucket.
 
         Both fold shapes read the one input of _fold_input_sql. The
         default merge engine folds and emits in the SAME statement (for
         driver latency: one JVM analysis of nested subqueries instead
-        of one per plan layer), from the expression
-        strings replay()'s default engine uses (shared builders in
-        operators/replay.py; tests/test_commit_equivalence.py pins
-        row-for-row equality with replay()). Every other shape runs
-        replay() over `spark.sql(<fold input>)`."""
+        of one per plan layer): the per-key state (`__cur`, lagged
+        `__prev` / `__prev_present`, `__last`) comes from the window
+        that numbers `__seq` — one sort, one Window operator for a
+        single batch — and one generator emits events and images
+        together, from the expression strings replay()'s default engine
+        uses (shared builders in operators/replay.py;
+        tests/test_commit_equivalence.py pins equal commit artifacts).
+        Every other shape runs replay() over `spark.sql(<fold input>)`."""
         from fluss_spark.operators.replay import (
             EMIT_WHERE,
             default_fold_select_list,
@@ -978,11 +1004,11 @@ class KvStore:
         cols = schema.data_columns()
         grouped = len(dfs) > 1
         may_have_deletes = any(OP_COL in d.columns for d in dfs)
-        fold_sql, frames, ord_sql = self._fold_input_sql(
-            spark, dfs, ordering, known_buckets
-        )
         if not all(self._sql_fold_ok(d, partial_update_cols, merge_mode) for d in dfs):
             assert not grouped, "group commit requires the SQL fold"
+            fold_sql, frames, fold_order = self._fold_input_sql(
+                spark, dfs, ordering, known_buckets
+            )
             changelog, _ = replay(
                 spark.sql(fold_sql, **frames),
                 schema,
@@ -990,26 +1016,36 @@ class KvStore:
                 merge_mode=merge_mode,
                 may_have_deletes=may_have_deletes,
                 cluster_cols=[BUCKET_COL],
-                emit_prior=True,
-                seq_order=ord_sql,
+                images=not wal_only,
+                seq_order=fold_order,
             )
             return changelog
 
-        # DeleteBehavior.IGNORE rides as a WHERE on the fold output —
-        # same placement as replay()'s filter (after __seq assignment)
-        where = ""
-        if schema.delete_behavior == "ignore" and may_have_deletes:
-            where = f" WHERE `{OP_COL}` != 'D' OR `{SEED_COL}` = 1"
-        fold_order = f"`{GRP_COL}`, {ord_sql}" if grouped else ord_sql
-        extra_fold_cols = [BUCKET_COL] + ([GRP_COL] if grouped else [])
-        d_sql = (
-            f"SELECT {', '.join(default_fold_select_list(cols, [BUCKET_COL] + list(schema.primary_key), fold_order))}"
-            f" FROM ({fold_sql}){where}"
+        def state_cols(order: str) -> list[str]:
+            over = f"PARTITION BY `{BUCKET_COL}`, " + ", ".join(
+                f"`{c}`" for c in schema.primary_key
+            ) + f" ORDER BY {order}"
+            return default_fold_select_list(cols, over)
+
+        # DeleteBehavior.IGNORE drops -D rows between the numbering and
+        # the fold state (same placement as replay()'s filter), so its
+        # state is a second window layer over the same sort
+        ignore = schema.delete_behavior == "ignore" and may_have_deletes
+        d_sql, frames, fold_order = self._fold_input_sql(
+            spark, dfs, ordering, known_buckets, None if ignore else state_cols
         )
-        emit_sql = (
-            f"SELECT {', '.join(emit_select_list(cols, '__cur', '__prev', '__prev_present', 'true', extra_fold_cols, True))}"
-            f" FROM ({d_sql})"
+        if ignore:
+            d_sql = (
+                f"SELECT *, {', '.join(state_cols(fold_order))} FROM ({d_sql})"
+                f" WHERE `{OP_COL}` != 'D' OR `{SEED_COL}` = 1"
+            )
+        has_autoinc = any(f.auto_increment for f in schema.fields)
+        emit = emit_select_list(
+            cols, "__cur", "__prev", "__prev_present", "true",
+            [BUCKET_COL] + ([GRP_COL] if grouped else []),
+            images=not wal_only, anchors=has_autoinc,
         )
+        emit_sql = f"SELECT {', '.join(emit)} FROM ({d_sql})"
         final_sql = f"SELECT * FROM ({emit_sql}) WHERE {EMIT_WHERE}"
         if schema.changelog_image == "wal":
             # +I -> +U rewrite gates exactly like replay()'s
@@ -1017,7 +1053,6 @@ class KvStore:
             # engine — an overwrite batch to a non-default-engine table
             # folds as last-write-wins but keeps +I, KvTablet semantics)
             # and no auto-increment columns.
-            has_autoinc = any(f.auto_increment for f in schema.fields)
             ct = (
                 wal_image_ct_case_sql()
                 if schema.merge_engine == "default" and not has_autoinc
@@ -1029,7 +1064,8 @@ class KvStore:
                 + f"`{SUB_COL}`, "
                 f"{ct} AS `{CHANGE_TYPE_COL}`, "
                 + ", ".join(f"`{c}`" for c in cols)
-                + f" FROM ({emit_sql}) WHERE {EMIT_WHERE} AND {wal_image_where_sql(True)}"
+                + f", `{DEST_COL}`"
+                f" FROM ({emit_sql}) WHERE {EMIT_WHERE} AND {wal_image_where_sql(True)}"
             )
         return spark.sql(final_sql, **frames)
 
@@ -1217,34 +1253,26 @@ class KvStore:
     ):
         """The fused commit-output frame: one write action produces the
         WAL and the snapshot as sibling partition dirs (__dest=w /
-        __dest=s), fused into a single bucket-window pass:
+        __dest=s). The fold (_fold) already routed every row — change
+        events 'w', each key's snapshot image 's' — so this plan only
+        stamps the WAL system columns, in one bucket-window pass:
 
-          - events (change rows) and prior-snapshot rows (NULL change
-            type, sub -1, so they sort before any event of their key)
-            arrive hash-partitioned by bucket from the fold's one
-            exchange; the prior rows are the fold's seed, bounded to the
-            batch's buckets — O(touched buckets), never O(table);
+          - rows arrive hash-partitioned by bucket from the fold's one
+            exchange; the images are the fold's seed and state, bounded
+            to the batch's buckets — O(touched buckets), never O(table);
           - one window over (bucket) ordered (seq, sub, pk) assigns
             per-bucket WAL offsets (running event count + old HWM), so
             offset order within a bucket IS batch-arrival order across
             keys, matching the reference WAL (LogTablet.java appends in
-            arrival order) and the two-pass baseline; a second frame over
-            (bucket, pk) flags each key's LAST row (max fold position)
-            — same exchange, one extra in-memory sort;
-          - routing: event -> WAL; last event that is not -D -> WAL +
-            snapshot (an explode of the same evaluated row — the two
-            copies cannot diverge, which is what the old WAL-first
-            staged-file barrier existed to guarantee); prior row that
-            stayed last (key untouched) -> snapshot, but only in buckets
-            that saw >=1 event (max-over-bucket window) — untouched
-            buckets keep their old manifest entry and cost no I/O.
+            arrival order) and the two-pass baseline;
+          - an image is written only in a unit that saw >=1 event (a
+            max-over-unit window on the same sort): untouched units keep
+            their old manifest entry and cost no I/O.
 
-        Partitioned tables put their partition dirs ABOVE the bucket
-        dirs on BOTH siblings (partitionBy(__dest, <parts>, __bucket)):
-        __dest=w matches the WAL's staged layout verbatim, and __dest=s
-        gives pk snapshots partition-directory pruning (the reference
-        layers partitions above buckets the same way,
-        metadata/TableBucket.java, TableDescriptor.java:74).
+        The snapshot-rewrite unit is the bucket, or the (partition,
+        bucket) pair on partitioned tables, whose partition dirs sit
+        ABOVE the bucket dirs on BOTH siblings (the reference's
+        metadata/TableBucket.java layering).
 
         Auto-increment ids are stamped INSIDE the commit window with the
         reference's insert-stable semantics (ids assigned only in
@@ -1253,35 +1281,25 @@ class KvStore:
         order from the +I counts (AutoIncrementManager's
         BoundedSegmentSequenceGenerator model), each +I event mints
         segment_base[bucket] + its running insert count, and every other
-        row of the key — -U before-images, +U after-images, -D images,
-        and the snapshot copy — CARRIES the key's current id via a
-        last-non-null window anchored on the +I stamp and the
-        prior-snapshot row's stored value. A key's id therefore never
-        changes across updates, and only a delete + re-insert mints a
-        new one.
+        row of the key CARRIES the key's current id via a last-non-null
+        window anchored on the +I stamp and the seed row's stored value.
 
-        A WAL-only commit (deferred materialization) emits only the
-        __dest=w copies. The driver then renames __dest=w to the log
-        commit dir and __dest=s to snapshot/data-vN — metadata-only
-        moves (_commit_finish). Snapshot copies null out the WAL system
-        columns (_change_type, __seq, __sub, __offset, __timestamp): no
-        reader consumes them on the snapshot surface and real values
-        would bloat every snapshot file and leak into lake-export
-        schemas built from footers.
+        Images carry NULL WAL system columns (_change_type, __seq, __sub,
+        __offset, __timestamp): real values would bloat every snapshot
+        file and leak into lake-export schemas built from footers. The
+        commit timestamps and offset bases enter as map literals, which
+        generated code holds as reference objects: a commit compiles no
+        new class for its own values.
 
-        The reference analog: the WAL *is* the changelog — one append
-        (KvTablet.java:562-591), with the snapshot (RocksDB state) fed
-        from the same merge pass, not re-derived.
-
-        Built against a given base state from a _fold changelog (which
-        carries `__bucket`, is hash-partitioned by it, and includes the
-        prior-snapshot rows), so this plan adds NO exchange, no second
-        snapshot scan and no bucket recomputation. One timestamp per
-        batch in `ts_list`; several mean a group (the changelog carries
-        `__grp`). Returns (out frame, persisted handle to unpersist after
-        the write, advanced auto-increment map). Pure plan construction
-        — no writes, no metadata mutation — so the optimistic path can
-        run it (and the write) outside the table lock."""
+        Built against a given base state from a _fold output (which
+        carries `__bucket` and is hash-partitioned by it), so this plan
+        adds NO exchange, no second snapshot scan and no bucket
+        recomputation. One timestamp per batch in `ts_list`; several
+        mean a group (the rows carry `__grp`). Returns (out frame,
+        persisted handle to unpersist after the write, advanced
+        auto-increment map). Pure plan construction — no writes, no
+        metadata mutation — so the optimistic path can run it (and the
+        write) outside the table lock."""
         schema = self.schema
         pk, cols = schema.primary_key, schema.data_columns()
         grouped = len(ts_list) > 1
@@ -1290,7 +1308,6 @@ class KvStore:
         # (selectExpr / one JVM parse each) instead of per-column Column
         # calls: profiling showed ~2.9k py4j round trips (~1s of driver
         # wall) per commit, dominated by expression construction.
-        qcols = [f"`{c}`" for c in cols]
         # Spark-SQL DDL type strings (the schema's own are engine DDL)
         declared = {f.name: parse_type(f.type).simpleString() for f in schema.fields}
 
@@ -1328,25 +1345,18 @@ class KvStore:
                     seg[bkt] = acc
                     acc += cnt
                 auto_next[c] = acc
-                if seg:
-                    pairs = ", ".join(
-                        f"{b}, CAST({s} AS BIGINT)" for b, s in seg.items()
-                    )
-                    id_expr[c] = (
-                        f"coalesce(element_at(map({pairs}), `{BUCKET_COL}`), "
-                        f"CAST({base_id} AS BIGINT))"
-                    )
-                else:
-                    id_expr[c] = f"CAST({base_id} AS BIGINT)"
+                # a bucket outside the map has no +I row to mint for
+                id_expr[c] = _keyed_literal(
+                    {b: f"CAST({s} AS BIGINT)" for b, s in seg.items()},
+                    BUCKET_COL, "CAST(NULL AS BIGINT)",
+                )
 
-        sys_cast = [
+        ev = changelog.selectExpr(
+            *[f"CAST(`{c}` AS {declared[c]}) AS `{c}`" for c in cols],
             f"`{CHANGE_TYPE_COL}`",
             f"CAST(`{SEQ_COL}` AS BIGINT) AS `{SEQ_COL}`",
             f"CAST(`{SUB_COL}` AS INT) AS `{SUB_COL}`",
-        ]
-        ev = changelog.selectExpr(
-            *[f"CAST(`{c}` AS {declared[c]}) AS `{c}`" for c in cols],
-            *sys_cast,
+            f"`{DEST_COL}`",
             f"`{BUCKET_COL}`",
             *([f"`{GRP_COL}`"] if grouped else []),
         )
@@ -1355,36 +1365,35 @@ class KvStore:
         # sequence = batch arrival — so cross-key WAL order matches the
         # reference contract and the two-pass baseline exactly. Group commit
         # prefixes the batch index: offsets run batch-major, exactly the
-        # cumulative bases N sequential commits would assign.
+        # cumulative bases N sequential commits would assign. Images and
+        # anchors sit in the same order but count no offset.
         grp_ord = f"`{GRP_COL}`, " if grouped else ""
         over = (
             f"PARTITION BY `{BUCKET_COL}` ORDER BY {grp_ord}`{SEQ_COL}`, "
             f"`{SUB_COL}`, {pk_sql}"
         )
-        is_event = f"(`{CHANGE_TYPE_COL}` IS NOT NULL)"
-        base = {int(b): off for b, off in state0.log_hwm.items()}
-        # one map literal, not an O(buckets) when-chain: constant
-        # expression/codegen depth at any bucket count (same shape as
-        # table.py snapshot_diff's bound map)
-        if base:
-            pairs = ", ".join(f"{b}, CAST({off} AS BIGINT)" for b, off in base.items())
-            base_sql = f"coalesce(element_at(map({pairs}), `{BUCKET_COL}`), CAST(0 AS BIGINT))"
-        else:
-            base_sql = "CAST(0 AS BIGINT)"
+        is_event = f"(`{DEST_COL}` = 'w')"
+
+        base_sql = _keyed_literal(
+            {int(b): f"CAST({off} AS BIGINT)" for b, off in state0.log_hwm.items()},
+            BUCKET_COL, "CAST(0 AS BIGINT)",
+        )
+        # per-batch commit timestamps (sequential commits stamp each
+        # batch at its own commit time); a single commit keys its one
+        # timestamp by bucket
+        ts_map = (
+            {g: f"timestamp_millis({t})" for g, t in enumerate(ts_list)}
+            if grouped
+            else {b: f"timestamp_millis({ts_list[0]})" for b in range(schema.num_buckets)}
+        )
+        ts_sql = _keyed_literal(
+            ts_map, GRP_COL if grouped else BUCKET_COL, "CAST(NULL AS TIMESTAMP)"
+        )
         # running event count in arrival order — feeds the WAL offset
         rc = (
             f"count(CASE WHEN {is_event} THEN 1 END) OVER ({over} "
             "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
         )
-        # last row of a key = its max fold position; computed on a
-        # (bucket, pk) frame that shares the bucket exchange (hash(bucket)
-        # clusters (bucket, pk) too) and costs one extra in-memory sort
-        pos = (
-            f"struct(`{GRP_COL}`, `{SEQ_COL}`, `{SUB_COL}`)"
-            if grouped
-            else f"struct(`{SEQ_COL}`, `{SUB_COL}`)"
-        )
-        is_last = f"({pos} = max({pos}) OVER (PARTITION BY `{BUCKET_COL}`, {pk_sql}))"
         carried: dict[str, str] = {}
         if id_expr:
             # insert-stable ids (reference M10 semantics): a fresh id is
@@ -1392,12 +1401,13 @@ class KvStore:
             # running INSERT count (same arrival order as the offsets).
             # Every other row of the key CARRIES its current id: the
             # anchor column is the stamp on +I rows and the stored value
-            # on prior-snapshot rows (sub -1, sorts first), so a
-            # last-non-null over (bucket, pk) in fold order gives -U
-            # before-images the id the row really had, +U after-images
-            # the same id, and a key re-inserted after an in-batch -D a
-            # fresh id (the new +I re-anchors). Staged as a real column:
-            # the carry window cannot nest the running-count window.
+            # on seed rows (sub -1, sorts first; a batch row's image has
+            # no stored id), so a last-non-null over (bucket, pk) in fold
+            # order gives -U before-images the id the row really had, +U
+            # after-images and the image the same id, and a key
+            # re-inserted after an in-batch -D a fresh id (the new +I
+            # re-anchors). Staged as a real column: the carry window
+            # cannot nest the running-count window.
             ins_rc = (
                 f"count(CASE WHEN `{CHANGE_TYPE_COL}` = '{INSERT}' THEN 1 END) "
                 f"OVER ({over} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
@@ -1415,88 +1425,50 @@ class KvStore:
                 f"`{SUB_COL}` ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
             )
             for i, c in enumerate(auto_cols):
-                carried[c] = f"last(`__id_anchor_{i}`, true) OVER ({carry_over})"
-        data_proj = [
-            (
-                f"CASE WHEN {is_event} THEN CAST({carried[c]} AS BIGINT) "
-                f"ELSE `{c}` END AS `{c}`"
-                if c in carried
-                else f"`{c}`"
-            )
-            for c in cols
-        ]
-        if grouped:
-            # per-batch commit timestamps (sequential commits stamp each
-            # batch at its own commit time)
-            ts_pairs = ", ".join(
-                f"{g}, timestamp_millis({t})" for g, t in enumerate(ts_list)
-            )
-            ts_sql = f"element_at(map({ts_pairs}), `{GRP_COL}`)"
-        else:
-            ts_sql = f"timestamp_millis({ts_list[0]})"
+                carried[c] = f"CAST(last(`__id_anchor_{i}`, true) OVER ({carry_over}) AS BIGINT)"
         ev = ev.selectExpr(
-            *data_proj,
+            *[f"{carried[c]} AS `{c}`" if c in carried else f"`{c}`" for c in cols],
+            f"`{CHANGE_TYPE_COL}`",
+            *[
+                f"CASE WHEN {is_event} THEN {v} END AS `{n}`"
+                for n, v in (
+                    (SEQ_COL, f"`{SEQ_COL}`"),
+                    (SUB_COL, f"`{SUB_COL}`"),
+                    (OFFSET_COL, f"CAST({rc} - 1 + ({base_sql}) AS BIGINT)"),
+                    (TIMESTAMP_COL, ts_sql),
+                )
+            ],
+            # group commit: '__g' routes each WAL row to its batch's
+            # commit dir; the images belong to the group's LAST version
+            *(
+                [f"CASE WHEN {is_event} THEN `{GRP_COL}` ELSE {len(ts_list) - 1} END AS `__g`"]
+                if grouped
+                else []
+            ),
+            f"`{DEST_COL}`",
+            f"`{BUCKET_COL}`",
+        )
+        # the snapshot-rewrite unit is the (partition, bucket) PAIR on
+        # partitioned tables (reference TableBucket granularity): an
+        # image survives into the new dir only if ITS unit saw an event
+        # — other partitions of the same bucket stay as untouched bytes
+        # behind their old manifest entries. Computed over the offset
+        # window's output, so it reuses that sort.
+        touched = (
+            f"max(CAST({is_event} AS INT)) OVER (PARTITION BY "
+            + ", ".join([f"`{BUCKET_COL}`"] + [f"`{c}`" for c in schema.partition_keys])
+            + ") = 1"
+        )
+        keep = is_event if wal_only else f"{is_event} OR (`{DEST_COL}` = 's' AND {touched})"
+        out = ev.selectExpr(
+            *[f"`{c}`" for c in cols],
             f"`{CHANGE_TYPE_COL}`",
             f"`{SEQ_COL}`",
             f"`{SUB_COL}`",
-            f"CAST(CASE WHEN {is_event} THEN "
-            f"{rc} - 1 + ({base_sql}) "
-            f"END AS BIGINT) AS `{OFFSET_COL}`",
-            f"CASE WHEN {is_event} THEN {ts_sql} END AS `{TIMESTAMP_COL}`",
-            # window expressions must be plain columns before the
-            # generator below: Spark rejects window functions in explode()
-            f"{is_last} AS __is_last",
-            # the snapshot-rewrite unit is the (partition, bucket) PAIR
-            # on partitioned tables (reference TableBucket granularity):
-            # a prior row survives into the new dir only if ITS pair saw
-            # an event — other partitions of the same bucket stay as
-            # untouched bytes behind their old manifest entries
-            f"(max(CAST({is_event} AS INT)) OVER (PARTITION BY "
-            + ", ".join(
-                [f"`{BUCKET_COL}`"] + [f"`{c}`" for c in schema.partition_keys]
-            )
-            + ") = 1) AS __touched",
-            f"`{BUCKET_COL}`",
-            *([f"`{GRP_COL}`"] if grouped else []),
-        )
-        # routing + system-column shaping in ONE generator: the 0-2
-        # destination copies of each row are FLAT structs unpacked by
-        # inline() in the same select that builds them; a slot with no
-        # destination inlines to a null row that the __dest filter drops
-        # (filtering after the generator keeps it in whole-stage
-        # codegen, see replay.EMIT_WHERE). The 's' copy carries NO WAL
-        # system-column values: nulls compress to nothing, and lake
-        # exports (schema from parquet footers) must not see real values
-        # on the snapshot surface.
-        # group commit: '__g' (the struct field, unpacked by inline into
-        # a real column) routes each WAL copy to its batch's commit dir;
-        # the snapshot copy belongs to the group's LAST version
-        w_grp = f", '__g', `{GRP_COL}`" if grouped else ""
-        s_grp = f", '__g', CAST({len(ts_list) - 1} AS INT)" if grouped else ""
-        w_struct = (
-            f"named_struct('{CHANGE_TYPE_COL}', `{CHANGE_TYPE_COL}`, "
-            f"'{SEQ_COL}', `{SEQ_COL}`, '{SUB_COL}', `{SUB_COL}`, "
-            f"'{OFFSET_COL}', `{OFFSET_COL}`, "
-            f"'{TIMESTAMP_COL}', `{TIMESTAMP_COL}`{w_grp}, '{DEST_COL}', 'w')"
-        )
-        s_struct = (
-            f"named_struct('{CHANGE_TYPE_COL}', CAST(NULL AS STRING), "
-            f"'{SEQ_COL}', CAST(NULL AS BIGINT), '{SUB_COL}', CAST(NULL AS INT), "
-            f"'{OFFSET_COL}', CAST(NULL AS BIGINT), "
-            f"'{TIMESTAMP_COL}', CAST(NULL AS TIMESTAMP){s_grp}, '{DEST_COL}', 's')"
-        )
-        slot_w = f"CASE WHEN {is_event} THEN {w_struct} END"
-        slot_s = (
-            f"CASE WHEN __is_last AND (({is_event} AND "
-            f"`{CHANGE_TYPE_COL}` != '{DELETE}') OR (NOT {is_event} AND __touched)) "
-            f"THEN {s_struct} END"
-        )
-        # a WAL-only commit has no snapshot copy: the is-last and
-        # touched windows then go unused and the optimizer prunes them
-        slots = [slot_w] if wal_only else [slot_w, slot_s]
-        out = ev.selectExpr(
-            *qcols,
-            f"inline(array({', '.join(slots)}))",
+            f"`{OFFSET_COL}`",
+            f"`{TIMESTAMP_COL}`",
+            *(["`__g`"] if grouped else []),
+            f"CASE WHEN {keep} THEN `{DEST_COL}` END AS `{DEST_COL}`",
             f"`{BUCKET_COL}`",
         ).filter(f"`{DEST_COL}` IS NOT NULL")
 

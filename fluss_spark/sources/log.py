@@ -427,18 +427,12 @@ class LogStore:
             self._hwm_cache[version] = cached
         return dict(cached)
 
-    def _first_dir_needed(self, versions: list[int], start: dict[int, int]) -> int:
-        """Index into ascending `versions` of the first commit dir that
-        can hold an offset at or past `start` (a bucket missing from
-        `start` counts from 0 — the resume escape). A dir whose HWM is
-        at or below `start` in every bucket holds nothing new, and since
-        HWMs only grow those dirs form a prefix: a binary search over
-        memoized HWMs finds it."""
-        return bisect.bisect_left(
-            versions,
-            True,
-            key=lambda v: any(o > start.get(b, 0) for b, o in self.hwm_at(v).items()),
-        )
+    def _first_dir(self, versions: list[int], reached) -> int:
+        """Index into ascending `versions` of the first commit dir whose
+        recorded HWM map satisfies `reached` (len(versions) if none).
+        HWMs only grow, so `reached` turns true once and stays true: a
+        binary search over memoized HWMs finds the turn."""
+        return bisect.bisect_left(versions, True, key=lambda v: reached(self.hwm_at(v)))
 
     def scan(
         self,
@@ -455,7 +449,9 @@ class LogStore:
         explicit schema: committed_dirs() fences them to
         log_floor <= V <= CURRENT (or `as_of_commit`), and with
         `start_offsets` the dirs whose HWM the start already covers are
-        skipped (the LogSegment-slice read of the reference, and
+        skipped, and with `end_offsets` bounding every bucket the dirs
+        after the first one whose HWM reaches the end are cut (the
+        LogSegment-slice read of the reference, and
         Structured Streaming's getBatch(start, end)). Poll cost follows
         the new commits, not the retained history. The first dir read
         can start mid-commit, so the per-bucket offset bounds still
@@ -477,7 +473,18 @@ class LogStore:
         paths = {int(n.split("=")[1]): p for n, p in {**remote, **local}.items()}
         versions = sorted(paths)
         if start_offsets:
-            versions = versions[self._first_dir_needed(versions, start_offsets):]
+            # a dir whose HWM is at or below the start in every bucket
+            # holds nothing new (a bucket missing from the start counts
+            # from 0 — the resume escape)
+            versions = versions[self._first_dir(
+                versions, lambda h: any(o > start_offsets.get(b, 0) for b, o in h.items())
+            ):]
+        if end_offsets and versions and not set(self.hwm_at(versions[-1])) - set(end_offsets):
+            # every bucket is bounded: the dirs after the first one whose
+            # HWM reaches the end in every bucket hold only offsets past it
+            versions = versions[: 1 + self._first_dir(
+                versions, lambda h: all(h.get(b, 0) >= o for b, o in end_offsets.items())
+            )]
         if not versions:
             return self._empty_scan(spark)
 

@@ -1,6 +1,7 @@
 """Per-commit fixed cost of the fused PK commit, pinned as counts that do
-not drift with machine load: Spark jobs per client flush and tasks in
-the write stage. Plus the consistency guard for the fold's one shared
+not drift with machine load: Spark jobs per client flush and per
+upsert of a local batch, tasks in the write stage and classes compiled
+by a steady-state commit. Plus the consistency guard for the fold's one shared
 sort (rows tied in a user `ordering`) and the snapshot-dir cache key."""
 
 from __future__ import annotations
@@ -114,6 +115,50 @@ def test_client_flush_skips_scope_discovery(spark, tmp_path):
         )
         assert len(flush_jobs) == len(direct_jobs) - 1, (flush_jobs, direct_jobs)
         assert _snapshot(table, spark) == model, rnd
+
+
+def _pandas_batch(spark, keys, tag):
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame({"k": keys, "v": [f"{tag}{k}" for k in keys], "o": [1] * len(keys)})
+    )
+
+
+def test_local_batch_skips_scope_discovery(spark, tmp_path):
+    """A pandas-built batch is a local relation: the commit collects its
+    key columns with no job and routes them in Python, so the upsert
+    runs only its write job — against the discovery job plus the write
+    for the same rows built from a list (an RDD-backed frame)."""
+    _client, engine = _table(tmp_path, "local")
+    engine.upsert(_pandas_batch(spark, list(range(64)), "v"))
+    local = _pandas_batch(spark, [3, 17, 40, 90], "p")
+    assert local.isLocal()
+    jobs = _run_jobs(spark, lambda: engine.upsert(local))
+    assert len(jobs) == 1, jobs
+    listed = spark.createDataFrame(
+        [(k, f"l{k}", 2) for k in (5, 17, 91)], "k bigint, v string, o int"
+    )
+    assert not listed.isLocal()
+    assert len(_run_jobs(spark, lambda: engine.upsert(listed))) == 2
+    got = {r["k"]: r["v"] for r in engine.snapshot(spark).collect()}
+    assert len(got) == 66
+    assert (got[3], got[5], got[17], got[40], got[90], got[91]) == (
+        "p3", "l5", "l17", "p40", "p90", "l91",
+    )
+
+
+def test_steady_state_commit_compiles_no_classes(spark, tmp_path):
+    """The commit's own values — timestamp, offset bases — enter the plan
+    as map literals, which generated code holds as reference objects:
+    the second of two same-shape commits compiles no new class."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    _client, engine = _table(tmp_path, "codegen")
+    engine.upsert(_pandas_batch(spark, list(range(64)), "v"))
+    engine.upsert(_pandas_batch(spark, list(range(0, 80, 3)), "a"))
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    engine.upsert(_pandas_batch(spark, list(range(1, 80, 3)), "b"))
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
 
 
 def _changelog_consistent(client, table, spark):

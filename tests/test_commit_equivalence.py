@@ -27,6 +27,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fluss_spark.catalog import Catalog
+from fluss_spark.operators.replay import DEST_COL
 from fluss_spark.table import create_table
 from fluss_spark.types import (
     BUCKET_COL,
@@ -55,14 +56,14 @@ def _schema():
 def _force_twopass(t):
     """Route every commit of this table through the two-pass baseline in
     place of the fused write-and-publish (`KvStore._commit`). The fold's
-    changelog additionally carries __bucket and the NULL-change-type
-    prior rows; the two-pass baseline must stay an INDEPENDENT
+    output additionally carries __bucket, __dest and the snapshot
+    images; the two-pass baseline must stay an INDEPENDENT
     implementation, so it receives the plain changelog (events only)
     and re-derives survivors by its own anti-join."""
 
     def _twopass(self, spark, cl, ts_list, state0, pre_lock=None):
         assert len(ts_list) == 1 and pre_lock is None
-        cl = cl.filter(f"`{CHANGE_TYPE_COL}` IS NOT NULL").drop(BUCKET_COL)
+        cl = cl.filter(f"`{CHANGE_TYPE_COL}` IS NOT NULL").drop(BUCKET_COL, DEST_COL)
         return [commit_twopass(self, spark, cl, ts_list[0])]
 
     t.kv._commit = pytypes.MethodType(_twopass, t.kv)
@@ -453,19 +454,18 @@ def test_commit_paths_equivalent_property_partitioned(
 
 
 def test_sql_fold_changelog_matches_replay_fold(spark, tmp_path):
-    """The default engine's SQL fold (`_fold`) must emit the EXACT
-    changelog frame — events, NULL-change-type prior rows, __seq /
-    __sub / __bucket — that `replay(cluster_cols=[__bucket],
-    emit_prior=True)` emits over the same fold input
-    (`_fold_input_sql`), on every shape the gate admits: plain, WAL
-    changelog image (+I -> +U shortcut + -U drop, NULL-safe for prior
-    rows), DeleteBehavior.IGNORE (the post-__seq filter), and a
-    partitioned table (pair discovery)."""
-    from pyspark.sql import functions as F
-
-    from fluss_spark.operators.replay import replay
-    from fluss_spark.sources.kv import BUCKET_COL
-
+    """The default engine's one-statement SQL fold (`_fold`) and
+    replay() over the same fold input (`_fold_input_sql`) feed the
+    commit the same rows: two tables take the same base and batch, one
+    through each fold, and their commit artifacts — WAL rows with
+    offsets, timestamps, __seq / __sub, the snapshot and the HWMs — are
+    equal, on every shape the gate admits: plain, WAL changelog image
+    (+I -> +U shortcut + -U drop), DeleteBehavior.IGNORE (-D rows
+    numbered, then dropped), an overwrite batch to a versioned table
+    with WAL image, and a partitioned table (pair discovery). A partial
+    update naming every column (replay's partial fold; with deletes,
+    its sequential pandas fold) must commit what the SQL fold commits
+    for the plain upsert."""
     shapes = {
         "plain": ({}, None, None),
         "wal": ({"table.changelog.image": "wal"}, None, None),
@@ -484,6 +484,7 @@ def test_sql_fold_changelog_matches_replay_fold(spark, tmp_path):
             None,
             "overwrite",
         ),
+        "partial_all_columns": ({}, None, None),
     }
     cat = Catalog(str(tmp_path / "wh"))
     ts = 1_700_000_900_000
@@ -495,11 +496,11 @@ def test_sql_fold_changelog_matches_replay_fold(spark, tmp_path):
         ]
         pk = ["k"]
         ddl = "k int, v string, n long, __op string"
-        mk = lambda rows: spark.createDataFrame(rows, ddl)  # noqa: E731
         base = [(k, f"v{k}", k * 10, "U") for k in range(12)]
         batch = [
             (1, "x", 111, "U"), (1, "y", 112, "U"), (3, None, 0, "D"),
             (99, "new", 9, "U"), (4, "d4", 0, "D"), (4, "back", 44, "U"),
+            (50, None, 0, "D"),
         ]
         if parts:
             fields = [Field("dt", "STRING", nullable=False)] + fields
@@ -511,23 +512,31 @@ def test_sql_fold_changelog_matches_replay_fold(spark, tmp_path):
             fields=fields, primary_key=pk, partition_keys=parts or [],
             num_buckets=4, properties=dict(props),
         )
-        t = create_table(cat, "db", f"sqlfold_{name}", schema)
-        t.kv.upsert(mk(base), ordering=["n"], commit_ts_ms=ts)
-
-        df_sql = mk(batch)
-        assert t.kv._sql_fold_ok(df_sql, None, mm), name
-        cl_sql = t.kv._fold(spark, [df_sql], ["n"], None, None, mm)
-        fold_sql, frames, seq_order = t.kv._fold_input_sql(
-            spark, [mk(batch)], ["n"], None
-        )
-        cl_lay, _ = replay(
-            spark.sql(fold_sql, **frames), schema, may_have_deletes=True,
-            cluster_cols=[BUCKET_COL], emit_prior=True,
-            merge_mode=mm, seq_order=seq_order,
-        )
-        assert sorted(cl_sql.columns) == sorted(cl_lay.columns), name
-        cols = cl_lay.columns
-        key = lambda r: tuple((x is None, x) for x in r)  # noqa: E731
-        rows_sql = sorted((tuple(r[c] for c in cols) for r in cl_sql.collect()), key=key)
-        rows_lay = sorted((tuple(r[c] for c in cols) for r in cl_lay.collect()), key=key)
-        assert rows_sql == rows_lay, f"{name}: SQL fold != replay fold"
+        col_names = [f.name for f in fields]
+        artifacts = []
+        for route in ("sql", "replay"):
+            t = create_table(cat, "db", f"sqlfold_{name}_{route}", schema)
+            t.kv.upsert(spark.createDataFrame(base, ddl), ordering=["n"], commit_ts_ms=ts)
+            df = spark.createDataFrame(batch, ddl)
+            kw = {"merge_mode": mm}
+            if route == "sql":
+                assert t.kv._sql_fold_ok(df, None, mm), name
+            else:
+                t.kv._sql_fold_ok = lambda *_a: False
+                if name == "partial_all_columns":
+                    kw["partial_update_cols"] = col_names
+            t.kv.upsert(df, ordering=["n"], commit_ts_ms=ts + 1, **kw)
+            wal = t.kv.log.scan(spark).select(
+                BUCKET_COL, OFFSET_COL, CHANGE_TYPE_COL, TIMESTAMP_COL,
+                "__seq", "__sub", *col_names,
+            )
+            snap = t.snapshot(spark).select(*col_names)
+            artifacts.append((
+                sorted((tuple(r) for r in wal.collect()), key=_nskey),
+                sorted((tuple(r) for r in snap.collect()), key=_nskey),
+                _hwm(t),
+            ))
+        (wal_sql, snap_sql, hwm_sql), (wal_rp, snap_rp, hwm_rp) = artifacts
+        assert wal_sql == wal_rp, f"{name}: WAL differs"
+        assert snap_sql == snap_rp, f"{name}: snapshot differs"
+        assert hwm_sql == hwm_rp, name

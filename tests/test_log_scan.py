@@ -241,7 +241,9 @@ CASES = [
 @pytest.mark.parametrize("case", CASES)
 def test_scan_equals_whole_root_oracle(spark, catalog, case):
     """For random start/end maps the dir-selecting scan returns exactly
-    the rows of the whole-root read bounded per bucket."""
+    the rows of the whole-root read bounded per bucket, also for end
+    maps that bound every bucket (the scan then cuts the dirs after the
+    first one whose HWM reaches the end)."""
     t, cols = _build_case(spark, catalog, case)
     _assert_dirs_below_hwm(t)
     rows = _oracle_rows(spark, t, cols)
@@ -249,6 +251,11 @@ def test_scan_equals_whole_root_oracle(spark, catalog, case):
     rng = random.Random(case)
     draws = [(None, None), ({}, None)] + [
         (_draw(rng, t), _draw(rng, t) if rng.random() < 0.5 else None) for _ in range(8)
+    ]
+    everywhere = {b: 0 for b in range(t.catalog.get_schema(t.db, t.name).num_buckets)}
+    draws += [
+        (_draw(rng, t) if rng.random() < 0.5 else None, everywhere | _draw(rng, t))
+        for _ in range(6)
     ]
     renamed = ["label"] if case == "renamed_column" else []
     for start, end in draws:
@@ -259,6 +266,31 @@ def test_scan_equals_whole_root_oracle(spark, catalog, case):
         )
         if renamed:
             assert all(r["label"] == f"v{r['a']}" for r in got)
+
+
+def test_time_travel_slice_reads_only_its_commit_dirs(spark, catalog):
+    """Time travel to a deferred (WAL-only) version folds the changelog
+    slice between the nearest manifest's HWM and the version's HWM: its
+    scan reads the commit dirs inside the slice, not every dir after the
+    start, and the state equals the eager table's at that version."""
+    t = _pk_table(catalog, "tt_slice", props={"table.snapshot.defer-commits": "3"})
+    e = _pk_table(catalog, "tt_eager")
+    for i in range(5):
+        for tbl in (t, e):
+            tbl.upsert(_kv_rows(spark, range(3 * i, 3 * i + 8), f"r{i}"))
+    # v1-v3 WAL-only, v4 the cadence materialization, v5-v6 WAL-only
+    state = catalog.current_commit("db", "tt_slice")
+    assert (state.version, state.snapshot_version) == (6, 4)
+    kv = t.kv
+    for version, dirs, eager_v in ((2, {1, 2}, 2), (5, {5}, 4), (6, {5, 6}, 5)):
+        m = kv._nearest_manifest_version(version)
+        start = kv.log.hwm_at(m) if m >= 0 else None
+        end = {b: 0 for b in range(4)} | kv.log.hwm_at(version)
+        files = kv.log.scan(spark, start_offsets=start, end_offsets=end).inputFiles()
+        got = {int(f.split("__commit=")[1].split("/")[0]) for f in files}
+        assert got == dirs, (version, got)
+        snap = {(r["k"], r["v"]) for r in t.snapshot(spark, version=version).collect()}
+        assert snap == {(r["k"], r["v"]) for r in e.snapshot(spark, version=eager_v).collect()}
 
 
 def test_kv_writers_keep_commit_dirs_below_hwm(spark, catalog):

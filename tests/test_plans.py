@@ -289,15 +289,17 @@ def _batch_buckets(t, batch):
     return {r[0] for r in batch.select(t.kv._bucket_expr()).distinct().collect()}
 
 
-def _pin_commit_plan(spark, out, buckets, num_buckets, scans):
+def _pin_commit_plan(spark, out, buckets, num_buckets, scans, windows=3):
     """Pins of a fused commit-output plan as the commit runs it (AQE
     off): ONE hash exchange on __bucket, as wide as the sizing rule
     min(table buckets, touched buckets, cores); no broadcast; `scans`
-    file scans; every Generate inside whole-stage codegen, with no
-    array_compact / filter lambda left to pull it out; and 3 sorts —
-    the one the __seq numbering and the fold windows share, plus the
-    commit's arrival-order and per-key sorts (the writer's own sort is
-    not part of this plan)."""
+    file scans; ONE Generate — the fold's, emitting events and snapshot
+    images together — inside whole-stage codegen, with no array_compact
+    / filter lambda left to pull it out; 2 sorts — the one the __seq
+    numbering and the fold state share, plus the commit's arrival-order
+    sort (the writer's own sort is not part of this plan); and at most
+    `windows` Window operators (the plain SQL fold: one key window, the
+    offset window and the touched-unit window)."""
     import re
 
     from fluss_spark.sources.kv import BUCKET_COL, _aqe_off_enter, _aqe_off_exit
@@ -315,9 +317,10 @@ def _pin_commit_plan(spark, out, buckets, num_buckets, scans):
     assert "BroadcastHashJoin" not in full, full
     assert full.count("InMemoryFileIndex") == scans, full
     gens = re.findall(r"^[\s+\-:|]*(\*\(\d+\) )?Generate ", full, re.M)
-    assert len(gens) == 2 and all(gens), full
+    assert len(gens) == 1 and all(gens), full
     assert "array_compact" not in full and "filter(" not in full, full
-    assert len(re.findall(r"^[\s+\-:|]*(?:\*\(\d+\) )?Sort \[", full, re.M)) == 3, full
+    assert len(re.findall(r"^[\s+\-:|]*(?:\*\(\d+\) )?Sort \[", full, re.M)) == 2, full
+    assert len(re.findall(r"^[\s+\-:|]*Window \[", full, re.M)) <= windows, full
 
 
 def test_replay_fold_is_single_shuffle(spark, sf_dir):
@@ -380,16 +383,17 @@ def test_replay_fold_is_single_shuffle(spark, sf_dir):
 
 def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     """The FULL second-commit upsert transaction — seed read ∪ batch,
-    __seq assignment, changelog fold, AND the fused commit-output plan
-    (WAL offsets, is-last routing, snapshot rewrite feed) — must cost
+    __seq assignment, changelog fold with snapshot images, AND the
+    fused commit-output plan (WAL offsets, touched-unit filter) — must cost
     exactly ONE hash exchange, keyed by __bucket and as wide as
     min(table buckets, touched buckets, cores). Every window is keyed
     __bucket[, pk] (bucket is a function of the pk), so they all reuse
-    the fold's exchange; the prior-snapshot rows ride the same exchange
+    the fold's exchange; the seed rows ride the same exchange
     as re-emitted seed rows, so the snapshot is scanned ONCE and there
     is no semi-join at all. The fold windows order by the __seq
-    numbering's own spec, so they share its sort. This is the shape
-    every non-default fold takes: replay() over the one fold input
+    numbering's own spec, so they share its sort (replay() keeps them
+    in a second Window operator: 4 in all). This is the shape every
+    non-default fold takes: replay() over the one fold input
     (`_fold_input_sql`)."""
     import re
 
@@ -412,7 +416,7 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     )
     changelog, _ = replay(
         spark.sql(fold_sql, **frames), schema, may_have_deletes=False,
-        cluster_cols=[BUCKET_COL], emit_prior=True, seq_order=seq_order,
+        cluster_cols=[BUCKET_COL], images=True, seq_order=seq_order,
     )
     simple = changelog._sc._jvm.PythonSQLUtils.explainString(
         changelog._jdf.queryExecution(), "simple"
@@ -424,18 +428,19 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     state0 = t.kv.catalog.current_commit("db", "fold_plan")
     out, _persisted, _auto = t.kv._commit_plan(changelog, [123456], state0)
     # one scan of the snapshot, one scan of the batch (plus no broadcast)
-    _pin_commit_plan(spark, out, _batch_buckets(t, batch), schema.num_buckets, scans=2)
+    _pin_commit_plan(
+        spark, out, _batch_buckets(t, batch), schema.num_buckets, scans=2, windows=4
+    )
 
 
 def test_sql_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
-    """The default engine's one-statement SQL fold (`_fold`) must
-    produce the SAME physical shape as replay() over the same fold
-    input (pinned above): the complete commit-output plan costs exactly ONE hash
-    exchange keyed by __bucket and as wide as min(table buckets,
-    touched buckets, cores), with the snapshot scanned once, the batch
-    scanned once, no broadcast, codegen'd generators and 3 sorts — the
-    nested-subquery construction changes only how many times the driver
-    analyzes the tree, never the resolved plan."""
+    """The default engine's one-statement SQL fold (`_fold`): the
+    complete commit-output plan costs exactly ONE hash exchange keyed
+    by __bucket and as wide as min(table buckets, touched buckets,
+    cores), with the snapshot scanned once, the batch scanned once, no
+    broadcast, one codegen'd generator, 2 sorts and 3 Window operators —
+    the __seq numbering and the fold state share ONE key window, so
+    each row is numbered and folded in one pass."""
     import re
 
     from fluss_spark.catalog import Catalog
@@ -468,9 +473,11 @@ def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
     keeps the single-exchange contract: the complete commit-output plan
     for a 3-batch group costs exactly ONE hash exchange keyed by
     __bucket and as wide as min(table buckets, touched buckets, cores),
-    no broadcast, codegen'd generators and 3 sorts, with the snapshot
+    no broadcast, one codegen'd generator and 2 sorts, with the snapshot
     scanned once — the batch index only leads the window order and adds
-    a write-partition level, never an exchange or a sort."""
+    a write-partition level, never an exchange or a sort (its per-batch
+    __seq numbering keys on __grp, so it keeps a window of its own: 4 in
+    all)."""
     import re
 
     from fluss_spark.catalog import Catalog
@@ -501,7 +508,9 @@ def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
     # one snapshot scan + one scan per batch — the group adds batches,
     # never a second snapshot pass
     buckets = set().union(*(_batch_buckets(t, b) for b in batches))
-    _pin_commit_plan(spark, out, buckets, schema.num_buckets, scans=1 + len(batches))
+    _pin_commit_plan(
+        spark, out, buckets, schema.num_buckets, scans=1 + len(batches), windows=4
+    )
 
 
 def test_q5_broadcasts_all_dims(spark, sf_dir):
