@@ -663,20 +663,9 @@ class Admin:
                 "(rows live there keyed by data columns) — pass spark="
             )
         val = spec[key]
-        if t.kv is not None:
+        if t.kv is not None and val in maintenance.materialized_partitions(t):
             # outside the lock: delete_where takes the write lock itself
-            has_rows = maintenance.materialized_partitions(t)
-            if val in has_rows:
-                t.delete_where(spark, F.col(key) == F.lit(val))
-                # deferred materialization: the delete commit above landed
-                # WAL-ONLY, so its -D events are the only record that the
-                # partition's materialized rows died. drop_partition_dirs
-                # below removes the partition's WAL dirs INCLUDING those
-                # -D events — fold the tail into the snapshot first, or
-                # the manifest's pairs would resurrect the rows.
-                st = t.catalog.current_commit(db, name)
-                if t.kv._tail_start(st) is not None:
-                    t.kv.materialize(spark)
+            maintenance.delete_partition_rows(t, spark, F.col(key) == F.lit(val))
         with self.catalog.write_lock(db, name):
             active = maintenance.registered_partitions(t)
             known = set(active) | maintenance.materialized_partitions(t)

@@ -175,6 +175,7 @@ def _compact_log_locked(
     df = log.scan(spark, tiers="local")
     version = state.version + 1
     part_cols = list(log.schema.partition_keys) + [BUCKET_COL]
+    codec = table.schema.properties.get("table.log.compression", "snappy")
     if sort_columns is None:
         prop = table.schema.properties.get("table.log.compaction.sort-columns")
         sort_columns = [c.strip() for c in prop.split(",")] if prop else []
@@ -197,6 +198,7 @@ def _compact_log_locked(
             .sortWithinPartitions(BUCKET_COL, "__z")
             .drop("__z")
             .write.mode("overwrite")
+            .option("compression", codec)
             .partitionBy(*part_cols)
             .parquet(log.staging_path(version))
         )
@@ -208,6 +210,7 @@ def _compact_log_locked(
             )
             .sortWithinPartitions(BUCKET_COL, *order)
             .write.mode("overwrite")
+            .option("compression", codec)
             .partitionBy(*part_cols)
             .parquet(log.staging_path(version))
         )
@@ -301,9 +304,10 @@ def compact_snapshot(table: FlussTable, spark: SparkSession, max_dirs: int = 8) 
     """Rewrite the PK snapshot into ONE data dir when the manifest
     references more than `max_dirs` dirs (each upsert adds one for its
     touched buckets; lookups union one scan per dir). Runs under the
-    write lock; commits a new version whose manifest maps every bucket
-    to the fresh dir. Keeps lookup fan-in O(1) regardless of commit
-    count."""
+    write lock: the current rows (a pending WAL tail merged in) are
+    rewritten as every unit through `KvStore._rewrite_units`, whose
+    manifest maps each unit the fresh dir holds to it, and a new version
+    commits. Keeps lookup fan-in O(1) regardless of commit count."""
     with table.catalog.write_lock(table.db, table.name):
         return _compact_snapshot_locked(table, spark, max_dirs)
 
@@ -317,32 +321,7 @@ def _compact_snapshot_locked(table: FlussTable, spark: SparkSession, max_dirs: i
     if not manifest or len(set(manifest.values())) <= max_dirs:
         return False
     version = state.version + 1
-    data_dir = f"data-v{version}"
-    snap = kv.snapshot(spark)
-    # partition dirs above the bucket dir for partitioned pk tables —
-    # same physical layout the single-action commit writes, so
-    # compaction preserves partition-directory pruning
-    (
-        snap.withColumn("__bucket", kv._bucket_expr())
-        .repartition(exchange_width(spark, kv.schema.num_buckets), F.col("__bucket"))
-        .write.mode("overwrite")
-        .partitionBy(*kv.schema.partition_keys, "__bucket")
-        .parquet(os.path.join(kv.snapshot_dir, data_dir))
-    )
-    if kv.schema.partition_keys:
-        # pair-granular manifest: everything now lives in the fresh dir;
-        # the written (partition, bucket) set comes from a dir walk
-        pairs = kv._walk_pairs(os.path.join(kv.snapshot_dir, data_dir))
-        kv._write_manifest(
-            version, {p: data_dir for p in pairs}, {data_dir: pairs}
-        )
-    else:
-        # derive buckets from the WRITTEN dirs, not the old manifest: the
-        # tail-aware snapshot read can introduce keys in buckets the old
-        # manifest never referenced (deferred WAL-only commits), and it
-        # folds deletes that may empty a previously-referenced bucket
-        snap_buckets = {b for _pp, b in kv._walk_pairs(os.path.join(kv.snapshot_dir, data_dir))}
-        kv._write_manifest(version, {b: data_dir for b in snap_buckets})
+    kv._rewrite_units(spark, kv.snapshot(spark), version)
     table.catalog.commit(
         table.db,
         table.name,
@@ -481,6 +460,20 @@ def drop_partition_dirs(table: FlussTable, values: list[str]) -> None:
                     fsops.remove(pdir)
 
 
+def delete_partition_rows(table: FlussTable, spark: SparkSession, cond) -> None:
+    """Delete a PK table's rows matching `cond` (a predicate on its
+    partition column) through the engine, before the caller removes the
+    partitions' log dirs. Under deferred materialization the delete
+    commit lands WAL-ONLY, so its -D events are the only record that
+    the partitions' materialized rows died: the tail is folded into the
+    snapshot here, before drop_partition_dirs erases those WAL dirs
+    (-D events included), or the manifest's pairs would resurrect the
+    rows."""
+    table.delete_where(spark, cond)
+    if table.kv._tail_start(table.catalog.current_commit(table.db, table.name)) is not None:
+        table.kv.materialize(spark)
+
+
 def auto_partition(
     table: FlussTable, now: datetime | None = None, spark=None
 ) -> dict[str, list[str]]:
@@ -529,23 +522,12 @@ def auto_partition(
     cutoff = (now - n_keep * _UNIT_DELTA[unit]).strftime(fmt)
     keepers = [p for p in active if p >= cutoff]
     dropped = [p for p in active if p < cutoff]
-    if table.kv is not None and dropped:
+    to_delete = [p for p in dropped if p in on_disk]
+    if table.kv is not None and to_delete:
         # pk table: delete expired rows through the engine FIRST (same
         # order as Admin.drop_partition — snapshot consistency), then
         # remove the log dirs below
-        from pyspark.sql import functions as F
-
-        key = table.schema.partition_keys[0]
-        to_delete = [p for p in dropped if p in on_disk]
-        if to_delete:
-            table.delete_where(spark, F.col(key).isin(to_delete))
-            # deferred materialization: the delete commit is WAL-only —
-            # fold it into the snapshot BEFORE drop_partition_dirs erases
-            # the partitions' WAL dirs (including the -D events), or the
-            # manifest's pairs would resurrect the expired rows
-            st = table.catalog.current_commit(table.db, table.name)
-            if table.kv._tail_start(st) is not None:
-                table.kv.materialize(spark)
+        delete_partition_rows(table, spark, F.col(table.schema.partition_keys[0]).isin(to_delete))
     fsops.write_atomic(meta_path, json.dumps({"active": keepers}))
     drop_partition_dirs(table, dropped)
     return {"created": [c for c in created if c not in existing], "dropped": dropped}
@@ -578,8 +560,9 @@ def rebucket_table(table: FlussTable, spark: SparkSession, new_buckets: int) -> 
       - offsets restart 0-based per new bucket; high watermarks come
         from the rewritten footers; log_start resets (all history is in
         the one rewritten commit);
-      - PK tables also rewrite the snapshot into a fresh manifest keyed
-        by the new bucket ids (lookups route with the new count
+      - PK tables also rewrite the snapshot under the new bucket ids
+        through `KvStore._rewrite_units`, whose manifest lists each new
+        bucket that holds rows (lookups route with the new count
         immediately);
       - `table.bucket.epoch` bumps: per-bucket OFFSETS ARE NOT
         COMPARABLE across a rebucket, so streaming subscriptions must
@@ -641,24 +624,7 @@ def _rebucket_locked(table: FlussTable, spark: SparkSession, new_buckets: int) -
     # snapshot_version, so a crash here loses nothing.
     snapshot_version = state.snapshot_version
     if table.kv is not None and state.snapshot_version >= 0:
-        kv = table.kv
-        data_dir = f"data-v{version}"
-        snap = kv.snapshot(spark)
-        bucket_expr = F.pmod(F.hash(*schema.bucket_keys), F.lit(new_buckets)).cast("int")
-        (
-            snap.withColumn("__bucket", bucket_expr)
-            .repartition(exchange_width(spark, new_buckets), F.col("__bucket"))
-            .write.mode("overwrite")
-            .partitionBy(*schema.partition_keys, "__bucket")
-            .parquet(os.path.join(kv.snapshot_dir, data_dir))
-        )
-        if schema.partition_keys:
-            pairs = kv._walk_pairs(os.path.join(kv.snapshot_dir, data_dir))
-            kv._write_manifest(
-                version, {p: data_dir for p in pairs}, {data_dir: pairs}
-            )
-        else:
-            kv._write_manifest(version, {b: data_dir for b in range(new_buckets)})
+        table.kv._rewrite_units(spark, table.kv.snapshot(spark), version, num_buckets=new_buckets)
         snapshot_version = version
 
     # crash-safe publication order (the _truncate_commits_before rule:

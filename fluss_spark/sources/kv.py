@@ -32,7 +32,8 @@ deferred, group (upsert_many) and optimistic — takes the same route:
      per-version manifest, so per-commit write cost is O(touched
      units), not O(table) (_commit_plan)
   4. the driver moves __dest=w/__dest=s into the log commit dir and
-     snapshot/data-vN and writes the manifest and commit records, all
+     snapshot/data-vN and writes the manifest (_repoint, which every
+     snapshot writer publishes through) and commit records, all
      numbered above CURRENT (invisible; a crash leaves garbage the next
      write lock sweeps), then one CURRENT write advances the table to
      V' (_commit_finish; a group publishes one version per batch)
@@ -289,6 +290,73 @@ class KvStore:
                     out.append(("" if rel == "." else rel, int(d[len(marker):])))
         return sorted(out)
 
+    # ------------------------------------------------------------------ #
+    # snapshot rewrite: every writer of a snapshot data dir — the fused
+    # commit, materialize, snapshot compaction and rebucket — publishes
+    # it through _repoint; all but the fused commit (whose images come
+    # out of its one write action) write it through _rewrite_units
+    # ------------------------------------------------------------------ #
+    @staticmethod
+    def _data_dir(version: int) -> str:
+        """Name of the snapshot data dir a version writes."""
+        return f"data-v{version}"
+
+    def _repoint(
+        self, version: int, base_snapshot_version: int, data_dir: str, touched=None
+    ) -> None:
+        """Write manifest v`version`: the base version's manifest with
+        each touched unit (a bucket, or a (partition path, bucket) pair)
+        pointed at `data_dir` when the dir holds it and dropped
+        otherwise (every key of the unit was deleted). `touched=None`
+        rewrites every unit: the manifest is exactly the dir's units.
+        A partitioned manifest carries the base's `dir_pairs` forward
+        and records the pairs `data_dir` was written with."""
+        pcols = self.schema.partition_keys
+        written = self._walk_pairs(os.path.join(self.snapshot_dir, data_dir))
+        held = set(written) if pcols else {b for _pp, b in written}
+        if touched is None:
+            manifest, dir_pairs, touched = {}, {}, held
+        else:
+            manifest = dict(self._manifest(base_snapshot_version) or {})
+            dir_pairs = self._manifest_dir_pairs(base_snapshot_version)
+        for unit in sorted(touched):
+            if unit in held:
+                manifest[unit] = data_dir
+            else:
+                manifest.pop(unit, None)
+        dir_pairs[data_dir] = written
+        self._write_manifest(version, manifest, dir_pairs if pcols else None)
+
+    def _rewrite_units(
+        self,
+        spark: SparkSession,
+        frame: DataFrame,
+        version: int,
+        units=None,
+        num_buckets: int | None = None,
+    ) -> None:
+        """Write `frame` — the current rows of the `units` it rewrites —
+        as snapshot data dir `data-v<version>`, laid out
+        `[<partition>=<v>/]__bucket=<b>` like the fused commit's images
+        and with the table's log codec, then publish manifest v`version`
+        (_repoint). `units=None` rewrites every unit; `num_buckets`
+        routes the rows by a new bucket count (rebucket). Numbered above
+        CURRENT, both stay invisible until the caller commits the
+        version; the caller holds the table write lock."""
+        n = num_buckets or self.schema.num_buckets
+        buckets = None if units is None else sorted({u if isinstance(u, int) else u[1] for u in units})
+        data_dir = self._data_dir(version)
+        (
+            frame.withColumn(BUCKET_COL, self._bucket_expr(n))
+            .repartition(exchange_width(spark, n, buckets), F.col(BUCKET_COL))
+            .write.mode("overwrite")
+            .option("compression", self.schema.properties.get("table.log.compression", "snappy"))
+            .partitionBy(*self.schema.partition_keys, BUCKET_COL)
+            .parquet(os.path.join(self.snapshot_dir, data_dir))
+        )
+        base = self.catalog.current_commit(self.db, self.table).snapshot_version
+        self._repoint(version, base, data_dir, units)
+
     def _parsed_partpath(self, partpath: str, tz: str):
         """The `_partition_key` of a manifest partpath (always PARSE dir
         strings, never construct them): each value unescaped and cast to
@@ -330,8 +398,9 @@ class KvStore:
             )
         return cond
 
-    def _bucket_expr(self):
-        return F.pmod(F.hash(*self.schema.bucket_keys), F.lit(self.schema.num_buckets)).cast("int")
+    def _bucket_expr(self, num_buckets: int | None = None):
+        n = num_buckets or self.schema.num_buckets
+        return F.pmod(F.hash(*self.schema.bucket_keys), F.lit(n)).cast("int")
 
     def _bucket_sql(self) -> str:
         """SQL-string form of _bucket_expr (whole-select plan building)."""
@@ -1069,6 +1138,17 @@ class KvStore:
             )
         return spark.sql(final_sql, **frames)
 
+    def _tail_dirs(self, state: CommitState) -> list[str]:
+        """The log commit dirs the materialized snapshot does not cover:
+        versions above snapshot_version are wholly uncovered (a
+        materialization at M records the full HWM at M)."""
+        local, remote = self.log.committed_dirs()
+        return [
+            path
+            for name, path in list(remote.items()) + list(local.items())
+            if int(name.split("=")[1]) > state.snapshot_version
+        ]
+
     def _tail_bytes_exceeded(self, state: CommitState) -> bool:
         """table.snapshot.defer-max-tail-bytes: a size threshold that
         triggers materialization before the commit cadence does — bounds
@@ -1080,11 +1160,8 @@ class KvStore:
         if not prop:
             return False
         limit = int(prop)
-        local, remote = self.log.committed_dirs()
         total = 0
-        for name, path in list(remote.items()) + list(local.items()):
-            if int(name.split("=")[1]) <= state.snapshot_version:
-                continue
+        for path in self._tail_dirs(state):
             for r, _d, files in os.walk(path):
                 for fn in files:
                     total += os.path.getsize(os.path.join(r, fn))
@@ -1094,7 +1171,8 @@ class KvStore:
 
     def materialize(self, spark: SparkSession) -> CommitState:
         """Fold the WAL tail into the snapshot now, under the table write
-        lock (see _materialize_locked)."""
+        lock: the units the tail touched are rewritten and published
+        through _rewrite_units (see _materialize_locked)."""
         with self.catalog.write_lock(self.db, self.table):
             return self._materialize_locked(spark)
 
@@ -1102,39 +1180,31 @@ class KvStore:
         """Fold the WAL tail into the materialized snapshot — the
         periodic-checkpoint half of the deferred-commit mode (reference
         analog: server/kv/snapshot/'s RocksDB checkpoint upload). Only
-        the (partition, bucket) units the tail touched are rewritten —
-        discovered DRIVER-SIDE from the tail commit dirs' names (zero
-        Spark jobs for discovery); every other unit keeps its old
-        manifest entry as untouched bytes. Commits a new version with no
-        WAL dir (the same sparse-version shape log compaction uses).
-        Amortization is the point: K deferred commits spraying keys over
-        P units cost ONE rewrite of each touched unit instead of K.
+        the units (buckets, or (partition, bucket) pairs) the tail
+        touched are rewritten — discovered DRIVER-SIDE from the
+        uncovered tail dirs' names (zero Spark jobs for discovery); their
+        rows are the hybrid snapshot() bounded to those units, written
+        and published through _rewrite_units, and every other unit
+        keeps its old manifest entry as untouched bytes. Commits a new
+        version with no WAL dir (the same sparse-version shape log
+        compaction uses). Amortization is the point: K deferred commits
+        spraying keys over P units cost ONE rewrite of each touched unit
+        instead of K.
 
         Crash-safe: the data dir and manifest are numbered above CURRENT,
         so they stay invisible until meta/CURRENT advances; a crash in
         between leaves orphans the next lock acquisition sweeps. The
         caller holds the table write lock."""
-        schema = self.schema
+        pcols = self.schema.partition_keys
         state = self.catalog.current_commit(self.db, self.table)
-        start = self._tail_start(state)
-        if start is None:
+        if self._tail_start(state) is None:
             return state
         version = state.version + 1
-        pcols = schema.partition_keys
-
-        # touched units from the tail dirs' names: commit dirs with
-        # version > snapshot_version are wholly uncovered (a
-        # materialization at M records the full HWM at M)
-        local, remote = self.log.committed_dirs()
-        touched: set = set()
-        for name, path in list(remote.items()) + list(local.items()):
-            if int(name.split("=")[1]) > state.snapshot_version:
-                touched.update(self._walk_pairs(path))
+        touched = {pair for path in self._tail_dirs(state) for pair in self._walk_pairs(path)}
         buckets = sorted({b for _pp, b in touched})
 
-        # bound the base read to the touched units (same pair predicate
-        # + manifest-key pruning shapes the upsert seed uses)
-        old_manifest = self._manifest(state.snapshot_version) or {}
+        # bound the read to the touched units (same pair predicate +
+        # manifest-key pruning shapes the upsert seed uses)
         pair_pred = None
         pair_keys = None
         if pcols and 0 < len(touched) <= PAIR_SCOPE_MAX:
@@ -1145,49 +1215,9 @@ class KvStore:
                     for pp, b in sorted(touched)
                 ],
             )
-            pair_keys = [k for k in old_manifest if k in touched]
-
-        tail = self._tail_scan(spark, start, None, buckets, None)
-        base = self._materialized(
-            spark, state.snapshot_version, buckets, pair_pred, pair_keys
-        )
-        final = self._merge_tail(base, tail)
-
-        data_dir = f"data-v{version}"
-        dst = os.path.join(self.snapshot_dir, data_dir)
-        (
-            final.withColumn(BUCKET_COL, self._bucket_expr())
-            .repartition(
-                exchange_width(spark, schema.num_buckets, buckets), F.col(BUCKET_COL)
-            )
-            .write.mode("overwrite")
-            .partitionBy(*pcols, BUCKET_COL)
-            .parquet(dst)
-        )
-
-        new_manifest = dict(old_manifest)
-        dir_pairs = None
-        if pcols:
-            snap_pairs = set(self._walk_pairs(dst))
-            for pair in touched:
-                if pair in snap_pairs:
-                    new_manifest[pair] = data_dir
-                else:  # every key of the pair deleted in the tail
-                    new_manifest.pop(pair, None)
-            dir_pairs = dict(self._manifest_dir_pairs(state.snapshot_version))
-            dir_pairs[data_dir] = sorted(snap_pairs)
-        else:
-            # mirror the partitioned prune: a bucket whose every key was
-            # deleted in the tail wrote no __bucket dir — drop its entry
-            # instead of pointing it at the new (empty-for-it) data dir
-            snap_buckets = {b for _pp, b in self._walk_pairs(dst)}
-            for _pp, bkt in touched:
-                if bkt in snap_buckets:
-                    new_manifest[bkt] = data_dir
-                else:
-                    new_manifest.pop(bkt, None)
-
-        self._write_manifest(version, new_manifest, dir_pairs)
+            pair_keys = [k for k in self._manifest(state.snapshot_version) or {} if k in touched]
+        frame = self.snapshot(spark, buckets=buckets, pair_pred=pair_pred, pair_keys=pair_keys)
+        self._rewrite_units(spark, frame, version, touched if pcols else set(buckets))
         new_state = replace(
             state, version=version, snapshot_version=version, ts_ms=int(time.time() * 1000)
         )
@@ -1567,41 +1597,12 @@ class KvStore:
             snapshot_version = state0.snapshot_version
             if last and not wal_only:
                 snapshot_version = version
-                old_manifest = self._manifest(state0.snapshot_version) or {}
-                new_manifest = dict(old_manifest)
-                dir_pairs = None
-                if touched:
-                    data_dir = f"data-v{version}"
-                    dst = os.path.join(self.snapshot_dir, data_dir)
-                    if os.path.isdir(snap_part):
-                        fsops.replace_dir(snap_part, dst)
-                    else:  # every key of the touched buckets was deleted
-                        fsops.makedirs(dst)
-                    if schema.partition_keys:
-                        # a touched pair with no surviving rows (all its
-                        # keys deleted) leaves the manifest entirely
-                        snap_pairs = set(self._walk_pairs(dst))
-                        for pair in sorted(touched):
-                            if pair in snap_pairs:
-                                new_manifest[pair] = data_dir
-                            else:
-                                new_manifest.pop(pair, None)
-                        dir_pairs = dict(
-                            self._manifest_dir_pairs(state0.snapshot_version)
-                        )
-                        dir_pairs[data_dir] = sorted(snap_pairs)
-                    else:
-                        # same prune as the partitioned arm: a touched
-                        # bucket with no surviving rows leaves the manifest
-                        snap_buckets = {b for _pp, b in self._walk_pairs(dst)}
-                        for bkt in sorted(touched):
-                            if bkt in snap_buckets:
-                                new_manifest[bkt] = data_dir
-                            else:
-                                new_manifest.pop(bkt, None)
-                elif schema.partition_keys:
-                    dir_pairs = self._manifest_dir_pairs(state0.snapshot_version)
-                self._write_manifest(version, new_manifest, dir_pairs)
+                # the images of the write action are the new data dir
+                # (absent when every key of the touched units was deleted)
+                data_dir = self._data_dir(version)
+                if os.path.isdir(snap_part):
+                    fsops.replace_dir(snap_part, os.path.join(self.snapshot_dir, data_dir))
+                self._repoint(version, state0.snapshot_version, data_dir, touched)
             states.append(
                 replace(
                     state0,

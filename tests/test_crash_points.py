@@ -14,8 +14,11 @@ its primitives sees each mutation point of an op. For each op:
            or post-op state;
        (b) after two follow-up commits — one that writes no manifest
            and one that writes no WAL dir — time travel to every
-           version <= CURRENT equals the changelog folded up to that
-           version's high watermarks, the run's distinct states in
+           version from the log floor to CURRENT equals the changelog
+           folded up to that version's high watermarks (a rebucket
+           rewrites the whole changelog in a new bucket layout and
+           raises the floor to its version, so no changelog row
+           describes an older version), the run's distinct states in
            version order equal the twin's (maintenance commits change
            no content, so versions are compared by content, not by
            number), changelog replay equals the snapshot, and per-bucket
@@ -23,7 +26,8 @@ its primitives sees each mutation point of an op. For each op:
        (c) nothing numbered above CURRENT remains and `.tmp/` holds
            only live `inflight-*` staging;
        (d) a LogStreamReader resumed from a checkpoint taken before the
-           op delivers each committed change exactly once.
+           op delivers each committed change exactly once, or, once the
+           table was rebucketed, refuses to resume.
 
 A crashed writer leaves its WRITE_LOCK file; the check ages it past the
 stale-lock limit, as the next writer would find it 10 minutes later.
@@ -166,6 +170,7 @@ OPS = {
     "compact_log": ("log", lambda s, t: mnt.compact_log(t, s, target_commits=2)),
     "materialize": ("deferred", lambda s, t: t.kv.materialize(s)),
     "compact_snapshot": ("eager", lambda s, t: mnt.compact_snapshot(t, s, max_dirs=0)),
+    "rebucket": ("deferred", lambda s, t: mnt.rebucket_table(t, s, 8)),
     "tier_log": ("log", lambda s, t: mnt.tier_log(t, local_segments=1)),
 }
 
@@ -226,12 +231,13 @@ def _hwm(t, version=None):
 
 
 def _history(spark, t):
-    """Time travel to every version <= CURRENT, checked against the
-    changelog fold at that version; returns the distinct states in
-    version order."""
+    """Time travel to every version from the log floor to CURRENT,
+    checked against the changelog fold at that version; returns the
+    distinct states in version order."""
     changes = _changes(spark, t)
     seq = []
-    for v in range(t.catalog.current_commit(DB, NAME).version + 1):
+    state = t.catalog.current_commit(DB, NAME)
+    for v in range(state.log_floor, state.version + 1):
         got = _state(spark, t, v)
         assert got == _fold(t, changes, _hwm(t, v)), f"time travel to v{v}"
         if not seq or seq[-1] != got:
@@ -293,7 +299,13 @@ def _check_clean(wh, current):
 
 def _check_resumed_reader(spark, t, wh, ckpt):
     """(d) a reader resumed from the pre-op checkpoint delivers every
-    committed change past it exactly once."""
+    committed change past it exactly once; across a rebucket (a new
+    bucket epoch) it refuses to resume, since the checkpoint's
+    per-bucket offsets belong to the old layout."""
+    if mnt.BUCKET_EPOCH_PROP in t.schema.properties:
+        with pytest.raises(ValueError, match="rebucket"):
+            LogStreamReader(t, spark, checkpoint_dir=os.path.join(wh, "_ckpt"))
+        return
     delivered = []
     LogStreamReader(t, spark, checkpoint_dir=os.path.join(wh, "_ckpt"), startup_mode="earliest").process_available(
         lambda df, bid: delivered.extend(

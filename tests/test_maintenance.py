@@ -816,3 +816,66 @@ def test_compact_log_crash_before_cleanup_reads_no_duplicates(spark, catalog, mo
     assert compact_log(t, spark, target_commits=1) == 2
     assert os.listdir(t.log.log_dir) == ["__commit=6"]
     assert [r for r in rows() if r[2] != 99] == want and len(rows()) == len(want) + 1
+
+
+@pytest.mark.parametrize("zorder", [None, ["a", "b"]], ids=["sorted", "zorder"])
+def test_compact_log_keeps_the_table_codec(spark, catalog, zorder):
+    """Both write branches of compact_log write with
+    `table.log.compression`, as appends do: a zstd log stays zstd."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = create_table(
+        catalog, "db", "zstd_log",
+        TableSchema(
+            fields=[Field("a", "INT"), Field("b", "INT")],
+            num_buckets=2,
+            properties={"table.log.compression": "zstd"},
+        ),
+    )
+    for i in range(3):
+        t.append(spark.createDataFrame([(10 * i + j, j) for j in range(4)], "a int, b int"), ordering=["a"])
+    assert compact_log(t, spark, target_commits=2, zorder_columns=zorder) == 3
+    files = glob.glob(os.path.join(t.log.log_dir, "*", "**", "*.parquet"), recursive=True)
+    codecs = {
+        md.row_group(g).column(c).compression
+        for md in (pq.ParquetFile(f).metadata for f in files)
+        for g in range(md.num_row_groups)
+        for c in range(md.num_columns)
+    }
+    assert files and codecs == {"ZSTD"}
+
+
+def test_rebucket_manifest_lists_only_written_buckets(spark, catalog):
+    """Rebucketing an unpartitioned PK table to more buckets than it has
+    keys leaves some new buckets empty: the manifest lists exactly the
+    `__bucket=` dirs its data dir holds, as every other snapshot writer
+    does, and the snapshot reads the same rows."""
+    import os
+
+    from fluss_spark.maintenance import rebucket_table
+    from fluss_spark.table import FlussTable
+
+    t = create_table(
+        catalog, "db", "rb_sparse",
+        TableSchema(
+            fields=[Field("k", "INT", nullable=False), Field("v", "STRING")],
+            primary_key=["k"],
+            num_buckets=2,
+        ),
+    )
+    t.upsert(spark.createDataFrame([(k, f"v{k}") for k in range(3)], "k int, v string"))
+    before = sorted(map(tuple, t.snapshot(spark).collect()))
+    rebucket_table(t, spark, 16)
+    t2 = FlussTable(catalog, "db", "rb_sparse")
+    manifest = t2.kv._manifest(catalog.current_commit("db", "rb_sparse").snapshot_version)
+    (data_dir,) = set(manifest.values())
+    written = {
+        int(n.split("=")[1])
+        for n in os.listdir(os.path.join(t2.kv.snapshot_dir, data_dir))
+        if n.startswith("__bucket=")
+    }
+    assert set(manifest) == written and len(written) <= 3
+    assert sorted(map(tuple, t2.snapshot(spark).collect())) == before
