@@ -978,20 +978,17 @@ class Admin:
         parquet files of each tiered (remote) log segment."""
         import os
 
+        from fluss_spark.sources.log import commit_dirs
+
         t = FlussTable(self.catalog, db, name)
         out: dict[int, list[str]] = {}
-        if not os.path.isdir(t.log.remote_dir):
-            return out
-        for e in sorted(os.scandir(t.log.remote_dir), key=lambda e: e.name):
-            if not e.name.startswith("__commit="):
-                continue
-            v = int(e.name.split("=")[1])
-            rel = []
-            for dirpath, _dirs, names in os.walk(e.path):
-                for fn in sorted(names):
-                    if fn.endswith(".parquet"):
-                        rel.append(os.path.relpath(os.path.join(dirpath, fn), t.log.remote_dir))
-            out[v] = rel
+        for v, path in commit_dirs(t.log.remote_dir):
+            out[v] = [
+                os.path.relpath(os.path.join(dirpath, fn), t.log.remote_dir)
+                for dirpath, _dirs, names in os.walk(path)
+                for fn in sorted(names)
+                if fn.endswith(".parquet")
+            ]
         return out
 
     # -- offsets (Admin.listOffsets, OffsetSpec EARLIEST/LATEST/TIMESTAMP)

@@ -64,6 +64,10 @@ class CommitState:
     # local commit dir below it into commit local_floor (remote dirs are
     # never compacted, so they stay readable)
     local_floor: int = 0
+    # the bucket count a rebucket published with its commit (get_schema
+    # applies it over schema.json's); 0 = the count the table was
+    # created with
+    num_buckets: int = 0
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, indent=2)
@@ -121,7 +125,9 @@ class Catalog:
         if not os.path.exists(path):
             raise TableNotFoundError(f"{db}.{table}")
         with open(path) as f:
-            return TableSchema.from_json(f.read())
+            schema = TableSchema.from_json(f.read())
+        schema.num_buckets = self.current_commit(db, table).num_buckets or schema.num_buckets
+        return schema
 
     def set_schema(self, db: str, table: str, schema: TableSchema) -> None:
         """ALTER TABLE support (metadata/TableChange.java): schema written

@@ -121,9 +121,7 @@ def create_index(
     sch.properties[INDEX_SYNC_PROP] = json.dumps(
         {str(b): o for b, o in end.items()}, sort_keys=True
     )
-    sch.properties[INDEX_EPOCH_PROP] = base.schema.properties.get(
-        "table.bucket.epoch", "0"
-    )
+    sch.properties[INDEX_EPOCH_PROP] = base.log.bucket_epoch()
     catalog.set_schema(db, idx_name, sch)
     return idx
 
@@ -161,7 +159,7 @@ def sync_index(
     # its prop write): resuming from offset zero is only safe when the
     # base was never rebucketed, i.e. its epoch still matches the
     # default the unwritten prop implies.
-    epoch = base.schema.properties.get("table.bucket.epoch", "0")
+    epoch = base.log.bucket_epoch()
     seen_epoch = idx.schema.properties.get(INDEX_EPOCH_PROP, "0")
     if epoch != seen_epoch:
         raise ValueError(
@@ -194,19 +192,11 @@ def sync_index(
     # fix the slice END before reading: a writer committing between the
     # changelog read and the HWM record would otherwise be skipped
     # forever (the HWM would cover rows this sync never processed)
-    end = base.log.latest_offsets()
-    cl = base.changelog(spark, start_offsets=start or None)
-    # one map literal, not an O(buckets) OR-chain (same shape as the
-    # commit paths' per-bucket bases); absent buckets bound to 0, which
-    # excludes every row of a bucket that has no recorded end
-    from fluss_spark.sources.log import _bucket_map_expr
-
-    bound = F.col("_log_offset") < _bucket_map_expr(
-        {int(b): int(o) for b, o in end.items()}, default=0
-    )
+    end = base.log.slice_end()
+    cl = base.changelog(spark, start_offsets=start or None, end_offsets=end)
     # one pass over the slice: the emptiness probe and the fold read
     # the same cached blocks instead of scanning the changelog twice
-    cl = cl.filter(bound).persist()
+    cl = cl.persist()
     n = cl.count()
     if n:
         final = (

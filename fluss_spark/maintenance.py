@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 
 from fluss_spark import fsops
 from fluss_spark.bucketing import exchange_width
-from fluss_spark.sources.log import COMMIT_DIR_COL, LogStore
+from fluss_spark.sources.log import commit_dirs
 from fluss_spark.table import FlussTable
-from fluss_spark.types import BUCKET_COL, OFFSET_COL, TIMESTAMP_COL
+from fluss_spark.types import BUCKET_COL, OFFSET_COL
 
 
 def tier_log(table: FlussTable, local_segments: int | None = None) -> int:
@@ -57,8 +57,8 @@ def _tier_log_locked(table: FlussTable, local_segments: int | None = None) -> in
     )
     if n_keep < 1:
         raise ValueError("table.log.tiered.local-segments must be greater than 0")
-    committed = sorted(int(n.split("=")[1]) for n in log.committed_dirs(tiers="local")[0])
-    to_move = committed[: -n_keep] if len(committed) > n_keep else []
+    committed = log.committed_dirs(tiers="local")[0]
+    to_move = sorted(committed)[: -n_keep] if len(committed) > n_keep else []
     for v in to_move:
         # a remote copy already there is the orphan of a crashed earlier
         # attempt (copied, local not yet dropped): local is authoritative
@@ -66,10 +66,7 @@ def _tier_log_locked(table: FlussTable, local_segments: int | None = None) -> in
         # devices the move stages under a hidden `.tiering-*` name; a
         # crash leaves an invisible staging dir or a benign local+remote
         # pair — scan() prefers local, and the next tier_log heals both.
-        fsops.replace_dir(
-            os.path.join(log.log_dir, f"{COMMIT_DIR_COL}={v}"),
-            os.path.join(log.remote_dir, f"{COMMIT_DIR_COL}={v}"),
-        )
+        fsops.replace_dir(committed[v], log.commit_path(v, log.remote_dir))
     return len(to_move)
 
 
@@ -173,9 +170,6 @@ def _compact_log_locked(
     # reference never rewrites uploaded segments either); compacting them
     # back into a local dir would undo tiering.
     df = log.scan(spark, tiers="local")
-    version = state.version + 1
-    part_cols = list(log.schema.partition_keys) + [BUCKET_COL]
-    codec = table.schema.properties.get("table.log.compression", "snappy")
     if sort_columns is None:
         prop = table.schema.properties.get("table.log.compaction.sort-columns")
         sort_columns = [c.strip() for c in prop.split(",")] if prop else []
@@ -193,35 +187,22 @@ def _compact_log_locked(
         # curve inside each bucket instead of one-task-per-bucket
         zdf = df.withColumn("__z", _zvalue(df, zorder_columns))
         n_files = min(128, max(16, log.schema.num_buckets * 4))
-        (
+        out = (
             zdf.repartitionByRange(n_files, F.col(BUCKET_COL), F.col("__z"))
             .sortWithinPartitions(BUCKET_COL, "__z")
             .drop("__z")
-            .write.mode("overwrite")
-            .option("compression", codec)
-            .partitionBy(*part_cols)
-            .parquet(log.staging_path(version))
         )
     else:
         order = sort_columns if sort_columns else [OFFSET_COL]
-        (
-            df.repartition(
-                exchange_width(spark, log.schema.num_buckets), F.col(BUCKET_COL)
-            )
-            .sortWithinPartitions(BUCKET_COL, *order)
-            .write.mode("overwrite")
-            .option("compression", codec)
-            .partitionBy(*part_cols)
-            .parquet(log.staging_path(version))
-        )
-    new_state = replace(state, version=version, ts_ms=int(time.time() * 1000), local_floor=version)
-    log.publish(version)
-    table.catalog.commit(table.db, table.name, new_state)
+        out = df.repartition(
+            exchange_width(spark, log.schema.num_buckets), F.col(BUCKET_COL)
+        ).sortWithinPartitions(BUCKET_COL, *order)
+    new_state = log.write_commit(
+        out, state, ts_ms=int(time.time() * 1000), local_floor=state.version + 1
+    )
     # local_floor now shadows every older local dir (a crash before
     # or during this cleanup leaves fenced garbage, never duplicates)
-    for e in os.scandir(log.log_dir):
-        if e.name.startswith(f"{COMMIT_DIR_COL}=") and int(e.name.split("=")[1]) < version:
-            fsops.remove(e.path)
+    log.retire_below(new_state.version, local_only=True)
     return len(committed)
 
 
@@ -254,50 +235,37 @@ def _expire_log_ttl_locked(table: FlussTable, cutoff: int) -> int:
 
 
 def _trim_log_locked(table: FlussTable, drop) -> int:
-    """Delete the commit dirs of both tiers that `drop(version, commit
-    state, current state)` selects, then rebase log_start to the newest
-    dropped commit's high watermarks in one commit (commits are trimmed
-    oldest-first, contiguously), so earliest offsets stay exact. Dirs
-    below log_floor (local_floor on the local tier) are garbage a crash
-    left behind a rebucket or a log compaction: deleted, but their
-    watermarks never rebase log_start. A crash between deletion and the
-    rebase commit leaves only already-unreadable history. Returns the
-    dirs dropped."""
-    history = {s.version: s for s in table.catalog.commit_history(table.db, table.name)}
+    """Expire the readable commit dirs of both tiers that `drop(version,
+    commit state, current state)` selects (commits are trimmed
+    oldest-first, contiguously). One commit first rebases log_start to
+    the newest dropped commit's high watermarks — earliest offsets stay
+    exact, and committed_dirs fences every dir at or below it from then
+    on — and only then are the dirs deleted, so a crash at any point
+    leaves the table before or after the trim. Dirs below log_floor
+    (local_floor on the local tier) are garbage a crash left behind a
+    rebucket or a log compaction: deleted first, and their watermarks
+    never rebase log_start. Returns the dirs dropped."""
+    log = table.log
     state = table.catalog.current_commit(table.db, table.name)
-    deleted = 0
-    newest_deleted = None
-    entries = []  # (tier floor, dir entry)
-    for tier_dir, floor in (
-        (table.log.remote_dir, state.log_floor),
-        (table.log.log_dir, max(state.log_floor, state.local_floor)),
-    ):
-        if os.path.isdir(tier_dir):
-            entries.extend((floor, e) for e in os.scandir(tier_dir))
-    for floor, e in sorted(entries, key=lambda fe: fe[1].name):
-        if not e.name.startswith(f"{COMMIT_DIR_COL}="):
-            continue
-        v = int(e.name.split("=")[1])
-        if v < floor:
-            fsops.remove(e.path)
-            continue
-        cs = history.get(v)
-        if cs is None or not drop(v, cs, state):
-            continue
-        fsops.remove(e.path)
-        deleted += 1
-        if newest_deleted is None or v > newest_deleted.version:
-            newest_deleted = cs
-    if newest_deleted is not None:
-        starts = dict(state.log_start)
-        for b, off in newest_deleted.log_hwm.items():
-            starts[b] = max(starts.get(b, 0), off)
-        table.catalog.commit(
-            table.db,
-            table.name,
-            replace(state, version=state.version + 1, ts_ms=int(time.time() * 1000), log_start=starts),
-        )
-    return deleted
+    log.retire_below(state.log_floor)
+    log.retire_below(state.local_floor, local_only=True)
+    local, remote = log.committed_dirs()
+    dropped = [
+        v for v in sorted({**local, **remote})
+        if drop(v, table.catalog.commit_at(table.db, table.name, v), state)
+    ]
+    if not dropped:
+        return 0
+    starts = dict(state.log_start)
+    for b, off in table.catalog.commit_at(table.db, table.name, dropped[-1]).log_hwm.items():
+        starts[b] = max(starts.get(b, 0), off)
+    table.catalog.commit(
+        table.db,
+        table.name,
+        replace(state, version=state.version + 1, ts_ms=int(time.time() * 1000), log_start=starts),
+    )
+    log.retire_below(dropped[-1] + 1)
+    return len(dropped)
 
 
 def compact_snapshot(table: FlussTable, spark: SparkSession, max_dirs: int = 8) -> bool:
@@ -431,16 +399,13 @@ def materialized_partitions(table: FlussTable) -> set[str]:
     """Partition values materialized by writes: partition dir names under
     every commit dir, BOTH tiers (sealed commits may have tiered, S9)."""
     key = table.schema.partition_keys[0]
-    on_disk: set[str] = set()
-    for tier in (table.log.log_dir, table.log.remote_dir):
-        if not os.path.isdir(tier):
-            continue
-        for d in os.scandir(tier):
-            if d.name.startswith(f"{COMMIT_DIR_COL}="):
-                for sub in os.scandir(d.path):
-                    if sub.is_dir() and sub.name.startswith(f"{key}="):
-                        on_disk.add(sub.name.split("=", 1)[1])
-    return on_disk
+    return {
+        sub.name.split("=", 1)[1]
+        for tier in (table.log.log_dir, table.log.remote_dir)
+        for _v, path in commit_dirs(tier)
+        for sub in os.scandir(path)
+        if sub.is_dir() and sub.name.startswith(f"{key}=")
+    }
 
 
 def drop_partition_dirs(table: FlussTable, values: list[str]) -> None:
@@ -449,13 +414,9 @@ def drop_partition_dirs(table: FlussTable, values: list[str]) -> None:
     leftover would keep serving a dropped partition)."""
     key = table.schema.partition_keys[0]
     for tier in (table.log.log_dir, table.log.remote_dir):
-        if not os.path.isdir(tier):
-            continue
-        for d in os.scandir(tier):
-            if not d.name.startswith(f"{COMMIT_DIR_COL}="):
-                continue
+        for _v, path in commit_dirs(tier):
             for p in values:
-                pdir = os.path.join(d.path, f"{key}={p}")
+                pdir = os.path.join(path, f"{key}={p}")
                 if os.path.isdir(pdir):
                     fsops.remove(pdir)
 
@@ -542,9 +503,6 @@ def _parse_duration_ms(s: str) -> int:
     return int(s)  # bare millis
 
 
-BUCKET_EPOCH_PROP = "table.bucket.epoch"
-
-
 def rebucket_table(table: FlussTable, spark: SparkSession, new_buckets: int) -> int:
     """Change a table's bucket count — the parallelism lever the
     reference does NOT have (bucket.num is fixed at creation; the
@@ -564,11 +522,14 @@ def rebucket_table(table: FlussTable, spark: SparkSession, new_buckets: int) -> 
         through `KvStore._rewrite_units`, whose manifest lists each new
         bucket that holds rows (lookups route with the new count
         immediately);
-      - `table.bucket.epoch` bumps: per-bucket OFFSETS ARE NOT
-        COMPARABLE across a rebucket, so streaming subscriptions must
-        restart — LogStreamReader checkpoints record the epoch and
-        refuse to resume across a mismatch (the honest contract; the
-        alternative is silently misread offset ranges).
+      - the commit records the new bucket count (CommitState.num_buckets,
+        which Catalog.get_schema applies) and raises log_floor to its
+        version, which is the bucket epoch (LogStore.bucket_epoch): per-
+        bucket OFFSETS ARE NOT COMPARABLE across a rebucket, so
+        streaming subscriptions must restart — LogStreamReader
+        checkpoints record the epoch and refuse to resume across a
+        mismatch (the honest contract; the alternative is silently
+        misread offset ranges). One CURRENT write publishes all three.
 
     Returns the new commit version. O(table) rewrite — an explicit
     admin operation, like the reference's own cluster rebalance."""
@@ -589,6 +550,14 @@ def _rebucket_locked(table: FlussTable, spark: SparkSession, new_buckets: int) -
     state = table.catalog.current_commit(table.db, table.name)
     version = state.version + 1
 
+    # PK tables: rewrite the snapshot under the new bucket routing. The
+    # new data dir + manifest file are invisible orphans until the
+    # commit below flips snapshot_version, so a crash here loses nothing.
+    snapshot_version = state.snapshot_version
+    if table.kv is not None and state.snapshot_version >= 0:
+        table.kv._rewrite_units(spark, table.kv.snapshot(spark), version, num_buckets=new_buckets)
+        snapshot_version = version
+
     df = log.scan(spark, tiers="all")
     if schema.bucket_keys:
         nb = F.pmod(F.hash(*schema.bucket_keys), F.lit(new_buckets)).cast("int")
@@ -606,69 +575,22 @@ def _rebucket_locked(table: FlussTable, spark: SparkSession, new_buckets: int) -
     )
     data_cols = [c for c in out.columns if c not in (BUCKET_COL, OFFSET_COL)]
     out = out.select(*data_cols, BUCKET_COL, OFFSET_COL)
-    staged = log.staging_path(version)
-    part_cols = list(schema.partition_keys) + [BUCKET_COL]
-    codec = schema.properties.get("table.log.compression", "snappy")
-    (
-        out.write.mode("overwrite")
-        .option("compression", codec)
-        .partitionBy(*part_cols)
-        .parquet(staged)
+    # crash-safe publication order (nothing committed is ever deleted
+    # before the catalog stops pointing at it): the commit's
+    # log_floor=version atomically shadows every pre-rebucket commit
+    # dir, so scans never read the old layout even while its dirs still
+    # exist; only THEN are the shadowed dirs retired — a crash anywhere
+    # leaves either the fully-old or the fully-new table, and leftover
+    # shadowed dirs are fenced garbage that TTL expiry also sweeps
+    log.write_commit(
+        out,
+        state,
+        log_hwm={},
+        snapshot_version=snapshot_version,
+        ts_ms=int(time.time() * 1000),
+        log_start={},
+        log_floor=version,
+        num_buckets=new_buckets,
     )
-    per_bucket = log._staged_hwm(spark, staged)
-    hwm = {str(b): mx + 1 for b, mx in per_bucket.items()}
-
-    # PK tables: rewrite the snapshot under the new bucket routing.
-    # Runs BEFORE anything is published — the new data dir + manifest
-    # file are invisible orphans until the commit below flips
-    # snapshot_version, so a crash here loses nothing.
-    snapshot_version = state.snapshot_version
-    if table.kv is not None and state.snapshot_version >= 0:
-        table.kv._rewrite_units(spark, table.kv.snapshot(spark), version, num_buckets=new_buckets)
-        snapshot_version = version
-
-    # crash-safe publication order (the _truncate_commits_before rule:
-    # nothing committed is ever deleted before the catalog stops
-    # pointing at it):
-    #   1. publish the staged rewrite (still > current -> invisible)
-    #   2. commit the new state; log_floor=version atomically shadows
-    #      every pre-rebucket commit dir, so scans never read the old
-    #      layout even while its dirs still exist
-    #   3. bump bucket count + epoch (subscription fence)
-    #   4. only THEN physically retire the shadowed dirs — a crash
-    #      anywhere above leaves either the fully-old or the fully-new
-    #      table; leftover shadowed dirs are fenced garbage that TTL
-    #      expiry also sweeps
-    log.publish(version)
-    table.catalog.commit(
-        table.db,
-        table.name,
-        replace(
-            state,
-            version=version,
-            log_hwm=hwm,
-            snapshot_version=snapshot_version,
-            ts_ms=int(time.time() * 1000),
-            log_start={},
-            log_floor=version,
-        ),
-    )
-    sch = table.catalog.get_schema(table.db, table.name)
-    sch.num_buckets = new_buckets
-    epoch = int(sch.properties.get(BUCKET_EPOCH_PROP, "0")) + 1
-    sch.properties[BUCKET_EPOCH_PROP] = str(epoch)
-    table.catalog.set_schema(table.db, table.name, sch)
-    _retire_shadowed_commits(log, version)
+    log.retire_below(version)
     return version
-
-
-def _retire_shadowed_commits(log: LogStore, floor: int) -> None:
-    """Delete commit dirs below the published log_floor (both tiers).
-    Pure garbage collection: the floor already fences them from every
-    reader, so this is safe to crash out of and to re-run."""
-    for tier_dir in (log.remote_dir, log.log_dir):
-        if not os.path.isdir(tier_dir):
-            continue
-        for e in os.scandir(tier_dir):
-            if e.name.startswith(f"{COMMIT_DIR_COL}=") and int(e.name.split("=")[1]) < floor:
-                fsops.remove(e.path)

@@ -389,7 +389,7 @@ def _refresh_incremental(fsql, t: FlussTable) -> int:
 
     # rebucket fence: per-bucket offsets are not comparable across a
     # bucket-count change (same contract as indexes.sync_index)
-    epoch = src.schema.properties.get("table.bucket.epoch", "0")
+    epoch = src.log.bucket_epoch()
     seen_epoch = props.get(INC_EPOCH_PROP, "0")
     synced = _json.loads(props.get(INC_OFFSETS_PROP, "{}"))
 
@@ -441,28 +441,19 @@ def _refresh_incremental(fsql, t: FlussTable) -> int:
                 f"unrecoverable — drop and recreate {t.db}.{t.name}, and set "
                 "the source's table.log.ttl above the refresh interval"
             )
-    end = src.log.latest_offsets()  # slice end fixed BEFORE the read
+    end = src.log.slice_end()  # slice end fixed BEFORE the read
     versions_at_start = _source_versions(t.catalog, [f"{src_db}.{src_name}"])
 
     if src.kv is not None:
-        delta = src.changelog(fsql.spark, start_offsets=start or None)
+        delta = src.changelog(fsql.spark, start_offsets=start or None, end_offsets=end)
         w = (
             F.when(F.col("_change_type").isin("+I", "+U"), F.lit(1))
             .otherwise(F.lit(-1))
             .cast("bigint")
         )
-        off_col = "_log_offset"
     else:
-        delta = src.scan(fsql.spark, start_offsets=start or None)
+        delta = src.scan(fsql.spark, start_offsets=start or None, end_offsets=end)
         w = F.lit(1).cast("bigint")
-        off_col = "__offset"
-    # one map literal, not an O(buckets) OR-chain
-    from fluss_spark.sources.log import _bucket_map_expr
-
-    bound = F.col(off_col) < _bucket_map_expr(
-        {int(b): int(o) for b, o in end.items()}, default=0
-    )
-    delta = delta.filter(bound)
     if props.get(INC_WHERE_PROP):
         delta = delta.filter(F.expr(props[INC_WHERE_PROP]))
 

@@ -2108,7 +2108,9 @@ def s9_tiered_log_scan(spark: SparkSession, sf: str) -> DataFrame:
     t = _build(spark, sf, "tiered_log")
     # prove the build actually tiered (guards against the variant
     # silently degrading into a plain log table)
-    assert t.log._tier_has_commits(t.log.remote_dir), "tiered_log build has no remote tier"
+    from fluss_spark.sources.log import commit_dirs
+
+    assert commit_dirs(t.log.remote_dir), "tiered_log build has no remote tier"
     return (
         t.scan(spark)
         .groupBy("event_type")

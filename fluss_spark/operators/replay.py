@@ -16,9 +16,9 @@ Input contract (prepared by sources/kv.py):
     __seq     long, per-pk fold order; seed (existing snapshot) rows = 0
     __is_seed 1 for snapshot seed rows, else 0
 
-Output: changelog rows (data cols + _change_type + __seq + __sub) and
-snapshot rows (data cols), as two DataFrames derived from one plan (the
-PK commit's `images` contract instead routes both in one frame).
+Output: ONE frame routed by `__dest` (the PK commit's contract): change
+events ('w': data cols + _change_type + __seq + __sub) and, with
+`images`, each key's snapshot image ('s').
 
 A sequential pandas fold (`replay_exact`) covers the one combination the
 window path does not: partial updates interleaved with deletes, where a
@@ -30,7 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from fluss_spark.types import (
     CHANGE_TYPE_COL,
@@ -95,7 +94,7 @@ def emit_select_list(
     prev_present: str,
     emit_cond: str,
     extra_cols: list[str] | None = None,
-    images: bool | None = None,
+    images: bool = True,
     anchors: bool = False,
     last: str = "__last",
 ) -> list[str]:
@@ -105,20 +104,18 @@ def emit_select_list(
     strings. Empty slots come out as all-null rows that
     `EMIT_WHERE` drops.
 
-    Unless `images` is None (the fused commit, see `replay`) rows carry
-    `__dest`: 'w' on events; with `images` True the key's last row
+    Rows carry `__dest`: 'w' on events; with `images` True the key's last row
     (`last`) adds its snapshot image ('s', change type NULL) — a batch
     row's after-image (`__sub` 2, after its events) or the seed row
     itself (`__sub` -1). `anchors` (auto-increment) keeps every seed
     row as the id carry's anchor (`__dest` NULL unless the image)."""
-    dest = images is not None
 
     def mk(ct_expr: str, row: str | None, sub: int, dest_sql: str = "'w'") -> str:
         val = (lambda c: f"({row}).`{c}`") if row is not None else (lambda c: f"`{c}`")
         return (
             f"named_struct('{SUB_COL}', {sub}, '{CHANGE_TYPE_COL}', {ct_expr}, "
             + ", ".join(f"'{c}', {val(c)}" for c in cols)
-            + (f", '{DEST_COL}', {dest_sql}" if dest else "")
+            + f", '{DEST_COL}', {dest_sql}"
             + ")"
         )
 
@@ -205,10 +202,10 @@ def replay(
     merge_mode: str | None = None,
     may_have_deletes: bool = True,
     cluster_cols: list[str] | None = None,
-    images: bool | None = None,
+    images: bool = True,
     seq_order: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Fold a change stream into (changelog_df, snapshot_df).
+) -> DataFrame:
+    """Fold a change stream into its changelog, routed by `__dest`.
 
     Dispatches on the table's merge engine (MergeEngineType.java:23-64).
     `merge_mode='overwrite'` bypasses the merge engine and applies plain
@@ -224,8 +221,7 @@ def replay(
     changelog whose rows carry `__dest` — change events ('w') plus,
     with `images` True, each key's snapshot image ('s'); auto-increment
     tables also keep every seed row as an id anchor. The commit reads
-    its snapshot from those images; the second frame is the standalone
-    derivation.
+    its snapshot from those images.
 
     `seq_order` is the ORDER BY of the window that numbered `__seq`
     (its columns still in `df`, see kv.KvStore._fold_input_sql): the
@@ -240,7 +236,7 @@ def replay(
         raise ValueError("replay requires a primary-key table")
     dest = {
         "images": images,
-        "anchors": images is not None and any(f.auto_increment for f in schema.fields),
+        "anchors": any(f.auto_increment for f in schema.fields),
     }
 
     if schema.delete_behavior == "disable" and may_have_deletes:
@@ -261,32 +257,24 @@ def replay(
                 out = _replay_partial(df, schema, partial_update_cols, part, seq_order, dest)
         else:
             out = _replay_default(df, schema, part, seq_order, dest)
-        return _apply_changelog_image(
-            out, schema, full_row=not partial_update_cols, prior_rows=images is not None
-        )
+        return _apply_changelog_image(out, schema, full_row=not partial_update_cols)
     if engine == "first_row":
         return _replay_first_row(df, schema, part, seq_order, dest)
     if engine == "versioned":
         return _apply_changelog_image(
-            _replay_versioned(df, schema, part, seq_order, dest),
-            schema, full_row=False, prior_rows=images is not None,
+            _replay_versioned(df, schema, part, seq_order, dest), schema, full_row=False
         )
     if engine == "aggregation":
         return _apply_changelog_image(
             _replay_aggregation(
                 df, schema, partial_update_cols, part, seq_order, dest
             ),
-            schema, full_row=False, prior_rows=images is not None,
+            schema, full_row=False,
         )
     raise ValueError(f"unknown merge engine: {engine}")
 
 
-def _apply_changelog_image(
-    out: tuple[DataFrame, DataFrame],
-    schema: TableSchema,
-    full_row: bool,
-    prior_rows: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+def _apply_changelog_image(changelog: DataFrame, schema: TableSchema, full_row: bool) -> DataFrame:
     """M9 changelog image (metadata/ChangelogImage.java): FULL keeps
     -U/+U pairs; WAL drops UPDATE_BEFORE, and — for default merge with
     full-row updates — converts +I to +U (the skip-old-lookup
@@ -296,29 +284,25 @@ def _apply_changelog_image(
     ids are minted at insert, so the commit path must still see which
     events are inserts."""
     if schema.changelog_image != "wal":
-        return out
-    changelog, snapshot = out
-    changelog = changelog.filter(wal_image_where_sql(prior_rows))
+        return changelog
+    changelog = changelog.filter(wal_image_where_sql())
     has_autoinc = any(f.auto_increment for f in schema.fields)
     if schema.merge_engine == "default" and full_row and not has_autoinc:
         changelog = changelog.withColumn(
             CHANGE_TYPE_COL, F.expr(wal_image_ct_case_sql())
         )
-    return changelog, snapshot
+    return changelog
 
 
-def wal_image_where_sql(prior_rows: bool) -> str:
-    """WAL changelog image: drop UPDATE_BEFORE rows. NULL-safe when
-    snapshot images ride the changelog (fused commit: _change_type NULL
-    marks an image or an id anchor, which the plain != filter would
-    silently drop — data loss on the snapshot rewrite). Shared with the
-    SQL fold."""
-    if prior_rows:
-        return (
-            f"(`{CHANGE_TYPE_COL}` IS NULL OR "
-            f"`{CHANGE_TYPE_COL}` != '{UPDATE_BEFORE}')"
-        )
-    return f"`{CHANGE_TYPE_COL}` != '{UPDATE_BEFORE}'"
+def wal_image_where_sql() -> str:
+    """WAL changelog image: drop UPDATE_BEFORE rows. NULL-safe, since
+    snapshot images ride the changelog (_change_type NULL marks an
+    image or an id anchor, which a plain != filter would silently drop
+    — data loss on the snapshot rewrite). Shared with the SQL fold."""
+    return (
+        f"(`{CHANGE_TYPE_COL}` IS NULL OR "
+        f"`{CHANGE_TYPE_COL}` != '{UPDATE_BEFORE}')"
+    )
 
 
 def wal_image_ct_case_sql() -> str:
@@ -365,7 +349,7 @@ def _replay_default(
     part: list[str],
     seq_order: str | None,
     dest: dict,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     pk, cols = schema.primary_key, schema.data_columns()
     extra = [c for c in part if c not in pk]
     d = df.selectExpr("*", *default_fold_select_list(cols, _lag_over(part, seq_order)))
@@ -379,14 +363,7 @@ def _replay_default(
         extra_cols=extra,
         **dest,
     )
-    return changelog, _final_state(d, cols)
-
-
-def _final_state(d: DataFrame, cols: list[str]) -> DataFrame:
-    """Each key's state after its last record, unless that deleted it."""
-    return d.filter("__last AND __cur IS NOT NULL").selectExpr(
-        *[f"__cur.`{c}` AS `{c}`" for c in cols]
-    )
+    return changelog
 
 
 # ---------------------------------------------------------------------- #
@@ -401,7 +378,7 @@ def _replay_partial(
     part: list[str],
     seq_order: str | None,
     dest: dict,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Running per-column state: target columns take the incoming value
     (explicit nulls overwrite — hence the struct wrapper that makes
     'set to null' distinguishable from 'not set'); untouched columns keep
@@ -445,7 +422,7 @@ def _replay_partial(
         extra_cols=extra,
         **dest,
     )
-    return changelog, _final_state(d, cols)
+    return changelog
 
 
 # ---------------------------------------------------------------------- #
@@ -459,7 +436,7 @@ def _replay_first_row(
     part: list[str],
     seq_order: str | None,
     dest: dict,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """The key's first upsert wins and never changes: a batch winner is
     the key's +I (and its snapshot image), a seed winner emits no event
     (and is its own image). One row per key survives the winner
@@ -486,7 +463,7 @@ def _replay_first_row(
         last="true",
         **dest,
     )
-    return changelog, winners.select(*cols)
+    return changelog
 
 
 # ---------------------------------------------------------------------- #
@@ -500,7 +477,7 @@ def _replay_versioned(
     part: list[str],
     seq_order: str | None,
     dest: dict,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     pk, cols = schema.primary_key, schema.data_columns()
     extra = [c for c in part if c not in pk]
     ver = schema.version_column
@@ -537,7 +514,7 @@ def _replay_versioned(
         extra_cols=extra,
         **dest,
     )
-    return changelog, _final_state(d, cols)
+    return changelog
 
 
 # ---------------------------------------------------------------------- #
@@ -592,7 +569,7 @@ def _replay_aggregation(
     part: list[str],
     seq_order: str | None,
     dest: dict,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """AGGREGATION merge; with `partial_update_cols` only target columns
     take the batch's contributions, untouched columns carry the seed's
     accumulated value (PartialAggregateRowMerger,
@@ -647,7 +624,7 @@ def _replay_aggregation(
         extra_cols=extra,
         **dest,
     )
-    return changelog, _final_state(d, cols)
+    return changelog
 
 
 # ---------------------------------------------------------------------- #
@@ -660,9 +637,9 @@ def replay_exact(
     schema: TableSchema,
     partial_update_cols: list[str] | None = None,
     cluster_cols: list[str] | None = None,
-    images: bool | None = None,
+    images: bool = True,
     anchors: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Per-key sequential fold via applyInPandas (Arrow-batched, grouped
     by pk — distributed, but row-at-a-time inside each key). Used only
     for partial-update+delete mixtures; semantics from
@@ -678,15 +655,14 @@ def replay_exact(
     non_pk = [c for c in cols if c not in pk]
     target = [c for c in (partial_update_cols or cols) if c not in pk]
     extra = [c for c in (cluster_cols or []) if c not in pk]
-    routed = images is not None
-    out_cols = [SEQ_COL, *extra, SUB_COL, CHANGE_TYPE_COL, *cols] + ([DEST_COL] if routed else [])
+    out_cols = [SEQ_COL, *extra, SUB_COL, CHANGE_TYPE_COL, *cols, DEST_COL]
 
     out_schema = ", ".join(
         [f"`{SEQ_COL}` long"]
         + [f"`{c}` int" for c in extra]
         + [f"`{SUB_COL}` int", f"`{CHANGE_TYPE_COL}` string"]
         + [f"`{f.name}` {f.to_struct_field().dataType.simpleString()}" for f in schema.fields]
-        + ([f"`{DEST_COL}` string"] if routed else [])
+        + [f"`{DEST_COL}` string"]
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -737,20 +713,4 @@ def replay_exact(
             emit(recs[-1][SEQ_COL], 2, None, state, "s")
         return pd.DataFrame(rows, columns=out_cols)
 
-    changelog = df.groupBy(*pk).applyInPandas(fold, schema=out_schema)
-    if images:
-        return changelog, changelog.filter(f"`{DEST_COL}` = 's'").select(*cols)
-    return changelog, _snapshot_from_changelog(changelog, schema)
-
-
-def _snapshot_from_changelog(changelog: DataFrame, schema: TableSchema) -> DataFrame:
-    """Replay invariant: applying a changelog reproduces the snapshot —
-    last event per key wins; keys whose last event is -D are gone
-    (SortMergeReader.java:30-55 'change log wins over the snapshot')."""
-    pk, cols = schema.primary_key, schema.data_columns()
-    w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COL).desc(), F.col(SUB_COL).desc())
-    return (
-        changelog.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col(CHANGE_TYPE_COL) != DELETE))
-        .select(*cols)
-    )
+    return df.groupBy(*pk).applyInPandas(fold, schema=out_schema)

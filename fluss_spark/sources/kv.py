@@ -88,7 +88,7 @@ from fluss_spark.operators.replay import (
     replay,
 )
 from fluss_spark.registry import session_key
-from fluss_spark.sources.log import LogStore
+from fluss_spark.sources.log import LogStore, id_segments, keyed_literal
 from fluss_spark.types import (
     BUCKET_COL,
     CHANGE_TYPE_COL,
@@ -159,16 +159,6 @@ def _aqe_off_exit(spark: SparkSession) -> None:
 def _commit_ts(commit_ts_ms: int | None) -> int:
     """A commit's timestamp: the caller's, else now (epoch millis)."""
     return int(time.time() * 1000) if commit_ts_ms is None else int(commit_ts_ms)
-
-
-def _keyed_literal(values: dict, key: str, default: str) -> str:
-    """`values[key column]`, else `default`, as ONE map literal: constant
-    expression depth at any key count, and generated code holds the map
-    as a reference object, so a commit's own values compile no class."""
-    if not values:
-        return default
-    pairs = ", ".join(f"{k}, {v}" for k, v in values.items())
-    return f"coalesce(element_at(map({pairs}), `{key}`), {default})"
 
 
 class CommitConflictError(RuntimeError):
@@ -350,7 +340,7 @@ class KvStore:
             frame.withColumn(BUCKET_COL, self._bucket_expr(n))
             .repartition(exchange_width(spark, n, buckets), F.col(BUCKET_COL))
             .write.mode("overwrite")
-            .option("compression", self.schema.properties.get("table.log.compression", "snappy"))
+            .option("compression", self.log.codec)
             .partitionBy(*self.schema.partition_keys, BUCKET_COL)
             .parquet(os.path.join(self.snapshot_dir, data_dir))
         )
@@ -731,7 +721,6 @@ class KvStore:
         wal_part = os.path.join(combined, f"{DEST_COL}=w")
         if not deltas or not os.path.isdir(wal_part):
             return
-        codec = self.schema.properties.get("table.log.compression", "snappy")
         for pp, b in self._walk_pairs(wal_part):
             d = deltas.get(b)
             if not d:
@@ -746,7 +735,7 @@ class KvStore:
                 spark.read.parquet(bdir)
                 .withColumn(OFFSET_COL, (F.col(OFFSET_COL) + F.lit(int(d))).cast("long"))
                 .write.mode("overwrite")
-                .option("compression", codec)
+                .option("compression", self.log.codec)
                 .parquet(tmp)
             )
             fsops.replace_dir(tmp, bdir)
@@ -1078,7 +1067,7 @@ class KvStore:
             fold_sql, frames, fold_order = self._fold_input_sql(
                 spark, dfs, ordering, known_buckets
             )
-            changelog, _ = replay(
+            changelog = replay(
                 spark.sql(fold_sql, **frames),
                 schema,
                 partial_update_cols=partial_update_cols,
@@ -1134,7 +1123,7 @@ class KvStore:
                 f"{ct} AS `{CHANGE_TYPE_COL}`, "
                 + ", ".join(f"`{c}`" for c in cols)
                 + f", `{DEST_COL}`"
-                f" FROM ({emit_sql}) WHERE {EMIT_WHERE} AND {wal_image_where_sql(True)}"
+                f" FROM ({emit_sql}) WHERE {EMIT_WHERE} AND {wal_image_where_sql()}"
             )
         return spark.sql(final_sql, **frames)
 
@@ -1145,8 +1134,8 @@ class KvStore:
         local, remote = self.log.committed_dirs()
         return [
             path
-            for name, path in list(remote.items()) + list(local.items())
-            if int(name.split("=")[1]) > state.snapshot_version
+            for v, path in list(remote.items()) + list(local.items())
+            if v > state.snapshot_version
         ]
 
     def _tail_bytes_exceeded(self, state: CommitState) -> bool:
@@ -1368,16 +1357,11 @@ class KvStore:
                 .agg(F.count("*").alias("cnt"))
                 .collect()
             )
+            segs, auto_next = id_segments(auto_next, auto_cols, bucket_counts)
             for c in auto_cols:
-                base_id, seg = auto_next.get(c, 0), {}
-                acc = base_id
-                for bkt, cnt in bucket_counts:
-                    seg[bkt] = acc
-                    acc += cnt
-                auto_next[c] = acc
                 # a bucket outside the map has no +I row to mint for
-                id_expr[c] = _keyed_literal(
-                    {b: f"CAST({s} AS BIGINT)" for b, s in seg.items()},
+                id_expr[c] = keyed_literal(
+                    {b: f"CAST({s} AS BIGINT)" for b, s in segs[c].items()},
                     BUCKET_COL, "CAST(NULL AS BIGINT)",
                 )
 
@@ -1404,7 +1388,7 @@ class KvStore:
         )
         is_event = f"(`{DEST_COL}` = 'w')"
 
-        base_sql = _keyed_literal(
+        base_sql = keyed_literal(
             {int(b): f"CAST({off} AS BIGINT)" for b, off in state0.log_hwm.items()},
             BUCKET_COL, "CAST(0 AS BIGINT)",
         )
@@ -1416,7 +1400,7 @@ class KvStore:
             if grouped
             else {b: f"timestamp_millis({ts_list[0]})" for b in range(schema.num_buckets)}
         )
-        ts_sql = _keyed_literal(
+        ts_sql = keyed_literal(
             ts_map, GRP_COL if grouped else BUCKET_COL, "CAST(NULL AS TIMESTAMP)"
         )
         # running event count in arrival order — feeds the WAL offset
@@ -1513,7 +1497,6 @@ class KvStore:
         its own commit dir — the '__g' column is stripped into the dir
         name, so file contents stay identical to single commits)."""
         schema = self.schema
-        codec = schema.properties.get("table.log.compression", "snappy")  # W6
         # rows left the bucket window hash-clustered by BUCKET_COL, so
         # partitionBy emits one file per (dest[, partition], bucket)
         # without another exchange; partition keys sit ABOVE the bucket
@@ -1526,7 +1509,7 @@ class KvStore:
         try:
             (
                 out.write.mode("overwrite")
-                .option("compression", codec)
+                .option("compression", self.log.codec)
                 .partitionBy(*part_cols)
                 .parquet(combined)
             )
@@ -1738,10 +1721,7 @@ class KvStore:
                 f"changelog slice from manifest v{m} was partly expired "
                 f"(bucket: (needed-from, earliest) = {expired})"
             )
-        # a bucket empty at `version` is absent from its HWM map, which
-        # the scan would leave unbounded: bound it at offset 0
-        end = {b: 0 for b in range(self.schema.num_buckets)} | end
-        tail = self._tail_scan(spark, start, end, buckets, pair_pred)
+        tail = self._tail_scan(spark, start, self.log.slice_end(end), buckets, pair_pred)
         return self._merge_tail(base, tail)
 
     def _tail_start(self, state: CommitState) -> dict[int, int] | None:
@@ -2042,12 +2022,17 @@ class KvStore:
             df = df.select(*self.schema.data_columns(), BUCKET_COL)
         return df
 
-    def changelog(self, spark: SparkSession, start_offsets: dict[int, int] | None = None) -> DataFrame:
+    def changelog(
+        self,
+        spark: SparkSession,
+        start_offsets: dict[int, int] | None = None,
+        end_offsets: dict[int, int] | None = None,
+    ) -> DataFrame:
         """$changelog virtual table (T9): _change_type, _log_offset,
         _commit_timestamp + data columns, in WAL order."""
         from fluss_spark.types import COMMIT_TS_COL, LOG_OFFSET_COL
 
-        df = self.log.scan(spark, start_offsets=start_offsets)
+        df = self.log.scan(spark, start_offsets=start_offsets, end_offsets=end_offsets)
         return df.select(
             *self.schema.data_columns(),
             F.col(CHANGE_TYPE_COL),

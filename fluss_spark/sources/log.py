@@ -51,33 +51,50 @@ from fluss_spark.types import (
     CHANGE_TYPE_COL,
     OFFSET_COL,
     TIMESTAMP_COL,
-    TableSchema,
     ddl_of,
 )
 
 COMMIT_DIR_COL = "__commit"
 
 
-# system-column types admissible via `extra_cols`
-_EXTRA_TYPES = {
-    CHANGE_TYPE_COL: "string",
-    "__seq": "long",
-    "__sub": "int",
-}
+def keyed_literal(values: dict, key: str, default: str) -> str:
+    """`values[key column]`, else `default`, as ONE map literal (SQL):
+    constant expression depth at any key count, where a chained CASE
+    would grow O(keys), and generated code holds the map as a reference
+    object, so a commit's own values compile no class."""
+    if not values:
+        return default
+    pairs = ", ".join(f"{k}, {v}" for k, v in values.items())
+    return f"coalesce(element_at(map({pairs}), `{key}`), {default})"
 
 
-def _bucket_map_expr(per_bucket: dict[int, int], default: int):
-    """bucket -> value lookup as ONE map literal (element_at on a map
-    returns NULL for absent keys): constant expression/codegen depth at
-    any bucket count, where a chained F.when would grow O(buckets)."""
-    if not per_bucket:
-        return F.lit(default).cast("long")
-    pairs = ", ".join(
-        f"{int(b)}, CAST({int(v)} AS BIGINT)" for b, v in per_bucket.items()
-    )
-    return F.expr(
-        f"coalesce(element_at(map({pairs}), `{BUCKET_COL}`), "
-        f"CAST({int(default)} AS BIGINT))"
+def id_segments(counters: dict[str, int], cols: list[str], bucket_counts) -> tuple[dict, dict]:
+    """M10 auto-increment: each column's contiguous per-bucket id
+    segments, packed from its table counter by cumulative bucket counts
+    (AutoIncrementManager's segment model, BoundedSegmentSequenceGenerator),
+    so ids are gap-free across the commit. `bucket_counts` = sorted
+    (bucket, rows) pairs. Returns ({column: {bucket: first id}}, the
+    advanced counters)."""
+    nxt, segs = dict(counters), {}
+    for c in cols:
+        seg, acc = {}, nxt.get(c, 0)
+        for bkt, cnt in bucket_counts:
+            seg[bkt] = acc
+            acc += cnt
+        segs[c], nxt[c] = seg, acc
+    return segs, nxt
+
+
+def commit_dirs(root: str) -> list[tuple[int, str]]:
+    """(version, path) of every `__commit=<v>` dir under one tier root,
+    in version order — the one walk over a tier's commit dirs (unfenced:
+    callers that read apply the catalog's fences, see
+    LogStore.committed_dirs)."""
+    if not os.path.isdir(root):
+        return []
+    prefix = f"{COMMIT_DIR_COL}="
+    return sorted(
+        (int(e.name[len(prefix):]), e.path) for e in os.scandir(root) if e.name.startswith(prefix)
     )
 
 
@@ -101,12 +118,18 @@ class LogStore:
     # ------------------------------------------------------------------ #
     # staged-commit protocol
     # ------------------------------------------------------------------ #
-    def commit_path(self, version: int) -> str:
-        return os.path.join(self.log_dir, f"{COMMIT_DIR_COL}={version}")
+    def commit_path(self, version: int, root: str | None = None) -> str:
+        return os.path.join(root or self.log_dir, f"{COMMIT_DIR_COL}={version}")
 
     def staging_path(self, version: int) -> str:
         # dot-prefixed parent: invisible to Spark/Hadoop file listings
         return os.path.join(self.tmp_dir, f"log-v{version}")
+
+    @property
+    def codec(self) -> str:
+        """The table's Parquet codec (W6 `table.log.compression`), for
+        every log and snapshot file the engine writes."""
+        return self.schema.properties.get("table.log.compression", "snappy")
 
     def publish(self, version: int) -> None:
         """Move the staged commit files into the log dir — the step right
@@ -115,6 +138,40 @@ class LogStore:
         crashed attempt's leftover there is swept when the write lock is
         taken (Catalog.write_lock)."""
         fsops.replace_dir(self.staging_path(version), self.commit_path(version))
+
+    def write_commit(self, frame: DataFrame, state: CommitState, **changes) -> CommitState:
+        """The one log commit-dir write: `frame` (shaped and clustered by
+        the caller — no exchange is added here) lands staged as commit
+        state.version + 1, laid out `[<partition>=<v>/]__bucket=<b>` with
+        the table codec; each bucket's HWM is raised to its rows' footer
+        max + 1; then the dir is published and the new state — `state`
+        with `changes` applied — committed. The caller holds the table
+        write lock."""
+        new = replace(state, version=state.version + 1, **changes)
+        staged = self.staging_path(new.version)
+        (
+            frame.write.mode("overwrite")
+            .option("compression", self.codec)
+            .partitionBy(*self.schema.partition_keys, BUCKET_COL)
+            .parquet(staged)
+        )
+        hwm = dict(new.log_hwm)
+        for bkt, mx in self._staged_hwm(frame.sparkSession, staged).items():
+            hwm[str(bkt)] = max(hwm.get(str(bkt), 0), mx + 1)
+        new = replace(new, log_hwm=hwm)
+        self.publish(new.version)
+        self.catalog.commit(self.db, self.table, new)
+        return new
+
+    def retire_below(self, floor: int, local_only: bool = False) -> None:
+        """Delete the commit dirs numbered below `floor` (both tiers, or
+        the local one). Pure garbage collection of dirs a committed
+        floor already fences from every reader, so it is safe to crash
+        out of and to re-run."""
+        for root in (self.log_dir,) if local_only else (self.remote_dir, self.log_dir):
+            for v, path in commit_dirs(root):
+                if v < floor:
+                    fsops.remove(path)
 
     def file_schema(self, with_commit_col: bool = False, era=None):
         """Explicit read schema for log files (no inference — empty
@@ -156,56 +213,21 @@ class LogStore:
         self,
         df: DataFrame,
         ordering: list[str] | None = None,
-        extra_cols: list[str] | None = None,
         commit_ts_ms: int | None = None,
-        auto_increment_override: dict[str, int] | None = None,
     ) -> CommitState:
         """Append a batch; assigns __bucket/__offset/__timestamp and
         commits atomically. `ordering` fixes intra-batch offset order
         (deterministic replay); default is arrival order per partition.
-        `extra_cols` admits system columns (e.g. _change_type for PK-table
-        WALs) beyond the user schema.
-        `auto_increment_override` means the caller already stamped the
-        auto-increment columns (pk-table WALs carry insert-stable ids the
-        log layer cannot derive) and supplies the advanced counter map;
-        the per-record stamping below — correct for plain log tables,
-        where every appended record IS an insert — is skipped. The caller
-        holds the table write lock.
-        """
-        schema = self.schema
+        The caller holds the table write lock."""
         state = self.catalog.current_commit(self.db, self.table)
-        version = state.version + 1
         ts_ms = commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
-        out, auto_next = self._append_plan(
-            df, state, ts_ms, ordering, extra_cols, auto_increment_override
-        )
-
-        staged = self.staging_path(version)
-        part_cols = list(schema.partition_keys) + [BUCKET_COL]
-        codec = schema.properties.get("table.log.compression", "snappy")  # W6
+        out, auto_next = self._append_plan(df, state, ts_ms, ordering)
         # no repartition before the write: _append_plan's offset window
         # already hash-clustered rows by BUCKET_COL (each bucket lives
         # wholly in one task), so partitionBy(bucket) emits one file per
         # bucket as is — an extra exchange here would shuffle the batch
         # a third time
-        (
-            out.write.mode("overwrite")
-            .option("compression", codec)
-            .partitionBy(*part_cols)
-            .parquet(staged)
-        )
-
-        # new high watermarks from the Parquet FOOTERS of the files just
-        # written: row-group max(__offset) per bucket dir, read driver-side
-        # (metadata-only) — replaces a full Spark read-back job per commit
-        hwm = dict(state.log_hwm)
-        for bkt, mx in self._staged_hwm(df.sparkSession, staged).items():
-            hwm[str(bkt)] = mx + 1
-
-        new_state = replace(state, version=version, log_hwm=hwm, auto_increment=auto_next, ts_ms=ts_ms)
-        self.publish(version)
-        self.catalog.commit(self.db, self.table, new_state)
-        return new_state
+        return self.write_commit(out, state, auto_increment=auto_next, ts_ms=ts_ms)
 
     def _append_plan(
         self,
@@ -213,14 +235,12 @@ class LogStore:
         state: CommitState,
         ts_ms: int,
         ordering: list[str] | None,
-        extra_cols: list[str] | None,
-        auto_increment_override: dict[str, int] | None,
     ) -> tuple[DataFrame, dict[str, int]]:
         """The rows append() writes — routed to buckets, numbered from
         `state`'s HWMs, stamped with `ts_ms` — and the advanced
         auto-increment counters."""
         schema = self.schema
-        cols = schema.data_columns() + (extra_cols or [])
+        cols = schema.data_columns()
         for f in schema.fields:  # engine-assigned columns may be absent
             if f.auto_increment and f.name not in df.columns:
                 df = df.withColumn(f.name, F.lit(None).cast("long"))
@@ -242,9 +262,7 @@ class LogStore:
 
         # bucket routing (W1/W2)
         n = schema.num_buckets
-        if BUCKET_COL in (extra_cols or []):
-            pass  # caller pre-routed (e.g. replay keeps pk-bucket alignment)
-        elif schema.bucket_keys:
+        if schema.bucket_keys:
             out = out.withColumn(
                 BUCKET_COL, F.pmod(F.hash(*schema.bucket_keys), F.lit(n)).cast("int")
             )
@@ -264,42 +282,35 @@ class LogStore:
             order_cols = [F.col("__arrival")]
         out = out.repartition(exchange_width(out.sparkSession, n), F.col(BUCKET_COL))
         w = Window.partitionBy(BUCKET_COL).orderBy(*order_cols)
-        base = {int(b): off for b, off in state.log_hwm.items()}
         # one map literal, not an O(buckets) when-chain: constant
         # expression/codegen depth at any bucket count (same shape as
         # kv.py's fused-commit HWM base)
-        base_expr = _bucket_map_expr(base, default=0)
+        base_expr = F.expr(keyed_literal(
+            {int(b): f"CAST({int(off)} AS BIGINT)" for b, off in state.log_hwm.items()},
+            BUCKET_COL, "CAST(0 AS BIGINT)",
+        ))
         out = out.withColumn(OFFSET_COL, (F.row_number().over(w) - 1 + base_expr).cast("long"))
         out = out.withColumn(TIMESTAMP_COL, F.timestamp_millis(F.lit(ts_ms)))
 
-        # M10 auto-increment: allocate a contiguous per-bucket segment of
-        # ids from the table counter (AutoIncrementManager's segment model,
-        # BoundedSegmentSequenceGenerator) — ids are gap-free across the
-        # commit because segments are packed by cumulative bucket counts.
-        # On a LOG table every appended record is an insert, so the
-        # per-record stamp matches the reference's assign-at-insert rule;
-        # pk-table WALs arrive pre-stamped (auto_increment_override).
-        auto_next = dict(state.auto_increment)
+        # M10 auto-increment: on a LOG table every appended record is an
+        # insert, so the per-record stamp matches the reference's
+        # assign-at-insert rule
         auto_cols = [f.name for f in schema.fields if f.auto_increment]
-        if auto_increment_override is not None:
-            auto_next = dict(auto_increment_override)
-        elif auto_cols:
+        auto_next = dict(state.auto_increment)
+        if auto_cols:
             bucket_counts = sorted(
                 (int(r[BUCKET_COL]), r["cnt"])
                 for r in out.groupBy(BUCKET_COL).agg(F.count("*").alias("cnt")).collect()
             )
+            segs, auto_next = id_segments(auto_next, auto_cols, bucket_counts)
             for c in auto_cols:
-                base_id = auto_next.get(c, 0)
-                seg_start, acc = {}, base_id
-                for bkt, cnt in bucket_counts:
-                    seg_start[bkt] = acc
-                    acc += cnt
-                seg_expr = _bucket_map_expr(seg_start, default=base_id)
+                seg_expr = F.expr(keyed_literal(
+                    {b: f"CAST({s} AS BIGINT)" for b, s in segs[c].items()},
+                    BUCKET_COL, f"CAST({state.auto_increment.get(c, 0)} AS BIGINT)",
+                ))
                 out = out.withColumn(c, (seg_expr + F.row_number().over(w) - 1).cast("long"))
-                auto_next[c] = acc
-        final_cols = [c for c in cols if c not in (BUCKET_COL, OFFSET_COL, TIMESTAMP_COL)]
         # drop ordering-only columns
-        return out.select(*final_cols, BUCKET_COL, OFFSET_COL, TIMESTAMP_COL), auto_next
+        return out.select(*cols, BUCKET_COL, OFFSET_COL, TIMESTAMP_COL), auto_next
 
     def _staged_hwm(self, spark: SparkSession, staged: str) -> dict[int, int]:
         """Per-bucket max(__offset) of a written commit dir, from Parquet
@@ -343,33 +354,38 @@ class LogStore:
 
     def committed_dirs(
         self, current: int | None = None, tiers: str = "all"
-    ) -> tuple[dict[str, str], dict[str, str]]:
-        """(local, remote) maps of commit-dir name -> path readable
+    ) -> tuple[dict[int, str], dict[int, str]]:
+        """(local, remote) maps of commit version -> dir path readable
         under the fencing invariant, in ONE place: log_floor <= v <=
         current (uncommitted staging and rebucket-shadowed dirs never
         listed; local dirs also from local_floor, below which a log
-        compaction rewrote them), and remote dirs shadowed by a
-        same-name local dir removed (LOCAL WINS on the crashed-tier_log
-        overlap — reading both would double-count the commit). Every
-        metadata walk (scan, lake snapshot, footer stats) derives from
-        this."""
+        compaction rewrote them), dirs a log trim expired (every bucket's
+        HWM at v within log_start) left out, and remote dirs shadowed by
+        a same-version local dir removed (LOCAL WINS on the
+        crashed-tier_log overlap — reading both would double-count the
+        commit). Every metadata walk (scan, lake snapshot, footer stats)
+        derives from this."""
         state = self.catalog.current_commit(self.db, self.table)
         cur = state.version if current is None else current
 
-        def _dirs(root: str, floor: int) -> dict[str, str]:
-            if not os.path.isdir(root):
-                return {}
-            return {
-                e.name: e.path
-                for e in os.scandir(root)
-                if e.name.startswith(f"{COMMIT_DIR_COL}=")
-                and floor <= int(e.name.split("=")[1]) <= cur
-            }
+        def _dirs(root: str, floor: int) -> dict[int, str]:
+            return {v: p for v, p in commit_dirs(root) if floor <= v <= cur}
 
         local_floor = max(state.log_floor, state.local_floor)
         local = _dirs(self.log_dir, local_floor) if tiers in ("all", "local") else {}
         remote = _dirs(self.remote_dir, state.log_floor) if tiers in ("all", "remote") else {}
-        remote = {n: p for n, p in remote.items() if n not in local}
+        remote = {v: p for v, p in remote.items() if v not in local}
+        if state.log_start:
+            # a trim commits its new log_start before it deletes the
+            # expired dirs: the dirs below the first one holding an
+            # offset past log_start are expired (HWMs only grow)
+            start = {int(b): o for b, o in state.log_start.items()}
+            versions = sorted({**local, **remote})
+            live = set(versions[self._first_dir(
+                versions, lambda h: any(o > start.get(b, 0) for b, o in h.items())
+            ):])
+            local = {v: p for v, p in local.items() if v in live}
+            remote = {v: p for v, p in remote.items() if v in live}
         return local, remote
 
     def minmax_from_metadata(self, column: str):
@@ -410,11 +426,6 @@ class LogStore:
     # ------------------------------------------------------------------ #
     # scan (S2/S3/S8)
     # ------------------------------------------------------------------ #
-    def _tier_has_commits(self, tier_dir: str) -> bool:
-        return os.path.isdir(tier_dir) and any(
-            e.name.startswith(f"{COMMIT_DIR_COL}=") for e in os.scandir(tier_dir)
-        )
-
     def hwm_at(self, version: int) -> dict[int, int]:
         """Per-bucket log HWM recorded at a commit version (memoized —
         commit states are immutable once written). Every log writer
@@ -470,7 +481,7 @@ class LogStore:
         from fluss_spark.types import evolution_eras
 
         local, remote = self.committed_dirs(as_of_commit, tiers)
-        paths = {int(n.split("=")[1]): p for n, p in {**remote, **local}.items()}
+        paths = {**remote, **local}
         versions = sorted(paths)
         if start_offsets:
             # a dir whose HWM is at or below the start in every bucket
@@ -553,6 +564,21 @@ class LogStore:
     def latest_offsets(self) -> dict[int, int]:
         state = self.catalog.current_commit(self.db, self.table)
         return {int(b): off for b, off in state.log_hwm.items()}
+
+    def slice_end(self, hwm: dict[int, int] | None = None) -> dict[int, int]:
+        """End offsets of a log slice up to `hwm` (default: the latest
+        HWMs) with EVERY bucket present, those without rows at 0. An
+        end map missing a bucket leaves it unbounded (scan()), so a
+        first row committed there after the end was fixed would be read
+        in this slice and again in the next one."""
+        end = self.latest_offsets() if hwm is None else hwm
+        return {b: 0 for b in range(self.schema.num_buckets)} | end
+
+    def bucket_epoch(self) -> str:
+        """The bucket layout's epoch: the current log_floor, which only
+        a rebucket moves. Per-bucket offsets compare only within one
+        epoch, so offset checkpoints record it and refuse a mismatch."""
+        return str(self.catalog.current_commit(self.db, self.table).log_floor)
 
     def earliest_offsets(self) -> dict[int, int]:
         # non-zero once TTL/retention has trimmed the log head

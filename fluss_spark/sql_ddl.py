@@ -194,15 +194,12 @@ class FlussSqlSession:
         metadata reads; no Spark work."""
         import os
 
+        from fluss_spark.sources.log import commit_dirs
+
         tdir = self.catalog.table_dir(db, t)
 
         def _names(d: str) -> tuple:
-            try:
-                return tuple(
-                    sorted(e.name for e in os.scandir(d) if e.name.startswith("__commit="))
-                )
-            except FileNotFoundError:
-                return ()
+            return tuple(v for v, _ in commit_dirs(d))
 
         def _mtime(p: str) -> int:
             try:

@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fluss_spark import fsops
+from fluss_spark.sources.log import commit_dirs
 from fluss_spark.table import FlussTable
-from fluss_spark.types import BUCKET_COL, CHANGE_TYPE_COL, INSERT, OFFSET_COL
+from fluss_spark.types import CHANGE_TYPE_COL, INSERT
 
 
 class LogStreamReader:
@@ -52,7 +53,9 @@ class LogStreamReader:
         self._offsets: dict[int, int] | None = None
         self._batch_id = 0
         self._pending_snapshot = False
-        self._epoch = self._bucket_epoch()  # offsets belong to this epoch
+        # offsets belong to this bucket epoch, read fresh from the catalog
+        # at each poll (a rebucket may come from another process)
+        self._epoch = table.log.bucket_epoch()
         if checkpoint_dir:
             fsops.makedirs(checkpoint_dir)
             self._load_checkpoint()
@@ -78,16 +81,6 @@ class LogStreamReader:
 
     def _ckpt_path(self) -> str:
         return os.path.join(self.checkpoint_dir, "offsets.json")
-
-    def _bucket_epoch(self) -> str:
-        """Current bucket epoch (table.bucket.epoch, bumped by
-        maintenance.rebucket_table) read FRESH from the catalog — the
-        reader's bound schema predates an out-of-band rebucket."""
-        t = self.table
-        return (
-            t.catalog.get_schema(t.db, t.name)
-            .properties.get("table.bucket.epoch", "0")
-        )
 
     def _load_checkpoint(self) -> None:
         p = self._ckpt_path()
@@ -122,7 +115,7 @@ class LogStreamReader:
     def poll(self) -> tuple[DataFrame, int] | None:
         """One micro-batch: (DataFrame, batch_id), or None if caught up.
         The checkpoint advances only on commit_batch()."""
-        if self._bucket_epoch() != self._epoch:
+        if self.table.log.bucket_epoch() != self._epoch:
             raise ValueError(
                 "table was rebucketed while this subscription was active: "
                 "per-bucket offsets are not comparable across bucket counts "
@@ -138,13 +131,13 @@ class LogStreamReader:
                 self._pending_snapshot = False
                 self._end_of_batch = dict(self._offsets)
                 return snap, self._batch_id
-        latest = self.table.latest_offsets()
-        new = {b: off for b, off in latest.items() if off > self._offsets.get(b, 0)}
-        if not new and all(self._offsets.get(b, 0) >= off for b, off in latest.items()):
+        # every bucket bounded: one still empty here must not deliver a
+        # row committed after this read (it would again next batch)
+        end = self.table.log.slice_end()
+        if all(off <= self._offsets.get(b, 0) for b, off in end.items()):
             return None
-        start = dict(self._offsets)
-        df = self.table.scan(self.spark, start_offsets=start, end_offsets=latest)
-        self._end_of_batch = latest
+        df = self.table.scan(self.spark, start_offsets=dict(self._offsets), end_offsets=end)
+        self._end_of_batch = end
         return df, self._batch_id
 
     def commit_batch(self) -> None:
@@ -196,9 +189,10 @@ def read_stream(
     # immune to moves — offsets are preserved), or an explicit promise
     # that no tiering will run for this stream's lifetime
     # (static_tiers=True: replay/analytics over a frozen table).
+    remote_dirs = commit_dirs(table.log.remote_dir)
     tiered = (
         table.schema.properties.get("table.log.tiered.enable", "false") == "true"
-        or table.log._tier_has_commits(table.log.remote_dir)
+        or bool(remote_dirs)
     )
     if tiered and not static_tiers:
         raise ValueError(
@@ -208,7 +202,6 @@ def read_stream(
             "(offset-based, tier-transparent), or pass static_tiers=True "
             "if no tiering will run while this stream is active."
         )
-    from fluss_spark.sources.log import COMMIT_DIR_COL
     from fluss_spark.types import evolution_eras
 
     eras = evolution_eras(table.schema)
@@ -223,19 +216,7 @@ def read_stream(
         # compacted, TTL-expired, or dropped — every file carries the
         # current schema and the file source is safe again.
         max_until = max(e["until"] for e in eras)
-
-        def _has_old_era_commits(root: str) -> bool:
-            if not os.path.isdir(root):
-                return False
-            return any(
-                e.name.startswith(f"{COMMIT_DIR_COL}=")
-                and int(e.name.split("=")[1]) <= max_until
-                for e in os.scandir(root)
-            )
-
-        if _has_old_era_commits(table.log.log_dir) or _has_old_era_commits(
-            table.log.remote_dir
-        ):
+        if any(v <= max_until for v, _ in commit_dirs(table.log.log_dir) + remote_dirs):
             raise ValueError(
                 "read_stream on a table with renamed/retyped columns: the "
                 "file source reads one fixed schema and cannot resolve "
@@ -251,7 +232,7 @@ def read_stream(
         .option("basePath", table.log.log_dir)
         .parquet(table.log.log_dir + "/*")
     )
-    if tiered and table.log._tier_has_commits(table.log.remote_dir):
+    if tiered and remote_dirs:
         remote = (
             spark.readStream.schema(schema)
             .option("basePath", table.log.remote_dir)

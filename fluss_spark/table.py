@@ -256,13 +256,18 @@ class FlussTable:
             return self.kv.snapshot(spark, version=version)
         return self.log.scan(spark).drop(BUCKET_COL, OFFSET_COL, TIMESTAMP_COL)
 
-    def changelog(self, spark: SparkSession, start_offsets: dict[int, int] | None = None) -> DataFrame:
-        """$changelog virtual table (T9)."""
+    def changelog(
+        self,
+        spark: SparkSession,
+        start_offsets: dict[int, int] | None = None,
+        end_offsets: dict[int, int] | None = None,
+    ) -> DataFrame:
+        """$changelog virtual table (T9) of the log slice scan() reads."""
         if self.kv is None:
             # log tables: append-only stream, change type is always +A
             from fluss_spark.types import APPEND_ONLY, COMMIT_TS_COL, LOG_OFFSET_COL
 
-            df = self.log.scan(spark, start_offsets=start_offsets)
+            df = self.log.scan(spark, start_offsets=start_offsets, end_offsets=end_offsets)
             return df.select(
                 *self.schema.data_columns(),
                 F.lit(APPEND_ONLY).alias("_change_type"),
@@ -270,7 +275,7 @@ class FlussTable:
                 F.col(TIMESTAMP_COL).alias(COMMIT_TS_COL),
                 F.col(BUCKET_COL),
             )
-        return self.kv.changelog(spark, start_offsets=start_offsets)
+        return self.kv.changelog(spark, start_offsets=start_offsets, end_offsets=end_offsets)
 
     def binlog(self, spark: SparkSession) -> DataFrame:
         """$binlog virtual table (T9, PK tables only)."""

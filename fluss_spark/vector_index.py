@@ -132,7 +132,7 @@ def create_vector_index(
             VINDEX_SYNC_PROP: json.dumps(
                 {str(b): o for b, o in end.items()}, sort_keys=True
             ),
-            VINDEX_EPOCH_PROP: base.schema.properties.get("table.bucket.epoch", "0"),
+            VINDEX_EPOCH_PROP: base.log.bucket_epoch(),
         },
     )
     idx = create_table(catalog, db, vindex_table_name(table, column), schema)
@@ -164,7 +164,7 @@ def sync_vector_index(
 
     # rebucket fence: offsets are not comparable across a bucket-count
     # change (same contract as indexes.sync_index)
-    epoch = base.schema.properties.get("table.bucket.epoch", "0")
+    epoch = base.log.bucket_epoch()
     seen_epoch = idx.schema.properties.get(VINDEX_EPOCH_PROP, "0")
     if start and epoch != seen_epoch:
         raise ValueError(
@@ -188,15 +188,8 @@ def sync_vector_index(
 
     # fix the slice END before reading (a mid-sync commit must land in
     # the NEXT slice, never under this sync's HWM)
-    end = base.log.latest_offsets()
-    cl = base.changelog(spark, start_offsets=start or None)
-    # one map literal, not an O(buckets) OR-chain
-    from fluss_spark.sources.log import _bucket_map_expr
-
-    bound = F.col("_log_offset") < _bucket_map_expr(
-        {int(b): int(o) for b, o in end.items()}, default=0
-    )
-    cl = cl.filter(bound).persist()
+    end = base.log.slice_end()
+    cl = base.changelog(spark, start_offsets=start or None, end_offsets=end).persist()
     n = cl.count()
     if n:
         from fluss_spark.operators.similarity import _assign_np

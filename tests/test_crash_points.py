@@ -22,7 +22,7 @@ its primitives sees each mutation point of an op. For each op:
            version order equal the twin's (maintenance commits change
            no content, so versions are compared by content, not by
            number), changelog replay equals the snapshot, and per-bucket
-           offsets are contiguous and unique;
+           offsets are contiguous from the earliest offset and unique;
        (c) nothing numbered above CURRENT remains and `.tmp/` holds
            only live `inflight-*` staging;
        (d) a LogStreamReader resumed from a checkpoint taken before the
@@ -136,7 +136,11 @@ def _build(spark, kind, wh):
     if kind == "log":
         t = create_table(
             Catalog(wh), DB, NAME,
-            TableSchema(fields=[Field("a", "INT"), Field("b", "STRING")], num_buckets=2),
+            TableSchema(
+                fields=[Field("a", "INT"), Field("b", "STRING")],
+                num_buckets=2,
+                properties={"table.log.ttl": "1h"},
+            ),
         )
         for i in range(3):
             t.append(_log_batch(spark, i), ordering=["a"])
@@ -171,6 +175,10 @@ OPS = {
     "materialize": ("deferred", lambda s, t: t.kv.materialize(s)),
     "compact_snapshot": ("eager", lambda s, t: mnt.compact_snapshot(t, s, max_dirs=0)),
     "rebucket": ("deferred", lambda s, t: mnt.rebucket_table(t, s, 8)),
+    "rebucket_eager": ("eager", lambda s, t: mnt.rebucket_table(t, s, 8)),
+    "rebucket_log": ("log", lambda s, t: mnt.rebucket_table(t, s, 3)),
+    # every commit but the newest is past the TTL
+    "expire_log_ttl": ("log", lambda s, t: mnt.expire_log_ttl(t, s, now_ms=2**60)),
     "tier_log": ("log", lambda s, t: mnt.tier_log(t, local_segments=1)),
 }
 
@@ -302,7 +310,7 @@ def _check_resumed_reader(spark, t, wh, ckpt):
     committed change past it exactly once; across a rebucket (a new
     bucket epoch) it refuses to resume, since the checkpoint's
     per-bucket offsets belong to the old layout."""
-    if mnt.BUCKET_EPOCH_PROP in t.schema.properties:
+    if t.catalog.current_commit(DB, NAME).log_floor:  # a new bucket epoch
         with pytest.raises(ValueError, match="rebucket"):
             LogStreamReader(t, spark, checkpoint_dir=os.path.join(wh, "_ckpt"))
         return
@@ -330,10 +338,10 @@ def _check_run(spark, wh, tpl, post):
     changes = _changes(spark, t)
     if t.kv is not None:
         assert _fold(t, changes, _hwm(t)) == _state(spark, t)
-    hwm = _hwm(t)
+    hwm, start = _hwm(t), t.log.earliest_offsets()  # a TTL trim moves the start
     for b in {c[0] for c in changes} | set(hwm):
         offs = [c[1] for c in changes if c[0] == b]
-        assert offs == list(range(hwm.get(b, 0))), f"bucket {b} offsets"
+        assert offs == list(range(start.get(b, 0), hwm.get(b, 0))), f"bucket {b} offsets"
     # (c) nothing above CURRENT, nothing stale in .tmp
     _check_clean(wh, t.catalog.current_commit(DB, NAME).version)
     # (d) exactly-once resume

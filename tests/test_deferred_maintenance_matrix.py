@@ -138,10 +138,7 @@ def test_ttl_never_expires_uncovered_tail(spark, catalog):
     assert _snap(t, spark) == expected
     local, remote = t.log.committed_dirs()
     st = catalog.current_commit("db", "cttl")
-    tail_dirs = [
-        n for n in list(local) + list(remote)
-        if int(n.split("=")[1]) > st.snapshot_version
-    ]
+    tail_dirs = [v for v in list(local) + list(remote) if v > st.snapshot_version]
     assert len(tail_dirs) == 2, (deleted, local, remote)
     t.kv.materialize(spark)
     assert _snap(t, spark) == expected

@@ -87,8 +87,8 @@ def _assert_dirs_below_hwm(t):
     state = t.catalog.current_commit(t.db, t.name)
     local, remote = t.log.committed_dirs()
     assert local or remote
-    for name, path in {**remote, **local}.items():
-        hwm = t.catalog.commit_at(t.db, t.name, int(name.split("=")[1])).log_hwm
+    for v, path in {**remote, **local}.items():
+        hwm = t.catalog.commit_at(t.db, t.name, v).log_hwm
         for root, _dirs, files in os.walk(path):
             bucket = int(root.rsplit(f"{BUCKET_COL}=", 1)[1]) if f"{BUCKET_COL}=" in root else None
             for fn in files:

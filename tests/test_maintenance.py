@@ -559,7 +559,6 @@ def test_rebucket_crash_windows_never_lose_committed_data(spark, catalog, monkey
           count, stats, lake snapshot) and TTL sweeps them as garbage."""
     import os
 
-    import fluss_spark.maintenance as mnt
     from fluss_spark.maintenance import rebucket_table
     from fluss_spark.table import FlussTable
 
@@ -591,7 +590,7 @@ def test_rebucket_crash_windows_never_lose_committed_data(spark, catalog, monkey
 
     # (b) crash after commit, before physical retire of shadowed dirs
     pre_scan = ta.scan(spark).count()
-    monkeypatch.setattr(mnt, "_retire_shadowed_commits", lambda log, floor: None)
+    monkeypatch.setattr(ta.log, "retire_below", lambda floor, local_only=False: None)
     rebucket_table(ta, spark, 6)
     monkeypatch.undo()
     t2 = FlussTable(catalog, "db", "rb_crash")

@@ -67,7 +67,7 @@ def test_log_append_single_exchange_sized_by_exchange_width(spark, catalog):
     )
     df = spark.createDataFrame([(i, f"v{i}") for i in range(60)], "a int, b string")
     state = catalog.current_commit("db", "plan_append")
-    out, _auto = t.log._append_plan(df, state, 123456, None, None, None)
+    out, _auto = t.log._append_plan(df, state, 123456, None)
     plan = out._sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "simple")
     width = exchange_width(spark, 3)
     assert width != int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -349,7 +349,7 @@ def test_replay_fold_is_single_shuffle(spark, sf_dir):
         .withColumn(SEED_COL, F.lit(0))
         .select("user_id", "event_type", "value", OP_COL, SEQ_COL, SEED_COL)
     )
-    changelog, _ = replay(b, schema)
+    changelog = replay(b, schema, images=False)
     simple = changelog._sc._jvm.PythonSQLUtils.explainString(
         changelog._jdf.queryExecution(), "simple"
     )
@@ -374,7 +374,7 @@ def test_replay_fold_is_single_shuffle(spark, sf_dir):
     vb = b.withColumn("ver", (F.col("value") * 100).cast("long")).select(
         "user_id", "event_type", "value", "ver", OP_COL, SEQ_COL, SEED_COL
     )
-    v_changelog, _ = replay(vb, v_schema)
+    v_changelog = replay(vb, v_schema, images=False)
     v_simple = v_changelog._sc._jvm.PythonSQLUtils.explainString(
         v_changelog._jdf.queryExecution(), "simple"
     )
@@ -414,7 +414,7 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     fold_sql, frames, seq_order = t.kv._fold_input_sql(
         spark, [batch], ["event_id"], None
     )
-    changelog, _ = replay(
+    changelog = replay(
         spark.sql(fold_sql, **frames), schema, may_have_deletes=False,
         cluster_cols=[BUCKET_COL], images=True, seq_order=seq_order,
     )

@@ -51,6 +51,12 @@ def _schema(**props):
     )
 
 
+def _replay(df, schema):
+    """replay()'s change events ('w') and each key's snapshot image ('s')."""
+    out = replay(df, schema, images=True)
+    return out.filter("__dest = 'w'"), out.filter("__dest = 's'").select(*schema.data_columns())
+
+
 def _collect_snapshot(snap):
     return {r["k"]: (r["v"], r["ver"]) for r in snap.collect()}
 
@@ -60,7 +66,7 @@ def _collect_snapshot(snap):
 def test_default_merge_matches_model(spark_session, seq):
     spark = spark_session
     schema = _schema()
-    changelog, snap = replay(_fold_input(spark, seq), schema)
+    changelog, snap = _replay(_fold_input(spark, seq), schema)
 
     # model: dict with last-write-wins + deletes
     model: dict = {}
@@ -92,7 +98,7 @@ def test_versioned_merge_matches_model(spark_session, seq):
         "table.merge-engine": "versioned",
         "table.merge-engine.versioned.ver-column": "ver",
     })
-    _, snap = replay(_fold_input(spark, seq), schema)
+    _, snap = _replay(_fold_input(spark, seq), schema)
 
     # model: max version wins, null = -inf, tie -> later write; deletes ignored
     model: dict = {}
@@ -112,7 +118,7 @@ def test_versioned_merge_matches_model(spark_session, seq):
 def test_first_row_merge_matches_model(spark_session, seq):
     spark = spark_session
     schema = _schema(**{"table.merge-engine": "first_row"})
-    changelog, snap = replay(_fold_input(spark, seq), schema)
+    changelog, snap = _replay(_fold_input(spark, seq), schema)
     model: dict = {}
     for k, op, v, ver in seq:
         if op == "U" and k not in model:
@@ -153,7 +159,7 @@ def test_aggregation_merge_matches_model(spark_session, seq):
     df = spark.createDataFrame(
         rows, f"k int, s long, mx long, lastnn string, {OP_COL} string, {SEQ_COL} long, {SEED_COL} int"
     )
-    _, snap = replay(df, schema)
+    _, snap = _replay(df, schema)
 
     model: dict = {}
     for k, n, v in seq:

@@ -684,3 +684,40 @@ def test_reader_includes_bucket_born_after_subscribe(spark, catalog):
     got2 = []
     reader.process_available(lambda df, bid: got2.extend(r["id"] for r in df.collect()))
     assert got2 == [k2]
+
+
+def test_poll_bounds_buckets_without_rows(spark, catalog, monkeypatch):
+    """poll() fixes its batch end before it scans. A bucket with no rows
+    at that moment is bounded at offset 0, so its first row, committed
+    between the end and the scan, is delivered once — in the next
+    batch — and not in this batch and again from offset 0 in the next."""
+    from fluss_spark.table import FlussTable
+
+    n_buckets = 4
+    t = create_table(
+        catalog, "db", "poll_race",
+        TableSchema(fields=[Field("a", "INT"), Field("b", "STRING")], bucket_keys=["a"], num_buckets=n_buckets),
+    )
+    probe = spark.range(64).select(
+        F.col("id").cast("int").alias("a"), F.pmod(F.hash(F.col("id").cast("int")), F.lit(n_buckets)).alias("bk")
+    ).collect()
+    by_bucket = {}
+    for r in probe:
+        by_bucket.setdefault(r["bk"], r["a"])
+    k1, k2 = (by_bucket[b] for b in sorted(by_bucket)[:2])
+    t.append(spark.createDataFrame([(k1, "first")], "a int, b string"))
+    reader = LogStreamReader(t, spark, startup_mode="earliest")
+
+    real_scan = FlussTable.scan
+    raced = []
+
+    def scan_after_a_commit(self, *args, **kwargs):
+        if not raced:  # k2's bucket gets its first row inside the first poll
+            raced.append(t.append(spark.createDataFrame([(k2, "raced")], "a int, b string")))
+        return real_scan(self, *args, **kwargs)
+
+    monkeypatch.setattr(FlussTable, "scan", scan_after_a_commit)
+    batches = []
+    reader.process_available(lambda df, bid: batches.append(sorted(r["a"] for r in df.collect())))
+    assert raced
+    assert batches == [[k1], [k2]]

@@ -19,10 +19,41 @@ from pyspark.sql.window import Window
 
 from fluss_spark.bucketing import exchange_width
 from fluss_spark.catalog import CommitState
-from fluss_spark.operators.replay import SEQ_COL, SUB_COL, _snapshot_from_changelog
+from fluss_spark.operators.replay import SEQ_COL, SUB_COL
 from fluss_spark.sources.kv import KvStore
-from fluss_spark.sources.log import _bucket_map_expr
-from fluss_spark.types import BUCKET_COL, CHANGE_TYPE_COL, INSERT, ddl_of
+from fluss_spark.sources.log import id_segments, keyed_literal
+from fluss_spark.types import (
+    BUCKET_COL,
+    CHANGE_TYPE_COL,
+    DELETE,
+    INSERT,
+    OFFSET_COL,
+    TIMESTAMP_COL,
+    TableSchema,
+    ddl_of,
+    parse_type,
+)
+
+
+def _map_expr(per_bucket: dict[int, int], default: int):
+    """bucket -> long value as one map literal Column."""
+    return F.expr(keyed_literal(
+        {b: f"CAST({int(v)} AS BIGINT)" for b, v in per_bucket.items()},
+        BUCKET_COL, f"CAST({int(default)} AS BIGINT)",
+    ))
+
+
+def _snapshot_from_changelog(changelog: DataFrame, schema: TableSchema) -> DataFrame:
+    """Replay invariant: applying a changelog reproduces the snapshot —
+    last event per key wins; keys whose last event is -D are gone
+    (SortMergeReader.java:30-55 'change log wins over the snapshot')."""
+    pk, cols = schema.primary_key, schema.data_columns()
+    w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COL).desc(), F.col(SUB_COL).desc())
+    return (
+        changelog.withColumn("__rn", F.row_number().over(w))
+        .filter((F.col("__rn") == 1) & (F.col(CHANGE_TYPE_COL) != DELETE))
+        .select(*cols)
+    )
 
 
 def stamp_autoinc_baseline(
@@ -69,17 +100,13 @@ def stamp_autoinc_baseline(
     minted = ins.select(
         *pk, SEQ_COL, SUB_COL, BUCKET_COL, F.row_number().over(wb).alias("__ins_n")
     )
+    segs, nxt = id_segments(auto_next, auto_cols, sorted(counts.items()))
     for c in auto_cols:
-        base_id = auto_next.get(c, 0)
-        seg, acc = {}, base_id
-        for bkt in sorted(counts):
-            seg[bkt] = acc
-            acc += counts[bkt]
-        auto_next[c] = acc
         minted = minted.withColumn(
             f"__mint_{c}",
-            (_bucket_map_expr(seg, base_id) + F.col("__ins_n") - 1).cast("long"),
+            (_map_expr(segs[c], auto_next.get(c, 0)) + F.col("__ins_n") - 1).cast("long"),
         )
+    auto_next = nxt
     minted = minted.drop("__ins_n", BUCKET_COL)
 
     # stored ids of pre-existing keys (the update/delete images of a
@@ -119,21 +146,37 @@ def _stage_wal(
     commit_ts_ms: int | None,
     auto_override: dict[str, int] | None,
 ) -> CommitState:
-    """The baseline's WAL pass: LogStore's append plan written to the
+    """The baseline's WAL pass: LogStore's append plan shape written to the
     next version's staging dir, left unpublished so the snapshot pass
     can join the same version. Returns that version's state (HWMs from
     the staged footers); nothing is committed yet."""
     state = kv.catalog.current_commit(kv.db, kv.table)
     version = state.version + 1
     ts_ms = commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
-    out, auto_next = kv.log._append_plan(
-        changelog, state, ts_ms, wal_order, [CHANGE_TYPE_COL, SEQ_COL, SUB_COL], auto_override
+    schema = kv.schema
+    # the append plan's shape over the WAL's system columns: declared
+    # types, bucket routing, one exchange, per-bucket offsets in
+    # `wal_order` from the HWMs; ids arrive pre-stamped
+    cols = schema.data_columns() + [CHANGE_TYPE_COL, SEQ_COL, SUB_COL]
+    declared = {f.name: parse_type(f.type) for f in schema.fields}
+    out = changelog.select(
+        *[F.col(c).cast(declared[c]).alias(c) if c in declared else F.col(c) for c in cols]
     )
+    n = schema.num_buckets
+    out = out.withColumn(BUCKET_COL, F.pmod(F.hash(*schema.bucket_keys), F.lit(n)).cast("int"))
+    out = out.repartition(exchange_width(spark, n), F.col(BUCKET_COL))
+    w = Window.partitionBy(BUCKET_COL).orderBy(*[F.col(c) for c in wal_order])
+    base = {int(b): off for b, off in state.log_hwm.items()}
+    out = out.withColumn(OFFSET_COL, (F.row_number().over(w) - 1 + _map_expr(base, 0)).cast("long"))
+    out = out.withColumn(TIMESTAMP_COL, F.timestamp_millis(F.lit(ts_ms))).select(
+        *cols, BUCKET_COL, OFFSET_COL, TIMESTAMP_COL
+    )
+    auto_next = dict(state.auto_increment if auto_override is None else auto_override)
     staged = kv.log.staging_path(version)
     (
         out.write.mode("overwrite")
-        .option("compression", kv.schema.properties.get("table.log.compression", "snappy"))
-        .partitionBy(*kv.schema.partition_keys, BUCKET_COL)
+        .option("compression", kv.log.codec)
+        .partitionBy(*schema.partition_keys, BUCKET_COL)
         .parquet(staged)
     )
     hwm = dict(state.log_hwm)
