@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from fluss_spark.catalog import Catalog
 from fluss_spark.operators.replay import OP_COL
+from fluss_spark.sources.log import LogSlice
 from fluss_spark.table import FlussTable, create_table
 from fluss_spark.types import Field, TableSchema
 
@@ -96,34 +97,40 @@ def create_index(
     # the full-history fold reads every superseded event and every
     # before-image just to retract them again, whereas the snapshot
     # already IS the folded state (the vector index bootstraps the same
-    # way, vector_index.py). HWM is captured BEFORE the snapshot read:
-    # a commit landing between the two is present in the snapshot AND
-    # re-consumed by the idempotent first sync (harmless); the reverse
-    # order would permanently drop such a commit. Crash safety keeps
-    # the sync-prop write LAST: dying between the seed upsert and the
-    # prop write leaves INDEX_SYNC_PROP empty, so the next sync folds
-    # from offset zero over the seed — idempotent, self-healing AS LONG
-    # AS the full changelog is still retained and the base was never
-    # rebucketed; sync_index applies its retention and epoch fences to
-    # the empty-map path too (missing offsets count as 0), so a
-    # recovery that cannot safely resume fails instead of silently
-    # folding a truncated slice.
-    end = base.log.latest_offsets()
+    # way, vector_index.py). The seed and the recorded offsets come
+    # from ONE pinned commit, so a commit landing after the pin is
+    # folded once, by the next sync. Crash safety keeps the sync-prop
+    # write LAST: dying between the seed upsert and the prop write
+    # leaves INDEX_SYNC_PROP at its empty record, so the next sync
+    # folds from offset zero over the seed — idempotent, self-healing
+    # AS LONG AS the full changelog is still retained and the base was
+    # never rebucketed; that empty record is a recorded cursor, so the
+    # sync's retention and epoch fences refuse a recovery that cannot
+    # resume safely.
+    pin = base.log.slice_from(None, None, _remedy(table, column))
     seed = (
-        base.snapshot(spark)
+        base.snapshot(spark, version=pin.version)
         .filter(F.col(column).isNotNull())
         .select(column, *pk)
         .withColumn(OP_COL, F.lit("U"))
     )
     idx.upsert(seed, ordering=pk)
-    idx_name = index_table_name(table, column)
-    sch = catalog.get_schema(db, idx_name)
-    sch.properties[INDEX_SYNC_PROP] = json.dumps(
-        {str(b): o for b, o in end.items()}, sort_keys=True
-    )
-    sch.properties[INDEX_EPOCH_PROP] = base.log.bucket_epoch()
-    catalog.set_schema(db, idx_name, sch)
+    _record(catalog, db, index_table_name(table, column), pin)
     return idx
+
+
+def _remedy(table: str, column: str) -> str:
+    return (
+        f"drop and recreate the index ({index_table_name(table, column)}), "
+        "and keep table.log.ttl above the sync interval"
+    )
+
+
+def _record(catalog: Catalog, db: str, idx_name: str, sl: LogSlice) -> None:
+    sch = catalog.get_schema(db, idx_name)
+    sch.properties[INDEX_SYNC_PROP] = json.dumps(sl.end, sort_keys=True)
+    sch.properties[INDEX_EPOCH_PROP] = sl.epoch
+    catalog.set_schema(db, idx_name, sch)
 
 
 def sync_index(
@@ -138,62 +145,16 @@ def sync_index(
     idx_name = index_table_name(table, column)
     idx = FlussTable(catalog, db, idx_name)
     pk = base.schema.primary_key
-    synced = json.loads(idx.schema.properties.get(INDEX_SYNC_PROP, "{}"))
-    # scan treats buckets absent from start_offsets as resume-from-
-    # zero (sources/log.py), so zero-filling here is not needed for
-    # correctness — the explicit full-bucket map is kept because a
-    # FULL-coverage map lets the scan push the __offset predicate to
-    # parquet instead of adding a covers-missing-buckets escape
-    # disjunct
-    start = (
-        {b: int(synced.get(str(b), 0)) for b in range(base.schema.num_buckets)}
-        if synced
-        else {}
+    # the recorded cursor, fenced by slice_from: an EMPTY sync map (a
+    # create_index that crashed before its prop write) is recorded too,
+    # so it resumes from offset zero only while the base was never
+    # rebucketed and none of its changelog expired
+    sl = base.log.slice_from(
+        json.loads(idx.schema.properties.get(INDEX_SYNC_PROP, "{}")),
+        idx.schema.properties.get(INDEX_EPOCH_PROP, "0"),
+        _remedy(table, column),
     )
-
-    # rebucket fence (same contract as LogStreamReader): per-bucket
-    # offsets are NOT comparable across a bucket-count change, so a
-    # sync HWM recorded under an older epoch cannot resume — rebuild
-    # the index instead of silently misreading offset ranges. The fence
-    # also guards the EMPTY sync map (a create_index that crashed before
-    # its prop write): resuming from offset zero is only safe when the
-    # base was never rebucketed, i.e. its epoch still matches the
-    # default the unwritten prop implies.
-    epoch = base.log.bucket_epoch()
-    seen_epoch = idx.schema.properties.get(INDEX_EPOCH_PROP, "0")
-    if epoch != seen_epoch:
-        raise ValueError(
-            f"base table {db}.{table} was rebucketed (epoch {seen_epoch} -> "
-            f"{epoch}) after the last index sync; drop and recreate the "
-            f"index ({idx_name}) — offsets are not comparable across a "
-            "rebucket"
-        )
-
-    # retention fence: TTL/truncation may have deleted changelog commits
-    # this index never consumed — folding past the gap would silently
-    # lose their events forever. Missing offsets count as 0: with an
-    # EMPTY sync map (crashed bootstrap) a fold would start at offset
-    # zero, so any expired prefix means events between the seed's HWM
-    # and the retention floor may be gone — fail instead of silently
-    # folding only the retained slice over the seed.
-    expired = {
-        b: (start.get(b, 0), e)
-        for b, e in base.earliest_offsets().items()
-        if start.get(b, 0) < e
-    }
-    if expired:
-        raise ValueError(
-            f"base table {db}.{table} expired unconsumed changelog "
-            f"(bucket: (synced, earliest) = {expired}); drop and "
-            f"recreate the index ({idx_name}), and set table.log.ttl "
-            "above the sync interval"
-        )
-
-    # fix the slice END before reading: a writer committing between the
-    # changelog read and the HWM record would otherwise be skipped
-    # forever (the HWM would cover rows this sync never processed)
-    end = base.log.slice_end()
-    cl = base.changelog(spark, start_offsets=start or None, end_offsets=end)
+    cl = base.changelog(spark, start_offsets=sl.start, end_offsets=sl.end)
     # one pass over the slice: the emptiness probe and the fold read
     # the same cached blocks instead of scanning the changelog twice
     cl = cl.persist()
@@ -220,15 +181,10 @@ def sync_index(
             batch.unpersist()
     cl.unpersist()
 
-    # record the high-water mark AFTER the index commit (crash between
-    # the two re-consumes a slice; the fold is idempotent — re-applying
-    # the same final actions yields the same index state). The HWM is
-    # the slice bound captured BEFORE the read, never the current tip.
-    new_offsets = {str(b): o for b, o in end.items()}
-    sch = catalog.get_schema(db, idx_name)
-    sch.properties[INDEX_SYNC_PROP] = json.dumps(new_offsets, sort_keys=True)
-    sch.properties[INDEX_EPOCH_PROP] = epoch
-    catalog.set_schema(db, idx_name, sch)
+    # record the slice end AFTER the index commit (crash between the
+    # two re-consumes a slice; the fold is idempotent — re-applying the
+    # same final actions yields the same index state)
+    _record(catalog, db, idx_name, sl)
     return n
 
 

@@ -524,12 +524,11 @@ def rebucket_table(table: FlussTable, spark: SparkSession, new_buckets: int) -> 
         immediately);
       - the commit records the new bucket count (CommitState.num_buckets,
         which Catalog.get_schema applies) and raises log_floor to its
-        version, which is the bucket epoch (LogStore.bucket_epoch): per-
+        version, which is the bucket epoch (LogStore.slice_from): per-
         bucket OFFSETS ARE NOT COMPARABLE across a rebucket, so
-        streaming subscriptions must restart — LogStreamReader
-        checkpoints record the epoch and refuse to resume across a
-        mismatch (the honest contract; the alternative is silently
-        misread offset ranges). One CURRENT write publishes all three.
+        subscriptions must restart — every offset consumer records the
+        epoch and refuses to resume across a mismatch (the honest
+        contract; the alternative is silently misread offset ranges). One CURRENT write publishes all three.
 
     Returns the new commit version. O(table) rewrite — an explicit
     admin operation, like the reference's own cluster rebalance."""

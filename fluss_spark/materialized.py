@@ -387,11 +387,8 @@ def _refresh_incremental(fsql, t: FlussTable) -> int:
     aggs = {k: tuple(v) for k, v in _json.loads(props[INC_AGGS_PROP]).items()}
     mt_types = {f.name: f.type for f in t.schema.fields}
 
-    # rebucket fence: per-bucket offsets are not comparable across a
-    # bucket-count change (same contract as indexes.sync_index)
-    epoch = src.log.bucket_epoch()
-    seen_epoch = props.get(INC_EPOCH_PROP, "0")
     synced = _json.loads(props.get(INC_OFFSETS_PROP, "{}"))
+    epoch = props.get(INC_EPOCH_PROP, "0")
 
     # crash recovery: offsets are staged as PENDING before the data
     # commit and finalized after. If a pending marker exists, the MT's
@@ -403,56 +400,34 @@ def _refresh_incremental(fsql, t: FlussTable) -> int:
     pending = _json.loads(props.get(INC_PENDING_PROP, "null") or "null")
     if pending is not None:
         if cur_version >= pending["expect_version"]:
-            synced = pending["offsets"]
+            synced, epoch = pending["offsets"], pending.get("epoch", epoch)
             _set_props(t.catalog, t.db, t.name, {
                 INC_OFFSETS_PROP: _json.dumps(synced, sort_keys=True),
+                INC_EPOCH_PROP: epoch,
                 INC_PENDING_PROP: "",
             })
         else:
             _set_props(t.catalog, t.db, t.name, {INC_PENDING_PROP: ""})
-    if synced and epoch != seen_epoch:
-        raise ValueError(
-            f"source {src_db}.{src_name} was rebucketed after the last "
-            f"refresh; drop and recreate the materialized table "
-            f"({t.db}.{t.name}) — offsets are not comparable across a rebucket"
-        )
-    # scan treats buckets absent from start_offsets as resume-from-
-    # zero (sources/log.py); the explicit full-bucket map is kept so
-    # the __offset predicate stays fully pushed to parquet (a map with
-    # gaps forces the scan to add an escape disjunct)
-    start = (
-        {b: int(synced.get(str(b), 0)) for b in range(src.schema.num_buckets)}
-        if synced
-        else {}
+    # an empty record is the first refresh: a fresh cursor, not fenced
+    # (the source may have been rebucketed before the MT existed)
+    sl = src.log.slice_from(
+        synced or None,
+        epoch,
+        "the incremental state cannot be rebuilt across a rebucket or from "
+        f"expired unfolded data — drop and recreate {t.db}.{t.name}, and set "
+        "the source's table.log.ttl above the refresh interval",
     )
-    # retention fence: TTL/truncation may have deleted source commits
-    # this MT never folded — reading past the gap would silently drop
-    # their contribution from the aggregate forever
-    if start:
-        expired = {
-            b: (start.get(b, 0), e)
-            for b, e in src.earliest_offsets().items()
-            if start.get(b, 0) < e
-        }
-        if expired:
-            raise ValueError(
-                f"source {src_db}.{src_name} expired unfolded data (bucket: "
-                f"(synced, earliest) = {expired}); the incremental state is "
-                f"unrecoverable — drop and recreate {t.db}.{t.name}, and set "
-                "the source's table.log.ttl above the refresh interval"
-            )
-    end = src.log.slice_end()  # slice end fixed BEFORE the read
     versions_at_start = _source_versions(t.catalog, [f"{src_db}.{src_name}"])
 
     if src.kv is not None:
-        delta = src.changelog(fsql.spark, start_offsets=start or None, end_offsets=end)
+        delta = src.changelog(fsql.spark, start_offsets=sl.start, end_offsets=sl.end)
         w = (
             F.when(F.col("_change_type").isin("+I", "+U"), F.lit(1))
             .otherwise(F.lit(-1))
             .cast("bigint")
         )
     else:
-        delta = src.scan(fsql.spark, start_offsets=start or None, end_offsets=end)
+        delta = src.scan(fsql.spark, start_offsets=sl.start, end_offsets=sl.end)
         w = F.lit(1).cast("bigint")
     if props.get(INC_WHERE_PROP):
         delta = delta.filter(F.expr(props[INC_WHERE_PROP]))
@@ -484,10 +459,9 @@ def _refresh_incremental(fsql, t: FlussTable) -> int:
 
     # stage the slice-end offsets as pending, keyed to the commit
     # version the append WILL create, then commit, trim, finalize
-    new_offsets = {str(b): o for b, o in end.items()}
     _set_props(t.catalog, t.db, t.name, {
         INC_PENDING_PROP: _json.dumps(
-            {"offsets": new_offsets, "expect_version": cur_version + 1},
+            {"offsets": sl.end, "epoch": sl.epoch, "expect_version": cur_version + 1},
             sort_keys=True,
         ),
     })
@@ -495,8 +469,8 @@ def _refresh_incremental(fsql, t: FlussTable) -> int:
     state = t.catalog.current_commit(t.db, t.name)
     _truncate_commits_before(t, state.version)
     _set_props(t.catalog, t.db, t.name, {
-        INC_OFFSETS_PROP: _json.dumps(new_offsets, sort_keys=True),
-        INC_EPOCH_PROP: epoch,
+        INC_OFFSETS_PROP: _json.dumps(sl.end, sort_keys=True),
+        INC_EPOCH_PROP: sl.epoch,
         INC_PENDING_PROP: "",
         LAST_TS_PROP: str(int(time.time() * 1000)),
         SOURCE_VERSIONS_PROP: versions_at_start,

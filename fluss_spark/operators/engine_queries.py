@@ -1955,10 +1955,7 @@ def s6_hybrid_snapshot_log(spark: SparkSession, sf: str) -> DataFrame:
     first_commit = next(s for s in history if s.snapshot_version >= 0)
     old = t.kv.snapshot(spark, version=first_commit.snapshot_version)
     start = {int(b): off for b, off in first_commit.log_hwm.items()}
-    tail = t.log.scan(spark, start_offsets=start)
-    merged = t.kv._state_from_changelog(tail)
-    touched = tail.select("user_id").distinct()
-    result = old.join(touched, "user_id", "left_anti").unionByName(merged)
+    result = t.kv._merge_tail(old, t.log.scan(spark, start_offsets=start))
     return result.select("user_id", "event_type", F.round("value", 2).alias("value"))
 
 

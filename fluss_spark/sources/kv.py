@@ -1706,22 +1706,16 @@ class KvStore:
         end = self.log.hwm_at(version)
         if start == end:
             return base
-        # retention fence: TTL/expiry may have trimmed changelog inside
-        # the slice (legal — those commits were snapshot-covered by a
-        # LATER materialization) — folding over the gap would silently
-        # return a partial state instead of an error
-        expired = {
-            b: (start.get(b, 0), e)
-            for b, e in self.log.earliest_offsets().items()
-            if start.get(b, 0) < e and end.get(b, 0) > start.get(b, 0)
-        }
-        if expired:
-            raise ValueError(
-                f"cannot time-travel to deferred version {version}: the "
-                f"changelog slice from manifest v{m} was partly expired "
-                f"(bucket: (needed-from, earliest) = {expired})"
-            )
-        tail = self._tail_scan(spark, start, self.log.slice_end(end), buckets, pair_pred)
+        # TTL/expiry may have trimmed changelog inside the slice (legal —
+        # those commits were snapshot-covered by a LATER materialization):
+        # slice_from refuses rather than fold a partial state
+        epoch = str(self.catalog.commit_at(self.db, self.table, m).log_floor) if m >= 0 else "0"
+        sl = self.log.slice_from(
+            start, epoch,
+            f"cannot time-travel to deferred version {version} from manifest v{m}",
+            until=end,
+        )
+        tail = self._tail_scan(spark, sl.start, sl.end, buckets, pair_pred)
         return self._merge_tail(base, tail)
 
     def _tail_start(self, state: CommitState) -> dict[int, int] | None:

@@ -37,7 +37,7 @@ from __future__ import annotations
 import bisect
 import os
 import time
-from dataclasses import replace
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,6 +96,22 @@ def commit_dirs(root: str) -> list[tuple[int, str]]:
     return sorted(
         (int(e.name[len(prefix):]), e.path) for e in os.scandir(root) if e.name.startswith(prefix)
     )
+
+
+@dataclass(frozen=True)
+class LogSlice:
+    """One slice [start, end) of a per-bucket offset subscription, every
+    bucket present in both maps, pinned to commit `version`; `epoch` is
+    the bucket epoch the consumer records beside `end`."""
+
+    start: dict[int, int]
+    end: dict[int, int]
+    epoch: str
+    version: int
+
+    @property
+    def empty(self) -> bool:
+        return all(o <= self.start.get(b, 0) for b, o in self.end.items())
 
 
 class LogStore:
@@ -565,20 +581,58 @@ class LogStore:
         state = self.catalog.current_commit(self.db, self.table)
         return {int(b): off for b, off in state.log_hwm.items()}
 
-    def slice_end(self, hwm: dict[int, int] | None = None) -> dict[int, int]:
-        """End offsets of a log slice up to `hwm` (default: the latest
-        HWMs) with EVERY bucket present, those without rows at 0. An
-        end map missing a bucket leaves it unbounded (scan()), so a
-        first row committed there after the end was fixed would be read
-        in this slice and again in the next one."""
-        end = self.latest_offsets() if hwm is None else hwm
-        return {b: 0 for b in range(self.schema.num_buckets)} | end
-
-    def bucket_epoch(self) -> str:
-        """The bucket layout's epoch: the current log_floor, which only
-        a rebucket moves. Per-bucket offsets compare only within one
-        epoch, so offset checkpoints record it and refuse a mismatch."""
-        return str(self.catalog.current_commit(self.db, self.table).log_floor)
+    def slice_from(
+        self,
+        offsets: dict | None,
+        epoch: str | None,
+        remedy: str,
+        until: dict | None = None,
+    ) -> LogSlice:
+        """The one step that resumes a per-bucket offset subscription
+        (the reference's LogScannerStatus positions advanced by poll();
+        FlussMicroBatchStream's {bucket: offset} ranges). `offsets` and
+        `epoch` are the consumer's recorded cursor; None starts fresh
+        from a cursor pinned here: the earliest retained offsets and the
+        current epoch. ONE catalog read fixes the slice: its end, the
+        epoch to record, and the version a bootstrap snapshot reads. The
+        end is the HWMs (or `until`'s) with EVERY bucket present, those
+        without rows at 0: an end map missing a bucket leaves it
+        unbounded (scan()), so a first row committed there after the end
+        was fixed would be read in this slice and again in the next.
+        A recorded cursor is fenced twice, with `remedy` appended:
+          - epoch: the bucket layout's epoch is the log_floor, which
+            only a rebucket moves; per-bucket offsets compare only
+            within one epoch;
+          - retention: a slice that needs an offset below the earliest
+            retained one (a TTL or trim expired it unread) would lose
+            those rows silently."""
+        state = self.catalog.current_commit(self.db, self.table)
+        n = state.num_buckets or self.schema.num_buckets
+        end = {b: 0 for b in range(n)} | {
+            int(b): o for b, o in (state.log_hwm if until is None else until).items()
+        }
+        earliest = {int(b): o for b, o in state.log_start.items()}
+        now = str(state.log_floor)
+        if offsets is None:
+            return LogSlice({b: earliest.get(b, 0) for b in end}, end, now, state.version)
+        name = f"{self.db}.{self.table}"
+        if epoch != now:
+            raise ValueError(
+                f"{name} was rebucketed (bucket epoch {epoch} -> {now}) after these "
+                "offsets were recorded: per-bucket offsets are not comparable "
+                f"across a rebucket; {remedy}"
+            )
+        start = {b: 0 for b in end} | {int(b): int(o) for b, o in offsets.items()}
+        expired = {
+            b: (o, earliest[b]) for b, o in start.items()
+            if o < min(end.get(b, 0), earliest.get(b, 0))
+        }
+        if expired:
+            raise ValueError(
+                f"{name} expired unconsumed changelog (bucket: (start, earliest) "
+                f"= {expired}); {remedy}"
+            )
+        return LogSlice(start, end, now, state.version)
 
     def earliest_offsets(self) -> dict[int, int]:
         # non-zero once TTL/retention has trimmed the log head

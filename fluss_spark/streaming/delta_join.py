@@ -33,8 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluss_spark.sources.log import LogSlice
 from fluss_spark.table import FlussTable
-from fluss_spark.types import CHANGE_TYPE_COL, DELETE, OFFSET_COL
+
+_REMEDY = "rebuild the sink and start a new DeltaJoin"
 
 
 class DeltaJoin:
@@ -72,28 +74,18 @@ class DeltaJoin:
         self.left, self.right, self.sink = left, right, sink
         self.on = list(on)
         self.left_prefix, self.right_prefix = left_prefix, right_prefix
-        # the operator's WHOLE state: two per-bucket offset maps
-        self._off_l: dict[int, int] = {}
-        self._off_r: dict[int, int] = {}
+        # the operator's WHOLE state: two subscription cursors (per-bucket
+        # offsets, bucket epoch), unset until the first poll pins them
+        self._cur_l: tuple = (None, None)
+        self._cur_r: tuple = (None, None)
 
     # ------------------------------------------------------------------ #
-    def _delta_final(
-        self, spark: SparkSession, t: FlussTable, start: dict[int, int], end: dict[int, int]
-    ) -> DataFrame:
-        """Last non-delete event per key in the WAL slice [start, end) —
-        the set-at-a-time delta (deletes are ignored, not retracted:
+    def _delta_final(self, spark: SparkSession, t: FlussTable, sl: LogSlice) -> DataFrame:
+        """Last non-delete event per key in the WAL slice — the
+        set-at-a-time delta (deletes are ignored, not retracted:
         reference table.delete.behavior=IGNORE)."""
-        df = t.log.scan(spark, start_offsets=start or None, end_offsets=end)
-        pk = t.schema.primary_key
-        pk_sql = ", ".join(f"`{c}`" for c in pk)
-        return (
-            df.selectExpr(
-                "*",
-                f"row_number() OVER (PARTITION BY {pk_sql} "
-                f"ORDER BY `{OFFSET_COL}` DESC) AS __rn",
-            )
-            .filter(f"__rn = 1 AND `{CHANGE_TYPE_COL}` != '{DELETE}'")
-            .select(*t.schema.data_columns())
+        return t.kv._state_from_changelog(
+            t.log.scan(spark, start_offsets=sl.start, end_offsets=sl.end)
         )
 
     def _probe_buckets(self, spark: SparkSession, delta: DataFrame, other: FlussTable):
@@ -127,10 +119,9 @@ class DeltaJoin:
     def poll(self, spark: SparkSession) -> bool:
         """One micro-batch: probe + upsert the new pairs; advance the
         offsets. Returns False when both subscriptions are caught up."""
-        hl = self.left.latest_offsets()
-        hr = self.right.latest_offsets()
-        new_l = any(off > self._off_l.get(b, 0) for b, off in hl.items())
-        new_r = any(off > self._off_r.get(b, 0) for b, off in hr.items())
+        sl_l = self.left.log.slice_from(*self._cur_l, remedy=_REMEDY)
+        sl_r = self.right.log.slice_from(*self._cur_r, remedy=_REMEDY)
+        new_l, new_r = not sl_l.empty, not sl_r.empty
         if not new_l and not new_r:
             return False
         parts: list[DataFrame] = []
@@ -141,7 +132,7 @@ class DeltaJoin:
                 # the probe join AND the sink upsert's fold — without
                 # the cache the WAL scan + last-event window re-runs
                 # once per consumer
-                dl = self._delta_final(spark, self.left, self._off_l, hl).persist()
+                dl = self._delta_final(spark, self.left, sl_l).persist()
                 cached.append(dl)
                 r_state = self.right.kv.snapshot(
                     spark, buckets=self._probe_buckets(spark, dl, self.right)
@@ -149,7 +140,7 @@ class DeltaJoin:
                 return self._emit(dl, r_state)
 
             def right_dir() -> DataFrame:
-                dr = self._delta_final(spark, self.right, self._off_r, hr).persist()
+                dr = self._delta_final(spark, self.right, sl_r).persist()
                 cached.append(dr)
                 l_state = self.left.kv.snapshot(
                     spark, buckets=self._probe_buckets(spark, dr, self.left)
@@ -186,7 +177,7 @@ class DeltaJoin:
         finally:
             for df in cached:
                 df.unpersist()
-        self._off_l, self._off_r = hl, hr
+        self._cur_l, self._cur_r = (sl_l.end, sl_l.epoch), (sl_r.end, sl_r.epoch)
         return True
 
     def process_available(self, spark: SparkSession, max_batches: int = 100) -> int:

@@ -4,13 +4,18 @@ startup modes, hybrid snapshot→log handoff, exactly-once checkpoints.
 Reference semantics:
   - subscription is per-bucket (bucket, startOffset)
     (client/table/scanner/log/LogScanner.java:69-131); a micro-batch =
-    everything between the checkpointed offsets and the current high
-    watermarks — exactly the reference's own Spark connector design
-    (fluss-spark/.../read/FlussMicroBatchStream.scala:85-150)
+    everything between the checkpointed offsets and the high
+    watermarks of one commit state — exactly the reference's own Spark
+    connector design (fluss-spark/.../read/FlussMicroBatchStream.scala:85-150).
+    LogStore.slice_from fixes each slice and fences it (a rebucket, or
+    changelog expired unread); the reader keeps its cursor and the
+    checkpoint file
   - startup modes full/earliest/latest/timestamp
     (flink/source/FlinkConnectorOptionsUtils, spark FlussOffsetInitializers.scala:26-40)
-  - PK tables in `full` mode: snapshot first, then changelog from the
-    snapshot's offsets (T3, flink/source/split/HybridSnapshotLogSplit.java:37)
+  - PK tables in `full` mode: the snapshot at one pinned commit, then
+    the changelog from that commit's offsets (T3,
+    flink/source/split/HybridSnapshotLogSplit.java:37), so a commit
+    landing after the pin arrives once, in the log
   - exactly-once: offsets checkpoint advances atomically AFTER the batch
     function returns; re-running a failed batch re-reads the same offset
     range (T7 — batch-id-keyed idempotence instead of writer-id dedup)
@@ -29,9 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fluss_spark import fsops
-from fluss_spark.sources.log import commit_dirs
+from fluss_spark.sources.log import LogSlice, commit_dirs
 from fluss_spark.table import FlussTable
 from fluss_spark.types import CHANGE_TYPE_COL, INSERT
+
+_REMEDY = "restart the reader with a fresh checkpoint dir"
 
 
 class LogStreamReader:
@@ -50,34 +57,14 @@ class LogStreamReader:
         self.checkpoint_dir = checkpoint_dir
         self.startup_mode = startup_mode
         self.startup_timestamp_ms = startup_timestamp_ms
+        # the cursor: offsets and the bucket epoch they belong to, both
+        # unset until the first poll pins them
         self._offsets: dict[int, int] | None = None
+        self._epoch: str | None = None
         self._batch_id = 0
-        self._pending_snapshot = False
-        # offsets belong to this bucket epoch, read fresh from the catalog
-        # at each poll (a rebucket may come from another process)
-        self._epoch = table.log.bucket_epoch()
         if checkpoint_dir:
             fsops.makedirs(checkpoint_dir)
             self._load_checkpoint()
-
-    # -- offsets ----------------------------------------------------------
-    def _initial_offsets(self) -> dict[int, int]:
-        mode = self.startup_mode
-        if mode == "earliest":
-            return self.table.earliest_offsets()
-        if mode == "latest":
-            return self.table.latest_offsets()
-        if mode == "timestamp":
-            if self.startup_timestamp_ms is None:
-                raise ValueError("timestamp startup mode requires startup_timestamp_ms")
-            return self.table.offsets_for_timestamp(self.spark, self.startup_timestamp_ms)
-        if mode == "full":
-            if self.table.kv is not None:
-                # snapshot first, then the log from the snapshot's offsets
-                self._pending_snapshot = True
-                return self.table.latest_offsets()
-            return self.table.earliest_offsets()
-        raise ValueError(f"unknown startup mode: {mode}")
 
     def _ckpt_path(self) -> str:
         return os.path.join(self.checkpoint_dir, "offsets.json")
@@ -87,15 +74,11 @@ class LogStreamReader:
         if os.path.exists(p):
             with open(p) as f:
                 d = json.load(f)
-            if d.get("epoch", "0") != self._epoch:
-                raise ValueError(
-                    "checkpoint predates a rebucket of this table: per-bucket "
-                    "offsets are not comparable across bucket counts — restart "
-                    "the subscription with a fresh checkpoint dir"
-                )
-            self._offsets = {int(k): v for k, v in d["offsets"].items()}
+            offsets, epoch = d["offsets"], d.get("epoch", "0")
+            self.table.log.slice_from(offsets, epoch, _REMEDY)  # fence at resume
+            self._offsets = {int(k): v for k, v in offsets.items()}
+            self._epoch = epoch
             self._batch_id = d["batch_id"]
-            self._pending_snapshot = False
 
     def _save_checkpoint(self) -> None:
         if not self.checkpoint_dir:
@@ -115,36 +98,45 @@ class LogStreamReader:
     def poll(self) -> tuple[DataFrame, int] | None:
         """One micro-batch: (DataFrame, batch_id), or None if caught up.
         The checkpoint advances only on commit_batch()."""
-        if self.table.log.bucket_epoch() != self._epoch:
-            raise ValueError(
-                "table was rebucketed while this subscription was active: "
-                "per-bucket offsets are not comparable across bucket counts "
-                "— restart the reader (fresh checkpoint dir)"
-            )
         if self._offsets is None:
-            self._offsets = self._initial_offsets()
-            if self._pending_snapshot:
-                # hybrid handoff batch 0: the KV snapshot as +I rows
-                snap = self.table.snapshot(self.spark).withColumn(
-                    CHANGE_TYPE_COL, F.lit(INSERT)
-                )
-                self._pending_snapshot = False
-                self._end_of_batch = dict(self._offsets)
-                return snap, self._batch_id
-        # every bucket bounded: one still empty here must not deliver a
-        # row committed after this read (it would again next batch)
-        end = self.table.log.slice_end()
-        if all(off <= self._offsets.get(b, 0) for b, off in end.items()):
+            return self._start()
+        return self._batch(self.table.log.slice_from(self._offsets, self._epoch, _REMEDY))
+
+    def _start(self) -> tuple[DataFrame, int] | None:
+        """The first poll of a fresh subscription: pin a cursor, then
+        place the start per the startup mode."""
+        sl = self.table.log.slice_from(None, None, _REMEDY)
+        self._epoch = sl.epoch
+        mode = self.startup_mode
+        if mode == "earliest" or (mode == "full" and self.table.kv is None):
+            self._offsets = sl.start
+            return self._batch(sl)
+        if mode == "latest":
+            self._offsets = sl.end
             return None
-        df = self.table.scan(self.spark, start_offsets=dict(self._offsets), end_offsets=end)
-        self._end_of_batch = end
+        if mode == "timestamp":
+            if self.startup_timestamp_ms is None:
+                raise ValueError("timestamp startup mode requires startup_timestamp_ms")
+            self._offsets = self.table.offsets_for_timestamp(self.spark, self.startup_timestamp_ms)
+            return self.poll()
+        if mode == "full":
+            # hybrid handoff batch 0: the KV snapshot at the pinned
+            # commit as +I rows; the log resumes from its offsets
+            self._offsets = self._end_of_batch = sl.end
+            snap = self.table.snapshot(self.spark, version=sl.version)
+            return snap.withColumn(CHANGE_TYPE_COL, F.lit(INSERT)), self._batch_id
+        raise ValueError(f"unknown startup mode: {mode}")
+
+    def _batch(self, sl: LogSlice) -> tuple[DataFrame, int] | None:
+        if sl.empty:
+            return None
+        df = self.table.scan(self.spark, start_offsets=sl.start, end_offsets=sl.end)
+        self._end_of_batch = sl.end
         return df, self._batch_id
 
     def commit_batch(self) -> None:
         """Advance offsets after the batch was durably processed."""
-        merged = dict(self._offsets)
-        merged.update(self._end_of_batch)
-        self._offsets = merged
+        self._offsets = self._end_of_batch
         self._batch_id += 1
         self._save_checkpoint()
 

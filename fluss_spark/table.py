@@ -303,35 +303,19 @@ class FlussTable:
         if self.kv is None:
             raise ValueError("snapshot_diff requires a Primary Key Table")
         hist = {s.version: s for s in self.catalog.commit_history(self.db, self.name)}
-        if v1 not in hist:
-            raise ValueError(f"no such commit version: {v1}")
-        cur = self.catalog.current_commit(self.db, self.name).version
-        if v2 is None:
-            v2 = cur
-        if v2 not in hist:
-            raise ValueError(f"no such commit version: {v2}")
+        for v in (v1, v2):
+            if v is not None and v not in hist:
+                raise ValueError(f"no such commit version: {v}")
         pk = self.schema.primary_key
         vals = [c for c in self.schema.data_columns() if c not in pk]
-        # v1's high-water marks only list buckets touched BY v1; the
-        # changelog reader now treats absent buckets as resume-from-zero
-        # (sources/log.py), so the explicit zero-fill is kept only to
-        # keep the __offset predicate fully pushed to parquet (a map
-        # with gaps forces an escape disjunct into the scan filter)
-        hwm1 = {int(b): o for b, o in hist[v1].log_hwm.items()}
-        start = {b: hwm1.get(b, 0) for b in range(self.schema.num_buckets)}
-        cl = self.kv.changelog(spark, start_offsets=start)
-        if v2 != cur:
-            # one map literal, not an O(buckets) when-chain: constant
-            # expression depth however many buckets the table has
-            end = {int(b): o for b, o in hist[v2].log_hwm.items()}
-            if end:
-                bmap = F.create_map(
-                    *[x for b, o in end.items() for x in (F.lit(b), F.lit(o))]
-                )
-                bound = F.coalesce(bmap[F.col(BUCKET_COL)], F.lit(0))
-            else:
-                bound = F.lit(0)
-            cl = cl.filter(F.col(LOG_OFFSET_COL) < bound)
+        # the changelog slice from v1's HWMs to v2's (the current ones
+        # when v2 is None), both in v1's bucket epoch and retained
+        sl = self.log.slice_from(
+            hist[v1].log_hwm, str(hist[v1].log_floor),
+            f"snapshot_diff({v1}, {v2}) cannot be computed from the changelog",
+            until=None if v2 is None else hist[v2].log_hwm,
+        )
+        cl = self.kv.changelog(spark, start_offsets=sl.start, end_offsets=sl.end)
         from pyspark.sql.window import Window
 
         w = Window.partitionBy(*pk).orderBy(F.col(LOG_OFFSET_COL).desc())

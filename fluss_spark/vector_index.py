@@ -68,6 +68,10 @@ def _vectors(df: DataFrame, pk0: str, column: str) -> DataFrame:
     ).filter(F.col("v").isNotNull())
 
 
+def _remedy(table: str, column: str) -> str:
+    return f"drop and recreate the index ({vindex_table_name(table, column)})"
+
+
 def create_vector_index(
     catalog: Catalog,
     db: str,
@@ -105,15 +109,11 @@ def create_vector_index(
         )
     pk0 = pk[0]
 
-    # fix the sync HWM BEFORE pinning the snapshot: a commit landing
-    # between the two is then present in the snapshot AND re-consumed
-    # by the idempotent first sync (harmless), whereas the reverse
-    # order permanently drops any commit that lands between the
-    # snapshot pin and the HWM capture — covered by the recorded
-    # offsets yet absent from the pinned snapshot, so no sync ever
-    # sees it
-    end = base.log.latest_offsets()
-    snap = base.snapshot(spark)
+    # the training snapshot and the recorded offsets come from ONE
+    # pinned commit: a commit landing after the pin is folded once, by
+    # the first sync
+    pin = base.log.slice_from(None, None, _remedy(table, column))
+    snap = base.snapshot(spark, version=pin.version)
     vecs = _vectors(snap, pk0, column)
     cents = kmeans_centroids(vecs, k=k, iters=iters)
     if not cents:
@@ -129,10 +129,8 @@ def create_vector_index(
             VINDEX_BASE_PROP: f"{db}.{table}",
             VINDEX_COL_PROP: column,
             VINDEX_CENTROIDS_PROP: json.dumps(cents),
-            VINDEX_SYNC_PROP: json.dumps(
-                {str(b): o for b, o in end.items()}, sort_keys=True
-            ),
-            VINDEX_EPOCH_PROP: base.log.bucket_epoch(),
+            VINDEX_SYNC_PROP: json.dumps(pin.end, sort_keys=True),
+            VINDEX_EPOCH_PROP: pin.epoch,
         },
     )
     idx = create_table(catalog, db, vindex_table_name(table, column), schema)
@@ -155,41 +153,15 @@ def sync_vector_index(
     idx = FlussTable(catalog, db, idx_name)
     pk0 = base.schema.primary_key[0]
     cents = _load_centroids(idx)
-    synced = json.loads(idx.schema.properties.get(VINDEX_SYNC_PROP, "{}"))
-    start = (
-        {b: int(synced.get(str(b), 0)) for b in range(base.schema.num_buckets)}
-        if synced
-        else {}
+    # an empty record is a fresh start (create_vector_index records its
+    # pinned offsets with the table, so nothing was recorded); any other
+    # record is fenced by slice_from
+    sl = base.log.slice_from(
+        json.loads(idx.schema.properties.get(VINDEX_SYNC_PROP, "{}")) or None,
+        idx.schema.properties.get(VINDEX_EPOCH_PROP, "0"),
+        _remedy(table, column),
     )
-
-    # rebucket fence: offsets are not comparable across a bucket-count
-    # change (same contract as indexes.sync_index)
-    epoch = base.log.bucket_epoch()
-    seen_epoch = idx.schema.properties.get(VINDEX_EPOCH_PROP, "0")
-    if start and epoch != seen_epoch:
-        raise ValueError(
-            f"base table {db}.{table} was rebucketed (epoch {seen_epoch} -> "
-            f"{epoch}) after the last index sync; drop and recreate the "
-            f"index ({idx_name})"
-        )
-    # retention fence: never fold past expired (unconsumed) changelog
-    if start:
-        expired = {
-            b: (start.get(b, 0), e)
-            for b, e in base.earliest_offsets().items()
-            if start.get(b, 0) < e
-        }
-        if expired:
-            raise ValueError(
-                f"base table {db}.{table} expired unconsumed changelog "
-                f"(bucket: (synced, earliest) = {expired}); drop and "
-                f"recreate the index ({idx_name})"
-            )
-
-    # fix the slice END before reading (a mid-sync commit must land in
-    # the NEXT slice, never under this sync's HWM)
-    end = base.log.slice_end()
-    cl = base.changelog(spark, start_offsets=start or None, end_offsets=end).persist()
+    cl = base.changelog(spark, start_offsets=sl.start, end_offsets=sl.end).persist()
     n = cl.count()
     if n:
         from fluss_spark.operators.similarity import _assign_np
@@ -251,10 +223,8 @@ def sync_vector_index(
     cl.unpersist()
 
     sch = catalog.get_schema(db, idx_name)
-    sch.properties[VINDEX_SYNC_PROP] = json.dumps(
-        {str(b): o for b, o in end.items()}, sort_keys=True
-    )
-    sch.properties[VINDEX_EPOCH_PROP] = epoch
+    sch.properties[VINDEX_SYNC_PROP] = json.dumps(sl.end, sort_keys=True)
+    sch.properties[VINDEX_EPOCH_PROP] = sl.epoch
     catalog.set_schema(db, idx_name, sch)
     return n
 

@@ -162,3 +162,23 @@ def test_delta_join_eligibility(spark, catalog):
     log_t = create_table(catalog, "db", "el_log", log_schema)
     with pytest.raises(ValueError, match="pk tables"):
         DeltaJoin(log_t, right, on=["uid"], sink=sink)
+
+
+def test_delta_join_refuses_after_a_rebucket(spark, catalog):
+    """Per-bucket offsets do not compare across a rebucket: a DeltaJoin
+    whose side was rebucketed after its last batch refuses to poll
+    instead of misreading the new layout's offset ranges."""
+    from fluss_spark.maintenance import rebucket_table
+
+    left = _mk_side(catalog, "rb_left", "lv")
+    right = _mk_side(catalog, "rb_right", "rv")
+    sink = _mk_sink(catalog, "rb_sink")
+    dj = DeltaJoin(left, right, on=["uid"], sink=sink)
+    left.upsert(_rows(spark, "lv", [(1, "a", 1.0)]))
+    right.upsert(_rows(spark, "rv", [(1, "x", 10.0)]))
+    assert dj.process_available(spark) == 1
+
+    rebucket_table(left, spark, 8)
+    left.upsert(_rows(spark, "lv", [(2, "b", 2.0)]))
+    with pytest.raises(ValueError, match="rebucketed"):
+        dj.poll(spark)

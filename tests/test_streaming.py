@@ -721,3 +721,65 @@ def test_poll_bounds_buckets_without_rows(spark, catalog, monkeypatch):
     reader.process_available(lambda df, bid: batches.append(sorted(r["a"] for r in df.collect())))
     assert raced
     assert batches == [[k1], [k2]]
+
+
+def test_checkpointed_resume_past_ttl_refuses(spark, catalog, tmp_path):
+    """A checkpoint whose next offsets a TTL expired unread cannot
+    resume: delivering the retained tail alone would silently lose the
+    expired changes, so the resumed reader raises instead."""
+    import time
+
+    from fluss_spark.maintenance import expire_log_ttl
+
+    t = create_table(
+        catalog, "db", "s_ttl",
+        TableSchema(
+            fields=[Field("k", "BIGINT", nullable=False), Field("v", "BIGINT")],
+            primary_key=["k"],
+            num_buckets=1,
+            properties={"table.log.ttl": "1d"},
+        ),
+    )
+    ckpt = str(tmp_path / "ttl_ckpt")
+    t.upsert(spark.createDataFrame([(1, 10)], "k bigint, v bigint"), ordering=["k"])
+    reader = LogStreamReader(t, spark, checkpoint_dir=ckpt, startup_mode="earliest")
+    assert reader.process_available(lambda df, bid: None) == 1
+    # two commits the checkpoint has not consumed; TTL keeps the newest
+    t.upsert(spark.createDataFrame([(2, 20)], "k bigint, v bigint"), ordering=["k"])
+    t.upsert(spark.createDataFrame([(3, 30)], "k bigint, v bigint"), ordering=["k"])
+    assert expire_log_ttl(t, spark, now_ms=int(time.time() * 1000) + 3 * 86_400_000) > 0
+    with pytest.raises(ValueError, match="expired unconsumed changelog"):
+        LogStreamReader(t, spark, checkpoint_dir=ckpt).poll()
+
+
+def test_full_mode_delivers_a_commit_racing_the_snapshot_once(spark, catalog, monkeypatch):
+    """`full` mode reads the snapshot and the log start from one pinned
+    commit: an upsert landing while the snapshot batch is built is
+    left out of it and arrives once, in the next log batch."""
+    from fluss_spark.table import FlussTable
+
+    t = create_table(
+        catalog, "db", "s_full_race",
+        TableSchema(
+            fields=[Field("k", "INT", nullable=False), Field("v", "STRING")],
+            primary_key=["k"],
+            num_buckets=2,
+        ),
+    )
+    t.upsert(spark.createDataFrame([(1, "a")], "k int, v string"))
+    real_snapshot = FlussTable.snapshot
+    raced = []
+
+    def snapshot_after_a_commit(self, *args, **kwargs):
+        if not raced:  # the first snapshot call: the bootstrap's
+            raced.append(True)
+            t.upsert(spark.createDataFrame([(1, "b")], "k int, v string"))
+        return real_snapshot(self, *args, **kwargs)
+
+    monkeypatch.setattr(FlussTable, "snapshot", snapshot_after_a_commit)
+    batches = []
+    LogStreamReader(t, spark, startup_mode="full").process_available(
+        lambda df, bid: batches.append(sorted(map(tuple, df.select("k", "v", "_change_type").collect())))
+    )
+    assert raced
+    assert batches == [[(1, "a", "+I")], [(1, "a", "-U"), (1, "b", "+U")]]

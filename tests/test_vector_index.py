@@ -184,11 +184,11 @@ def test_create_vector_index_rejects_wal_image_base(spark, catalog):
 
 
 def test_create_index_hwm_race_commit_never_lost(spark, catalog, monkeypatch):
-    """ADVICE r5: a write committing between create_vector_index's HWM
-    capture and its snapshot pin must not vanish from the index. The
-    HWM is now captured BEFORE the snapshot pin, so such a commit is
-    covered by the snapshot AND re-consumed by the idempotent first
-    sync — present exactly once either way."""
+    """A write committing while create_vector_index reads its training
+    snapshot must not vanish from the index. The snapshot and the
+    recorded offsets come from one pinned commit, so such a commit is
+    left out of the snapshot and folded by the first sync — present
+    exactly once."""
     import fluss_spark.vector_index as vx
 
     rows = [(i, [float(i % 2)] * DIM, "x") for i in range(6)]
@@ -198,8 +198,8 @@ def test_create_index_hwm_race_commit_never_lost(spark, catalog, monkeypatch):
     fired = {"done": False}
 
     def racing_snapshot(self, spark_, *a, **k):
-        # inject a commit at the worst moment: after latest_offsets()
-        # was recorded, before the training snapshot is read
+        # inject a commit after the offsets were pinned, before the
+        # training snapshot is read
         if not fired["done"]:
             fired["done"] = True
             FlussTable(catalog, "db", "vrace").upsert(
