@@ -528,7 +528,8 @@ def rebucket_table(table: FlussTable, spark: SparkSession, new_buckets: int) -> 
         bucket OFFSETS ARE NOT COMPARABLE across a rebucket, so
         subscriptions must restart — every offset consumer records the
         epoch and refuses to resume across a mismatch (the honest
-        contract; the alternative is silently misread offset ranges). One CURRENT write publishes all three.
+        contract; the alternative is silently misread offset ranges).
+        One CURRENT write publishes all three.
 
     Returns the new commit version. O(table) rewrite — an explicit
     admin operation, like the reference's own cluster rebalance."""

@@ -1685,7 +1685,9 @@ class KvStore:
         DIRS enter the plan — plan size O(|pair_keys| dirs), not O(all
         dirs holding those buckets)."""
         state = self.catalog.current_commit(self.db, self.table)
-        if version is None:
+        if version is not None and version > state.version:
+            raise ValueError(f"no such commit version: {version}")
+        if version is None or version == state.version:
             base = self._materialized(
                 spark, state.snapshot_version, buckets, pair_pred, pair_keys
             )
@@ -1694,26 +1696,25 @@ class KvStore:
                 return base
             tail = self._tail_scan(spark, start, None, buckets, pair_pred)
             return self._merge_tail(base, tail)
-        if version > state.version:
-            raise ValueError(f"no such commit version: {version}")
         if version < 0 or self._manifest(version) is not None:
             return self._materialized(spark, version, buckets, pair_pred, pair_keys)
         # WAL-only (deferred) version: nearest older manifest + the
-        # changelog slice between its HWM and this version's HWM
+        # changelog slice between its HWMs and this version's. slice_from
+        # refuses a version from an older bucket epoch (a rebucket
+        # rewrote its changelog) and a slice TTL/expiry trimmed (legal —
+        # those commits were snapshot-covered by a LATER materialization)
+        # rather than fold a partial state
         m = self._nearest_manifest_version(version)
         base = self._materialized(spark, m, buckets, pair_pred, pair_keys)
         start = self.log.hwm_at(m) if m >= 0 else {}
-        end = self.log.hwm_at(version)
+        end, epoch = self.log.cursor_at(version)
         if start == end:
             return base
-        # TTL/expiry may have trimmed changelog inside the slice (legal —
-        # those commits were snapshot-covered by a LATER materialization):
-        # slice_from refuses rather than fold a partial state
-        epoch = str(self.catalog.commit_at(self.db, self.table, m).log_floor) if m >= 0 else "0"
         sl = self.log.slice_from(
             start, epoch,
             f"cannot time-travel to deferred version {version} from manifest v{m}",
             until=end,
+            state=state,
         )
         tail = self._tail_scan(spark, sl.start, sl.end, buckets, pair_pred)
         return self._merge_tail(base, tail)

@@ -128,8 +128,8 @@ class LogStore:
         # Here "remote" is a second Parquet root; scans union both tiers.
         self.remote_dir = os.path.join(catalog.table_dir(db, table), "remote")
         self.tmp_dir = os.path.join(catalog.table_dir(db, table), ".tmp")
-        # version -> per-bucket HWM at that commit (hwm_at)
-        self._hwm_cache: dict[int, dict[int, int]] = {}
+        # version -> (per-bucket HWM, bucket epoch) at that commit (cursor_at)
+        self._cursor_cache: dict[int, tuple[dict[int, int], str]] = {}
 
     # ------------------------------------------------------------------ #
     # staged-commit protocol
@@ -443,16 +443,26 @@ class LogStore:
     # scan (S2/S3/S8)
     # ------------------------------------------------------------------ #
     def hwm_at(self, version: int) -> dict[int, int]:
-        """Per-bucket log HWM recorded at a commit version (memoized —
-        commit states are immutable once written). Every log writer
-        keeps dir `__commit=v` below hwm_at(v) in each bucket, and HWMs
-        only grow within [log_floor, current]."""
-        cached = self._hwm_cache.get(version)
+        """Per-bucket log HWM recorded at a commit version. Every log
+        writer keeps dir `__commit=v` below hwm_at(v) in each bucket, and
+        HWMs only grow within [log_floor, current]."""
+        return self.cursor_at(version)[0]
+
+    @staticmethod
+    def cursor(state: CommitState) -> tuple[dict[int, int], str]:
+        """The cursor of a consumer that read through commit `state`: its
+        per-bucket HWMs and bucket epoch. The epoch is the log_floor,
+        which only a rebucket moves."""
+        return {int(b): o for b, o in state.log_hwm.items()}, str(state.log_floor)
+
+    def cursor_at(self, version: int) -> tuple[dict[int, int], str]:
+        """cursor() of commit `version` (memoized — commit states are
+        immutable once written)."""
+        cached = self._cursor_cache.get(version)
         if cached is None:
-            st = self.catalog.commit_at(self.db, self.table, version)
-            cached = {int(b): o for b, o in st.log_hwm.items()}
-            self._hwm_cache[version] = cached
-        return dict(cached)
+            cached = self.cursor(self.catalog.commit_at(self.db, self.table, version))
+            self._cursor_cache[version] = cached
+        return dict(cached[0]), cached[1]
 
     def _first_dir(self, versions: list[int], reached) -> int:
         """Index into ascending `versions` of the first commit dir whose
@@ -587,6 +597,7 @@ class LogStore:
         epoch: str | None,
         remedy: str,
         until: dict | None = None,
+        state: CommitState | None = None,
     ) -> LogSlice:
         """The one step that resumes a per-bucket offset subscription
         (the reference's LogScannerStatus positions advanced by poll();
@@ -605,14 +616,16 @@ class LogStore:
             within one epoch;
           - retention: a slice that needs an offset below the earliest
             retained one (a TTL or trim expired it unread) would lose
-            those rows silently."""
-        state = self.catalog.current_commit(self.db, self.table)
+            those rows silently.
+        `state` is the current commit state when the caller has just
+        read it (the one read then is the caller's)."""
+        state = state or self.catalog.current_commit(self.db, self.table)
+        hwm, now = self.cursor(state)
         n = state.num_buckets or self.schema.num_buckets
         end = {b: 0 for b in range(n)} | {
-            int(b): o for b, o in (state.log_hwm if until is None else until).items()
+            int(b): o for b, o in (hwm if until is None else until).items()
         }
         earliest = {int(b): o for b, o in state.log_start.items()}
-        now = str(state.log_floor)
         if offsets is None:
             return LogSlice({b: earliest.get(b, 0) for b in end}, end, now, state.version)
         name = f"{self.db}.{self.table}"

@@ -311,7 +311,7 @@ class FlussTable:
         # the changelog slice from v1's HWMs to v2's (the current ones
         # when v2 is None), both in v1's bucket epoch and retained
         sl = self.log.slice_from(
-            hist[v1].log_hwm, str(hist[v1].log_floor),
+            *self.log.cursor(hist[v1]),
             f"snapshot_diff({v1}, {v2}) cannot be computed from the changelog",
             until=None if v2 is None else hist[v2].log_hwm,
         )

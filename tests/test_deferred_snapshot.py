@@ -237,6 +237,28 @@ def test_deferred_time_travel_fails_loudly_on_expired_slice(spark, catalog):
     ) == [(1, "a")]
 
 
+def test_deferred_time_travel_refuses_a_version_before_a_rebucket(spark, catalog):
+    """A rebucket rewrites the changelog in the new bucket layout, so a
+    WAL-only version from before it has no tail left to fold: time
+    travel there must raise, never return the manifest alone or fold
+    new-layout offsets onto it."""
+    from fluss_spark import maintenance as mnt
+
+    t = _mk(catalog, "defer_tt_rebucket", defer=10)
+    t.upsert(spark.createDataFrame([(1, "a")], "k int, v string"))  # v1
+    t.kv.materialize(spark)  # v2
+    s3 = t.upsert(spark.createDataFrame([(2, "b"), (3, "c")], "k int, v string"))  # v3 WAL-only
+    mnt.rebucket_table(t, spark, 8)
+    t = FlussTable(catalog, "db", "defer_tt_rebucket")
+    with pytest.raises(ValueError, match="rebucketed"):
+        t.kv.snapshot(spark, version=s3.version).collect()
+    # the current state reads whole, also pinned at its own version
+    want = [(1, "a"), (2, "b"), (3, "c")]
+    assert _snap(t, spark) == want
+    cur = catalog.current_commit("db", "defer_tt_rebucket").version
+    assert sorted((r["k"], r["v"]) for r in t.kv.snapshot(spark, version=cur).collect()) == want
+
+
 def test_materialize_crash_recovery(spark, catalog, monkeypatch):
     """Crash between the materialization's data-dir write and its
     manifest/CURRENT advance: nothing is visible, reads stay correct off

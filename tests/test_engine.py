@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fluss_spark.catalog import Catalog
-from fluss_spark.table import create_table
+from fluss_spark.table import FlussTable, create_table
 from fluss_spark.types import Field, TableSchema
 
 
@@ -546,6 +546,30 @@ def test_snapshot_diff_bounded_versions(spark, catalog):
 
     with _pt.raises(ValueError, match="no such commit"):
         t.snapshot_diff(spark, v1=999)
+
+
+def test_snapshot_diff_refuses_a_v1_before_a_rebucket(spark, catalog):
+    """A rebucket renumbers every bucket's offsets, so v1's HWMs do not
+    bound a slice of the rewritten changelog: the diff must refuse."""
+    from fluss_spark import maintenance as mnt
+
+    t = create_table(
+        catalog, "db", "sdiff_rb",
+        TableSchema(
+            fields=[Field("id", "BIGINT", nullable=False), Field("v", "DOUBLE")],
+            primary_key=["id"],
+            num_buckets=2,
+        ),
+    )
+    up = lambda rows: t.upsert(
+        spark.createDataFrame(rows, "id bigint, v double"), ordering=["id"]
+    )
+    s1 = up([(1, 1.0), (2, 2.0)])
+    up([(2, 20.0), (3, 3.0)])
+    mnt.rebucket_table(t, spark, 4)
+    t = FlussTable(catalog, "db", "sdiff_rb")
+    with pytest.raises(ValueError, match="rebucketed"):
+        t.snapshot_diff(spark, v1=s1.version).collect()
 
 
 @pytest.mark.slow
